@@ -11,7 +11,7 @@
   python -m pgsf_spark abort     <table>     (≡ ./abort_refresh.py)
   python -m pgsf_spark recover               (≡ onreboot)
   python -m pgsf_spark state                 (show the __sync table)
-  python -m pgsf_spark verify [--sf-dir D] [--staged] [q ...] (oracle sweep)
+  python -m pgsf_spark verify [--sf-dir D] [q ...]   (oracle sweep)
   python -m pgsf_spark gc <table> [--keep N] [--ttl-days D]
                                              (≡ ./delete_old_jobs_data.sh;
                                               compact + vacuum old versions)
@@ -64,11 +64,6 @@ def main(argv: list[str] | None = None) -> int:
     gc.add_argument("--no-compact", action="store_true")
     vf = sub.add_parser("verify")
     vf.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    vf.add_argument(
-        "--staged",
-        action="store_true",
-        help="also sweep the staged (pre-registration) round-11 batch",
-    )
     vf.add_argument("queries", nargs="*")
     cb = sub.add_parser("corpus-build")
     cb.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -223,21 +218,8 @@ def main(argv: list[str] | None = None) -> int:
         from pgsf_spark.session import get_spark
         from pgsf_spark.verify import verify_queries
 
-        queries = None
-        if args.staged:
-            from pgsf_spark.analytics.registry import QUERIES
-            from pgsf_spark.analytics.registry_r11 import STAGED_QUERIES
-            from pgsf_spark.analytics.registry_r12 import STAGED_QUERIES_R12
-            from pgsf_spark.analytics.registry_r13 import STAGED_QUERIES_R13
-
-            queries = {
-                **QUERIES,
-                **STAGED_QUERIES,
-                **STAGED_QUERIES_R12,
-                **STAGED_QUERIES_R13,
-            }
         results = verify_queries(
-            get_spark("pgsf_spark_verify"), args.sf_dir, only=args.queries, queries=queries
+            get_spark("pgsf_spark_verify"), args.sf_dir, only=args.queries
         )
         n_fail = sum(1 for v in results.values() if not v)
         print(json.dumps({"pass": len(results) - n_fail, "fail": n_fail}))

@@ -262,7 +262,7 @@ def q_lsh_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r2 ask #9) is handled by AQE's runtime skew-join splitting
     (spark.sql.adaptive.skewJoin, on in session.py), which splits oversized
     sort-merge partitions where they actually occur. The previous static
-    cold/hot skew_hedged_join fork was measured worse at every scale probed:
+    cold/hot skew-hedged join fork was measured worse at every scale probed:
     each of the two nested joins expanded into a cold + hot union branch, so
     the verify subtree executed FOUR times and the plan carried 56 Exchanges
     / 34 BroadcastHashJoins (plans/r14/lsh_jaccard_verified_after.txt) for
@@ -277,9 +277,9 @@ def q_lsh_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.array_distinct(F.split(_norm_text(F.col("text")), " ")).alias("toks")
     )
     # Tokenize the corpus ONCE, restricted to docs that appear in a
-    # candidate pair, and materialize that: the two skew_hedged_joins below
-    # each expand into a cold + hot union branch, so the `toks` subtree was
-    # evaluated FOUR times -- the before-plan re-ran the full documents
+    # candidate pair, and materialize that: when the two joins below were
+    # skew-hedged, each expanded into a cold + hot union branch, so the
+    # `toks` subtree was evaluated FOUR times -- the before-plan re-ran the full documents
     # scan + array_distinct(split(...)) in every branch
     # (plans/r14/lsh_jaccard_verified_before.txt nodes 22/49/66/...).
     # Candidate docs are a vanishing fraction of the corpus (the point of

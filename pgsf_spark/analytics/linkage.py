@@ -21,7 +21,7 @@ The classic Fellegi-Sunter pipeline re-expressed Spark-first:
 
 Scale: the only join is the block-key equi-join; comparisons per block are
 bounded by block size (nationkey x 1k-balance bucket keeps blocks ~uniform;
-a skewed blocking key is ordinary join skew -- AQE or operators/skew.py).
+a skewed blocking key is ordinary join skew, which AQE splits at runtime).
 Levenshtein runs JVM-side (F.levenshtein == DuckDB levenshtein: unit-cost
 DP, integer result). No UDFs, no cartesian products.
 

@@ -1,4 +1,4 @@
-"""Round-11 staged batch B: multimodal ANALYSIS shapes over the binary
+"""Multimodal ANALYSIS shapes over the binary
 codecs (multimodal.py owns the codecs; this module owns the new analysis
 queries built on them).
 

@@ -1,6 +1,6 @@
-"""Round-12 staged batch: semi-structured data + Python-engine surfaces.
+"""Semi-structured data + Python-engine surfaces.
 
-Eight of the batch's nine queries live here (the ninth,
+Eight of the family's nine queries live here (the ninth,
 ``statestore_read_gate``, is a streaming-checkpoint face in
 ``streaming/faces.py``), each locking an API surface the registry does
 not yet exercise behind the usual DuckDB-oracle gate:
@@ -35,7 +35,7 @@ straight from the base columns; parse bugs, escaping bugs, and cast
 bugs all surface as hash mismatches.
 
 Measured fidelity boundaries (pinned by
-tests/test_r12_staged.py::TestSemiStructuredEscaping on pyspark 4.1.2):
+tests/test_semistructured.py::TestSemiStructuredEscaping on pyspark 4.1.2):
 JSON/VARIANT round-trips every string exactly, control characters
 included; XML 1.0 cannot represent control chars (< 0x20 except
 tab/newline/CR) and to_xml FAILS LOUDLY on them, and from_xml trims
@@ -47,10 +47,8 @@ Python-engine surface (reference soql.py / api.py are flat SOQL
 projections); everything here is beyond-reference training-pipeline
 surface, designed Spark-first.
 
-STAGED, not registered: ships through ``registry_r12.STAGED_QUERIES_R12``
-once round 11 lands the r11 batch (PERF.md round-12 plan). Tested by
-tests/test_r12_staged.py with the same verify-vs-DuckDB machinery the
-driver uses.
+Registered in registry.py; gated by tests/test_registry.py with the same
+verify-vs-DuckDB machinery the driver uses.
 """
 
 from __future__ import annotations

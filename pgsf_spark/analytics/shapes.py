@@ -1,4 +1,4 @@
-"""Round-11 staged batch C: new relational / at-scale PLAN SHAPES.
+"""Relational / at-scale PLAN SHAPES.
 
 Eight queries whose point is a physical-plan capability Catalyst handles
 specially -- each locks a shape (bucket-expansion range join, salted
@@ -7,11 +7,9 @@ interval RANGE frames, GROUPING SETS ids, pivot/unpivot, lateral
 posexplode top-k) behind an oracle gate so a refactor that silently
 degrades the plan (or its semantics) goes red.
 
-STAGED, not registered: the registry is frozen at 382 until the round-10
-close certifies the unfreeze criteria (PERF.md); these ship through
-``registry_r11.STAGED_QUERIES`` and move into the live registry as round
-11's batch. Tested by tests/test_r11_staged.py with the same
-verify-vs-DuckDB machinery the driver uses.
+Registered in registry.py; gated by tests/test_registry.py with the same
+verify-vs-DuckDB machinery the driver uses, behaviour pinned by
+tests/test_shapes.py.
 
 Reference parity note: the reference engine's query surface is SOQL
 equality predicates + PG-side SQL after landing (reference soql.py,
@@ -55,7 +53,7 @@ def q_range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastHashJoin; at 100 TB with millions of validity rows the same
     code shuffles on the bucket index -- never BroadcastNestedLoopJoin
     (what the naive BETWEEN join plans as; plan-asserted in
-    test_r11_staged.py). Aggregation is map-side combinable on window_id.
+    tests/test_shapes.py). Aggregation is map-side combinable on window_id.
     """
     from pgsf_spark.operators.rangejoin import bucketed_range_join
 

@@ -1,14 +1,8 @@
 """Leaf module for the registry's shared contract pieces.
 
-``QuerySpec`` and the shared SQL fragments used to live in registry.py,
-which made every staged-batch module import the 8k-line registry at
-module level. That was fine one-way -- but registry.py's ROUND-11
-REGISTRATION block imports registry_r11 at its bottom, so importing
-registry_r11 FIRST (before registry) closed a cycle: r11 -> registry ->
-(bottom) partially-initialized r11, ImportError. Hoisting the shared
-pieces into this leaf makes registry_r11 import-order-independent:
-it depends only on leaves, and registry's bottom import always finds
-it fully initialized.
+``QuerySpec`` and the SQL fragments shared between the registry and the
+analytics modules live here, so a module can use them without importing
+the whole registry (registry.py re-exports them).
 
 Everything here must stay leaf-importable: no imports of registry or of
 any module that imports registry.
@@ -37,7 +31,7 @@ _NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 # the engine-portable HLL oracle: the sketch registers themselves are
 # md5-derived and hash-exact, so the SAME oracle text serves both the
 # batch face (registry: hll_portable) and the streaming face
-# (registry_r11: stream_running_hll, whose register merge is max() --
+# (streaming/faces.py: stream_running_hll, whose register merge is max() --
 # streamed sketch == batch sketch by construction)
 HLL_PORTABLE_ORACLE = f"""WITH h AS (
   SELECT ('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT AS h

@@ -1,4 +1,4 @@
-"""Round-13 staged batch: Spark 4 SQL-language surfaces + the sink leg.
+"""Spark 4 SQL-language surfaces + the sink leg.
 
 Six queries, each locking a LANGUAGE or SINK surface the registry does
 not exercise behind the usual DuckDB-oracle gate:
@@ -29,9 +29,8 @@ reference upload_table.py's 10k-record chunked bulk upload + per-chunk
 result ledger (SURVEY K4/K5), re-expressed as a Spark sink whose
 commit protocol IS the job-artifact contract.
 
-STAGED, not registered: ships through ``registry_r13.STAGED_QUERIES_R13``
-after the r11/r12 batches land (PERF.md round-13 seed). Tested by
-tests/test_r13_staged.py.
+Registered in registry.py; behaviour tested by tests/test_sqlsurfaces.py
+and tests/test_chunked_sink.py.
 """
 
 from __future__ import annotations

@@ -26,7 +26,7 @@ Reads are vectorized end to end: ``read`` yields pyarrow RecordBatches
 Registered as ``spark.dataSource.register(EntityPagesSource)`` under the
 format name ``entity_pages``; see analytics/semistructured.py
 ``q_python_datasource_gate`` for the oracle-gated face and
-tests/test_r12_staged.py::TestPythonDataSource for the pushdown pins.
+tests/test_pyds.py::TestPythonDataSource for the pushdown pins.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Round-11 staged batch A: registry faces for the streaming layer.
+"""Registry faces for the streaming layer.
 
 Each query here runs a REAL bounded Structured Streaming job -- a
 deterministic multi-batch file feed derived from the sf_dir tables,
@@ -24,7 +24,7 @@ Determinism contract (what makes a streaming run oracle-comparable):
     drop predicate for windowed aggregation is on the WINDOW END (not the
     row timestamp), and after the last data batch a no-data batch runs
     with the final watermark (firing event-time timeouts and final
-    appends). tests/test_r11_staged.py re-asserts the lag and the
+    appends). tests/test_stream_faces.py re-asserts the lag and the
     window-end predicate so an engine upgrade that changes them fails
     loudly instead of silently skewing oracles.
 
@@ -674,7 +674,7 @@ def q_stream_state_timeout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _collect_and_clean(spark, res, tmp)
 
 
-# --- round-12 staged: statestore_read_gate ------------------------------------
+# --- statestore_read_gate -----------------------------------------------------
 
 
 def q_statestore_read_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,7 +723,7 @@ def q_statestore_read_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _collect_and_clean(spark, res, tmp)
 
 
-# --- round-12 staged: python_cdc_stream_gate ----------------------------------
+# --- python_cdc_stream_gate ---------------------------------------------------
 
 
 def q_python_cdc_stream_gate(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,7 +23,7 @@ operator therefore exposes an ``engine`` switch:
 Both engines produce the same rows for the same feed, so callers (and
 the eventual registry face) are engine-agnostic; when the environment
 grows protobuf, ``auto`` silently upgrades and the parity test
-(tests/test_r12_staged.py::TestTwsGate) stops skipping the tws leg.
+(tests/test_tws.py::TestTwsGate) stops skipping the tws leg.
 
 Capability probe: ``HAS_TWS_RUNTIME``.
 """

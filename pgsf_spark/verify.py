@@ -50,8 +50,8 @@ def verify_queries(
     DuckDB oracles over the parquet tables in ``sf_dir``. Returns
     name -> passed; rows-only entries (no oracle) map to True if the Spark
     side ran. ``queries`` overrides the live registry dict -- used to gate
-    STAGED batches (registry_r11) with the exact driver comparison before
-    they are registered."""
+    a query set outside the registry (e.g. the benchmark's headline subset)
+    with the same comparison."""
     import duckdb
 
     if queries is None:

@@ -27,7 +27,7 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="session")
 def empty_sf_dir(spark, tmp_path_factory):
     """A sf dir whose tables all have the right schema and ZERO rows
-    (shared by test_empty_inputs.py and the staged-batch suites)."""
+    (used by test_empty_inputs.py)."""
     from pgsf_spark.tables import TABLES, load_table
 
     root = tmp_path_factory.mktemp("sf_empty")

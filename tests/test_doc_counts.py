@@ -1,11 +1,11 @@
-"""Ledger-count drift guard (VERDICT r7 "What's wrong" #3): every
-human-readable count of the registry must be DERIVED from ``len(QUERIES)``,
-not hand-typed. Rounds 6 and 7 both shipped docs certifying N while the
-registry held N+k; this pins the two places a count is published.
+"""Ledger-count drift guard: every published count of the registry must be
+DERIVED from ``len(QUERIES)``, not hand-typed. This pins the README count
+sentence and the machine-written CERTIFICATION.json.
 
 No Spark session needed -- pure text checks, so the guard costs nothing.
 """
 
+import json
 import re
 from pathlib import Path
 
@@ -24,25 +24,18 @@ def test_readme_count_matches_registry():
     )
 
 
-def test_perf_close_block_matches_registry():
-    perf = (REPO / "PERF.md").read_text()
-    closes = re.findall(r"ROUND-\d+ CLOSE[^\n]*(?:\n(?!\n).*)*", perf)
-    assert closes, "PERF.md lost its close blocks"
-    # the LATEST close block must certify len(QUERIES)/len(QUERIES);
-    # earlier blocks are historical records and may name older totals
-    latest = closes[-1]
-    # match BOTH certification figures ('N/N hash-green at sf0.001' and
-    # 'N/N at sf0.01'), not just the first -- a hand-edited red or stale
-    # total in either must fail
-    counts = re.findall(r"(\d+)/(\d+) (?:hash-green|at sf[\d.]+)", latest)
-    assert len(counts) >= 2, f"latest close block lost a certification figure: {latest[:300]}"
-    for got, total in counts:
-        assert got == total, f"latest close block records a red: {got}/{total}"
-        assert int(total) == len(QUERIES), (
-            f"latest close block certifies {total}, registry has "
-            f"{len(QUERIES)} -- re-run the certification sweep after the "
-            "last code change and derive the count from len(QUERIES)"
-        )
+def test_certification_matches_registry():
+    # tools/close_round.py writes CERTIFICATION.json after the last code
+    # change; it must certify every registered query green at both scales
+    cert = json.loads((REPO / "CERTIFICATION.json").read_text())
+    assert cert["n_queries"] == len(QUERIES), (
+        f"CERTIFICATION.json certifies {cert['n_queries']} queries, registry "
+        f"has {len(QUERIES)} -- re-run tools/close_round.py after the last "
+        "code change"
+    )
+    assert set(cert["scales"]) == {"sf0.001", "sf0.01"}, cert["scales"]
+    for scale, r in cert["scales"].items():
+        assert (r["pass"], r["fail"]) == (len(QUERIES), 0), (scale, r)
 
 
 def test_every_query_has_oracle_or_documented_waiver():

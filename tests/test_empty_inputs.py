@@ -274,6 +274,50 @@ REPRESENTATIVE = [
     "above_mean_concentration",  # integer threshold over zero customers
     "language_mix_by_source",  # argmax structs over zero docs
     "label_balance_audit",  # entropy terms over zero labels
+    # semi-structured data and Python engine surfaces
+    "variant_shred",  # VARIANT construction over zero orders
+    "variant_typeof_profile",  # variant type rollup over zero docs
+    "from_json_corrupt_gate",  # JSON parse of zero payloads
+    "xml_shred_gate",  # XML round trip of zero rows
+    "map_reshape_gate",  # map folds over zero rows
+    "higher_order_chain",  # array lambdas over zero rows
+    "udtf_bigram_topk",  # lateral UDTF fan-out of zero docs
+    "arrow_map_profile",  # mapInArrow over an empty partition
+    "statestore_read_gate",  # state store of a stream over zero events
+    "python_datasource_gate",  # paged source over zero rows
+    "python_cdc_stream_gate",  # CDC stream with no new data
+    # Spark SQL language surfaces and chunked sinks
+    "recursive_cte_closure",  # recursion seeded from zero customers
+    "pipe_syntax_parity",  # pipe chain over zero orders
+    "sql_udf_gate",  # SQL scalar UDF over zero rows
+    "sql_table_udf_gate",  # SQL table UDF over zero rows
+    "collation_gate",  # collated grouping over zero rows
+    "observe_metrics_gate",  # observed metrics of an empty pass
+    "chunked_sink_gate",  # chunked write of zero records
+    "chunked_stream_sink_gate",  # stream sink epochs with zero records
+    # sync, store and catalog gates
+    "schema_drift_gate",  # drift replay over zero docs
+    "integrity_quarantine_gate",  # quarantine of an empty landing
+    "fleet_scheduler_gate",  # scheduler fleet over empty bases
+    "snapshot_consistency_gate",  # pinned reads of empty versions
+    "vacuum_retention_gate",  # GC over empty versions
+    "cas_publish_gate",  # CAS publish of empty versions
+    "curation_funnel_gate",  # funnel over an empty corpus
+    "curation_funnel_incremental_gate",  # incremental funnel, empty batches
+    "sosl_search_gate",  # OR-chain search over zero rows
+    "query_pages_gate",  # paging through zero rows
+    "cdc_id_scans_gate",  # CDC id windows over zero changes
+    "compaction_gate",  # compaction of empty files
+    "bootstrap_seed_gate",  # first load of zero rows
+    "upload_results_gate",  # upload of zero records
+    "catalog_snapshot_gate",  # catalog epochs over empty tables
+    "fleet_catalog_wave_gate",  # wave commit over empty tables
+    "cdf_changes_gate",  # change feed of empty versions
+    "state_recovery_gate",  # recovery from an empty manifest trail
+    "catalog_join_pin_gate",  # pinned join of empty tables
+    "recovery_wave_gate",  # recovery then wave over empty tables
+    "catalog_retention_gate",  # retention over empty epochs
+    "maintenance_recovery_gate",  # compact, vacuum, recover over zero rows
 ]
 
 

@@ -150,47 +150,12 @@ class TestNormalQuantileLiterals:
 
 class TestRegistryImportOrder:
     def test_staged_registry_importable_first(self):
-        """registry.py's registration block imports registry_r11 at its
-        bottom; importing registry_r11 BEFORE registry used to close a
-        cycle on the partially-initialized module (ImportError). The
-        staged registries must stay leaf-importable in ANY order --
-        enforced in a clean subprocess so this session's import cache
-        can't mask a regression."""
-        import subprocess
-        import sys
+        """Every module that defines registered query functions must
+        import cleanly before the registry does (an import cycle through
+        the registry would fail on its partly initialised module)."""
+        from tests.registration_batches import (
+            BATCHES,
+            assert_importable_before_registry,
+        )
 
-        code = (
-            "import sys; sys.path.insert(0, '.');"
-            "import pgsf_spark.analytics.registry_r19;"
-            "import pgsf_spark.analytics.registry_r18;"
-            "import pgsf_spark.analytics.registry_r17;"
-            "import pgsf_spark.analytics.registry_r16;"
-            "import pgsf_spark.analytics.registry_r15;"
-            "import pgsf_spark.analytics.registry_r14;"
-            "import pgsf_spark.analytics.registry_r13;"
-            "import pgsf_spark.analytics.registry_r12;"
-            "import pgsf_spark.analytics.registry_r11;"
-            "from pgsf_spark.analytics.registry import QUERIES;"
-            "from pgsf_spark.analytics.registry_r11 import STAGED_QUERIES;"
-            "from pgsf_spark.analytics.registry_r12 import STAGED_QUERIES_R12;"
-            "from pgsf_spark.analytics.registry_r13 import STAGED_QUERIES_R13;"
-            "from pgsf_spark.analytics.registry_r14 import STAGED_QUERIES_R14;"
-            "from pgsf_spark.analytics.registry_r15 import STAGED_QUERIES_R15;"
-            "from pgsf_spark.analytics.registry_r16 import STAGED_QUERIES_R16;"
-            "from pgsf_spark.analytics.registry_r17 import STAGED_QUERIES_R17;"
-            "from pgsf_spark.analytics.registry_r18 import STAGED_QUERIES_R18;"
-            "from pgsf_spark.analytics.registry_r19 import STAGED_QUERIES_R19;"
-            "assert set(STAGED_QUERIES) <= set(QUERIES);"
-            "assert set(STAGED_QUERIES_R12) <= set(QUERIES);"
-            "assert set(STAGED_QUERIES_R13) <= set(QUERIES);"
-            "assert set(STAGED_QUERIES_R14) <= set(QUERIES);"
-            "assert set(STAGED_QUERIES_R15) <= set(QUERIES);"
-            "assert set(STAGED_QUERIES_R16) <= set(QUERIES);"
-            "assert set(STAGED_QUERIES_R17) <= set(QUERIES);"
-            "assert set(STAGED_QUERIES_R18) <= set(QUERIES);"
-            "assert set(STAGED_QUERIES_R19) <= set(QUERIES)"
-        )
-        r = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
-        )
-        assert r.returncode == 0, r.stderr[-1000:]
+        assert_importable_before_registry(*BATCHES)

@@ -22,6 +22,7 @@ import duckdb
 import pytest
 
 from pgsf_spark.analytics.registry import QUERIES
+from tests.registration_batches import BATCHES
 
 SF_DIR = os.environ.get("PGSF_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = (
@@ -82,30 +83,13 @@ def test_registry_has_no_duplicate_keys():
     assert dupes == [], f"duplicate registry keys (first spec silently dead): {dupes}"
 
 
-def test_round_front_is_the_first_fifty():
-    # the correctness driver gates the first 50 dict entries; the round
-    # front list must BE that prefix or the rotation plan silently skews
-    import pgsf_spark.analytics.registry as reg
-
-    # always gate on the LATEST round's front (highest-numbered list), so
-    # this test can't silently pin a stale rotation
-    rounds = sorted(
-        int(a[len("_ROUND") : -len("_FRONT")])
-        for a in dir(reg)
-        if a.startswith("_ROUND") and a.endswith("_FRONT")
-    )
-    front = getattr(reg, f"_ROUND{rounds[-1]}_FRONT")
-    assert list(reg.QUERIES)[: len(front)] == front
-
-
 def test_every_query_has_an_oracle_or_is_whitelisted():
     # keep the no-oracle set deliberate: every new query should ship with one
     missing = sorted(name for name, spec in QUERIES.items() if spec.oracle is None)
     assert missing == [], f"queries without oracle SQL: {missing}"
 
 
-@pytest.mark.parametrize("name", _WITH_ORACLE)
-def test_oracle_binds_and_types_are_hashable(con, name):
+def _assert_binds_hashable(con, name):
     rel = con.sql(QUERIES[name].oracle)  # bind only -- no execution
     offenders = [
         (col, str(typ))
@@ -117,6 +101,22 @@ def test_oracle_binds_and_types_are_hashable(con, name):
         f"wrap the aggregate in CAST(... AS BIGINT) (ints) or "
         f"CAST(... AS DOUBLE) (decimals)"
     )
+
+
+@pytest.mark.parametrize("name", _WITH_ORACLE)
+def test_oracle_binds_and_types_are_hashable(con, name):
+    _assert_binds_hashable(con, name)
+
+
+# the round 13-21 batches, linted here before they were registered; the
+# names stay pinned so dropping one from the registry fails by name
+_LATE_BATCHES = sorted(n for r in range(13, 22) for n in BATCHES[r])
+
+
+@pytest.mark.parametrize("name", _LATE_BATCHES)
+def test_staged_oracle_binds_and_types_are_hashable(con, name):
+    assert name in QUERIES
+    _assert_binds_hashable(con, name)
 
 
 def test_banned_decimal_output_is_actually_caught(con):
@@ -145,51 +145,3 @@ def test_oracle_pandas_dtypes_are_hash_stable(con, name):
                 f"pandas -- cast the output column to DOUBLE"
             )
 
-
-def _staged_with_oracle() -> dict:
-    """All still-staged batches' oracle specs: the live-registry lints
-    above only fire at REGISTRATION, which is how from_json_corrupt_gate
-    reached round 12 with a bare SUM (HUGEINT) -- lint staged batches
-    BEFORE their round so a promotion is never a lint-triage session."""
-    from pgsf_spark.analytics.registry_r13 import STAGED_QUERIES_R13
-    from pgsf_spark.analytics.registry_r14 import STAGED_QUERIES_R14
-    from pgsf_spark.analytics.registry_r15 import STAGED_QUERIES_R15
-    from pgsf_spark.analytics.registry_r16 import STAGED_QUERIES_R16
-    from pgsf_spark.analytics.registry_r17 import STAGED_QUERIES_R17
-    from pgsf_spark.analytics.registry_r18 import STAGED_QUERIES_R18
-    from pgsf_spark.analytics.registry_r19 import STAGED_QUERIES_R19
-    from pgsf_spark.analytics.registry_r20 import STAGED_QUERIES_R20
-    from pgsf_spark.analytics.registry_r21 import STAGED_QUERIES_R21
-
-    return {
-        name: spec
-        for batch in (
-            STAGED_QUERIES_R13,
-            STAGED_QUERIES_R14,
-            STAGED_QUERIES_R15,
-            STAGED_QUERIES_R16,
-            STAGED_QUERIES_R17,
-            STAGED_QUERIES_R18,
-            STAGED_QUERIES_R19,
-            STAGED_QUERIES_R20,
-            STAGED_QUERIES_R21,
-        )
-        for name, spec in batch.items()
-        if spec.oracle is not None
-    }
-
-
-@pytest.mark.parametrize("name", sorted(_staged_with_oracle()))
-def test_staged_oracle_binds_and_types_are_hashable(con, name):
-    spec = _staged_with_oracle()[name]
-    rel = con.sql(spec.oracle)  # bind only -- no execution
-    offenders = [
-        (col, str(typ))
-        for col, typ in zip(rel.columns, rel.types)
-        if any(b in str(typ).upper() for b in BANNED)
-    ]
-    assert offenders == [], (
-        f"{name} (staged): oracle emits driver-unhashable column types "
-        f"{offenders}; wrap the aggregate in CAST(... AS BIGINT) (ints) "
-        f"or CAST(... AS DOUBLE) (decimals)"
-    )

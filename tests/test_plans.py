@@ -17,13 +17,12 @@ SF = "/root/testdata/sf0.001"
 # that's a BroadcastNestedLoopJoin, not a data-sized cartesian product.
 CARTESIAN_OK = {"cosine_topk", "ann_lsh_topk"}
 
-# Streaming faces (registered in round 11) execute a bounded availableNow
-# stream inside fn() and return a localCheckpoint of the sink table -- the
-# returned plan is a checkpoint scan with nothing for these lints to
-# inspect, and building it costs a full stream run (~8-17 s each). The
-# checkpoint shape is asserted once in
-# tests/test_r11_staged.py::test_stream_faces_return_checkpoints; the
-# faces' internal plans are pinned by tests/test_streaming.py.
+# Streaming faces execute a bounded availableNow stream inside fn() and
+# return a localCheckpoint of the sink table -- the returned plan is a
+# checkpoint scan with nothing for these lints to inspect, and building it
+# costs a full stream run (~8-17 s each). The checkpoint shape is asserted
+# for one of them in TestCheckpointFaces below; the faces' internal plans
+# are pinned by tests/test_streaming.py.
 STREAMING_FACES = frozenset(n for n in QUERIES if n.startswith("stream_"))
 assert len(STREAMING_FACES) == 8, STREAMING_FACES
 _LINTABLE = sorted(set(QUERIES) - STREAMING_FACES)
@@ -41,10 +40,100 @@ def plan_of(spark, name):
     return _PLAN_CACHE[name]
 
 
+# Queries pinned free of nested-loop joins as well: a broadcast nested loop
+# is legal elsewhere (kmeans, cosine_topk), so this ban is per name.
+NO_NESTED_LOOP = {
+    # relational / at-scale shapes and multimodal analysis
+    "audio_silence_ratio",
+    "audio_spectral_centroid",
+    "bucketed_colocated_join_gate",
+    "grouping_sets_cube_gate",
+    "image_channel_histogram",
+    "image_phash_neardup",
+    "image_resize_gate",
+    "lateral_explode_topk",
+    "media_metadata_quality_gate",
+    "multimodal_dedup_cross",
+    "pivot_unpivot_roundtrip",
+    "range_join_bucketed",
+    "skew_salted_topk",
+    "snapshot_asof_read_gate",
+    "video_motion_profile",
+    "video_shot_boundaries",
+    "window_rangebetween_native",
+    # semi-structured data and Python engine surfaces
+    "arrow_map_profile",
+    "from_json_corrupt_gate",
+    "higher_order_chain",
+    "map_reshape_gate",
+    "python_datasource_gate",
+    "udtf_bigram_topk",
+    "variant_shred",
+    "variant_typeof_profile",
+    "xml_shred_gate",
+    # Spark SQL language surfaces
+    "collation_gate",
+    "observe_metrics_gate",
+    "pipe_syntax_parity",
+    "recursive_cte_closure",
+    "sql_table_udf_gate",
+    "sql_udf_gate",
+}
+assert NO_NESTED_LOOP <= set(_LINTABLE), NO_NESTED_LOOP - set(_LINTABLE)
+
+
 class TestNoCartesian:
     @pytest.mark.parametrize("name", sorted(n for n in _LINTABLE if n not in CARTESIAN_OK))
     def test_no_cartesian_product(self, spark, name):
         assert "CartesianProduct" not in plan_of(spark, name)
+
+    @pytest.mark.parametrize("name", sorted(NO_NESTED_LOOP))
+    def test_no_nested_loop_join(self, spark, name):
+        assert "BroadcastNestedLoopJoin" not in plan_of(spark, name)
+
+
+# Faces that run their workflow (a bounded stream, a sink write, a sync or
+# store sequence) eagerly inside fn() and return a bounded localCheckpoint:
+# the returned plan is a checkpoint scan that reads no parquet, so nothing
+# downstream re-runs the workflow.
+CHECKPOINT_FACES = {
+    "stream_static_enrich",  # one streaming representative (each costs a stream run)
+    "statestore_read_gate",
+    "python_cdc_stream_gate",
+    "chunked_sink_gate",
+    "chunked_stream_sink_gate",
+    "schema_drift_gate",
+    "integrity_quarantine_gate",
+    "fleet_scheduler_gate",
+    "snapshot_consistency_gate",
+    "vacuum_retention_gate",
+    "cas_publish_gate",
+    "curation_funnel_gate",
+    "curation_funnel_incremental_gate",
+    "sosl_search_gate",
+    "query_pages_gate",
+    "cdc_id_scans_gate",
+    "compaction_gate",
+    "bootstrap_seed_gate",
+    "upload_results_gate",
+    "catalog_snapshot_gate",
+    "fleet_catalog_wave_gate",
+    "cdf_changes_gate",
+    "state_recovery_gate",
+    "catalog_join_pin_gate",
+    "recovery_wave_gate",
+    "catalog_retention_gate",
+    "maintenance_recovery_gate",
+}
+assert CHECKPOINT_FACES <= set(QUERIES), CHECKPOINT_FACES - set(QUERIES)
+
+
+class TestCheckpointFaces:
+    @pytest.mark.parametrize("name", sorted(CHECKPOINT_FACES))
+    def test_returns_checkpoint_scan(self, spark, name):
+        plan = plan_of(spark, name)
+        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
+        assert ".parquet" not in plan
 
 
 # Duplicate-pipeline lint (round 9): lsh_candidate_pairs derived its
@@ -60,9 +149,9 @@ class TestNoCartesian:
 #       each pass re-reads the pruned feature columns by design,
 #   (b) scalar-broadcast re-reads (a 1-row aggregate of the table crossJoined
 #       back: mean-then-variance two-pass shapes like huber_mean),
-#   (c) skew_hedged_join's hot/cold union, which scans its build side twice
-#       ON PURPOSE, and per-check audit reports unioning independent checks
-#       of the same table (referential_integrity_audit).
+#   (c) deliberate independent legs over the same table, e.g. per-check
+#       audit reports unioning independent checks
+#       (referential_integrity_audit).
 # So the lint is a DRIFT PIN, doc-counts style: every query whose plan
 # reads one table more than twice is recorded below with its audited
 # max-scans-per-table (default budget 2 = plain self-join); a new query or
@@ -346,6 +435,12 @@ class TestKeyPlans:
     def test_merge_anti_join_broadcast(self, spark):
         plan = plan_of(spark, "merge_upsert_customer")
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+
+    def test_python_surfaces_are_arrow_batched(self, spark):
+        # the UDTF runs Arrow-optimized and mapInArrow never converts to
+        # pandas: a silent fallback to the pickled row path fails here
+        assert "ArrowEvalPythonUDTF" in plan_of(spark, "udtf_bigram_topk")
+        assert "MapInArrow" in plan_of(spark, "arrow_map_profile")
 
     def test_edit_distance_blocked_equi_join(self, spark):
         # VERDICT r2: the string-similarity template must not be an all-pairs

@@ -1,372 +1,14 @@
-"""Round-11 batch: oracle parity + plan shapes, now REGISTERED.
+"""Round-11 batch: its 25 specs follow the first 408 names of the literal."""
 
-Built and staged during round 10 behind the registry freeze; round 11
-promoted the batch into the live registry (registry.py's ROUND 11
-REGISTRATION block) exactly as the staging docstring promised -- a dict
-update of already-driver-shaped queries. These tests now certify the
-REGISTERED state (the 25 names live in QUERIES, same spec objects) and
-keep the batch's operator-level shape pins; the per-name oracle-parity
-loop runs through the same live-registry path the close sweep uses.
-"""
-
-import pytest
-from pyspark.sql import functions as F
-
-from tests.conftest import SF_DIR
-
-
-def _staged():
-    from pgsf_spark.analytics.registry_r11 import STAGED_QUERIES
-
-    return STAGED_QUERIES
+from tests.registration_batches import (
+    assert_batch_at,
+    assert_specs_well_formed,
+)
 
 
 class TestStagingDiscipline:
     def test_r11_batch_registered(self):
-        # round 11 promoted the staged batch: all 25 names live in the
-        # registry, as the SAME spec objects. Later fronts (r12's 11,
-        # r13's 20) rotated ahead of them; the r11 names already have two
-        # driver rows (r11 + r12 windows) so they ride in the tail now.
-        from pgsf_spark.analytics.registry import QUERIES
-        from pgsf_spark.analytics.registry_r12 import STAGED_QUERIES_R12
-
-        staged = _staged()
-        assert len(QUERIES) == 382 + len(staged) + len(STAGED_QUERIES_R12) + 20 + 6
-        for name, spec in staged.items():
-            assert QUERIES.get(name) is spec, name
+        assert_batch_at(11, 408)
 
     def test_staged_specs_shaped_like_registry_specs(self):
-        from pgsf_spark.analytics.registry import QuerySpec
-
-        for name, spec in _staged().items():
-            assert isinstance(spec, QuerySpec), name
-            assert callable(spec.fn), name
-            assert spec.oracle is None or isinstance(spec.oracle, str), name
-
-
-class TestStagedOracleParity:
-    """Each staged query through the driver-identical comparison."""
-
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_oracle_parity_sf0001(self, spark, name):
-        # post-registration this runs through the LIVE registry (default
-        # queries=), the exact path the close sweep and driver exercise
-        from pgsf_spark.verify import verify_queries
-
-        results = verify_queries(spark, SF_DIR, only={name}, log=lambda s: None)
-        assert results == {name: True}
-
-
-class TestStagedLintReadiness:
-    """The staged batch must already pass the LIVE registry's plan lints
-    (tests/test_plans.py), so round-11 registration is a dict update, not
-    a lint-triage session. Streaming faces return a bounded
-    localCheckpoint (their feed plumbing never appears in the returned
-    plan); batch queries are asserted on their real plans."""
-
-    _PLANS: dict = {}
-
-    @classmethod
-    def _plan(cls, spark, name):
-        if name not in cls._PLANS:
-            df = _staged()[name].fn(spark, SF_DIR)
-            cls._PLANS[name] = df._jdf.queryExecution().executedPlan().toString()
-        return cls._PLANS[name]
-
-    # the streaming faces execute a full stream per plan build; lint the
-    # batch families (the streaming plans are checkpoint scans by
-    # construction -- asserted once in test_stream_faces_return_checkpoints)
-    _BATCH = sorted(
-        n
-        for n in _staged()
-        if not n.startswith("stream_")
-    )
-
-    @pytest.mark.parametrize("name", _BATCH)
-    def test_no_cartesian_no_python_eval_no_global_window(self, spark, name):
-        from pgsf_spark.planlint import partitionless_windows
-
-        plan = self._plan(spark, name)
-        assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
-        assert "BatchEvalPython" not in plan, name  # no row-at-a-time UDFs
-        assert not partitionless_windows(plan), name
-
-    @pytest.mark.parametrize("name", _BATCH)
-    def test_scan_budget_default_two(self, spark, name):
-        # no staged query needs a SCAN_BUDGET pin: all fit the default
-        import re
-        from collections import Counter
-
-        counts = Counter(re.findall(r"(\w+)\.parquet", self._plan(spark, name)))
-        excess = {t: n for t, n in counts.items() if n > 2}
-        assert not excess, (name, excess)
-
-    def test_stream_faces_return_checkpoints(self, spark):
-        # one streaming representative: the returned plan is a bounded
-        # local-checkpoint scan -- no parquet scans, no windows, nothing
-        # for the registry lints to flag at registration
-        from pgsf_spark.streaming.faces import q_stream_static_enrich
-
-        plan = (
-            q_stream_static_enrich(spark, SF_DIR)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
-        assert ".parquet" not in plan
-
-
-class TestStagedPlanShapes:
-    def test_range_join_never_nested_loop(self, spark):
-        from pgsf_spark.analytics.shapes import q_range_join_bucketed
-
-        plan = (
-            q_range_join_bucketed(spark, SF_DIR)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-
-    def test_salted_topk_has_salt_stage_and_bounded_windows(self, spark):
-        from pgsf_spark.analytics.shapes import q_skew_salted_topk
-
-        plan = (
-            q_skew_salted_topk(spark, SF_DIR)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        # stage-2 window partitions on (key, salt): the salt column must
-        # survive into a Window partition spec, or the guarantee that no
-        # window sees an unbounded partition is gone
-        assert "salt" in plan
-        assert "Window" in plan
-
-    def test_bucketed_gate_probe_is_exchange_free(self, spark):
-        # the gate's own no_exchange column is oracle-pinned TRUE; assert
-        # it here too so the failure reads as a plan regression, not a
-        # value mismatch
-        from pgsf_spark.analytics.shapes import q_bucketed_colocated_join_gate
-
-        rows = q_bucketed_colocated_join_gate(spark, SF_DIR).collect()
-        assert rows and all(r["no_exchange"] for r in rows)
-
-    def test_asof_gate_versions_are_immutable(self, spark):
-        from pgsf_spark.analytics.shapes import q_snapshot_asof_read_gate
-
-        row = q_snapshot_asof_read_gate(spark, SF_DIR).collect()[0]
-        assert row["versions_distinct"]
-        assert row["v1_rows"] < row["v2_rows"]
-
-    def test_grouping_id_bit_contract(self, spark):
-        # leftmost grouping column = most significant bit (the contract the
-        # oracle pins against DuckDB's GROUPING()): status-only subtotals
-        # carry gid 1 (priority aggregated), priority-only gid 2, total 3
-        from pgsf_spark.analytics.shapes import q_grouping_sets_cube_gate
-
-        rows = q_grouping_sets_cube_gate(spark, SF_DIR).collect()
-        for r in rows:
-            expect = (2 if r["status"] == "ALL" else 0) + (
-                1 if r["priority"] == "ALL" else 0
-            )
-            assert r["gid"] == expect, r
-
-    def test_pivot_roundtrip_all_match(self, spark):
-        from pgsf_spark.analytics.shapes import q_pivot_unpivot_roundtrip
-
-        rows = q_pivot_unpivot_roundtrip(spark, SF_DIR).collect()
-        assert rows and all(r["match"] for r in rows)
-
-    def test_lateral_topk_tie_order_is_first_occurrence(self, spark):
-        from pgsf_spark.analytics.shapes import q_lateral_explode_topk
-
-        rows = q_lateral_explode_topk(spark, SF_DIR).collect()
-        by_doc = {}
-        for r in rows:
-            by_doc.setdefault(r["doc_id"], []).append(r)
-        for doc, rs in by_doc.items():
-            rs = sorted(rs, key=lambda r: r["rank"])
-            # within a doc: lengths non-increasing; equal lengths keep
-            # position order (the posexplode-carried tiebreak)
-            for a, b in zip(rs, rs[1:]):
-                assert a["tok_len"] >= b["tok_len"], doc
-                if a["tok_len"] == b["tok_len"]:
-                    assert a["pos1"] < b["pos1"], doc
-
-    def test_phash_banding_has_pigeonhole_recall(self, spark):
-        # tau must stay below the band count or the banded join silently
-        # loses distance-(bands..tau) pairs -- the exact bug the oracle
-        # caught when pHash first reused the 4-band aHash join at tau=6
-        import pytest as _pytest
-
-        from pgsf_spark.analytics.media_analysis import (
-            PHASH_BANDS,
-            PHASH_TAU,
-            phash_near_dup_pairs,
-        )
-
-        assert PHASH_TAU < PHASH_BANDS
-        hashes = spark.createDataFrame(
-            [(1, 0, 0), (2, 0, 0)], "media_id long, phash_hi long, phash_lo long"
-        )
-        with _pytest.raises(ValueError):
-            phash_near_dup_pairs(hashes, tau=PHASH_BANDS)
-
-    def test_phash_brightness_invariance_vs_ahash(self, spark):
-        # the property that makes pHash "aHash's robust sibling": a global
-        # brightness shift (no wraparound) leaves every pHash bit intact,
-        # because the DCT AC structure and its median shift together
-        from pgsf_spark.analytics.media_analysis import _phash_bits_from_grid
-
-        grid = [((3 * i) % 23) * 7 + 10 for i in range(64)]
-        shifted = [v + 40 for v in grid]
-        assert _phash_bits_from_grid(grid) == _phash_bits_from_grid(shifted)
-
-    def test_shot_detector_matches_construction(self, spark):
-        # ground truth by construction: cuts at every multiple of shot_len,
-        # zero-delta transitions everywhere else
-        from pgsf_spark.analytics.media_analysis import q_video_shot_boundaries
-
-        for r in q_video_shot_boundaries(spark, SF_DIR).collect():
-            m, n = r["media_id"], r["n_frames"]
-            shot_len = 3 + m % 4
-            expect_cuts = [f for f in range(1, n) if f % shot_len == 0]
-            assert r["cut_frames"] == ",".join(map(str, expect_cuts)), r
-            assert r["n_static"] == (n - 1) - len(expect_cuts), r
-
-    def test_cross_modal_finds_its_own_reencode(self, spark):
-        # every video's frame 0 replicates its image's channel-0 texture;
-        # the channel-collapse "re-encode" costs a few threshold-adjacent
-        # bits, so most (not all: ids 15/31's steepest textures land at
-        # hamming 4 > tau, verified against the oracle) self-pairs
-        # surface, half of them at hamming 0
-        from pgsf_spark.analytics.multimodal import AHASH_TAU
-        from pgsf_spark.analytics.media_analysis import q_multimodal_dedup_cross
-
-        rows = q_multimodal_dedup_cross(spark, SF_DIR).collect()
-        self_pairs = {
-            r["video_id"]: r["hamming"]
-            for r in rows
-            if r["image_id"] == r["video_id"] and r["frame_idx"] == 0
-        }
-        assert len(self_pairs) >= 28  # 30 of 32 by construction
-        assert all(h <= AHASH_TAU for h in self_pairs.values())
-        assert sum(1 for h in self_pairs.values() if h == 0) >= 8
-
-    def test_quality_gate_surfaces_marker_only_and_corrupt(self, spark):
-        from pgsf_spark.analytics.media_analysis import (
-            q_media_metadata_quality_gate,
-        )
-
-        by_kind = {
-            r["kind"]: r
-            for r in q_media_metadata_quality_gate(spark, SF_DIR).collect()
-        }
-        assert set(by_kind) == {"png", "jpeg", "wav", "rvid"}
-        # marker-only jpegs: metadata parses, payload never completes
-        assert by_kind["jpeg"]["n_meta_ok"] > 0
-        assert by_kind["jpeg"]["n_complete"] == 0
-        # corrupt rows exist and parse nothing
-        for r in by_kind.values():
-            assert r["n_corrupt"] > 0
-            assert r["n_meta_ok"] == r["n_rows"] - r["n_corrupt"]
-
-    def test_watermark_semantics_canary(self, spark, tmp_path):
-        # The streaming oracles in registry_r11 encode MEASURED engine
-        # semantics: (a) the late-row filter for batch k uses the watermark
-        # one batch older (max ts over batches < k-1, minus delay), (b) the
-        # drop predicate is on the WINDOW END, not the row timestamp, and
-        # (c) append-mode windows emit iff end <= final watermark. A
-        # PySpark upgrade changing any of these must fail HERE, loudly,
-        # not as a silent oracle skew.
-        import time
-        from datetime import datetime
-
-        from pyspark.sql import functions as F
-
-        feed = tmp_path / "wmfeed"
-        feed.mkdir()
-        schema = "k long, ts timestamp, v double"
-
-        def t(h, m=0):
-            return datetime(2024, 1, 1, h, m)
-
-        batches = [
-            [(1, t(5, 0), 1.0)],  # wm after b0 = 4:30
-            [(2, t(5, 5), 1.0)],  # b1's late filter still uses b-(-1)=0
-            # b2's late filter uses wm during b1 = 4:30:
-            #   A ts=4:10, window end 5:00 > 4:30 -> KEPT (window-end rule;
-            #     a ts-based rule would drop it: 4:10 < 4:30)
-            #   B ts=3:50, window end 4:00 <= 4:30 -> DROPPED
-            [(3, t(4, 10), 10.0), (4, t(3, 50), 100.0)],
-            [(5, t(23, 0), 0.0)],  # sentinel: final wm 22:30
-        ]
-        for pdf in batches:
-            spark.createDataFrame(pdf, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(str(feed))
-            time.sleep(1.05)
-        stream = (
-            spark.readStream.schema(spark.createDataFrame([], schema).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(feed))
-        )
-        agg = (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv"))
-            .select(F.date_format("w.start", "HH:mm").alias("ws"), "n", "sv")
-        )
-        out = str(tmp_path / "wmout")
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "wmck"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-        got = {r["ws"]: (r["n"], r["sv"]) for r in spark.read.parquet(out).collect()}
-        assert got == {
-            "04:00": (1, 10.0),  # late-but-window-open row A kept
-            "05:00": (2, 2.0),
-            # B dropped (no 03:00 window); sentinel window past final wm
-        }
-
-    def test_stream_feed_replays_in_mtime_order(self, spark, tmp_path):
-        from pgsf_spark.streaming.faces import _tiles, _write_feed
-
-        df = spark.range(30).select(
-            F.col("id").alias("event_id"),
-            F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("ts"),
-        )
-        tiles = _tiles(
-            df.withColumn("ts", F.expr("ts + make_interval(0,0,0,0,0,0,event_id)")),
-            ["ts", "event_id"],
-        )
-        feed = str(tmp_path / "feed")
-        _write_feed(tiles, feed)
-        import glob
-        import os
-
-        files = sorted(glob.glob(os.path.join(feed, "*.parquet")))
-        assert len(files) == 3
-        mtimes = [os.path.getmtime(f) for f in files]
-        assert mtimes == sorted(mtimes) and len(set(mtimes)) == 3
-        # tiles partition the input in ts order: batch-000 holds the oldest
-        ids0 = {r["event_id"] for r in spark.read.parquet(files[0]).collect()}
-        assert ids0 == set(range(10))
-
-    def test_rangebetween_trailing_counts_cover_all_events(self, spark):
-        from pgsf_spark.analytics.shapes import q_window_rangebetween_native
-        from pgsf_spark.tables import load_table
-
-        hist = q_window_rangebetween_native(spark, SF_DIR).collect()
-        total = sum(r["n_rows"] for r in hist)
-        assert total == load_table(spark, SF_DIR, "events").count()
-        assert all(r["trailing_n"] >= 1 for r in hist)  # frame includes self
+        assert_specs_well_formed(11)

@@ -1,784 +1,20 @@
-"""Round-12 batch: semi-structured + Python-engine surfaces, now REGISTERED.
+"""Round-12 batch: its 11 specs follow the round-11 batch."""
 
-Built and staged during round 11; round 12 promoted the batch into the
-live registry (registry.py's ROUND-12 REGISTRATION block) exactly as the
-staging docstring promised -- a dict update of already-driver-shaped
-queries. These tests now certify the REGISTERED state (the 11 names live
-in QUERIES at the dict head, same spec objects) and keep the batch's
-operator-level shape pins; the per-name oracle-parity loop runs the SAME
-comparison the round driver runs (pgsf_spark.verify.verify_queries).
-
-Also covers pgsf_spark/streaming/tws.py -- the transformWithStateInPandas
-surface (Spark 4 StatefulProcessor). The tws engine itself is
-ENVIRONMENT-GATED (the worker protocol needs google.protobuf, absent
-here); the classic fallback engine runs everywhere and both engines share
-one output contract, so the parity leg activates automatically in an
-environment that has the runtime.
-"""
-
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-# the ONE capability probe -- the skip gate must match the runtime gate
-from pgsf_spark.streaming.tws import HAS_TWS_RUNTIME as _HAS_PROTOBUF
-from tests.conftest import SF_DIR
-
-
-def _staged():
-    from pgsf_spark.analytics.registry_r12 import STAGED_QUERIES_R12
-
-    return STAGED_QUERIES_R12
-
-
-# faces that execute a bounded stream and return a localCheckpoint scan
-_STREAMING_FACES = {"statestore_read_gate", "python_cdc_stream_gate"}
+from tests.registration_batches import (
+    assert_batch_at,
+    assert_specs_well_formed,
+)
 
 
 class TestStagingDisciplineR12:
     def test_r12_batch_registered_at_dict_head(self):
-        # round 12 promoted the staged batch: all 11 names live in the
-        # registry, as the SAME spec objects, rotated to the dict head so
-        # the driver's 50-slot correctness window sees them first
-        from pgsf_spark.analytics.registry import QUERIES
-        from pgsf_spark.analytics.registry_r11 import STAGED_QUERIES
-
-        staged = _staged()
-        assert len(staged) == 11
-        assert len(QUERIES) == 382 + len(STAGED_QUERIES) + len(staged) + 20 + 6
-        for name, spec in staged.items():
-            assert QUERIES.get(name) is spec, name
-        # round 14's 50-name front (6 new + 20 r13-batch + 24 re-checks)
-        # rotated ahead; the r12 names sit right behind it in their r13
-        # rotation order (they already have two driver rows, r12 + r13)
-        assert list(QUERIES)[50 : 50 + len(staged)] == list(staged)
+        # the batch left the driver's 50-name front; it now follows the
+        # round-11 batch in literal order
+        assert_batch_at(12, 433)
 
     def test_r13_r14_batches_registered_in_round_13(self):
-        # round 13 promoted the r13/r14 staged batches (with r15/r16/r17,
-        # 20 <= the 25/round cap) -- they are now driver-visible, as the
-        # SAME spec objects
-        from pgsf_spark.analytics.registry import QUERIES
-        from pgsf_spark.analytics.registry_r13 import STAGED_QUERIES_R13
-        from pgsf_spark.analytics.registry_r14 import STAGED_QUERIES_R14
-
-        for staged in (STAGED_QUERIES_R13, STAGED_QUERIES_R14):
-            for name, spec in staged.items():
-                assert QUERIES.get(name) is spec, name
+        assert_batch_at(13, 6)
+        assert_batch_at(14, 14)
 
     def test_staged_specs_shaped_like_registry_specs(self):
-        from pgsf_spark.analytics.registry import QuerySpec
-
-        for name, spec in _staged().items():
-            assert isinstance(spec, QuerySpec), name
-            assert callable(spec.fn), name
-            # the whole r12 batch is full-oracle (no rows-only entries)
-            assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
-
-
-class TestStagedOracleParityR12:
-    """Each staged query through the driver-identical comparison."""
-
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_oracle_parity_sf0001(self, spark, name):
-        from pgsf_spark.verify import verify_queries
-
-        results = verify_queries(
-            spark, SF_DIR, only={name}, log=lambda s: None, queries=_staged()
-        )
-        assert results == {name: True}
-
-
-class TestStagedLintReadinessR12:
-    """The staged batch must already pass the live plan lints."""
-
-    _PLANS: dict = {}
-
-    # the two streaming faces execute a full bounded stream and return a
-    # localCheckpoint scan -- their returned plans are lint-trivial by
-    # construction (asserted once in test_streaming_faces_return_checkpoints,
-    # same discipline as test_r11_staged's streaming exclusion), so the
-    # batch lints cover the nine genuine batch plans
-    _BATCH = sorted(n for n in _staged() if n not in _STREAMING_FACES)
-
-    @classmethod
-    def _plan(cls, spark, name):
-        if name not in cls._PLANS:
-            df = _staged()[name].fn(spark, SF_DIR)
-            cls._PLANS[name] = df._jdf.queryExecution().executedPlan().toString()
-        return cls._PLANS[name]
-
-    @pytest.mark.parametrize("name", _BATCH)
-    def test_no_cartesian_no_row_udf_no_global_window(self, spark, name):
-        from pgsf_spark.planlint import partitionless_windows
-
-        plan = self._plan(spark, name)
-        assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
-        # no row-at-a-time Python evaluation. The two deliberate Python
-        # surfaces in this batch use the Arrow batch paths and appear as
-        # ArrowEvalPythonUDTF / PythonMapInArrow (asserted positively in
-        # test_python_surfaces_are_arrow_batched); BatchEvalPython* (the
-        # pickled row path, scalar or UDTF) must appear nowhere.
-        assert "BatchEvalPython" not in plan, name
-        assert not partitionless_windows(plan), name
-
-    @pytest.mark.parametrize("name", _BATCH)
-    def test_scan_budget_default_two(self, spark, name):
-        import re
-        from collections import Counter
-
-        counts = Counter(re.findall(r"(\w+)\.parquet", self._plan(spark, name)))
-        excess = {t: n for t, n in counts.items() if n > 2}
-        assert not excess, (name, excess)
-
-    @pytest.mark.parametrize("name", sorted(_STREAMING_FACES))
-    def test_streaming_faces_return_checkpoints(self, spark, name):
-        # each streaming face's returned plan is a bounded local-checkpoint
-        # scan: no parquet scans, nothing for the registry lints to flag
-        plan = self._plan(spark, name)
-        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
-        assert ".parquet" not in plan
-
-    def test_python_surfaces_are_arrow_batched(self, spark):
-        """The UDTF runs Arrow-optimized and mapInArrow never converts to
-        pandas -- pin the physical node names so a silent fallback to the
-        pickled row path fails here."""
-        udtf_plan = self._plan(spark, "udtf_bigram_topk")
-        assert "ArrowEvalPythonUDTF" in udtf_plan
-        arrow_plan = self._plan(spark, "arrow_map_profile")
-        assert "MapInArrow" in arrow_plan  # physical node: MapInArrow
-
-
-class TestPythonDataSource:
-    """sources/pyds.py: the paged entity source's three pushdowns, pinned
-    on a purpose-built multi-row-group file."""
-
-    @pytest.fixture(scope="class")
-    def paged_file(self, spark, tmp_path_factory):
-        """Documents sorted by doc_id in 100-row row groups -> 5 pages
-        with disjoint doc_id stats, so range pushdown can skip pages."""
-        import pyarrow.parquet as pq
-        from pgsf_spark.tables import load_table
-
-        src = (
-            load_table(spark, SF_DIR, "documents")
-            .select("doc_id", "source", "n_chars")
-            .orderBy("doc_id")
-            .toPandas()
-        )
-        path = str(tmp_path_factory.mktemp("pyds") / "docs.parquet")
-        import pyarrow as pa
-
-        pq.write_table(pa.Table.from_pandas(src, preserve_index=False), path,
-                       row_group_size=100)
-        assert pq.ParquetFile(path).metadata.num_row_groups == 5
-        return path
-
-    def _read(self, spark, path, fields="doc_id,source,n_chars"):
-        from pgsf_spark.sources import pyds
-
-        pyds.register(spark)
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        return (
-            spark.read.format("entity_pages")
-            .option("path", path)
-            .option("fields", fields)
-            .load()
-        )
-
-    def test_row_group_stats_skip_pages(self, spark, paged_file):
-        df = self._read(spark, paged_file).filter(F.col("doc_id") < 50)
-        # pushdown reaches partition planning: 1 of 5 pages survives
-        assert df.rdd.getNumPartitions() == 1
-        assert df.count() == 50
-
-    def test_pushed_filter_is_consumed_not_post_filtered(self, spark, paged_file):
-        df = self._read(spark, paged_file).filter(F.col("n_chars") > 300)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # the typed predicate was fully handled by pushFilters: Spark's
-        # only remaining filter is the null guard
-        assert "(n_chars" not in plan.replace("isnotnull(n_chars", ""), plan
-
-    def test_unsupported_filter_falls_back_to_spark(self, spark, paged_file):
-        # != has no typed pushdown form in _OPS -> yielded back to Spark;
-        # correctness must be unaffected
-        df = self._read(spark, paged_file).filter(F.col("source") != "src0")
-        base = self._read(spark, paged_file)
-        assert df.count() == base.count() - base.filter(
-            F.col("source") == "src0"
-        ).count()
-
-    def test_in_filter_pushdown_parity(self, spark, paged_file):
-        df = self._read(spark, paged_file).filter(
-            F.col("source").isin("src1", "src2")
-        )
-        got = {r["source"] for r in df.select("source").distinct().collect()}
-        assert got == {"src1", "src2"}
-
-    def test_in_filter_with_null_falls_back(self, spark, paged_file):
-        # IN (.., NULL) must neither crash planning (None vs int in the
-        # stats compare) nor match NULL rows -- it is yielded back to
-        # Spark, whose post-filter keeps SQL three-valued semantics
-        df = self._read(spark, paged_file).filter(F.col("doc_id").isin(5, None))
-        rows = df.collect()
-        assert {r["doc_id"] for r in rows} == {5}
-
-    def test_column_pruning_schema(self, spark, paged_file):
-        df = self._read(spark, paged_file, fields="doc_id,n_chars")
-        assert df.columns == ["doc_id", "n_chars"]
-
-    def test_float_filter_keeps_nan_rows_spark_semantics(self, spark, tmp_path):
-        """Comparison filters on float/double columns are YIELDED back to
-        Spark (ADVICE r10): Spark SQL orders NaN greater than every value
-        (NaN > 5.0 is TRUE), while the Arrow re-filter and the parquet
-        stats skip use IEEE semantics (NaN compares false, writers exclude
-        NaN from min/max) -- a consumed float pushdown would silently drop
-        NaN rows relative to a native read."""
-        import math
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        path = str(tmp_path / "floats.parquet")
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array(range(6), pa.int64()),
-                    "score": pa.array(
-                        [1.0, float("nan"), 3.0, float("nan"), 5.0, 7.0],
-                        pa.float64(),
-                    ),
-                }
-            ),
-            path,
-            row_group_size=2,  # the all-NaN middle group has no usable stats
-        )
-        custom = self._read(spark, path, fields="doc_id,score").filter(
-            F.col("score") > 4.0
-        )
-        # ground truth is Spark's own comparison semantics, NOT a native
-        # parquet read of this file: pyarrow writes float min/max stats
-        # that EXCLUDE NaN, so native Spark's row-group pruning drops the
-        # NaN-carrying groups here too -- the in-memory filter is the
-        # unambiguous oracle
-        mem = spark.createDataFrame(
-            [(i, s) for i, s in enumerate([1.0, float("nan"), 3.0, float("nan"), 5.0, 7.0])],
-            "doc_id long, score double",
-        ).filter(F.col("score") > 4.0)
-        got = {r["doc_id"] for r in custom.collect()}
-        want = {r["doc_id"] for r in mem.collect()}
-        assert got == want == {1, 3, 4, 5}  # NaN > 4.0 is TRUE in Spark SQL
-        nan_scores = [r["score"] for r in custom.collect() if r["doc_id"] in (1, 3)]
-        assert all(math.isnan(s) for s in nan_scores)
-
-    def test_unsupported_type_fails_loudly(self, spark):
-        from pgsf_spark.sources import pyds
-
-        pyds.register(spark)
-        with pytest.raises(Exception, match="unsupported type"):
-            spark.read.format("entity_pages").option(
-                "path", f"{SF_DIR}/events.parquet"  # ts: timestamp[ns]
-            ).load()
-
-
-class TestPythonCdcSource:
-    """sources/pyds.py entity_cdc: the reference's watermark-polling sync
-    (strict >, checkpoint-persisted offset) as a Python streaming source."""
-
-    def _wave(self, data_dir, name, lo, hi, base_us=1_700_000_000_000_000):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        ts = [base_us + i * 1_000_000 for i in range(lo, hi)]
-        t = pa.table(
-            {
-                "id": pa.array(range(lo, hi), pa.int64()),
-                "v": pa.array([float(i) for i in range(lo, hi)], pa.float64()),
-                "ts": pa.array(ts, pa.timestamp("us")),
-            }
-        )
-        pq.write_table(t, os.path.join(data_dir, name), row_group_size=20)
-
-    def _run(self, spark, data_dir, out, ck):
-        from pgsf_spark.sources import pyds
-
-        pyds.register_cdc(spark)
-        stream = (
-            spark.readStream.format("entity_cdc")
-            .option("path", data_dir)
-            .option("ts_field", "ts")
-            .load()
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("entity_cdc run did not finish in 180s")
-
-    def test_exactly_once_across_restarts(self, spark, tmp_path):
-        data = str(tmp_path / "entity")
-        os.makedirs(data)
-        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-        self._wave(data, "w1.parquet", 0, 100)
-        self._run(spark, data, out, ck)
-        assert spark.read.parquet(out).count() == 100
-        self._wave(data, "w2.parquet", 100, 150)
-        self._run(spark, data, out, ck)
-        df = spark.read.parquet(out)
-        # second run delivered EXACTLY the 50 new rows, none re-delivered
-        assert df.count() == 150
-        assert df.select("id").distinct().count() == 150
-
-    def test_strict_gt_boundary_skips_watermark_ties(self, spark, tmp_path):
-        """A later wave carrying a row with ts == the committed watermark
-        is NOT re-delivered -- the strict-> contract the reference's
-        second-truncated watermark shares (SURVEY P4). This pins the
-        documented at-least-once hazard explicitly: ties at the boundary
-        are the producer's responsibility, exactly as in the reference."""
-        data = str(tmp_path / "entity")
-        os.makedirs(data)
-        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-        self._wave(data, "w1.parquet", 0, 10)  # max ts = base + 9s
-        self._run(spark, data, out, ck)
-        # wave 2: one row AT the committed watermark (id=9 duplicate ts),
-        # plus genuinely newer rows
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        base = 1_700_000_000_000_000
-        t = pa.table(
-            {
-                "id": pa.array([999, 10, 11], pa.int64()),
-                "v": pa.array([9.5, 10.0, 11.0], pa.float64()),
-                "ts": pa.array(
-                    [base + 9_000_000, base + 10_000_000, base + 11_000_000],
-                    pa.timestamp("us"),
-                ),
-            }
-        )
-        pq.write_table(t, os.path.join(data, "w2.parquet"))
-        self._run(spark, data, out, ck)
-        ids = {r["id"] for r in spark.read.parquet(out).select("id").collect()}
-        assert 10 in ids and 11 in ids
-        assert 999 not in ids  # tie at the watermark: skipped by strict >
-
-    def test_ts_us_is_exact_to_the_microsecond(self):
-        """Float .timestamp()*1e6 rounds 1125455508104307 us down by one;
-        the integer form must not -- a 1-us-low watermark permanently
-        drops the row carrying a row group's max timestamp."""
-        import datetime
-
-        from pgsf_spark.sources.pyds import _ts_us
-
-        dt = datetime.datetime(
-            2005, 8, 31, 2, 31, 48, 104307, tzinfo=datetime.timezone.utc
-        )
-        assert _ts_us(dt) == 1_125_455_508_104_307
-        assert int(dt.timestamp() * 1_000_000) == 1_125_455_508_104_306  # the bug
-
-    def test_max_ts_row_survives_fractional_microseconds(self, spark, tmp_path):
-        """End-to-end pin of the same defect: a wave whose max timestamp
-        float-rounds down must still deliver ALL its rows."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        data = str(tmp_path / "entity")
-        os.makedirs(data)
-        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-        ts = [1_125_455_508_104_305, 1_125_455_508_104_306, 1_125_455_508_104_307]
-        t = pa.table(
-            {
-                "id": pa.array([1, 2, 3], pa.int64()),
-                "v": pa.array([1.0, 2.0, 3.0], pa.float64()),
-                "ts": pa.array(ts, pa.timestamp("us")),
-            }
-        )
-        pq.write_table(t, os.path.join(data, "w1.parquet"))
-        self._run(spark, data, out, ck)
-        assert spark.read.parquet(out).count() == 3
-
-    def test_offset_advances_without_row_group_stats(self, spark, tmp_path):
-        """A writer that omits column statistics must not freeze the
-        offset at initialOffset (the silent-empty failure mode ADVICE r10
-        flagged): latestOffset falls back to reading the stats-less
-        group's ts column, and every row is delivered."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        data = str(tmp_path / "entity")
-        os.makedirs(data)
-        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-        base = 1_700_000_000_000_000
-        t = pa.table(
-            {
-                "id": pa.array(range(10), pa.int64()),
-                "v": pa.array([float(i) for i in range(10)], pa.float64()),
-                "ts": pa.array(
-                    [base + i * 1_000_000 for i in range(10)], pa.timestamp("us")
-                ),
-            }
-        )
-        pq.write_table(
-            t, os.path.join(data, "w1.parquet"), write_statistics=False
-        )
-        self._run(spark, data, out, ck)
-        assert spark.read.parquet(out).count() == 10
-
-    def test_statless_fallback_reads_each_immutable_file_once(
-        self, tmp_path, monkeypatch
-    ):
-        """ADVICE r11 (low): latestOffset runs on EVERY trigger, and the
-        stats-less fallback read must not re-pay O(data) driver I/O each
-        time -- part files are immutable once landed, so the per-(file,
-        size, mtime, row-group) memo caps the cost at one read per file,
-        ever, with new files still picked up."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pgsf_spark.sources.pyds import EntityCdcStreamReader
-
-        data = str(tmp_path / "entity")
-        os.makedirs(data)
-        base = 1_700_000_000_000_000
-
-        def statless_wave(name, lo, hi):
-            t = pa.table(
-                {
-                    "id": pa.array(range(lo, hi), pa.int64()),
-                    "ts": pa.array(
-                        [base + i * 1_000_000 for i in range(lo, hi)],
-                        pa.timestamp("us"),
-                    ),
-                }
-            )
-            pq.write_table(
-                t, os.path.join(data, name), write_statistics=False
-            )
-
-        statless_wave("w1.parquet", 0, 10)
-        reader = EntityCdcStreamReader({"path": data, "ts_field": "ts"})
-
-        calls = []
-        orig = pq.ParquetFile.read_row_group
-
-        def spy(pf_self, *a, **k):
-            calls.append(1)
-            return orig(pf_self, *a, **k)
-
-        monkeypatch.setattr(pq.ParquetFile, "read_row_group", spy)
-        o1 = reader.latestOffset()
-        assert o1["watermark_us"] == base + 9 * 1_000_000
-        first_reads = len(calls)
-        assert first_reads >= 1  # the fallback DID read the ts column
-        # steady-state triggers: no new files -> ZERO further reads
-        for _ in range(5):
-            assert reader.latestOffset() == o1
-        assert len(calls) == first_reads
-        # a new landed file is read (once), the old one still is not
-        statless_wave("w2.parquet", 10, 15)
-        o2 = reader.latestOffset()
-        assert o2["watermark_us"] == base + 14 * 1_000_000
-        second_reads = len(calls) - first_reads
-        assert 1 <= second_reads <= first_reads  # only w2's groups
-        assert reader.latestOffset() == o2
-        assert len(calls) == first_reads + second_reads
-        # eviction: a file leaving the zone (retention/compaction) drops
-        # its memo entries, so a weeks-long stream never grows the memo
-        # beyond the zone's live files
-        os.remove(os.path.join(data, "w1.parquet"))
-        o3 = reader.latestOffset()
-        assert o3["watermark_us"] == base + 14 * 1_000_000  # w2 still wins
-        assert all(
-            k[0].endswith("w2.parquet") for k in reader._statless_max_memo
-        )
-
-    def test_ts_us_round_trips_exact_microseconds_property(self):
-        """Hypothesis pin of the fd276fa precision-bug class (VERDICT r10
-        ask #6): for ANY epoch-microsecond value in the parquet timestamp
-        range, tz-aware or naive-UTC datetime stat values round-trip
-        through _ts_us to the exact integer, and integer stat values pass
-        through unchanged."""
-        import datetime
-
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-
-        from pgsf_spark.sources.pyds import _ts_us
-
-        us_range = st.integers(
-            min_value=-62_135_510_400_000_000,  # year 1 + 1 day (tz headroom)
-            max_value=253_402_214_399_999_999,  # year 9999 - 1 day
-        )
-        tz_offsets = st.integers(min_value=-14 * 60, max_value=14 * 60)
-
-        @settings(max_examples=300, deadline=None)
-        @given(us=us_range, tz_min=tz_offsets, naive=st.booleans())
-        def check(us, tz_min, naive):
-            epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
-            dt = epoch + datetime.timedelta(microseconds=us)
-            if naive:
-                dt = dt.replace(tzinfo=None)  # naive stat values mean UTC
-            else:
-                tz = datetime.timezone(datetime.timedelta(minutes=tz_min))
-                dt = dt.astimezone(tz)  # same instant, shifted wall clock
-            assert _ts_us(dt) == us
-            assert _ts_us(us) == us  # integer stats pass through
-
-        check()
-
-    def test_bad_ts_field_fails_loudly(self, spark, tmp_path):
-        data = str(tmp_path / "entity")
-        os.makedirs(data)
-        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-        self._wave(data, "w1.parquet", 0, 10)
-        from pgsf_spark.sources import pyds
-
-        pyds.register_cdc(spark)
-        # with fields set, a mistyped ts_field passes schema() cleanly and
-        # would previously sync NOTHING forever; _check_ts_field turns
-        # that silent-empty loop into a first-trigger error
-        stream = (
-            spark.readStream.format("entity_cdc")
-            .option("path", data)
-            .option("fields", "id,v")
-            .option("ts_field", "modstamp")  # no such column
-            .load()
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        with pytest.raises(Exception, match="ts_field|modstamp"):
-            q.awaitTermination(120)
-
-    def test_no_new_data_run_is_clean(self, spark, tmp_path):
-        data = str(tmp_path / "entity")
-        os.makedirs(data)
-        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-        self._wave(data, "w1.parquet", 0, 30)
-        self._run(spark, data, out, ck)
-        self._run(spark, data, out, ck)  # nothing new arrived
-        assert spark.read.parquet(out).count() == 30
-
-
-class TestSemiStructuredEscaping:
-    """The synthetic corpus is ASCII-only, so the oracle gates never
-    exercise escaping. Pin the round-trip fidelity boundaries of each
-    wire format on a curated edge-case set (quotes, backslashes,
-    whitespace, newlines, unicode incl. astral, XML specials, control
-    chars) -- measured behavior on pyspark 4.1.2."""
-
-    CASES = [
-        "plain",
-        "",
-        " ",
-        "  leading and trailing  ",
-        'quote " inside',
-        "apos ' inside",
-        "backslash \\ inside",
-        "newline \n inside",
-        "tab \t inside",
-        "unicode é 中文 \U0001f99c",
-        "xml specials < > & ]]>",
-        "two  spaces",
-    ]
-    CONTROL = "control \x01 char"  # XML 1.0 cannot represent this
-
-    def _df(self, spark, extra=()):
-        cases = [*self.CASES, *extra]
-        return spark.createDataFrame(list(enumerate(cases)), "id int, s string")
-
-    def test_variant_roundtrip_full_fidelity(self, spark):
-        # JSON/VARIANT round-trips EVERYTHING, control chars included
-        df = self._df(spark, extra=[self.CONTROL])
-        rt = df.select(
-            "s",
-            F.try_variant_get(
-                F.parse_json(F.to_json(F.struct("s"))), "$.s", "string"
-            ).alias("rt"),
-        )
-        assert rt.filter(~F.col("rt").eqNullSafe(F.col("s"))).count() == 0
-
-    def test_from_json_roundtrip_full_fidelity(self, spark):
-        df = self._df(spark, extra=[self.CONTROL])
-        rt = df.select(
-            "s", F.from_json(F.to_json(F.struct("s")), "s string").alias("p")
-        )
-        assert rt.filter(~F.col("p.s").eqNullSafe(F.col("s"))).count() == 0
-
-    def test_xml_roundtrip_with_surrounding_spaces_preserved(self, spark):
-        # default from_xml TRIMS surrounding whitespace; the option
-        # restores exact fidelity -- pin the option, not the default
-        df = self._df(spark)
-        rt = df.select(
-            "s",
-            F.from_xml(
-                F.to_xml(F.struct("s")),
-                "s string",
-                {"ignoreSurroundingSpaces": "false"},
-            ).alias("p"),
-        )
-        assert rt.filter(~F.col("p.s").eqNullSafe(F.col("s"))).count() == 0
-
-    def test_xml_default_trims_surrounding_spaces(self, spark):
-        df = spark.createDataFrame([(0, "  padded  ")], "id int, s string")
-        got = df.select(
-            F.from_xml(F.to_xml(F.struct("s")), "s string").alias("p")
-        ).collect()[0]["p"]["s"]
-        assert got == "padded"  # the measured default
-
-    def test_xml_control_chars_fail_loudly(self, spark):
-        # inherent XML 1.0 limitation: to_xml raises on 0x01 instead of
-        # silently corrupting -- the boundary a mixed-format pipeline
-        # must route around (keep control-char payloads on JSON/VARIANT)
-        df = spark.createDataFrame([(0, self.CONTROL)], "id int, s string")
-        with pytest.raises(Exception, match="[Ii]nvalid white space|XML"):
-            df.select(F.to_xml(F.struct("s")).alias("x")).collect()
-
-
-class TestStagedEmptyInputsR12:
-    """Every staged query must run (not crash) on zero-row tables -- the
-    VARIANT/JSON constructors, map folds, lateral UDTF fan-out, and Arrow
-    batch iterator all see an empty partition at some point at 100 TB.
-    (empty_sf_dir is the shared session fixture in tests/conftest.py.)"""
-
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_runs_on_empty_tables(self, spark, empty_sf_dir, name):
-        df = _staged()[name].fn(spark, empty_sf_dir)
-        assert len(df.schema) > 0
-        assert isinstance(df.collect(), list)  # must not raise
-
-
-class TestTwsGate:
-    """transformWithStateInPandas surface: capability gate + fallback parity."""
-
-    def _feed(self, spark, tmp_path, n_batches=3):
-        feed = os.path.join(str(tmp_path), "feed")
-        os.makedirs(feed)
-        base = spark.range(120).select(
-            (F.col("id") % 7).alias("user_id"),
-            (F.col("id") * 1.5).alias("value"),
-            (F.col("id") % n_batches).alias("b"),
-        )
-        for k in range(n_batches):
-            base.filter(F.col("b") == k).drop("b").coalesce(1).write.parquet(
-                os.path.join(feed, f"b{k}")
-            )
-        return feed, base.drop("b")
-
-    def _run_stream(self, spark, out_df, tmp_path, name):
-        q = (
-            out_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(str(tmp_path), "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):  # stop-and-raise, like faces._run
-            q.stop()
-            raise TimeoutError(f"stream {name} did not finish in 180s")
-
-    def test_classic_engine_matches_batch(self, spark, tmp_path):
-        from pgsf_spark.streaming.tws import running_user_totals
-
-        feed, batch = self._feed(spark, tmp_path)
-        stream = spark.readStream.schema("user_id long, value double").option(
-            "maxFilesPerTrigger", 1
-        ).parquet(feed + "/*")
-        self._run_stream(
-            spark, running_user_totals(stream, engine="classic"), tmp_path, "tws_classic"
-        )
-        # update-mode emits a row per user per batch the user appears in;
-        # the memory sink keeps every update, so reduce to the max-n row
-        # per user -- the final running total must equal the batch aggregate
-        final = {}
-        for r in spark.sql("SELECT * FROM tws_classic").collect():
-            cur = final.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                final[r["user_id"]] = (r["n_events"], r["total_value"])
-        want = {
-            r["user_id"]: (r["n"], r["t"])
-            for r in batch.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("t"))
-            .collect()
-        }
-        assert final == want
-
-    def test_auto_selects_classic_without_runtime(self, spark, tmp_path):
-        from pgsf_spark.streaming import tws
-
-        if tws.HAS_TWS_RUNTIME:
-            pytest.skip("environment has the tws runtime; auto picks tws")
-        feed, _ = self._feed(spark, tmp_path)
-        stream = spark.readStream.schema("user_id long, value double").parquet(
-            feed + "/*"
-        )
-        df = tws.running_user_totals(stream, engine="auto")
-        plan = df._jdf.queryExecution().logical().toString()
-        assert "WithState" in plan and "TransformWithState" not in plan, plan
-
-    def test_tws_engine_raises_clear_error_when_unavailable(self, spark, tmp_path):
-        from pgsf_spark.streaming import tws
-
-        if tws.HAS_TWS_RUNTIME:
-            pytest.skip("environment has the tws runtime")
-        feed, _ = self._feed(spark, tmp_path)
-        stream = spark.readStream.schema("user_id long, value double").parquet(
-            feed + "/*"
-        )
-        with pytest.raises(RuntimeError, match="protobuf"):
-            tws.running_user_totals(stream, engine="tws")
-
-    def test_unknown_engine_rejected(self, spark, tmp_path):
-        from pgsf_spark.streaming import tws
-
-        feed, _ = self._feed(spark, tmp_path)
-        stream = spark.readStream.schema("user_id long, value double").parquet(
-            feed + "/*"
-        )
-        with pytest.raises(ValueError, match="unknown engine"):
-            tws.running_user_totals(stream, engine="rocksdb")
-
-    @pytest.mark.skipif(
-        not _HAS_PROTOBUF,
-        reason="ENV-GATED: transformWithState needs google.protobuf in the "
-        "worker Python (not installed here); this leg activates automatically "
-        "in an environment that has it",
-    )
-    def test_tws_engine_matches_classic(self, spark, tmp_path):
-        from pgsf_spark.streaming import tws
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", tws.ROCKSDB_PROVIDER
-        )
-        feed, batch = self._feed(spark, tmp_path)
-        stream = spark.readStream.schema("user_id long, value double").option(
-            "maxFilesPerTrigger", 1
-        ).parquet(feed + "/*")
-        self._run_stream(
-            spark, tws.running_user_totals(stream, engine="tws"), tmp_path, "tws_real"
-        )
-        final = {}
-        for r in spark.sql("SELECT * FROM tws_real").collect():
-            cur = final.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                final[r["user_id"]] = (r["n_events"], r["total_value"])
-        want = {
-            r["user_id"]: (r["n"], r["t"])
-            for r in batch.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("t"))
-            .collect()
-        }
-        assert final == want
+        assert_specs_well_formed(12)

@@ -1,414 +1,14 @@
-"""Round-13 STAGED batch: Spark 4 SQL-language surfaces + the sink leg.
+"""Round-13 batch: it sits inside the driver's 50-name front, at slot 6."""
 
-Same staging discipline as tests/test_r11_staged.py / test_r12_staged.py:
-the batch ships in pgsf_spark/analytics/registry_r13.py, is gated here
-with the SAME comparison the round driver runs, and must already pass
-the live plan lints.
-"""
-
-import json
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from tests.conftest import SF_DIR
-
-
-def _staged():
-    from pgsf_spark.analytics.registry_r13 import STAGED_QUERIES_R13
-
-    return STAGED_QUERIES_R13
-
-
-# the sink face executes a write job and returns a localCheckpoint scan
-_SINK_FACES = {"chunked_sink_gate", "chunked_stream_sink_gate"}
+from tests.registration_batches import (
+    assert_batch_at,
+    assert_specs_well_formed,
+)
 
 
 class TestStagingDisciplineR13:
     def test_batch_registered_at_dict_head(self):
-        # round 13 promoted the batch: all 8 names live in the registry,
-        # as the SAME spec objects, inside the 20-slot r13 head rotation
-        # so the driver's 50-slot correctness window sees them first
-        from pgsf_spark.analytics.registry import QUERIES
-
-        staged = _staged()
-        assert len(staged) == 8
-        for name, spec in staged.items():
-            assert QUERIES.get(name) is spec, name
-        # round 14's 6-name batch rotated ahead; the r13-batch names sit
-        # right behind it (second driver rows ride in the r14 window)
-        assert set(staged) <= set(list(QUERIES)[:26])
+        assert_batch_at(13, 6)
 
     def test_staged_specs_shaped_like_registry_specs(self):
-        from pgsf_spark.analytics.registry import QuerySpec
-
-        for name, spec in _staged().items():
-            assert isinstance(spec, QuerySpec), name
-            assert callable(spec.fn), name
-            assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
-
-
-class TestStagedOracleParityR13:
-    """Each staged query through the driver-identical comparison."""
-
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_oracle_parity_sf0001(self, spark, name):
-        from pgsf_spark.verify import verify_queries
-
-        results = verify_queries(
-            spark, SF_DIR, only={name}, log=lambda s: None, queries=_staged()
-        )
-        assert results == {name: True}
-
-
-class TestStagedLintReadinessR13:
-    """The staged batch must already pass the live plan lints."""
-
-    _PLANS: dict = {}
-
-    _BATCH = sorted(n for n in _staged() if n not in _SINK_FACES)
-
-    @classmethod
-    def _plan(cls, spark, name):
-        if name not in cls._PLANS:
-            df = _staged()[name].fn(spark, SF_DIR)
-            cls._PLANS[name] = df._jdf.queryExecution().executedPlan().toString()
-        return cls._PLANS[name]
-
-    @pytest.mark.parametrize("name", _BATCH)
-    def test_no_cartesian_no_row_udf_no_global_window(self, spark, name):
-        from pgsf_spark.planlint import partitionless_windows
-
-        plan = self._plan(spark, name)
-        assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
-        assert "BatchEvalPython" not in plan, name
-        assert not partitionless_windows(plan), name
-
-    @pytest.mark.parametrize("name", _BATCH)
-    def test_scan_budget_default_two(self, spark, name):
-        import re
-        from collections import Counter
-
-        counts = Counter(re.findall(r"(\w+)\.parquet", self._plan(spark, name)))
-        excess = {t: n for t, n in counts.items() if n > 2}
-        assert not excess, (name, excess)
-
-    @pytest.mark.parametrize("name", sorted(_SINK_FACES))
-    def test_sink_face_returns_checkpoint(self, spark, name):
-        plan = self._plan(spark, name)
-        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
-        assert ".parquet" not in plan
-
-
-class TestStagedEmptyInputsR13:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_runs_on_empty_tables(self, spark, empty_sf_dir, name):
-        df = _staged()[name].fn(spark, empty_sf_dir)
-        assert len(df.schema) > 0
-        assert isinstance(df.collect(), list)  # must not raise
-
-
-class TestChunkedSink:
-    """sources/pyds.py entity_chunks: the reference's capped bulk upload
-    as a Python DataSource writer with a driver-side commit manifest."""
-
-    def _write(self, spark, out, rows=100, parts=4, cap=16, fail_if_over=None):
-        from pgsf_spark.sources import pyds
-
-        pyds.register_sink(spark)
-        w = (
-            spark.range(rows)
-            .selectExpr("id AS doc_id", "CAST(id % 7 AS STRING) AS source")
-            .repartition(parts, "doc_id")
-            .write.format("entity_chunks")
-            .option("path", out)
-            .option("max_records", str(cap))
-        )
-        if fail_if_over is not None:
-            w = w.option("fail_if_over", str(fail_if_over))
-        w.mode("append").save()
-
-    def test_chunks_respect_record_cap_and_round_trip(self, spark, tmp_path):
-        out = str(tmp_path / "up")
-        self._write(spark, out, rows=100, parts=4, cap=16)
-        man = json.load(open(os.path.join(out, "_MANIFEST.json")))
-        assert man and all(e["rows"] <= 16 for e in man)
-        assert sum(e["rows"] for e in man) == 100
-        files = [os.path.join(out, e["file"]) for e in man]
-        got = spark.read.parquet(*files)
-        assert got.count() == 100
-        assert got.select("doc_id").distinct().count() == 100
-
-    def test_failed_job_leaves_no_manifest(self, spark, tmp_path):
-        """The commit barrier: a task failure means commit() never runs,
-        so readers keyed on the manifest see NOTHING -- the reference's
-        job-artifact exactly-once contract (SURVEY K5/C3)."""
-        out = str(tmp_path / "up")
-        with pytest.raises(Exception):
-            self._write(spark, out, rows=100, parts=4, cap=16, fail_if_over=50)
-        assert not os.path.exists(os.path.join(out, "_MANIFEST.json"))
-
-    def test_append_accumulates_across_jobs(self, spark, tmp_path):
-        """Two append jobs into one path: the manifest must list BOTH
-        jobs' chunks -- a manifest holding only the latest job would
-        silently drop the earlier committed rows from readers."""
-        out = str(tmp_path / "up")
-        self._write(spark, out, rows=30, parts=2, cap=16)
-        self._write(spark, out, rows=20, parts=2, cap=16)
-        man = json.load(open(os.path.join(out, "_MANIFEST.json")))
-        assert sum(e["rows"] for e in man) == 50
-        files = [os.path.join(out, e["file"]) for e in man]
-        assert spark.read.parquet(*files).count() == 50
-
-    def test_overwrite_mode_rejected_loudly(self, spark, tmp_path):
-        from pgsf_spark.sources import pyds
-
-        pyds.register_sink(spark)
-        out = str(tmp_path / "up")
-        with pytest.raises(Exception, match="append"):
-            (
-                spark.range(5)
-                .selectExpr("id AS doc_id", "'x' AS source")
-                .write.format("entity_chunks")
-                .option("path", out)
-                .mode("overwrite")
-                .save()
-            )
-
-    def test_all_null_column_chunk_keeps_its_type(self, spark, tmp_path):
-        """A chunk whose string column is entirely NULL must still be
-        written as a STRING column (explicit arrow schema from the Spark
-        schema), or the chunk files disagree on the parquet type."""
-        from pgsf_spark.sources import pyds
-
-        pyds.register_sink(spark)
-        out = str(tmp_path / "up")
-        (
-            spark.range(10)
-            .selectExpr("id AS doc_id", "CAST(NULL AS STRING) AS source")
-            .coalesce(1)
-            .write.format("entity_chunks")
-            .option("path", out)
-            .option("max_records", "4")
-            .mode("append")
-            .save()
-        )
-        man = json.load(open(os.path.join(out, "_MANIFEST.json")))
-        files = [os.path.join(out, e["file"]) for e in man]
-        got = spark.read.parquet(*files)
-        assert dict(got.dtypes)["source"] == "string"
-        assert got.count() == 10
-
-    def test_unsupported_write_type_fails_loudly(self, spark, tmp_path):
-        from pgsf_spark.sources import pyds
-
-        pyds.register_sink(spark)
-        out = str(tmp_path / "up")
-        with pytest.raises(Exception, match="unsupported type"):
-            (
-                spark.sql("SELECT 1 AS a, to_date('2024-01-01') AS d")
-                .write.format("entity_chunks")
-                .option("path", out)
-                .mode("append")
-                .save()
-            )
-
-    def test_manifest_is_sorted_and_relative(self, spark, tmp_path):
-        out = str(tmp_path / "up")
-        self._write(spark, out, rows=40, parts=2, cap=16)
-        man = json.load(open(os.path.join(out, "_MANIFEST.json")))
-        names = [e["file"] for e in man]
-        assert names == sorted(names)
-        assert all(os.sep not in n for n in names)  # basenames only
-
-
-class TestChunkedStreamSink:
-    """sources/pyds.py entity_chunks STREAMING leg: per-epoch commit
-    manifests, the reference's per-cycle upload ledger (SURVEY K4/C2/C3)."""
-
-    def _stream(self, spark, tmp_path, rows=60, cap=16, files_per_batch=1):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pgsf_spark.sources import pyds
-
-        pyds.register_sink(spark)
-        feed = str(tmp_path / "feed")
-        os.makedirs(feed, exist_ok=True)
-        # three feed files, mtime-ordered -> three availableNow epochs
-        per = rows // 3
-        for i in range(3):
-            t = pa.table(
-                {
-                    "doc_id": pa.array(range(i * per, (i + 1) * per), pa.int64()),
-                    "source": pa.array([f"src{j % 7}" for j in range(i * per, (i + 1) * per)]),
-                }
-            )
-            f = os.path.join(feed, f"b{i:03d}.parquet")
-            pq.write_table(t, f)
-            os.utime(f, (1_700_000_000 + 60 * i,) * 2)
-        out = str(tmp_path / "up")
-        q = (
-            spark.readStream.schema("doc_id long, source string")
-            .option("maxFilesPerTrigger", files_per_batch)
-            .parquet(feed)
-            .writeStream.format("entity_chunks")
-            .option("path", out)
-            .option("max_records", str(cap))
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-        return out
-
-    def test_each_epoch_commits_its_own_manifest(self, spark, tmp_path):
-        out = self._stream(spark, tmp_path, rows=60, cap=16)
-        import glob as _glob
-
-        epoch_manifests = sorted(_glob.glob(os.path.join(out, "_MANIFEST-*.json")))
-        assert len(epoch_manifests) == 3  # one ledger per micro-batch
-        assert not os.path.exists(os.path.join(out, "_MANIFEST.json"))
-
-    def test_committed_chunks_round_trip_with_cap(self, spark, tmp_path):
-        from pgsf_spark.sources import pyds
-
-        out = self._stream(spark, tmp_path, rows=60, cap=16)
-        man = pyds.committed_chunks(out)
-        assert man and all(e["rows"] <= 16 for e in man)
-        assert sum(e["rows"] for e in man) == 60
-        files = [os.path.join(out, e["file"]) for e in man]
-        got = spark.read.parquet(*files)
-        assert got.count() == 60
-        assert got.select("doc_id").distinct().count() == 60
-
-    def test_epoch_replay_replaces_manifest_not_double_counts(self, spark, tmp_path):
-        """Exactly-once across epoch replays: committing the SAME batchId
-        twice (Spark's failure-replay path) must atomically REPLACE that
-        epoch's ledger, so manifest-keyed readers never see the failed
-        attempt's chunks."""
-        from pgsf_spark.sources.pyds import (
-            ChunkCommit,
-            EntityChunkStreamWriter,
-            committed_chunks,
-        )
-
-        class _Schema:
-            fields = []
-
-        w = EntityChunkStreamWriter({"path": str(tmp_path / "up")}, _Schema())
-        os.makedirs(w.dir, exist_ok=True)
-        w.commit([ChunkCommit([("a.parquet", 5), ("b.parquet", 5)], 10)], 7)
-        w.commit([ChunkCommit([("c.parquet", 10)], 10)], 7)  # the replay
-        man = committed_chunks(w.dir)
-        assert [e["file"] for e in man] == ["c.parquet"]
-
-    def test_aborted_epoch_leaves_no_ledger(self, tmp_path):
-        from pgsf_spark.sources.pyds import ChunkCommit, EntityChunkStreamWriter
-
-        class _Schema:
-            fields = []
-
-        w = EntityChunkStreamWriter({"path": str(tmp_path / "up")}, _Schema())
-        w.abort([ChunkCommit([("a.parquet", 5)], 5)], 3)
-        assert not os.path.exists(os.path.join(str(tmp_path / "up"), "_MANIFEST-000000003.json"))
-
-    def test_failed_task_commit_message_none_is_skipped(self, tmp_path):
-        # the API delivers None for a failed task's message; commit must
-        # ledger the successful tasks, not crash
-        from pgsf_spark.sources.pyds import (
-            ChunkCommit,
-            EntityChunkStreamWriter,
-            committed_chunks,
-        )
-
-        class _Schema:
-            fields = []
-
-        w = EntityChunkStreamWriter({"path": str(tmp_path / "up")}, _Schema())
-        os.makedirs(w.dir, exist_ok=True)
-        w.commit([ChunkCommit([("a.parquet", 5)], 5), None], 0)
-        assert [e["file"] for e in committed_chunks(w.dir)] == ["a.parquet"]
-
-
-class TestObserveGate:
-    """sqlsurfaces.q_observe_metrics_gate: CollectMetrics accumulators
-    value-pinned against the plainly-stated aggregates (SURVEY A3)."""
-
-    def test_observed_metrics_match_direct_aggregates(self, spark):
-        from pgsf_spark.analytics.sqlsurfaces import q_observe_metrics_gate
-        from pgsf_spark.tables import load_table
-
-        row = q_observe_metrics_gate(spark, SF_DIR).collect()[0]
-        li = load_table(spark, SF_DIR, "lineitem")
-        n_in = li.count()
-        n_kept = li.filter("l_quantity < 24").count()
-        assert row["n_in"] == n_in
-        assert row["n_kept"] == n_kept
-        assert row["kept_permille"] == n_kept * 1000 // n_in
-
-    def test_single_pass_no_second_aggregation_scan(self, spark):
-        """The metrics come from the ONE noop-write pass -- the returned
-        relation is a driver-local row, not a re-aggregation plan."""
-        from pgsf_spark.analytics.sqlsurfaces import q_observe_metrics_gate
-
-        df = q_observe_metrics_gate(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert ".parquet" not in plan
-
-
-class TestChunkedStreamSinkFailure:
-    def test_failed_epoch_leaves_no_ledger_end_to_end(self, spark, tmp_path):
-        """A real task failure inside an epoch: Spark calls abort, not
-        commit -- the epoch ledger must not exist, so manifest-keyed
-        readers see nothing from the failed attempt (K5/C3 per epoch)."""
-        import glob as _glob
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pgsf_spark.sources import pyds
-
-        pyds.register_sink(spark)
-        feed = str(tmp_path / "feed")
-        os.makedirs(feed)
-        t = pa.table(
-            {
-                "doc_id": pa.array(range(40), pa.int64()),
-                "source": pa.array([f"s{i % 3}" for i in range(40)]),
-            }
-        )
-        pq.write_table(t, os.path.join(feed, "b0.parquet"))
-        out = str(tmp_path / "up")
-        q = (
-            spark.readStream.schema("doc_id long, source string")
-            .parquet(feed)
-            .writeStream.format("entity_chunks")
-            .option("path", out)
-            .option("max_records", "16")
-            .option("fail_if_over", "20")  # poison pill: rows >= 20 fail the task
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        with pytest.raises(Exception):
-            q.awaitTermination(180)
-            if q.exception() is not None:
-                raise q.exception()
-        assert not _glob.glob(os.path.join(out, "_MANIFEST*"))
-
-
-class TestChunkedStreamSinkOverwrite:
-    def test_overwrite_output_modes_rejected_loudly(self, tmp_path):
-        """complete/truncate would need each epoch to REPLACE the whole
-        committed dataset; accepting the flag while only appending would
-        make committed_chunks() multiply-count rows -- the sink refuses."""
-        from pgsf_spark.sources.pyds import EntityChunkSink
-
-        sink = EntityChunkSink({"path": str(tmp_path / "up")})
-        with pytest.raises(ValueError, match="append"):
-            sink.streamWriter(None, overwrite=True)
+        assert_specs_well_formed(13)

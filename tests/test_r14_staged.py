@@ -1,106 +1,14 @@
-"""Round-14 STAGED batch: the robustness gates, driver-shaped.
+"""Round-14 batch: it sits inside the driver's 50-name front, at slot 14."""
 
-Same staging discipline as tests/test_r11/r12/r13_staged.py: the batch
-ships in pgsf_spark/analytics/registry_r14.py, is gated here with the
-SAME comparison the round driver runs, and must already be lint-ready.
-Both faces construct their fixture in a temp dir and return an eager
-localCheckpoint (the sink-face pattern), so the live plan lints have
-nothing to flag at registration.
-"""
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-
-def _staged():
-    from pgsf_spark.analytics.registry_r14 import STAGED_QUERIES_R14
-
-    return STAGED_QUERIES_R14
+from tests.registration_batches import (
+    assert_batch_at,
+    assert_specs_well_formed,
+)
 
 
 class TestStagingDisciplineR14:
     def test_batch_registered_at_dict_head(self):
-        # round 13 promoted the batch: both names live in the registry,
-        # as the SAME spec objects, inside the 20-slot r13 head rotation
-        from pgsf_spark.analytics.registry import QUERIES
-
-        staged = _staged()
-        assert len(staged) == 2
-        for name, spec in staged.items():
-            assert QUERIES.get(name) is spec, name
-        # round 14's 6-name batch rotated ahead; the r13-batch names sit
-        # right behind it (second driver rows ride in the r14 window)
-        assert set(staged) <= set(list(QUERIES)[:26])
+        assert_batch_at(14, 14)
 
     def test_staged_specs_shaped_like_registry_specs(self):
-        from pgsf_spark.analytics.registry import QuerySpec
-
-        for name, spec in _staged().items():
-            assert isinstance(spec, QuerySpec), name
-            assert callable(spec.fn), name
-            assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
-
-
-class TestStagedOracleParityR14:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_oracle_parity_sf0001(self, spark, name):
-        from pgsf_spark.verify import verify_queries
-
-        results = verify_queries(
-            spark, SF_DIR, only={name}, log=lambda s: None, queries=_staged()
-        )
-        assert results == {name: True}
-
-
-class TestStagedLintReadinessR14:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_gate_faces_return_checkpoints(self, spark, name):
-        # both faces run their engine workflow eagerly and return a
-        # bounded local-checkpoint scan: no parquet scans, no windows,
-        # nothing for the registry lints to flag at registration
-        df = _staged()[name].fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
-        assert ".parquet" not in plan
-
-
-class TestStagedEmptyInputsR14:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_runs_on_empty_tables(self, spark, empty_sf_dir, name):
-        df = _staged()[name].fn(spark, empty_sf_dir)
-        assert len(df.schema) > 0
-        assert isinstance(df.collect(), list)  # must not raise
-
-
-class TestDriftGateSemantics:
-    def test_replica_state_not_just_counts(self, spark):
-        """The gate's claim is the WIDENED REPLICA: spot-check the value
-        semantics directly -- updated rows carry the synthetic lang,
-        pre-drift rows NULL -- via the gate's own per-source output."""
-        from pgsf_spark.analytics.robustness import DRIFT_MOD
-        from pgsf_spark.analytics.registry_r14 import STAGED_QUERIES_R14
-        from pgsf_spark.tables import load_table
-
-        rows = {
-            r["source"]: r
-            for r in STAGED_QUERIES_R14["schema_drift_gate"].fn(spark, SF_DIR).collect()
-        }
-        docs = load_table(spark, SF_DIR, "documents").select("doc_id", "source")
-        from pyspark.sql import functions as F
-
-        expect = {
-            r["source"]: (r["n"], r["nl"])
-            for r in docs.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    (F.col("doc_id") % DRIFT_MOD == 0).cast("long")
-                ).alias("nl"),
-            )
-            .collect()
-        }
-        for src, (n, nl) in expect.items():
-            assert rows[src]["n_docs"] == n, src
-            assert rows[src]["n_with_lang"] == nl, src
-            assert rows[src]["drift_added"] == "lang", src
+        assert_specs_well_formed(14)

@@ -1,246 +1,18 @@
-"""Round-15 STAGED batch: fleet-scheduler, snapshot-consistency, GC, CAS gates.
+"""Round-15 batch: it sits inside the driver's 50-name front, at slot 16."""
 
-Same staging discipline as tests/test_r11..r14_staged.py: the batch
-ships in pgsf_spark/analytics/registry_r15.py, is gated here with the
-SAME comparison the round driver runs, and must already be lint-ready.
-Both faces construct their fixture in a temp dir, run the REAL sync /
-store machinery (SyncRunner.run_due, TableStore versioned publish), and
-return an eager localCheckpoint (the robustness-gate pattern).
-
-Beyond oracle parity, this file pins the behaviors the gates exist to
-prove -- per-table failure isolation, claim-released recovery, the
-publish cadence, and pinned-read stability under a concurrent writer --
-at the operator level, so a regression names the broken property
-instead of a hash mismatch.
-"""
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-
-def _staged():
-    from pgsf_spark.analytics.registry_r15 import STAGED_QUERIES_R15
-
-    return STAGED_QUERIES_R15
+from tests.registration_batches import (
+    assert_batch_at,
+    assert_importable_before_registry,
+    assert_specs_well_formed,
+)
 
 
 class TestStagingDisciplineR15:
     def test_batch_registered_at_dict_head(self):
-        # round 13 promoted the batch: all 4 names live in the registry,
-        # as the SAME spec objects, inside the 20-slot r13 head rotation
-        from pgsf_spark.analytics.registry import QUERIES
-
-        staged = _staged()
-        assert len(staged) == 4
-        for name, spec in staged.items():
-            assert QUERIES.get(name) is spec, name
-        # round 14's 6-name batch rotated ahead; the r13-batch names sit
-        # right behind it (second driver rows ride in the r14 window)
-        assert set(staged) <= set(list(QUERIES)[:26])
+        assert_batch_at(15, 16)
 
     def test_staged_specs_shaped_like_registry_specs(self):
-        from pgsf_spark.analytics.registry import QuerySpec
-
-        for name, spec in _staged().items():
-            assert isinstance(spec, QuerySpec), name
-            assert callable(spec.fn), name
-            assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
+        assert_specs_well_formed(15)
 
     def test_leaf_importable_first(self):
-        # registry_r15 must stay import-order independent (the lesson
-        # the spec.py split encoded): importing it in a clean subprocess
-        # BEFORE registry must work
-        import subprocess
-        import sys
-
-        code = (
-            "import sys; sys.path.insert(0, '.');"
-            "import pgsf_spark.analytics.registry_r15;"
-            "from pgsf_spark.analytics.registry import QUERIES;"
-            "from pgsf_spark.analytics.registry_r15 import STAGED_QUERIES_R15;"
-            "assert set(STAGED_QUERIES_R15) <= set(QUERIES)"
-        )
-        r = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
-        )
-        assert r.returncode == 0, r.stderr[-1000:]
-
-
-class TestStagedOracleParityR15:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_oracle_parity_sf0001(self, spark, name):
-        from pgsf_spark.verify import verify_queries
-
-        results = verify_queries(
-            spark, SF_DIR, only={name}, log=lambda s: None, queries=_staged()
-        )
-        assert results == {name: True}
-
-
-class TestStagedLintReadinessR15:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_gate_faces_return_checkpoints(self, spark, name):
-        # both faces run their engine workflow eagerly and return a
-        # bounded local-checkpoint scan: nothing for the registry lints
-        # to flag at registration
-        df = _staged()[name].fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
-        assert ".parquet" not in plan
-
-
-class TestStagedEmptyInputsR15:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_runs_on_empty_tables(self, spark, empty_sf_dir, name):
-        df = _staged()[name].fn(spark, empty_sf_dir)
-        assert len(df.schema) > 0
-        assert isinstance(df.collect(), list)  # must not raise
-
-
-class TestFleetSchedulerSemantics:
-    def test_isolation_recovery_and_publish_cadence(self, spark):
-        """One run, all four claims: the poisoned table errored at tick
-        1 (tick1_failed), published NOTHING that tick (n_versions 2 vs
-        3), still reached the same final value state (sum_v matches the
-        updated arithmetic), and no other table was disturbed."""
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.analytics import fleet
-        from pgsf_spark.tables import load_table
-
-        rows = {
-            r["tbl"]: r
-            for r in _staged()["fleet_scheduler_gate"].fn(spark, SF_DIR).collect()
-        }
-        assert set(rows) == {name for name, _, _, _ in fleet.FLEET}
-        for name, base, pk, _ in fleet.FLEET:
-            expect = (
-                load_table(spark, SF_DIR, base)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(
-                        F.when(
-                            F.col(pk) % fleet.UPDATE_MOD == 0,
-                            F.col(pk) * fleet.V_WAVE1,
-                        ).otherwise(F.col(pk) * fleet.V_SNAP)
-                    ).alias("s"),
-                )
-                .first()
-            )
-            r = rows[name]
-            assert r["n_rows"] == expect["n"], name
-            assert r["sum_v"] == expect["s"], name
-            assert r["tick1_failed"] == (name == fleet.FAIL_TABLE), name
-            assert r["n_versions"] == (
-                2 if name == fleet.FAIL_TABLE else 3
-            ), name
-
-
-class TestSnapshotConsistencySemantics:
-    def test_three_version_states_are_distinct_and_exact(self, spark):
-        """The pinned read saw v1, time travel saw v2, current saw v3 --
-        three DIFFERENT sums with exact expected values (not just
-        'something stable')."""
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.analytics import fleet
-        from pgsf_spark.tables import load_table
-
-        row = (
-            _staged()["snapshot_consistency_gate"].fn(spark, SF_DIR).first()
-        )
-        pk = F.col("c_custkey")
-        expect = (
-            load_table(spark, SF_DIR, "customer")
-            .agg(
-                F.sum(pk * fleet.V_SNAP).alias("v1"),
-                F.sum(
-                    F.when(pk % fleet.UPDATE_MOD == 0, pk * fleet.V_WAVE1).otherwise(
-                        pk * fleet.V_SNAP
-                    )
-                ).alias("v2"),
-                F.sum(
-                    F.when(pk % fleet.SECOND_MOD == 0, pk * fleet.V_WAVE2)
-                    .when(pk % fleet.UPDATE_MOD == 0, pk * fleet.V_WAVE1)
-                    .otherwise(pk * fleet.V_SNAP)
-                ).alias("v3"),
-            )
-            .first()
-        )
-        assert row["sum_v1"] == expect["v1"]
-        assert row["sum_v2"] == expect["v2"]
-        assert row["sum_v3"] == expect["v3"]
-        assert row["sum_v1"] < row["sum_v2"] < row["sum_v3"]
-        assert row["n_versions"] == 3
-
-
-class TestVacuumRetentionSemantics:
-    def test_gc_trajectory_and_loud_time_travel(self, spark):
-        """keep-floor drops exactly the oldest, the aged TTL pass drops
-        the middle, the surviving current version's data is untouched --
-        and (asserted inside the gate) a time-travel read of a vacuumed
-        version raises with the version named, never an empty frame."""
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.analytics import fleet
-        from pgsf_spark.tables import load_table
-
-        row = _staged()["vacuum_retention_gate"].fn(spark, SF_DIR).first()
-        pk = F.col("c_custkey")
-        expect = (
-            load_table(spark, SF_DIR, "customer")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.when(pk % fleet.THIRD_MOD == 0, pk * fleet.V_WAVE3)
-                    .when(pk % fleet.UPDATE_MOD == 0, pk * fleet.V_WAVE1)
-                    .otherwise(pk * fleet.V_SNAP)
-                ).alias("s"),
-            )
-            .first()
-        )
-        assert row["n_rows"] == expect["n"]
-        assert row["sum_v"] == expect["s"]
-        assert (
-            row["n_versions_start"],
-            row["n_victims_keep"],
-            row["n_victims_ttl"],
-            row["n_versions_end"],
-        ) == (3, 1, 1, 1)
-
-
-class TestCasPublishSemantics:
-    def test_no_lost_update_and_retry_protocol(self, spark):
-        """The stale writer's publish was refused (asserted in-gate via
-        ConcurrentWriteError) and left the state untouched; the retry
-        merged on top of A, so the final state carries BOTH updates with
-        B winning the pk % 70 overlap; the loser's orphan dir is the
-        documented vacuum garbage (4 dirs)."""
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.analytics import fleet
-        from pgsf_spark.tables import load_table
-
-        row = _staged()["cas_publish_gate"].fn(spark, SF_DIR).first()
-        pk = F.col("c_custkey")
-        expect = (
-            load_table(spark, SF_DIR, "customer")
-            .agg(
-                F.sum(
-                    F.when(pk % fleet.UPDATE_MOD == 0, pk * fleet.V_WAVE1).otherwise(
-                        pk * fleet.V_SNAP
-                    )
-                ).alias("a"),
-                F.sum(
-                    F.when(pk % fleet.CAS_MOD == 0, pk * fleet.V_CAS)
-                    .when(pk % fleet.UPDATE_MOD == 0, pk * fleet.V_WAVE1)
-                    .otherwise(pk * fleet.V_SNAP)
-                ).alias("f"),
-            )
-            .first()
-        )
-        assert row["sum_after_a"] == expect["a"]
-        assert row["sum_final"] == expect["f"]
-        assert row["sum_after_a"] != row["sum_final"]  # B's update landed
-        assert row["n_version_dirs"] == 4
+        assert_importable_before_registry(15)

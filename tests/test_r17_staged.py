@@ -1,160 +1,18 @@
-"""Round-17 STAGED batch: reference API surfaces, driver-proven.
+"""Round-17 batch: it sits inside the driver's 50-name front, at slot 22."""
 
-Same staging discipline as tests/test_r11..r16_staged.py. Beyond oracle
-parity, this file pins the operator-level semantics each gate claims:
-the SOSL predicate really is the OR-chain over every string column, the
-pagination loop's totals come from the pages (a short page mid-stream
-would break page math), the CDC windows are INCLUSIVE on both ends, and
-compaction preserves data while shrinking files through a new version.
-"""
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-
-def _staged():
-    from pgsf_spark.analytics.registry_r17 import STAGED_QUERIES_R17
-
-    return STAGED_QUERIES_R17
+from tests.registration_batches import (
+    assert_batch_at,
+    assert_importable_before_registry,
+    assert_specs_well_formed,
+)
 
 
 class TestStagingDisciplineR17:
     def test_batch_registered_at_dict_head(self):
-        # round 13 promoted the batch: all 4 names live in the registry,
-        # as the SAME spec objects, inside the 20-slot r13 head rotation
-        from pgsf_spark.analytics.registry import QUERIES
-
-        staged = _staged()
-        assert len(staged) == 4
-        for name, spec in staged.items():
-            assert QUERIES.get(name) is spec, name
-        # round 14's 6-name batch rotated ahead; the r13-batch names sit
-        # right behind it (second driver rows ride in the r14 window)
-        assert set(staged) <= set(list(QUERIES)[:26])
+        assert_batch_at(17, 22)
 
     def test_staged_specs_shaped_like_registry_specs(self):
-        from pgsf_spark.analytics.registry import QuerySpec
-
-        for name, spec in _staged().items():
-            assert isinstance(spec, QuerySpec), name
-            assert callable(spec.fn), name
-            assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
+        assert_specs_well_formed(17)
 
     def test_leaf_importable_first(self):
-        import subprocess
-        import sys
-
-        code = (
-            "import sys; sys.path.insert(0, '.');"
-            "import pgsf_spark.analytics.registry_r17;"
-            "from pgsf_spark.analytics.registry import QUERIES;"
-            "from pgsf_spark.analytics.registry_r17 import STAGED_QUERIES_R17;"
-            "assert set(STAGED_QUERIES_R17) <= set(QUERIES)"
-        )
-        r = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
-        )
-        assert r.returncode == 0, r.stderr[-1000:]
-
-
-class TestStagedOracleParityR17:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_oracle_parity_sf0001(self, spark, name):
-        from pgsf_spark.verify import verify_queries
-
-        results = verify_queries(
-            spark, SF_DIR, only={name}, log=lambda s: None, queries=_staged()
-        )
-        assert results == {name: True}
-
-
-class TestStagedLintReadinessR17:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_gate_faces_return_checkpoints(self, spark, name):
-        df = _staged()[name].fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
-        assert ".parquet" not in plan
-
-
-class TestStagedEmptyInputsR17:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_runs_on_empty_tables(self, spark, empty_sf_dir, name):
-        df = _staged()[name].fn(spark, empty_sf_dir)
-        assert len(df.schema) > 0
-        assert isinstance(df.collect(), list)  # must not raise
-
-
-class TestSoslSemantics:
-    def test_predicate_is_or_chain_over_all_string_columns(self, spark):
-        """A doc whose TERM match lives in a non-text string column must
-        still hit: rename-source probe via a synthetic frame run through
-        the same run_sosl machinery."""
-        from pgsf_spark.soql import run_sosl
-
-        df = spark.createDataFrame(
-            [
-                (1, "nothing here", "the-source", 500),
-                (2, "xx the yy", "s", 500),
-                (3, "nothing", "s", 500),
-                (4, "has the term", "s", 50),  # fails WHERE
-            ],
-            "doc_id long, text string, source string, n_chars long",
-        )
-        hits = run_sosl(
-            lambda t: df,
-            "FIND {the} IN ALL FIELDS RETURNING d(doc_id WHERE n_chars > 100)",
-        )["d"]
-        assert {r["doc_id"] for r in hits.collect()} == {1, 2}
-
-
-class TestPagingSemantics:
-    def test_pages_are_bounded_and_complete(self, spark):
-        from pgsf_spark.soql import query_pages
-
-        df = spark.range(0, 137).selectExpr("id AS o_orderkey")
-        pages = list(query_pages(df, page_size=50))
-        assert [len(p) for p in pages] == [50, 50, 37]
-        assert {r["o_orderkey"] for p in pages for r in p} == set(range(137))
-
-
-class TestCdcWindowSemantics:
-    def test_window_is_inclusive_both_ends(self, spark, tmp_path):
-        import os
-
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.analytics import refsurfaces as rs
-        from pgsf_spark.sources.entity import EntitySource
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        spark.createDataFrame(
-            [(i,) for i in range(10)], "Id long"
-        ).withColumn(
-            "SystemModstamp",
-            F.lit(rs.T0).cast("timestamp")
-            + F.make_interval(hours=F.col("Id").cast("int")),
-        ).withColumn("IsDeleted", F.lit(False)).write.parquet(
-            os.path.join(src, "e.parquet")
-        )
-        from datetime import timedelta
-
-        source = EntitySource(spark, src)
-        got = {
-            r["Id"]
-            for r in source.updated_ids(
-                "e", rs.T0 + timedelta(hours=2), rs.T0 + timedelta(hours=5)
-            ).collect()
-        }
-        assert got == {2, 3, 4, 5}  # both boundary hours included
-
-
-class TestCompactionSemantics:
-    def test_gate_pins_file_shrink_and_data_identity(self, spark):
-        row = _staged()["compaction_gate"].fn(spark, SF_DIR).first()
-        assert row["files_before"] == 16
-        assert row["files_after"] == 2
-        assert row["n_versions"] == 2
-        assert row["n_rows"] > 0 and row["sum_v"] == 3 * row["sum_v"] // 3
+        assert_importable_before_registry(17)

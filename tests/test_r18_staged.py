@@ -1,201 +1,18 @@
-"""Round-18 STAGED batch: C6 bootstrap-seed + K4b upload-results gates.
+"""Round-18 batch: it sits inside the driver's 50-name front, at slot 0."""
 
-Same staging discipline as tests/test_r11..r17_staged.py: the batch
-ships in pgsf_spark/analytics/registry_r18.py, is gated here with the
-SAME comparison the round driver runs, and must already be lint-ready.
-
-Beyond oracle parity, this file pins the operator-level semantics each
-gate claims: the first-load seed is the extract-start wall-clock (never
-max(ts) of the landed data), the boundary window is re-read by the
-first tick while an already-advanced watermark re-reads nothing, the
-chunk caps fail LOUDLY when violated, and the fake service's result
-CSV routes through parse_batch_result exactly like the reference's
-UploadResult rows (salesforce_bulk.py:498-546).
-"""
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-
-def _staged():
-    from pgsf_spark.analytics.registry_r18 import STAGED_QUERIES_R18
-
-    return STAGED_QUERIES_R18
+from tests.registration_batches import (
+    assert_batch_at,
+    assert_importable_before_registry,
+    assert_specs_well_formed,
+)
 
 
 class TestStagingDisciplineR18:
     def test_batch_registered_at_dict_head(self):
-        # round 14 promoted the batch: both names live in the registry,
-        # as the SAME spec objects, inside the 6-slot r14 head rotation
-        # so the driver's 50-slot correctness window sees them first
-        from pgsf_spark.analytics.registry import QUERIES
-
-        staged = _staged()
-        assert len(staged) == 2
-        for name, spec in staged.items():
-            assert QUERIES.get(name) is spec, name
-        assert set(staged) <= set(list(QUERIES)[:6])
+        assert_batch_at(18, 0)
 
     def test_staged_specs_shaped_like_registry_specs(self):
-        from pgsf_spark.analytics.registry import QuerySpec
-
-        for name, spec in _staged().items():
-            assert isinstance(spec, QuerySpec), name
-            assert callable(spec.fn), name
-            assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
+        assert_specs_well_formed(18)
 
     def test_leaf_importable_first(self):
-        import subprocess
-        import sys
-
-        code = (
-            "import sys; sys.path.insert(0, '.');"
-            "import pgsf_spark.analytics.registry_r18;"
-            "from pgsf_spark.analytics.registry import QUERIES;"
-            "from pgsf_spark.analytics.registry_r18 import STAGED_QUERIES_R18;"
-            "assert set(STAGED_QUERIES_R18) <= set(QUERIES)"
-        )
-        r = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
-        )
-        assert r.returncode == 0, r.stderr[-1000:]
-
-
-class TestStagedOracleParityR18:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_oracle_parity_sf0001(self, spark, name):
-        from pgsf_spark.verify import verify_queries
-
-        results = verify_queries(
-            spark, SF_DIR, only={name}, log=lambda s: None, queries=_staged()
-        )
-        assert results == {name: True}
-
-
-class TestStagedLintReadinessR18:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_gate_faces_return_checkpoints(self, spark, name):
-        df = _staged()[name].fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
-        assert ".parquet" not in plan
-
-
-class TestStagedEmptyInputsR18:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_runs_on_empty_tables(self, spark, empty_sf_dir, name):
-        df = _staged()[name].fn(spark, empty_sf_dir)
-        assert len(df.schema) > 0
-        assert isinstance(df.collect(), list)  # must not raise
-
-
-class TestBootstrapSeedSemantics:
-    def test_seed_is_extract_start_not_max_ts(self, spark, tmp_path):
-        """snapshot_load's watermark must be the extract's own wall-clock,
-        never max(ts) of the landed rows (csv_to_postgres.py:94 seeds
-        from the job's systemModstamp) -- a max(ts) seed would silently
-        skip anything modified during the extract."""
-        import os
-        from datetime import datetime
-
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.operators.table_store import TableStore
-        from pgsf_spark.sources.entity import EntitySource
-        from pgsf_spark.sync.runner import SyncRunner
-        from pgsf_spark.sync.state import SyncState, _utcnow
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        t0 = datetime(2024, 1, 1)
-        spark.createDataFrame([(i,) for i in range(1, 8)], "Id long").withColumn(
-            "SystemModstamp", F.lit(t0).cast("timestamp")
-        ).withColumn("IsDeleted", F.lit(False)).write.parquet(
-            os.path.join(src, "e.parquet")
-        )
-        state = SyncState(str(tmp_path / "sync.json"))
-        runner = SyncRunner(
-            EntitySource(spark, src), TableStore(spark, str(tmp_path / "store")), state
-        )
-        before = _utcnow().replace(microsecond=0)
-        runner.snapshot_load("e", refresh_minutes=0)
-        after = _utcnow()
-        seeded = state.get("e").syncuntil_dt()
-        assert before <= seeded <= after
-        assert seeded != t0  # not max(ts) -- every fixture stamp is t0
-
-    def test_advanced_watermark_refetches_nothing(self, spark, tmp_path):
-        """After the boundary tick advanced the watermark to max(ts), the
-        next incremental window is empty -- no permanent re-read loop
-        (strict ``>`` plus the monotonic advance)."""
-        import os
-        from datetime import datetime
-
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.sources.entity import EntitySource
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        t0 = datetime(2024, 1, 1)
-        spark.createDataFrame([(i,) for i in range(10)], "Id long").withColumn(
-            "SystemModstamp",
-            F.lit(t0).cast("timestamp")
-            + F.make_interval(hours=(F.col("Id") % 5).cast("int")),
-        ).withColumn("IsDeleted", F.lit(False)).write.parquet(
-            os.path.join(src, "e.parquet")
-        )
-        source = EntitySource(spark, src)
-        from datetime import timedelta
-
-        max_ts = t0 + timedelta(hours=4)
-        assert source.incremental("e", "SystemModstamp", max_ts).count() == 0
-        # while the boundary window just below it is non-empty
-        assert (
-            source.incremental(
-                "e", "SystemModstamp", t0 + timedelta(hours=2)
-            ).count()
-            > 0
-        )
-
-
-class TestUploadResultSemantics:
-    def test_fake_service_routes_like_upload_result_rows(self):
-        """The fixture service's CSV parses through parse_batch_result
-        into the reference's per-record outcome shape: echoed id +
-        created for inserts, empty id + DUPLICATE_VALUE for rejects."""
-        from pgsf_spark.analytics.bootstrap import (
-            UPLOAD_SUMMARY_ID,
-            _fake_bulk_service,
-        )
-        from pgsf_spark.operators.upload import parse_batch_result
-
-        chunk = "Id,Name\n7,alice\n8,bob\n"
-        recs = parse_batch_result(_fake_bulk_service(chunk))
-        assert len(recs) == 3  # 2 records + 1 batch summary
-        rej, ok, summary = recs
-        assert rej["id"] is None and not rej["success"]
-        assert rej["error"].startswith("DUPLICATE_VALUE")
-        assert ok == {"id": "8", "success": True, "created": True, "error": None}
-        assert summary["id"] == UPLOAD_SUMMARY_ID and summary["error"] == "RECORDS:2"
-
-    def test_record_cap_violation_fails_loudly(self):
-        from pgsf_spark.analytics.bootstrap import (
-            UPLOAD_MAX_RECORDS,
-            _fake_bulk_service,
-        )
-
-        chunk = "Id,Name\n" + "".join(
-            f"{i},n{i}\n" for i in range(UPLOAD_MAX_RECORDS + 1)
-        )
-        with pytest.raises(ValueError, match="record cap"):
-            _fake_bulk_service(chunk)
-
-    def test_gate_is_multi_chunk_at_fixture_scale(self, spark):
-        from pgsf_spark.analytics.bootstrap import UPLOAD_MAX_RECORDS
-
-        row = _staged()["upload_results_gate"].fn(spark, SF_DIR).first()
-        assert row["n_chunks"] >= 2  # the cap actually split the upload
-        assert row["n_records"] > UPLOAD_MAX_RECORDS
-        assert row["n_success"] + row["n_failed_dup"] == row["n_records"]
+        assert_importable_before_registry(18)

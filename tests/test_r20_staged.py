@@ -1,156 +1,23 @@
-"""Round-20 STAGED batch: epoch-pinned join + recovery-then-wave gates.
+"""Round-20 batch: the tail of the literal, at slot 444."""
 
-Same staging discipline as tests/test_r11..r19_staged.py: the batch
-ships in pgsf_spark/analytics/registry_r20.py, is gated here with the
-SAME comparison the round driver runs, and must already be lint-ready.
-
-Beyond oracle parity, this file pins the operator-level semantics each
-gate claims: the pinned join is immutable across later publishes (the
-same customer-orders join re-executed through the original pin after
-the wave commits returns the epoch-1 aggregate), the torn
-current-pointer join produces a value no epoch ever committed, and the
-recovery-then-wave composition syncs ONLY the post-recovery window
-before committing exactly one new catalog epoch.
-"""
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-
-def _staged():
-    from pgsf_spark.analytics.registry_r20 import STAGED_QUERIES_R20
-
-    return STAGED_QUERIES_R20
+from tests.registration_batches import (
+    BATCHES,
+    assert_batch_at,
+    assert_importable_before_registry,
+    assert_specs_well_formed,
+)
 
 
 class TestStagingDisciplineR20:
     def test_batch_size_and_no_collisions(self):
-        from pgsf_spark.analytics.registry import QUERIES
-
-        staged = _staged()
-        assert len(staged) == 2
-        assert not set(staged) & set(QUERIES)
+        assert len(BATCHES[20]) == 2
+        for other, names in BATCHES.items():
+            if other != 20:
+                assert not set(BATCHES[20]) & set(names), other
+        assert_batch_at(20, 444)
 
     def test_staged_specs_shaped_like_registry_specs(self):
-        from pgsf_spark.analytics.registry import QuerySpec
-
-        for name, spec in _staged().items():
-            assert isinstance(spec, QuerySpec), name
-            assert callable(spec.fn), name
-            assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
+        assert_specs_well_formed(20)
 
     def test_leaf_importable_first(self):
-        import subprocess
-        import sys
-
-        code = (
-            "import sys; sys.path.insert(0, '.');"
-            "import pgsf_spark.analytics.registry_r20;"
-            "from pgsf_spark.analytics.registry import QUERIES;"
-            "from pgsf_spark.analytics.registry_r20 import STAGED_QUERIES_R20;"
-            "assert not set(STAGED_QUERIES_R20) & set(QUERIES)"
-        )
-        r = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
-        )
-        assert r.returncode == 0, r.stderr[-1000:]
-
-
-class TestStagedOracleParityR20:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_oracle_parity_sf0001(self, spark, name):
-        from pgsf_spark.verify import verify_queries
-
-        results = verify_queries(
-            spark, SF_DIR, only={name}, log=lambda s: None, queries=_staged()
-        )
-        assert results == {name: True}
-
-
-class TestStagedLintReadinessR20:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_gate_faces_return_checkpoints(self, spark, name):
-        df = _staged()[name].fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
-        assert ".parquet" not in plan
-
-
-class TestStagedEmptyInputsR20:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_runs_on_empty_tables(self, spark, empty_sf_dir, name):
-        df = _staged()[name].fn(spark, empty_sf_dir)
-        assert len(df.schema) > 0
-        assert isinstance(df.collect(), list)  # must not raise
-
-
-class TestJoinPinSemantics:
-    def test_torn_join_differs_and_epochs_bracket_it(self, spark):
-        """The gate's in-gate asserts already enforce pin immutability and
-        CAS; here pin the OUTPUT's invariant structure: the torn join sum
-        sits strictly between the two committed epochs (the cust side
-        advanced, the ords side did not), and both epochs scale the same
-        match count."""
-        row = _staged()["catalog_join_pin_gate"].fn(spark, SF_DIR).first()
-        if row["n_matches"]:
-            assert (
-                row["sum_join_pinned"]
-                < row["sum_join_torn"]
-                < row["sum_join_committed"]
-            )
-        assert row["n_catalog_versions"] == 2
-
-    def test_pinned_join_matches_epoch_ratio(self, spark):
-        """Epoch factors are uniform (J_E1, J_E2), so the committed join
-        sum must be exactly (J_E2/J_E1) x the pinned sum -- a structural
-        identity that fails if either join resolved a mixed pair."""
-        from pgsf_spark.analytics.epochs import J_E1, J_E2
-
-        row = _staged()["catalog_join_pin_gate"].fn(spark, SF_DIR).first()
-        assert row["sum_join_committed"] * J_E1 == row["sum_join_pinned"] * J_E2
-
-
-class TestRecoveryWaveSemantics:
-    def test_recovered_watermark_and_single_epoch_commit(self, spark):
-        row = _staged()["recovery_wave_gate"].fn(spark, SF_DIR).first()
-        from pgsf_spark.analytics.epochs import RW_HOUR_MOD
-
-        assert row["recovered_wm_hours"] == RW_HOUR_MOD - 1
-        assert row["n_catalog_versions"] == 2
-        assert row["n_rows_cust"] > 0
-
-    def test_post_recovery_window_is_incremental_only(self, spark, tmp_path):
-        """The composition must NOT re-extract: after recovery, the wave's
-        merge manifests carry the wave-2 watermark (T0+6h) and each table
-        gained exactly one version -- asserted in-gate; here verify the
-        value layout directly against an independent Spark computation."""
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.analytics.epochs import (
-            RW_HOUR_MOD,
-            RW_SNAP,
-            RW_TICK1_FROM_HOURS,
-            RW_W1,
-            RW_W2,
-            RW_W2_MOD,
-        )
-        from pgsf_spark.tables import load_table
-
-        row = _staged()["recovery_wave_gate"].fn(spark, SF_DIR).first()
-        base = load_table(spark, SF_DIR, "customer").select(
-            F.col("c_custkey").cast("long").alias("k")
-        )
-        expected = base.select(
-            F.sum(
-                F.when(F.col("k") % RW_W2_MOD == 0, F.col("k") * RW_W2)
-                .when(
-                    F.col("k") % RW_HOUR_MOD > RW_TICK1_FROM_HOURS,
-                    F.col("k") * RW_W1,
-                )
-                .otherwise(F.col("k") * RW_SNAP)
-            )
-            .cast("long")
-            .alias("s")
-        ).first()["s"]
-        assert row["sum_v_cust"] == expected
+        assert_importable_before_registry(20)

@@ -1,140 +1,23 @@
-"""Round-21 STAGED batch: retention-pipeline gates.
+"""Round-21 batch: the tail of the literal, at slot 446."""
 
-Same staging discipline as tests/test_r11..r20_staged.py. Beyond oracle
-parity, this file pins the operator-level semantics each gate claims:
-catalog GC never drops the current pointer's version, a read through a
-retired epoch fails loudly (never a silent wrong answer), and the
-maintenance-then-disaster composition recovers the exact merge-tick
-watermark carried through the compact manifest.
-"""
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-
-def _staged():
-    from pgsf_spark.analytics.registry_r21 import STAGED_QUERIES_R21
-
-    return STAGED_QUERIES_R21
+from tests.registration_batches import (
+    BATCHES,
+    assert_batch_at,
+    assert_importable_before_registry,
+    assert_specs_well_formed,
+)
 
 
 class TestStagingDisciplineR21:
     def test_batch_size_and_no_collisions(self):
-        from pgsf_spark.analytics.registry import QUERIES
-        from pgsf_spark.analytics.registry_r20 import STAGED_QUERIES_R20
-
-        staged = _staged()
-        assert len(staged) == 2
-        for other in (QUERIES, STAGED_QUERIES_R20):
-            assert not set(staged) & set(other)
+        assert len(BATCHES[21]) == 2
+        for other, names in BATCHES.items():
+            if other != 21:
+                assert not set(BATCHES[21]) & set(names), other
+        assert_batch_at(21, 446)
 
     def test_staged_specs_shaped_like_registry_specs(self):
-        from pgsf_spark.analytics.registry import QuerySpec
-
-        for name, spec in _staged().items():
-            assert isinstance(spec, QuerySpec), name
-            assert callable(spec.fn), name
-            assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
+        assert_specs_well_formed(21)
 
     def test_leaf_importable_first(self):
-        import subprocess
-        import sys
-
-        code = (
-            "import sys; sys.path.insert(0, '.');"
-            "import pgsf_spark.analytics.registry_r21;"
-            "from pgsf_spark.analytics.registry import QUERIES;"
-            "from pgsf_spark.analytics.registry_r21 import STAGED_QUERIES_R21;"
-            "assert not set(STAGED_QUERIES_R21) & set(QUERIES)"
-        )
-        r = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
-        )
-        assert r.returncode == 0, r.stderr[-1000:]
-
-
-class TestStagedOracleParityR21:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_oracle_parity_sf0001(self, spark, name):
-        from pgsf_spark.verify import verify_queries
-
-        results = verify_queries(
-            spark, SF_DIR, only={name}, log=lambda s: None, queries=_staged()
-        )
-        assert results == {name: True}
-
-
-class TestStagedLintReadinessR21:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_gate_faces_return_checkpoints(self, spark, name):
-        df = _staged()[name].fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan or "LocalTableScan" in plan or "Scan" in plan
-        assert ".parquet" not in plan
-
-
-class TestStagedEmptyInputsR21:
-    @pytest.mark.parametrize("name", sorted(_staged()))
-    def test_runs_on_empty_tables(self, spark, empty_sf_dir, name):
-        df = _staged()[name].fn(spark, empty_sf_dir)
-        assert len(df.schema) > 0
-        assert isinstance(df.collect(), list)  # must not raise
-
-
-class TestCatalogGcSemantics:
-    def test_vacuum_keeps_newest_and_current_pointer(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.operators.catalog import CatalogStore
-        from pgsf_spark.operators.table_store import TableStore
-
-        store = TableStore(spark, str(tmp_path / "store"))
-        catalog = CatalogStore(str(tmp_path / "catalog"))
-        vs = []
-        expect = None
-        for i in range(4):
-            store.write(spark.range(3 + i).select(F.col("id").alias("k")), "t")
-            expect = catalog.snapshot_current(store, ["t"], expect_version=expect)
-            vs.append(expect)
-        victims = catalog.vacuum(keep=2)
-        assert victims == vs[:2]
-        assert catalog.versions() == vs[2:]
-        assert catalog.current_version() == vs[3]
-
-    def test_vacuum_never_drops_the_pointer_version(self, spark, tmp_path):
-        """keep=0 is the degenerate ask; the current pointer's version
-        must survive anyway -- a dangling pointer would break every
-        pin() until the next publish."""
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.operators.catalog import CatalogStore
-        from pgsf_spark.operators.table_store import TableStore
-
-        store = TableStore(spark, str(tmp_path / "store"))
-        catalog = CatalogStore(str(tmp_path / "catalog"))
-        store.write(spark.range(3).select(F.col("id").alias("k")), "t")
-        v1 = catalog.snapshot_current(store, ["t"])
-        assert catalog.vacuum(keep=0) == []
-        assert catalog.versions() == [v1]
-        assert catalog.mapping(catalog.pin())
-
-    def test_empty_catalog_vacuum_is_a_noop(self, tmp_path):
-        from pgsf_spark.operators.catalog import CatalogStore
-
-        catalog = CatalogStore(str(tmp_path / "catalog"))
-        assert catalog.vacuum(keep=2) == []
-
-
-class TestMaintenanceRecoveryComposition:
-    def test_gate_invariants(self, spark):
-        from pgsf_spark.analytics.retention import MR_HOUR_MOD, MR_W2_MOD
-
-        row = _staged()["maintenance_recovery_gate"].fn(spark, SF_DIR).first()
-        assert row["recovered_wm_hours"] == MR_HOUR_MOD - 1
-        assert row["n_versions"] == 2
-        assert row["n_rows"] > 0
-        # the post-recovery window is exactly the wave-2 arrivals
-        # (custkeys are 1..N, so pk % 10 == 0 hits floor(N/10) rows)
-        assert 0 < row["n_window"] < row["n_rows"]
-        assert row["n_window"] == row["n_rows"] // MR_W2_MOD
+        assert_importable_before_registry(21)

@@ -1,109 +1,12 @@
-"""Salted-join skew mitigation + derived-column tests, plus hypothesis
-property tests for the upload chunker."""
+"""Derived-column tests, plus hypothesis property tests for the upload
+chunker."""
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from pgsf_spark.operators.derived import FormulaError, apply_derived
-from pgsf_spark.operators.skew import salted_count, salted_join
 from pgsf_spark.operators.upload import chunk_rows
-
-
-class TestSaltedJoin:
-    def test_matches_plain_join(self, spark):
-        # 1 hot key (90% of rows) + long tail
-        big = spark.createDataFrame(
-            [(("hot" if i % 10 else f"k{i}"), i) for i in range(1000)], "k string, v int"
-        )
-        small = spark.createDataFrame([("hot", 1), ("k10", 2), ("k20", 3)], "k string, w int")
-        plain = big.join(small, "k").select("k", "v", "w")
-        salted = salted_join(big, small, "k").select("k", "v", "w")
-        assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-    def test_left_join_preserved(self, spark):
-        big = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
-        small = spark.createDataFrame([("a", 10)], "k string, w int")
-        out = {r["k"]: r["w"] for r in salted_join(big, small, "k", how="left").collect()}
-        assert out == {"a": 10, "b": None}
-
-    def test_salted_count_matches(self, spark):
-        df = spark.createDataFrame([(("hot" if i % 5 else f"k{i}"),) for i in range(500)], "k string")
-        plain = {r["k"]: r["n"] for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
-        salted = {r["k"]: r["n"] for r in salted_count(df, "k").collect()}
-        assert plain == salted
-
-
-class TestSkewHedgedJoin:
-    """VERDICT r2 ask #9: a doc in thousands of candidate pairs must not
-    concentrate the verify join in one shuffled partition."""
-
-    def _data(self, spark):
-        from pyspark.sql import functions as F
-
-        # adversarial: one hot doc in 2000 pairs, 50 cold docs in ~5 each
-        hot = spark.range(2000).select(
-            F.lit("hotdoc").alias("doc_a"), F.concat(F.lit("p"), F.col("id")).alias("payload")
-        )
-        cold = spark.range(250).select(
-            F.concat(F.lit("d"), (F.col("id") % 50)).alias("doc_a"),
-            F.concat(F.lit("c"), F.col("id")).alias("payload"),
-        )
-        big = hot.unionByName(cold)
-        dim = spark.range(51).select(
-            F.when(F.col("id") == 50, F.lit("hotdoc"))
-            .otherwise(F.concat(F.lit("d"), F.col("id")))
-            .alias("doc_a"),
-            (F.col("id") * 10).alias("feature"),
-        )
-        return big, dim
-
-    def test_matches_plain_join_with_hot_key(self, spark):
-        from pgsf_spark.operators.skew import skew_hedged_join
-
-        big, dim = self._data(spark)
-        got = skew_hedged_join(big, dim, "doc_a", hot_threshold=100)
-        want = big.join(dim, "doc_a")
-        assert got.count() == want.count() == 2250
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    def test_hot_path_broadcasts_dim_rows(self, spark):
-        from pgsf_spark.operators.skew import skew_hedged_join
-
-        big, dim = self._data(spark)
-        plan = skew_hedged_join(
-            big, dim, "doc_a", hot_threshold=100
-        )._jdf.queryExecution().executedPlan().toString()
-        # the hot branch joins against an explicitly broadcast dim subset
-        assert plan.count("BroadcastHashJoin") >= 2  # semi/anti splits + hot join
-        assert "CartesianProduct" not in plan
-
-    def test_no_hot_keys_degenerates_to_plain(self, spark):
-        from pgsf_spark.operators.skew import skew_hedged_join
-
-        big, dim = self._data(spark)
-        got = skew_hedged_join(big, dim, "doc_a", hot_threshold=10_000)
-        assert got.count() == 2250
-
-    def test_precomputed_hot_keys(self, spark):
-        from pyspark.sql import functions as F
-
-        from pgsf_spark.operators.skew import skew_hedged_join
-
-        big, dim = self._data(spark)
-        hot = spark.createDataFrame([("hotdoc",)], "doc_a string")
-        got = skew_hedged_join(big, dim, "doc_a", hot_keys=hot)
-        assert got.count() == 2250
-
-    def test_outer_join_rejected(self, spark):
-        import pytest as _pytest
-
-        from pgsf_spark.operators.skew import skew_hedged_join
-
-        big, dim = self._data(spark)
-        with _pytest.raises(ValueError, match="inner"):
-            skew_hedged_join(big, dim, "doc_a", how="left")
 
 
 class TestDerived:
@@ -137,20 +40,3 @@ class TestChunkerProperties:
             # byte cap holds unless a single record alone exceeds it
             if len(body) > 1:
                 assert len(c.encode()) <= max_bytes + max(len(line) + 1 for line in body)
-
-
-class TestSaltedJoinGuards:
-    def test_outer_joins_rejected(self, spark):
-        big = spark.createDataFrame([(1, "a")], "k int, v string")
-        small = spark.createDataFrame([(1, "x")], "k int, w string")
-        import pytest as _pytest
-
-        for how in ("right", "full", "full_outer", "right_outer"):
-            with _pytest.raises(ValueError, match="salted_join does not support"):
-                salted_join(big, small, "k", how=how)
-
-    def test_left_anti_correct(self, spark):
-        big = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-        small = spark.createDataFrame([(1, "x")], "k int, w string")
-        out = salted_join(big, small, "k", how="left_anti").collect()
-        assert [(r["k"], r["v"]) for r in out] == [(2, "b")]

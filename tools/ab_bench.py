@@ -9,7 +9,7 @@ so both trees see the same noise distribution; per-query medians and the
 A/B ratio then attribute differences to CODE, not host state.
 
 Usage:
-  python tools/r14/ab_bench.py --baseline /tmp/r14_baseline [--rounds 4]
+  python tools/ab_bench.py --baseline /tmp/r14_baseline [--rounds 4]
           [--out /tmp/ab_bench.json]
 
 The baseline dir is a plain git worktree of the pre-optimization commit.
@@ -78,7 +78,9 @@ def run_child(tree: str) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--baseline", required=True, help="worktree of the before commit")
-    ap.add_argument("--optimized", default="/root/repo")
+    ap.add_argument(
+        "--optimized", default=os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     ap.add_argument("--rounds", type=int, default=4)
     ap.add_argument("--out", default="/tmp/ab_bench.json")
     ap.add_argument(

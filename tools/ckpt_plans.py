@@ -7,7 +7,7 @@ q_prefix_filter_pairs) is invisible in plans/r14/<q>_after.txt. This tool
 wraps DataFrame.localCheckpoint to explain every frame at the moment it
 is materialized, writing plans/r14/<q>_ckpt<N>_<suffix>.txt.
 
-Usage: python tools/r14/capture_ckpt_plans.py <suffix> <query> [query ...]
+Usage: python tools/ckpt_plans.py <suffix> <query> [query ...]
 """
 
 from __future__ import annotations
@@ -15,7 +15,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 # patch the CLASSIC DataFrame: in Spark 4 `pyspark.sql.DataFrame` is the
 # abstract API facade and classic sessions dispatch to the subclass's own
@@ -29,7 +30,7 @@ def main():
     suffix = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = "/root/repo/plans/r14"
+    out_dir = os.path.join(_REPO, "plans", "r14")
     spark = get_spark("pgsf_spark_ckpt_capture")
     from pgsf_spark.analytics.registry import QUERIES
 

@@ -1,32 +1,46 @@
-"""Close-of-round certification ritual, mechanized (VERDICT r7 item 5).
+"""Close-of-round certification ritual, mechanized.
 
 Runs the full oracle sweep at BOTH scales under the driver-like vanilla
-session, AFTER the round's last code change, and prints a ready-to-paste
-PERF.md close block whose every count is DERIVED from ``len(QUERIES)`` --
-rounds 6 and 7 both certified a hand-typed N while the registry held N+k;
-this makes that drift impossible (tests/test_doc_counts.py then enforces
-that the latest recorded close block matches the live registry).
+session, AFTER the round's last code change, and writes CERTIFICATION.json
+at the repo root: the commit, ``len(QUERIES)``, and per scale the pass and
+fail counts, the failed names and the sweep seconds. Every count is derived
+from the live registry, never hand-typed; tests/test_doc_counts.py then
+checks that the committed certification matches the registry.
 
 Usage: python tools/close_round.py <round_number>
-Exits non-zero if any query fails either sweep (a close block is only
-printed for an all-green certification).
+Exits non-zero if any query fails either sweep (the file still records the
+red, so a stale green cannot survive a red re-run).
 """
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-# Sweep-time budget awareness (VERDICT r10 ask #5): the 8 availableNow
-# streaming gates registered in round 11 each run a real bounded stream
-# (~8-17 s), so every full-registry sweep carries a fixed streaming cost.
-# The close ritual now records per-scale wall-clock and the streaming
-# family's share; if the family ever exceeds this fraction of a sweep,
-# run it once (not twice) in the double-certification ritual and note so
-# in the close block.
+# Sweep-time budget awareness: the availableNow streaming gates each run a
+# real bounded stream (~8-17 s), so every full-registry sweep carries a
+# fixed streaming cost. The certification records per-scale wall-clock and
+# the streaming family's share; if the family ever exceeds this fraction of
+# a sweep, run it once (not twice) in the double-certification ritual.
 STREAM_BUDGET_FRACTION = 0.25
+
+
+def _commit() -> str:
+    """HEAD's hash, suffixed ``+dirty`` when tracked files differ from it."""
+    git = ["git", "-C", REPO]
+    head = subprocess.run([*git, "rev-parse", "HEAD"], capture_output=True, text=True)
+    dirty = subprocess.run(
+        [*git, "status", "--porcelain", "--untracked-files=no"],
+        capture_output=True,
+        text=True,
+    )
+    return head.stdout.strip() + ("+dirty" if dirty.stdout.strip() else "")
 
 
 def main() -> int:
@@ -39,28 +53,32 @@ def main() -> int:
     n = len(QUERIES)
     streaming = {name for name in QUERIES if name.startswith("stream_")}
     spark = _vanilla_spark()
-    greens = {}
-    timings = {}
+    scales = {}
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         t0 = time.time()
-        if streaming:
-            ts0 = time.time()
-            sresults = verify_queries(spark, sf, only=streaming, log=lambda s: None)
-            stream_sec = time.time() - ts0
-            bresults = verify_queries(
-                spark, sf, only=set(QUERIES) - streaming, log=lambda s: None
-            )
-            results = {**sresults, **bresults}
-        else:
-            stream_sec = 0.0
-            results = verify_queries(spark, sf, log=lambda s: None)
+        sresults = (
+            verify_queries(spark, sf, only=streaming, log=lambda s: None)
+            if streaming
+            else {}
+        )
+        stream_sec = time.time() - t0
+        bresults = verify_queries(
+            spark, sf, only=set(QUERIES) - streaming, log=lambda s: None
+        )
+        results = {**sresults, **bresults}
         total_sec = time.time() - t0
-        bad = [name for name, ok in results.items() if not ok]
-        greens[sf] = n - len(bad)
-        timings[sf] = (total_sec, stream_sec)
+        bad = sorted(name for name, ok in results.items() if not ok)
+        scale = sf.rstrip("/").rsplit("/", 1)[-1]
+        scales[scale] = {
+            "pass": n - len(bad),
+            "fail": len(bad),
+            "failed": bad,
+            "sweep_s": round(total_sec, 1),
+            "streaming_s": round(stream_sec, 1),
+        }
         share = stream_sec / total_sec if total_sec else 0.0
         print(
-            f"{sf}: {greens[sf]}/{n} green in {total_sec:.0f}s "
+            f"{sf}: {n - len(bad)}/{n} green in {total_sec:.0f}s "
             f"(streaming family {stream_sec:.0f}s = {share:.0%})"
         )
         if share > STREAM_BUDGET_FRACTION:
@@ -72,19 +90,11 @@ def main() -> int:
         if bad:
             print(f"RED at {sf}: {bad}")
     spark.stop()
-    if any(g != n for g in greens.values()):
-        return 1
-    sweep_note = "; ".join(
-        f"{sf.rsplit('/', 1)[-1]} {tot:.0f}s (streaming {s:.0f}s)"
-        for sf, (tot, s) in timings.items()
-    )
-    print(
-        f"\nROUND-{rnd} CLOSE (run after the last code change, counts derived\n"
-        f"from len(QUERIES)={n}): registry {n}/{n} hash-green at sf0.001 AND\n"
-        f"{n}/{n} at sf0.01 under the driver-like vanilla session.\n"
-        f"Sweep wall-clock: {sweep_note}."
-    )
-    return 0
+    cert = {"round": rnd, "commit": _commit(), "n_queries": n, "scales": scales}
+    with open(os.path.join(REPO, "CERTIFICATION.json"), "w") as fh:
+        json.dump(cert, fh, indent=2)
+        fh.write("\n")
+    return 1 if any(s["fail"] for s in scales.values()) else 0
 
 
 if __name__ == "__main__":

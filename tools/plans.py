@@ -1,11 +1,12 @@
 """Capture .explain('formatted') for headline queries into a plans dir.
 
-Usage: python tools/r15/capture_plans.py --suffix before|after
-           [--tree /path/to/checkout] [--out /path/to/plans/r15] [query ...]
+Usage: python tools/plans.py --suffix before|after
+           [--tree /path/to/checkout] [--out /path/to/plans/dir] [query ...]
 
   --tree  engine checkout whose code builds the plans (default: the repo
-          this script lives in -- derived from __file__, ADVICE r14 #3)
+          this script lives in)
   --out   output directory (default: <repo>/plans/r15)
+  query   names to capture (default: bench.HEADLINE of the --tree checkout)
 
 Uses the SAME session config as bench.py (pgsf_spark.session.get_spark) so
 the captured plans are the plans the bench actually runs.
@@ -17,24 +18,7 @@ import argparse
 import os
 import sys
 
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-HEADLINE = [
-    "pricing_summary",
-    "revenue_by_nation",
-    "region_volume",
-    "top_orders_per_customer",
-    "sessionize",
-    "merge_upsert_customer",
-    "dedup_exact",
-    "minhash_lsh_pairs",
-    "cosine_topk",
-    "quality_score",
-    "kmeans_clusters",
-    "pagerank_neardup",
-    "prefix_filter_pairs",
-    "lsh_jaccard_verified",
-]
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main():
@@ -46,6 +30,7 @@ def main():
     args = ap.parse_args()
 
     sys.path.insert(0, args.tree)
+    from bench import HEADLINE
     from pgsf_spark.session import get_spark
 
     names = args.queries or HEADLINE

@@ -83,10 +83,10 @@ def build_scaled(spark, src: str, dst: str, n: int, skew: bool = False) -> None:
             # their text REDIRECTED to one of 10 shared hot texts (key k
             # with mass ~2^-(k+1), shared across replicas), so the hottest
             # family is ~10% of the whole corpus with IDENTICAL text. Every
-            # hot doc lands in one LSH bucket per band and fans out far past
-            # the 256 hot-doc threshold in q_lsh_jaccard_verified -- the
-            # stress for the MAX_BUCKET chunk cap + skew_hedged_join pair:
-            # if they work, skewed-Nx wall-clock stays near plain-Nx.
+            # hot doc lands in one LSH bucket per band -- the stress for
+            # q_lsh_jaccard_verified's MAX_BUCKET chunk cap and AQE's skew
+            # join handling: if they work, skewed-Nx wall-clock stays near
+            # plain-Nx.
             h = F.abs(F.xxhash64("doc_id", F.lit("docskew7")))
             j = F.pmod(h, F.lit(1023)) + 1
             hot_key = (F.lit(9) - F.floor(F.log2(j.cast("double")))).cast("long")
@@ -123,36 +123,10 @@ def main() -> int:
     base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     work = os.environ.get("PGSF_SCALE_DIR", "/tmp/pgsf_scale_check")
 
-    from pgsf_spark.analytics.registry import QUERIES as _LIVE
-    from pgsf_spark.analytics.registry_r11 import STAGED_QUERIES
-    from pgsf_spark.analytics.registry_r12 import STAGED_QUERIES_R12
-    from pgsf_spark.analytics.registry_r13 import STAGED_QUERIES_R13
-    from pgsf_spark.analytics.registry_r14 import STAGED_QUERIES_R14
-    from pgsf_spark.analytics.registry_r15 import STAGED_QUERIES_R15
-    from pgsf_spark.analytics.registry_r16 import STAGED_QUERIES_R16
-    from pgsf_spark.analytics.registry_r17 import STAGED_QUERIES_R17
-    from pgsf_spark.analytics.registry_r18 import STAGED_QUERIES_R18
-    from pgsf_spark.analytics.registry_r19 import STAGED_QUERIES_R19
-    from pgsf_spark.analytics.registry_r20 import STAGED_QUERIES_R20
-    from pgsf_spark.analytics.registry_r21 import STAGED_QUERIES_R21
+    from pgsf_spark.analytics.registry import QUERIES
     from pgsf_spark.session import get_spark
     from pgsf_spark.tables import load_table
 
-    # staged (pre-registration) queries are trend-checkable too
-    QUERIES = {
-        **_LIVE,
-        **STAGED_QUERIES,
-        **STAGED_QUERIES_R12,
-        **STAGED_QUERIES_R13,
-        **STAGED_QUERIES_R14,
-        **STAGED_QUERIES_R15,
-        **STAGED_QUERIES_R16,
-        **STAGED_QUERIES_R17,
-        **STAGED_QUERIES_R18,
-        **STAGED_QUERIES_R19,
-        **STAGED_QUERIES_R20,
-        **STAGED_QUERIES_R21,
-    }
     unknown = [q for q in names if q not in QUERIES]
     if unknown:
         print(json.dumps({"error": f"unknown queries {unknown}"}))
