@@ -108,13 +108,19 @@ def _list_parquet_files(path: str) -> list[str]:
     """Breadth-first parallel tree listing (the os.walk replacement): each
     directory level fans out across threads, so listing a version with
     thousands of partition dirs costs ~depth round-trips instead of one
-    serial scandir per directory."""
+    serial scandir per directory. Lists exactly the parquet files the
+    parquet reader reads, so per-file stats describe the rows a read
+    returns: Spark's file index skips names starting with ``.``, or with
+    ``_`` unless they are ``col=value`` partition dirs (``_temporary``,
+    ``_quarantine``, ``.crc`` sidecars)."""
     from concurrent.futures import ThreadPoolExecutor
 
     def scan(d: str) -> tuple[list[str], list[str]]:
         fs, ds = [], []
         with os.scandir(d) as it:
             for e in it:
+                if e.name.startswith(".") or (e.name.startswith("_") and "=" not in e.name):
+                    continue
                 if e.is_dir(follow_symlinks=False):
                     ds.append(e.path)
                 elif e.name.endswith(".parquet"):
@@ -136,14 +142,18 @@ def _list_parquet_files(path: str) -> list[str]:
 _STATS_NAME = "_STATS.json"
 # Delta collects stats on the first 32 columns by default; same cap here.
 _STATS_MAX_COLS = 32
+# Per-file footer row count in a _STATS.json entry. Column keys never hold a
+# ".": _footer_stats skips every column path containing one.
+STATS_ROWS = ".num_rows"
 
 
 def _footer_stats(fp: str) -> dict:
-    """Column min/max for one parquet file, from its footer only (a few KB
-    of IO). Runs EXECUTOR-side (see _write_file_stats): module-level so it
-    pickles cleanly into Spark tasks. Nested paths, columns past the cap,
-    and types with no order-preserving JSON form are skipped -- a missing
-    stat means "never prune this file on that column"."""
+    """Column min/max and the row count (``STATS_ROWS``) of one parquet
+    file, from its footer only (a few KB of IO). Runs EXECUTOR-side (see
+    _write_file_stats): module-level so it pickles cleanly into Spark tasks.
+    Nested paths, columns past the cap, and types with no order-preserving
+    JSON form are skipped -- a missing stat means "never prune this file on
+    that column"."""
     import pyarrow.parquet as pq
 
     try:
@@ -170,7 +180,33 @@ def _footer_stats(fp: str) -> dict:
                 per_col[name] = [min(per_col[name][0], mn), max(per_col[name][1], mx)]
             else:
                 per_col[name] = [mn, mx]
-    return {k: v for k, v in per_col.items() if v is not None}
+    out = {k: v for k, v in per_col.items() if v is not None}
+    out[STATS_ROWS] = md.num_rows
+    return out
+
+
+def summarize_file_stats(stats: dict, col: str | None = None):
+    """``(rows, max of col)`` over a version's _STATS.json entries, or None
+    when the stats cannot answer exactly: an entry without a row count, or a
+    file holding rows but no ``col`` stat. Zero-row files hold no values and
+    count for nothing. The max is the stored JSON form (ISO string for
+    timestamps); ``col=None`` asks for the row count alone."""
+    rows, mx = 0, None
+    for s in stats.values():
+        n = s.get(STATS_ROWS)
+        if n is None:
+            return None
+        rows += n
+        if col is None or n == 0:
+            continue
+        rng = s.get(col)
+        if rng is None:
+            return None
+        mx = rng[1] if mx is None else max(mx, rng[1])
+    return rows, mx
+
+
+_EPOCH = _dt.datetime(1970, 1, 1)
 
 
 def _stat_jsonable(v):
@@ -281,28 +317,40 @@ class TableStore:
         )
         return path
 
-    def _write_file_stats(self, path: str) -> None:
-        """Per-file column min/max from parquet footers -> _STATS.json.
+    def _write_file_stats(self, path: str, carried: dict | None = None) -> None:
+        """Per-file column min/max and row count from parquet footers ->
+        _STATS.json.
 
         The footer reads run as a Spark job over the file list (RDD map --
         the legitimate per-partition-imperative case: O(files) metadata IO,
         no row data), so publish-time stats cost is parallel across the
         cluster, not a sequential driver walk. At 100 TB (~800k files at
         128 MB) the driver only lists names and writes the JSON; Delta
-        collects stats executor-side at write for the same reason. Covers
-        the whole version dir, so hardlink-carried partitions from
-        write_partial are included (their footers are identical inodes)."""
-        files = _list_parquet_files(path)
+        collects stats executor-side at write for the same reason.
+
+        ``carried``: entries of files hardlinked from the previous version
+        (write_partial), keyed by the same relative path. They are the same
+        inodes, so an entry that already holds a row count is copied and
+        its footer is not read again; the job reads only the new files, and
+        none runs when there are none."""
+        carried = carried or {}
         stats: dict[str, dict] = {}
-        if files:
+        todo = []
+        for fp in _list_parquet_files(path):
+            rel = os.path.relpath(fp, path)
+            if STATS_ROWS in carried.get(rel, ()):
+                stats[rel] = carried[rel]
+            else:
+                todo.append(fp)
+        if todo:
             sc = self.spark.sparkContext
-            slices = max(1, min(len(files), sc.defaultParallelism))
+            slices = max(1, min(len(todo), sc.defaultParallelism))
             pairs = (
-                sc.parallelize(sorted(files), slices)
+                sc.parallelize(sorted(todo), slices)
                 .map(lambda fp: (fp, _footer_stats(fp)))
                 .collect()
             )
-            stats = {os.path.relpath(fp, path): s for fp, s in pairs}
+            stats.update((os.path.relpath(fp, path), s) for fp, s in pairs)
         with open(os.path.join(path, _STATS_NAME), "w") as f:
             json.dump(stats, f)
 
@@ -317,6 +365,34 @@ class TableStore:
                 return json.load(f)
         except OSError:
             return None
+
+    def stats_summary(self, table: str, col: str | None = None):
+        """``(rows, max of col)`` of the current version from _STATS.json,
+        with no Spark job: ``summarize_file_stats`` over the published
+        entries, the max converted through the column's Spark type
+        (``TimestampType``/``TimestampNTZType`` ``fromInternal``) so it
+        equals what ``agg(F.max(col)).first()`` returns. None when stats
+        cannot answer -- no stats file, an incomplete entry, or a ``col``
+        that is not a timestamp -- and the caller must scan."""
+        from pyspark.sql.types import TimestampNTZType, TimestampType
+
+        stats = self.file_stats(table)
+        summary = None if stats is None else summarize_file_stats(stats, col)
+        if summary is None or col is None or summary[1] is None:
+            return summary
+        path = self.current_version_path(table)
+        schema = self._manifest_schema(path) if path else None
+        if schema is None or col not in schema.fieldNames():
+            return None
+        dtype = schema[col].dataType
+        if not isinstance(dtype, (TimestampType, TimestampNTZType)):
+            return None
+        # stats hold UTC-naive ISO (wall time for NTZ): micros since epoch
+        # of that naive value is exactly the column's internal form
+        micros = (_dt.datetime.fromisoformat(summary[1]) - _EPOCH) // _dt.timedelta(
+            microseconds=1
+        )
+        return summary[0], dtype.fromInternal(micros)
 
     def read_pruned(
         self,
@@ -535,12 +611,13 @@ class TableStore:
         schema_json,
         manifest: dict,
         expect_version=_UNCHECKED,
+        carried_stats: dict | None = None,
     ) -> None:
         # K5 job-artifact persistence (status.json/batches.json analogue,
         # download.py:86-92): a manifest per published version for
         # lineage/debugging; then the atomic pointer flip.
         if self.collect_stats:
-            self._write_file_stats(path)
+            self._write_file_stats(path, carried_stats)
         with open(os.path.join(path, "_MANIFEST.json"), "w") as f:
             json.dump(
                 {
@@ -695,15 +772,18 @@ class TableStore:
                 f"not listed in changed_values -- refusing to publish (would duplicate keys)"
             )
         skip = written_dirs | declared_dirs
-        _carry_dirs(
-            prev,
-            path,
-            [
-                d
-                for d in os.listdir(prev)
-                if d.startswith(f"{partition_col}=") and d not in skip
-            ],
-        )
+        carry = [
+            d for d in os.listdir(prev) if d.startswith(f"{partition_col}=") and d not in skip
+        ]
+        _carry_dirs(prev, path, carry)
+        # the carried dirs' stats entries ride along with their hardlinks,
+        # so the footer job reads only the rewritten buckets' files
+        carry_set = set(carry)
+        carried_stats = {
+            rel: s
+            for rel, s in (self.file_stats(table, os.path.basename(prev)) or {}).items()
+            if rel.split(os.sep, 1)[0] in carry_set
+        }
         meta = dict(manifest or {})
         meta.setdefault("partition_by", prev_manifest.get("partition_by") or [partition_col])
         if prev_manifest.get("partition_buckets") is not None:
@@ -716,6 +796,7 @@ class TableStore:
             df_changed.schema.jsonValue(),
             meta,
             expect_version=expect_version,
+            carried_stats=carried_stats,
         )
         return path
 

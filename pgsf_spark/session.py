@@ -43,13 +43,9 @@ def get_spark(
         # Files: 128 MB split target is the right granularity for huge scans.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # Serve bare MIN/MAX/COUNT from parquet footer statistics -- the
-        # post-merge watermark advance (max ts) and row accounting become
-        # metadata-only instead of full scans of the replica.
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         # INT64 micros timestamps (not legacy INT96): required for predicate
-        # AND aggregate pushdown on timestamp columns, and what every other
-        # engine (DuckDB, Trino) reads natively.
+        # pushdown and footer min/max stats on timestamp columns, and what
+        # every other engine (DuckDB, Trino) reads natively.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # pandas-written parquet may carry TIMESTAMP(NANOS) which Spark's
         # reader rejects; read as long and normalize in tables.load_table.

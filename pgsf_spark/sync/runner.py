@@ -5,9 +5,13 @@ Reference flow parity:
     csv_to_postgres -> seed __sync  ==> one Spark job: scan -> overwrite
     write -> seed watermark from extract-start time (C6).
   - incremental sync (§3.2): query_poll_table.sync_table ==> claim ->
-    incremental scan (P4) -> latest-per-key dedup -> merge upsert (K3) ->
-    atomic publish -> advance watermark to max(ts) of merged table (A1) ->
-    release. Exactly-once effect (C3) comes from atomic publish + the
+    incremental scan (P4) -> pin the batch (one localCheckpoint job that
+    also observes its max(ts), row/delete counts and changed pk buckets) ->
+    latest-per-key dedup -> merge upsert (K3) of the changed buckets ->
+    atomic publish -> advance watermark to max(ts) of the merged table (A1),
+    read with the row count from the version's per-file footer stats
+    instead of a scan (PostgreSQL answers it from an index) -> release.
+    Exactly-once effect (C3) comes from atomic publish + the
     idempotent-by-key merge.
   - scheduler (C2): the `sync` cron script's due-table fan-out; here a
     thread pool over due tables (per-table concurrency like the reference's
@@ -19,6 +23,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from pgsf_spark.operators.jdbc_sink import JdbcPostgresSink
@@ -39,6 +44,36 @@ def sync_job_group(table: str) -> str:
     the group (parity with abort_refresh.py:49-68, which kills the refresh
     process -- here the running Spark jobs are the process)."""
     return f"pgsf-sync-{table}"
+
+
+def _advance(mx, wm):
+    """The watermark never moves backward: a batch of only soft-deletes of
+    the NEWEST rows leaves a lower max(ts) behind, and releasing that
+    regressed value would re-read the same tombstone window forever."""
+    return mx if (mx is not None and mx > wm) else wm
+
+
+def _pin(changes, ts_field: str, buckets: bool = False):
+    """Materialize the change batch ONCE (localCheckpoint, executor-side;
+    small: one tick's changes) and observe, in that same job, what the tick
+    needs to know about it: ``max_ts``, ``rows``, ``deletes`` (IsDeleted
+    rows) and, with ``buckets``, the sorted changed pk buckets. Everything
+    downstream -- bucket list, written rows, manifest watermark -- then
+    comes from the same evaluation of a live source. The Observation is
+    unnamed, so each call gets a unique name and run_due's concurrent
+    tables never share one. Returns (pinned batch, metrics dict)."""
+    obs = Observation()
+    metrics = [F.max(ts_field).alias("max_ts"), F.count(F.lit(1)).alias("rows")]
+    if "IsDeleted" in changes.columns:
+        metrics.append(F.count_if(F.coalesce(F.col("IsDeleted"), F.lit(False))).alias("deletes"))
+    if buckets:
+        metrics.append(F.collect_set(PGSF_BUCKET).alias("buckets"))
+    pinned = changes.observe(obs, *metrics).localCheckpoint()
+    m = obs.get
+    m.setdefault("deletes", 0)
+    if buckets:
+        m["buckets"] = sorted(m["buckets"])
+    return pinned, m
 
 
 def pk_bucket(pk: str, n_buckets: int):
@@ -190,7 +225,8 @@ class SyncRunner:
             partition_by=partition_by,
             manifest=manifest,
         )
-        n = self.store.read(table).count()
+        summary = self.store.stats_summary(table)
+        n = summary[0] if summary else self.store.read(table).count()
         self.state.insert(table, syncuntil=started, refresh_minutes=refresh_minutes)
         return n
 
@@ -199,16 +235,21 @@ class SyncRunner:
         max(ts) of the *target* after merge (synctable.py:45-54), run
         piggybacked maintenance, release the claim.
 
-        MONOTONIC guard (same as the JDBC leg): a cycle whose changes are
-        only soft-deletes of the NEWEST rows removes them from the target,
-        so max(ts) of the merged table can be LOWER than the current
-        watermark -- releasing that regressed value would re-read the same
-        tombstone window forever. The watermark never moves backward."""
-        new_df = self.store.read(table)
-        max_ts = new_df.agg(F.max(ts_field).alias("m")).first()["m"]
-        n = new_df.count()
+        The max and the row count come from the new version's per-file
+        footer stats (TableStore.stats_summary) -- no Spark job, O(files)
+        JSON. One scan computes both only where stats cannot answer
+        (collect_stats=False, a file with no stat for ``ts_field``, a
+        non-timestamp ``ts_field``). The watermark advance is monotonic
+        (``_advance``)."""
+        summary = self.store.stats_summary(table, ts_field)
+        if summary is None:
+            r = self.store.read(table).agg(
+                F.count(F.lit(1)).alias("n"), F.max(ts_field).alias("m")
+            ).first()
+            summary = (r["n"], r["m"])
+        n, max_ts = summary
         maintained = self._maybe_maintain(table)
-        new_wm = max_ts if (max_ts is not None and max_ts > wm) else wm
+        new_wm = _advance(max_ts, wm)
         self.state.release(table, READY, syncuntil=new_wm)
         out = {"table": table, "rows": n, "watermark": new_wm.isoformat()}
         if maintained:
@@ -236,14 +277,12 @@ class SyncRunner:
                 # advances to max(ts) of the applied batch (the target's
                 # post-merge max, synctable.py:45-54, equals it when rows
                 # were applied; unchanged wm otherwise).
-                changes = changes.localCheckpoint()
-                n = changes.count()
+                changes, batch = _pin(changes, ts_field)
                 self.store.staged_merge(changes, table, pk=pk, ts_field=ts_field)
-                mx = changes.agg(F.max(ts_field).alias("m")).first()["m"]
-                new_wm = mx if mx is not None and mx > wm else wm
+                new_wm = _advance(batch["max_ts"], wm)
                 maintained = self._maybe_maintain(table)
                 self.state.release(table, READY, syncuntil=new_wm)
-                out = {"table": table, "rows": n, "watermark": new_wm.isoformat()}
+                out = {"table": table, "rows": batch["rows"], "watermark": new_wm.isoformat()}
                 if maintained:
                     out["maintenance"] = True
                 return out
@@ -254,19 +293,23 @@ class SyncRunner:
             # The JDBC leg is excluded above (PG owns its schema there).
             drift_audit = self._classify_drift(table, changes)
 
-            # Post-tick sync position for the version manifest: max(ts of
-            # the change batch), clamped monotonic. Every row with ts <=
-            # this value is processed by this tick (the window was strictly
-            # > wm), so a ledger recovered from the manifest
-            # (sync/recovery.py) continues incrementally without re-reading
-            # the applied window. Called per publish site so the
-            # partitioned path computes it from the PINNED
-            # (localCheckpoint'ed) batch -- the same evaluation the written
-            # rows come from. The plain "watermark" field stays the window
-            # START for lineage.
-            def _wm_after(batch):
-                mx = batch.agg(F.max(ts_field).alias("m")).first()["m"]
-                return mx if (mx is not None and mx > wm) else wm
+            # Tick record for the version manifest, from the pinned batch's
+            # observed metrics (no extra Spark job). watermark_after is the
+            # post-tick sync position: max(ts of the change batch), clamped
+            # monotonic. Every row with ts <= this value is processed by
+            # this tick (the window was strictly > wm), so a ledger
+            # recovered from the manifest (sync/recovery.py) continues
+            # incrementally without re-reading the applied window. The
+            # plain "watermark" field stays the window START for lineage.
+            def _tick_record(batch: dict) -> dict:
+                return {
+                    "op": "merge",
+                    "watermark": wm.isoformat(),
+                    "watermark_after": _advance(batch["max_ts"], wm).isoformat(),
+                    "batch_rows": batch["rows"],
+                    "batch_deletes": batch["deletes"],
+                    **drift_audit,
+                }
 
             info = self.store.partition_info(table)
             if info and info.get("partition_buckets") and info["partition_by"] == [PGSF_BUCKET]:
@@ -275,15 +318,15 @@ class SyncRunner:
                 # and rewritten; everything else is hardlink-carried by
                 # write_partial. Cost per tick: O(changes + changed buckets).
                 nb = info["partition_buckets"]
-                # Materialize the change batch ONCE before deriving buckets:
-                # the bucket list and the written rows must come from the
-                # same evaluation -- a source whose re-evaluation can yield
-                # new rows (any live CDC source) would otherwise write rows
-                # into bucket dirs absent from changed_buckets, and
-                # write_partial would hardlink the old files into those same
-                # dirs (duplicate keys). localCheckpoint pins the batch
-                # (small: one tick's changes) executor-side.
-                changes = changes.withColumn(PGSF_BUCKET, pk_bucket(pk, nb)).localCheckpoint()
+                # Pin the batch before deriving buckets: the bucket list and
+                # the written rows must come from the same evaluation -- a
+                # source whose re-evaluation can yield new rows (any live CDC
+                # source) would otherwise write rows into bucket dirs absent
+                # from changed_buckets, and write_partial would hardlink the
+                # old files into those same dirs (duplicate keys).
+                changes, batch = _pin(
+                    changes.withColumn(PGSF_BUCKET, pk_bucket(pk, nb)), ts_field, buckets=True
+                )
                 if drift_audit:
                     # A widened schema cannot ride write_partial: untouched
                     # buckets are carried by HARDLINK, so the published
@@ -299,18 +342,10 @@ class SyncRunner:
                         merged,
                         table,
                         partition_by=[PGSF_BUCKET],
-                        manifest={
-                            "op": "merge",
-                            "watermark": wm.isoformat(),
-                            "watermark_after": _wm_after(changes).isoformat(),
-                            "partition_buckets": nb,
-                            **drift_audit,
-                        },
+                        manifest={**_tick_record(batch), "partition_buckets": nb},
                     )
                     return self._finish_sync(table, ts_field, wm)
-                changed_buckets = [
-                    r[0] for r in changes.select(PGSF_BUCKET).distinct().collect()
-                ]
+                changed_buckets = batch["buckets"]
                 if changed_buckets:
                     target = self.store.read(table, keep_internal=True).filter(
                         F.col(PGSF_BUCKET).isin(changed_buckets)
@@ -328,32 +363,18 @@ class SyncRunner:
                     table,
                     PGSF_BUCKET,
                     changed_buckets,
-                    manifest={
-                        "op": "merge",
-                        "watermark": wm.isoformat(),
-                        "watermark_after": _wm_after(changes).isoformat(),
-                        **drift_audit,
-                    },
+                    manifest=_tick_record(batch),
                 )
             else:
                 # Pin the batch for the same reason the partitioned path
-                # does: the manifest's watermark_after agg and the merge
-                # write must see the SAME evaluation of a live source, or
-                # the recovered ledger could claim rows the published
-                # version never received (permanent skip under strict >).
-                changes = changes.localCheckpoint()
+                # does: the manifest's watermark_after and the merge write
+                # must see the SAME evaluation of a live source, or the
+                # recovered ledger could claim rows the published version
+                # never received (permanent skip under strict >).
+                changes, batch = _pin(changes, ts_field)
                 target = self.store.read(table)
                 merged = merge_upsert(target, changes, pk=pk, ts_field=ts_field, order_col="_file_order")
-                self.store.write(
-                    merged,
-                    table,
-                    manifest={
-                        "op": "merge",
-                        "watermark": wm.isoformat(),
-                        "watermark_after": _wm_after(changes).isoformat(),
-                        **drift_audit,
-                    },
-                )
+                self.store.write(merged, table, manifest=_tick_record(batch))
             return self._finish_sync(table, ts_field, wm)
         except ClaimError:
             raise
