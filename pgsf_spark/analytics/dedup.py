@@ -64,13 +64,6 @@ def word_shingles_from_tokens(toks, k: int = SHINGLE_K):
     return F.array_distinct(F.when(n >= k, sh).otherwise(F.array(F.array_join(toks, " "))))
 
 
-def word_shingles(col, k: int = SHINGLE_K):
-    """Distinct k-word shingles straight from a text column (pure
-    built-ins). Prefer staging the token split in its own projection and
-    calling word_shingles_from_tokens -- see its docstring."""
-    return word_shingles_from_tokens(F.split(_norm_text(col), " "), k)
-
-
 def _md5_hash_int(col, seed: int):
     """Deterministic 32-bit-ish hash from md5 hex -- engine-portable
     (identical in DuckDB: conv of substring of md5)."""
@@ -653,6 +646,11 @@ def q_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for x in (F.lit(r.token), F.lit(1 << i).cast("bigint"))
             ]
         )
+        # The vocab probe above and this fold are two lazy passes over
+        # `documents`; a token the probe missed nulls the doc's whole mask
+        # (element_at misses return null), which would silently drop the
+        # doc from verification, so a null mask raises instead (one check
+        # per doc, no extra job).
         # `sz` (the doc's distinct-token count) is NOT carried: every token
         # is in the vocab map by construction, so sz == bit_count(mask) and
         # the verify recomputes it from the mask it already holds -- one
@@ -664,10 +662,19 @@ def q_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bytes / §2.4 remove the join outright).
         masked = toks.filter(F.size("toks") > 0).select(
             "doc_id",
-            F.aggregate(
-                F.col("toks"),
-                F.lit(0).cast("bigint"),
-                lambda acc, t: acc + F.element_at(mask_map, t),
+            F.coalesce(
+                F.aggregate(
+                    F.col("toks"),
+                    F.lit(0).cast("bigint"),
+                    lambda acc, t: acc + F.element_at(mask_map, t),
+                ),
+                F.raise_error(
+                    F.concat(
+                        F.lit("prefix_filter_pairs: a token of doc_id "),
+                        F.col("doc_id").cast("string"),
+                        F.lit(" is not in the vocab probe"),
+                    )
+                ),
             ).alias("mask"),
             "source",
         )

@@ -399,68 +399,6 @@ def decode_wav(content: bytes) -> tuple[int, int, int, list[int]]:
     return (rate, channels, len(samples) // max(channels, 1), samples)
 
 
-def extract_audio_features(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """REAL audio feature extraction over mapInPandas: duration, RMS energy
-    and zero-crossing rate from decoded PCM -- the standard cheap audio
-    quality/VAD features a corpus pipeline gates on. Bytes stay executor-
-    side, one Arrow batch at a time; non-WAV rows get nulls (route on
-    audio_format). Integer-exact math (sum of squares over int samples)
-    keeps the output deterministic across platforms."""
-    from pyspark.sql.types import DoubleType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("audio_format", StringType(), True),
-            StructField("sample_rate", IntegerType(), True),
-            StructField("duration_sec", DoubleType(), True),
-            StructField("rms", DoubleType(), True),
-            StructField("zero_crossing_rate", DoubleType(), True),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, rates, durs, rmss, zcrs = [], [], [], [], []
-            for content in pdf[content_col]:
-                raw = bytes(content) if content is not None else None
-                if raw is None or raw[:4] != b"RIFF":
-                    fmts.append(None if raw is None else "unknown")
-                    rates.append(None)
-                    durs.append(None)
-                    rmss.append(None)
-                    zcrs.append(None)
-                    continue
-                try:
-                    rate, ch, n_frames, s = decode_wav(raw)
-                except ValueError:
-                    fmts.append("wav_corrupt")
-                    rates.append(None)
-                    durs.append(None)
-                    rmss.append(None)
-                    zcrs.append(None)
-                    continue
-                fmts.append("wav")
-                rates.append(rate)
-                durs.append(round(n_frames / rate, 6) if rate else None)
-                if s:
-                    rmss.append(round((sum(v * v for v in s) / len(s)) ** 0.5, 4))
-                    zc = sum(1 for a, b in zip(s, s[1:]) if (a < 0) != (b < 0))
-                    zcrs.append(round(zc / max(len(s) - 1, 1), 6))
-                else:
-                    rmss.append(0.0)
-                    zcrs.append(0.0)
-            out = pdf.copy()
-            out["audio_format"] = fmts
-            out["sample_rate"] = pd.array(rates, dtype="Int32")
-            out["duration_sec"] = pd.array(durs, dtype="float64")
-            out["rms"] = pd.array(rmss, dtype="float64")
-            out["zero_crossing_rate"] = pd.array(zcrs, dtype="float64")
-            yield out
-
-    return df.mapInPandas(run, out_schema)
-
-
 SPEC_NFFT = 256  # analysis window (samples); hop is half a window
 SPEC_BANDS = 4  # log-spaced power bands over [1, NFFT/2]
 
@@ -766,20 +704,6 @@ def q_wav_features_gate(spark, sf_dir: str) -> DataFrame:
     ).orderBy("media_id")
 
 
-def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling plumbing: one row per sampled frame index.
-
-    Frame decode is stubbed (no video lib); the explode + per-frame row
-    layout is the real production shape (frames become independent rows for
-    downstream parallel feature extraction)."""
-    n_frames = (F.coalesce(F.col("meta_bytes"), F.lit(0)) / 1000).cast("int") + 1  # stub: 1 frame per KB
-    return (
-        df.filter(F.col("kind") == "video")
-        .withColumn("frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))))
-        .select("media_id", "frame_idx", F.lit(None).cast("binary").alias("frame_content"))
-    )
-
-
 # --- perceptual image dedup (average hash) --------------------------------
 
 AHASH_GRID = 8  # 8x8 sample grid -> 64-bit hash, stored as two 32-bit halves
@@ -910,113 +834,6 @@ def q_image_ahash_neardup(spark, sf_dir: str) -> DataFrame:
     media = ids.mapInPandas(build, MEDIA_SCHEMA)
     pairs = ahash_near_dup_pairs(image_ahash(media))
     return pairs.orderBy("ka", "kb")
-
-
-FP_FAN = 5  # constellation fan-out: pair each peak with the next FP_FAN
-FP_MIN_MATCHES = 4  # pair match floor reported by audio_fingerprint_match
-
-
-def extract_audio_fingerprints(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Shazam-style constellation fingerprints over mapInPandas: per
-    Hann-windowed rFFT frame take the dominant peak bin, then hash
-    (peak_f1, peak_f2, frame_delta) for each of the next FP_FAN frames --
-    the landmark pairs that make audio matching robust to offset and
-    noise.  Output: one (media_id, fp_hash, frame_idx) row per landmark.
-
-    Like extract_spectrogram_features, float FFT output is not
-    SQL-mirrorable, so this stays out of the oracle registry and is
-    test-locked (identical clips share ~all hashes; different synth
-    params share ~none).  Bytes stay executor-side; downstream matching
-    is a hash equi-join -- the bucket-join shape every dedup op here
-    uses, never clip x clip."""
-    import numpy as np
-    from pyspark.sql.types import LongType as _L
-
-    out_schema = StructType(
-        [
-            StructField("media_id", _L(), False),
-            StructField("fp_hash", _L(), True),
-            StructField("frame_idx", IntegerType(), True),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        win = np.hanning(SPEC_NFFT)
-        hop = SPEC_NFFT // 2
-        for pdf in batches:
-            mids, hashes, frames_ = [], [], []
-            for mid, content in zip(pdf["media_id"], pdf[content_col]):
-                raw = bytes(content) if content is not None else None
-                if raw is None or raw[:4] != b"RIFF":
-                    continue
-                try:
-                    _rate, ch, _n, s = decode_wav(raw)
-                except ValueError:
-                    continue
-                x = np.asarray(s, dtype=np.float64)
-                if ch > 1:
-                    x = x[: x.size // ch * ch].reshape(-1, ch).mean(axis=1)
-                if x.size < SPEC_NFFT:
-                    x = np.pad(x, (0, SPEC_NFFT - x.size))
-                n_frames = 1 + (x.size - SPEC_NFFT) // hop
-                fr = np.lib.stride_tricks.sliding_window_view(x, SPEC_NFFT)[::hop][
-                    :n_frames
-                ]
-                spec = np.abs(np.fft.rfft(fr * win, axis=1)) ** 2
-                peaks = spec[:, 1:].argmax(axis=1) + 1  # DC excluded
-                for t1 in range(len(peaks)):
-                    for dt in range(1, FP_FAN + 1):
-                        t2 = t1 + dt
-                        if t2 >= len(peaks):
-                            break
-                        h = (int(peaks[t1]) << 20) | (int(peaks[t2]) << 8) | dt
-                        mids.append(int(mid))
-                        hashes.append(h)
-                        frames_.append(t1)
-            yield pd.DataFrame(
-                {"media_id": mids, "fp_hash": hashes, "frame_idx": frames_}
-            )
-
-    return df.mapInPandas(run, out_schema)
-
-
-def audio_fingerprint_match(fp: DataFrame) -> DataFrame:
-    """Match clips by shared constellation hashes: a self equi-join on
-    fp_hash (bucket join, never clip x clip), then per clip pair the
-    matched-landmark count and the count at the MODAL frame offset (true
-    matches align at one offset; chance collisions scatter).  Pairs below
-    FP_MIN_MATCHES are dropped.
-
-    At 100 TB the probe side is a broadcast of the query clip's
-    fingerprints against a hash-partitioned index -- the same shape as
-    every LSH candidate join on the dedup shelf."""
-    a = fp.select(
-        F.col("media_id").alias("id_a"),
-        "fp_hash",
-        F.col("frame_idx").alias("fa"),
-    )
-    b = fp.select(
-        F.col("media_id").alias("id_b"),
-        "fp_hash",
-        F.col("frame_idx").alias("fb"),
-    )
-    pairs = (
-        a.join(b, "fp_hash")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", (F.col("fb") - F.col("fa")).alias("offset"))
-    )
-    per_off = pairs.groupBy("id_a", "id_b", "offset").agg(
-        F.count(F.lit(1)).alias("n_at_offset")
-    )
-    return (
-        per_off.groupBy("id_a", "id_b")
-        .agg(
-            F.sum("n_at_offset").cast("bigint").alias("n_matches"),
-            F.max("n_at_offset").cast("bigint").alias("n_aligned"),
-        )
-        .filter(F.col("n_matches") >= FP_MIN_MATCHES)
-        .orderBy(F.col("n_aligned").desc(), "id_a", "id_b")
-    )
 
 
 # --------------------------------------------------------------------------

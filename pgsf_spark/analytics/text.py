@@ -126,14 +126,6 @@ def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def scrub_pii(col, replacement: str = "[REDACTED]"):
-    """Redaction transform (the apply side of q_pii_scan)."""
-    out = col
-    for pat in PII_PATTERNS.values():
-        out = F.regexp_replace(out, pat, replacement)
-    return out
-
-
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-window chunking for training: 64-token chunks, stride 48
     (16-token overlap). Emits (doc_id, chunk_idx, chunk_tokens) -- the chunk

@@ -6,7 +6,7 @@ CSV fidelity. All heavy row work stays JVM-side via pyspark.sql.functions.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -23,17 +23,6 @@ def truncate_to_second(ts: datetime) -> datetime:
     """Second truncation applied to the stored watermark before the
     strictly-> comparison (query_poll_table.py:78-83)."""
     return ts.replace(microsecond=0)
-
-
-def format_watermark(ts: datetime) -> str:
-    """Render a watermark as the reference does (F5)."""
-    if ts.tzinfo is not None:
-        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
-    return truncate_to_second(ts).strftime(WATERMARK_FMT)
-
-
-def parse_watermark(s: str) -> datetime:
-    return datetime.strptime(s, WATERMARK_FMT)
 
 
 def strip_nul(col: Column) -> Column:

@@ -33,29 +33,3 @@ def stream_static_enrich(
     join on the dimension key. Works identically on a batch DataFrame (used
     by tests/oracles for result parity)."""
     return stream.join(F.broadcast(dim.select(on, *dim_cols)), on=on, how=how)
-
-
-def enriched_window_counts(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str,
-    attr: str,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Windowed counts per dimension attribute over an enriched stream --
-    the composed shape (enrich -> watermark -> tumbling agg) of a live
-    per-segment metrics feed."""
-    e = stream_static_enrich(stream, dim, on, [attr], how="inner")
-    if e.isStreaming:
-        e = e.withWatermark(ts_col, watermark)
-    return (
-        e.groupBy(F.window(F.col(ts_col), window).alias("w"), attr)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            attr,
-            "n",
-        )
-    )

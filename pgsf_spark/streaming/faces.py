@@ -185,7 +185,6 @@ def q_stream_sessionize_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 2. stream_tumbling_revenue -------------------------------------------------
 
 TUMBLE_DELAY = "30 minutes"
-TUMBLE_DELAY_S = 1800
 
 
 def q_stream_tumbling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:

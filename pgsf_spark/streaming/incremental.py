@@ -87,485 +87,3 @@ def windowed_event_counts(
             "total_value",
         )
     )
-
-
-def stream_dedup(
-    events: DataFrame,
-    keys: tuple[str, ...] = ("event_id",),
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Exactly-once-ify an at-least-once feed: drop re-deliveries of the
-    same key(s) arriving within the watermark horizon.
-
-    Streaming face uses ``dropDuplicatesWithinWatermark`` -- state holds one
-    entry per key and is EVICTED once the event time passes the watermark,
-    so state size is bounded by (arrival rate x horizon), not by stream
-    lifetime: the property that makes ingest dedup viable on an unbounded
-    100 TB feed. (Plain ``dropDuplicates`` on a stream never evicts.)
-    Batch face degrades to per-key min-arrival dedup for oracle parity; the
-    window orders by (ts, then every non-key column) so same-timestamp
-    duplicates pick a deterministic winner across runs and partitionings.
-    """
-    if events.isStreaming:
-        return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(list(keys))
-    from pyspark.sql.window import Window
-
-    from pyspark.sql.types import MapType
-
-    unorderable = {f.name for f in events.schema.fields if isinstance(f.dataType, MapType)}
-    tiebreak = [
-        c for c in events.columns if c not in keys and c != ts_col and c not in unorderable
-    ]
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(ts_col).asc(), *[F.col(c).asc_nulls_first() for c in tiebreak]
-    )
-    return (
-        events.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def start_neardup_admission(
-    spark: SparkSession,
-    feed_dir: str,
-    schema: StructType,
-    store: TableStore,
-    admitted_table: str,
-    index_table: str,
-    checkpoint_dir: str,
-    sig_threshold: float = 0.875,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming NEAR-dup gatekeeper (streaming twin of the oracle-gated
-    q_incremental_lsh_dedup): each micro-batch of documents is MinHash-
-    banded and joined against the persisted (band, bucket) index; matching
-    candidates are verified by signature agreement (>= sig_threshold of
-    minhash components equal -- the unbiased Jaccard estimator, so no text
-    of historical docs is ever re-read); survivors are appended to the
-    admitted table and their signature+bucket rows to the index.
-
-    State lives in the TableStore index, NOT in streaming state. Both
-    tables are hive-partitioned by EPOCH and published with write_partial,
-    so each micro-batch writes only its own epoch partition (prior epochs
-    hardlink-carry untouched) -- per-batch cost is O(batch), not O(stream
-    history). Crash replay is idempotent: the replayed epoch re-derives
-    the same rows and rewrites the same partition; a replayed doc meeting
-    its own index entry is excluded from rejection by doc_id.
-    Within-batch near-dups resolve first (candidate pairs inside the
-    batch, keep the lowest doc_id of each pair).
-
-    Scale shape per batch: signature projection over the batch only; one
-    (band, bucket) equi-join batch-vs-index; signature verify on candidate
-    ids only. The index grows with ADMITTED docs (near-dup mass never
-    enters), and at 100 TB it is a bucketed table the join co-locates on.
-    """
-    from pgsf_spark.analytics.dedup import N_MINHASH, doc_minhash, lsh_banded
-
-    sig_cols = [f"mh{i}" for i in range(N_MINHASH)]
-    need = int(sig_threshold * N_MINHASH + 0.999999)  # components that must agree
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        batch = batch_df.select("doc_id", "text", "source")
-        banded = lsh_banded(batch)
-        sigs = doc_minhash(batch)
-
-        # 1) within-batch near-dups: keep the lowest doc_id of each pair
-        from pgsf_spark.analytics.dedup import lsh_candidate_pairs
-
-        in_pairs = lsh_candidate_pairs(banded)
-        sa = sigs.select(F.col("doc_id").alias("doc_a"), *[F.col(c).alias(f"a_{c}") for c in sig_cols])
-        sb = sigs.select(F.col("doc_id").alias("doc_b"), *[F.col(c).alias(f"b_{c}") for c in sig_cols])
-        agree = sum(
-            (F.col(f"a_{c}") == F.col(f"b_{c}")).cast("int") for c in sig_cols
-        )
-        in_dups = (
-            in_pairs.join(sa, "doc_a").join(sb, "doc_b")
-            .filter(agree >= need)
-            .select(F.col("doc_b").alias("doc_id"))  # doc_a < doc_b: loser is b
-            .distinct()
-        )
-        survivors = batch.join(in_dups, "doc_id", "left_anti")
-
-        # 2) vs the persisted index
-        try:
-            index = store.read(index_table)
-        except FileNotFoundError:
-            index = None
-        if index is not None and index.head(1):
-            cand = (
-                banded.join(survivors.select("doc_id"), "doc_id")
-                .join(
-                    index.select(F.col("doc_id").alias("old_id"), "band", "bucket"),
-                    ["band", "bucket"],
-                )
-                # a crash-replayed doc meets ITS OWN index entry here; a
-                # self-match must not reject it (its epoch partition is
-                # about to be rewritten and would come out empty)
-                .filter(F.col("doc_id") != F.col("old_id"))
-                .select("doc_id", "old_id")
-                .distinct()
-            )
-            old_sigs = index.select(
-                F.col("doc_id").alias("old_id"), *[F.col(c).alias(f"b_{c}") for c in sig_cols]
-            ).distinct()
-            new_sigs = sigs.select("doc_id", *[F.col(c).alias(f"a_{c}") for c in sig_cols])
-            dup_ids = (
-                cand.join(new_sigs, "doc_id").join(old_sigs, "old_id")
-                .filter(agree >= need)
-                .select("doc_id")
-                .distinct()
-            )
-            survivors = survivors.join(dup_ids, "doc_id", "left_anti")
-
-        admitted = survivors.withColumn("epoch", F.lit(int(epoch_id)))
-        new_index = (
-            banded.join(admitted.select("doc_id"), "doc_id")
-            .join(sigs, "doc_id")
-            .select("doc_id", "band", "bucket", *sig_cols, F.lit(int(epoch_id)).alias("epoch"))
-        )
-        # O(batch) publish: both tables are hive-partitioned by epoch, so a
-        # batch writes ONLY its own epoch partition (write_partial hardlink-
-        # carries all prior epochs untouched) -- per-batch cost does not
-        # grow with stream history. Idempotent replay for free: the same
-        # epoch re-derives the same rows and rewrites the same partition
-        # (self-matches excluded above, so nothing rejects against itself).
-        def _publish(df: DataFrame, table: str) -> None:
-            try:
-                store.write_partial(df.localCheckpoint(), table, "epoch", [int(epoch_id)])
-            except FileNotFoundError:  # first epoch: no version to carry from
-                store.write(df, table, partition_by=["epoch"])
-
-        _publish(admitted, admitted_table)
-        _publish(new_index, index_table)
-
-    writer = (
-        spark.readStream.schema(schema)
-        .parquet(feed_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    writer = writer.trigger(availableNow=True) if available_now else writer.trigger(
-        processingTime="10 minutes"
-    )
-    return writer.start()
-
-
-STREAM_BUDGET_CHARS = 200  # per-source admission budget (chars), test-scale
-
-
-def start_budget_admission(
-    spark: SparkSession,
-    feed_dir: str,
-    schema: StructType,
-    store: TableStore,
-    admitted_table: str,
-    ledger_table: str,
-    checkpoint_dir: str,
-    budget_chars: int = STREAM_BUDGET_CHARS,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming per-source token-budget admission (streaming twin of the
-    oracle-gated q_source_token_budget): each micro-batch admits documents
-    per source, in the same seeded shuffle-hash order as the batch query,
-    until the source's CUMULATIVE admitted chars reach ``budget_chars``;
-    everything past the budget is dropped -- the mixture-enforcement
-    gatekeeper a continuously-ingesting training pipeline runs.
-
-    State is a per-(source, epoch) DELTA ledger in the TableStore, not in
-    streaming state: a batch's admission decisions depend only on ledger
-    rows from EARLIER epochs of the SAME checkpoint generation (strictly
-    ``epoch < current`` AND ``gen == md5(checkpoint_dir)``), so a crash-
-    replayed epoch re-derives identical decisions and rewrites only its
-    own partition (write_partial hardlink-carries the rest) -- idempotent
-    by construction, and per-batch cost is O(batch + sources), never
-    O(stream history). The generation tag exists because epoch_ids restart
-    at 0 under a FRESH checkpoint: without it, a stale generation's
-    higher-numbered epoch partitions would outlive the restart and satisfy
-    ``epoch < current`` for later batches, silently corrupting admission
-    baselines; with it, a fresh checkpoint starts a fresh budget lineage
-    and old-generation partitions become vacuumable garbage.
-
-    Scale shape per batch: one per-source window over the batch (ordered
-    by the seeded hash, the retry-stable order), one broadcast join
-    against the sources-sized prior-totals rollup, one epoch-partition
-    publish per table."""
-    import hashlib
-
-    from pyspark.sql.window import Window
-
-    gen = hashlib.md5(str(checkpoint_dir).encode()).hexdigest()[:8]
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        batch = batch_df.select("doc_id", "text", "source", "n_chars")
-        try:
-            ledger = store.read(ledger_table).filter(
-                (F.col("gen") == gen) & (F.col("epoch") < int(epoch_id))
-            )
-        except FileNotFoundError:
-            ledger = None
-        if ledger is not None and ledger.head(1):
-            prior = ledger.groupBy("source").agg(
-                F.sum("chars_added").cast("bigint").alias("prior_chars")
-            )
-        else:
-            prior = None
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("bud3:"), F.col("doc_id").cast("string"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
-        w = Window.partitionBy("source").orderBy("h", "doc_id").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        cum = batch.select(
-            "*", h.alias("h")
-        ).select("*", F.sum(F.col("n_chars").cast("bigint")).over(w).alias("cum"))
-        if prior is not None:
-            cum = cum.join(F.broadcast(prior), "source", "left").select(
-                "*", F.coalesce(F.col("prior_chars"), F.lit(0)).alias("base")
-            )
-        else:
-            cum = cum.select("*", F.lit(0).alias("base"))
-        epoch_key = f"{gen}_{int(epoch_id)}"
-        admitted = (
-            cum.filter(F.col("base") + F.col("cum") <= F.lit(int(budget_chars)))
-            .select("doc_id", "text", "source", "n_chars")
-            .withColumn("gen", F.lit(gen))
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .withColumn("epoch_key", F.lit(epoch_key))
-        )
-        delta = (
-            admitted.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_added"),
-                F.sum(F.col("n_chars").cast("bigint")).cast("bigint").alias("chars_added"),
-            )
-            .withColumn("gen", F.lit(gen))
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .withColumn("epoch_key", F.lit(epoch_key))
-        )
-
-        def _publish(df: DataFrame, table: str) -> None:
-            try:
-                store.write_partial(df.localCheckpoint(), table, "epoch_key", [epoch_key])
-            except FileNotFoundError:  # first epoch: no version to carry from
-                store.write(df, table, partition_by=["epoch_key"])
-
-        _publish(admitted, admitted_table)
-        _publish(delta, ledger_table)
-
-    writer = (
-        spark.readStream.schema(schema)
-        .parquet(feed_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    writer = writer.trigger(availableNow=True) if available_now else writer.trigger(
-        processingTime="10 minutes"
-    )
-    return writer.start()
-
-
-def start_heavy_hitter_tracking(
-    spark: SparkSession,
-    feed_dir: str,
-    schema: StructType,
-    store: TableStore,
-    sketch_table: str,
-    hitters_table: str,
-    checkpoint_dir: str,
-    phi: float = 0.033,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming heavy-hitter tracking (streaming twin of the oracle-gated
-    q_heavy_hitters_cms_verified): each micro-batch adds its token stream
-    to a per-epoch DELTA of the 1024-cell CMS ledger, merges the
-    generation's cells so far (a <= CMS_D x CMS_W bounded collect), and
-    surfaces every token SEEN IN THIS BATCH whose merged-sketch upper
-    bound clears ceil(phi * total_tokens).  CMS never underestimates, so
-    a token that crosses the threshold is surfaced at its next
-    occurrence -- the streaming semantic a monitor wants (an absent token
-    cannot page anyone anyway); counts are upper bounds, the batch gate
-    is the exact-verified face.
-
-    Same idempotence construction as start_budget_admission: state lives
-    in epoch-partitioned TableStore deltas keyed by a checkpoint
-    generation tag, the current epoch's delta is written BEFORE the merge
-    reads it, and every decision derives only from (batch content, gen,
-    epoch) -- a crash-replayed epoch rewrites its own partitions with
-    identical bytes.  Per-batch cost is O(batch + 1024), never
-    O(stream history); sketch cells MERGE by addition, so a 1000-executor
-    ingest reduces to the same 1024 rows."""
-    import hashlib
-    import math
-
-    from pgsf_spark.analytics.dedup import _norm_text
-    from pgsf_spark.analytics.text import CMS_D, CMS_W, _cms_cells
-
-    gen = hashlib.md5(str(checkpoint_dir).encode()).hexdigest()[:8]
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        epoch_key = f"{gen}_{int(epoch_id)}"
-        tok = batch_df.select(
-            F.explode(F.split(_norm_text(F.col("text")), " ")).alias("token")
-        )
-        delta = (
-            tok.select(F.explode(_cms_cells(F.col("token"))).alias("c"))
-            .select("c.row", "c.col")
-            .groupBy("row", "col")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .withColumn("gen", F.lit(gen))
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .withColumn("epoch_key", F.lit(epoch_key))
-        )
-
-        def _publish(df: DataFrame, table: str) -> None:
-            try:
-                store.write_partial(df.localCheckpoint(), table, "epoch_key", [epoch_key])
-            except FileNotFoundError:  # first epoch: no version to carry from
-                store.write(df, table, partition_by=["epoch_key"])
-
-        _publish(delta, sketch_table)
-        merged = (
-            store.read(sketch_table)
-            .filter((F.col("gen") == gen) & (F.col("epoch") <= int(epoch_id)))
-            .groupBy("row", "col")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        )
-        cmap = {(r.row, r.col): r.cnt for r in merged.collect()}  # <= CMS_D*CMS_W
-        n_tokens = sum(v for (r, _c), v in cmap.items() if r == 0)
-        thr = int(math.ceil(phi * n_tokens))
-        arr = F.array(
-            *[F.lit(cmap.get((i, c), 0)) for i in range(CMS_D) for c in range(CMS_W)]
-        )
-        ests = []
-        for i in range(CMS_D):
-            h = F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"cms{i}:"), F.col("token"))), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            ests.append(F.element_at(arr, ((h % CMS_W) + i * CMS_W + 1).cast("int")))
-        hitters = (
-            tok.distinct()
-            .withColumn("cms_estimate", F.least(*ests))
-            .filter(F.col("cms_estimate") >= thr)
-            .select(
-                "token",
-                F.col("cms_estimate").cast("bigint").alias("cms_estimate"),
-                F.lit(thr).cast("bigint").alias("threshold"),
-                F.lit(int(n_tokens)).cast("bigint").alias("stream_tokens"),
-            )
-            .withColumn("gen", F.lit(gen))
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .withColumn("epoch_key", F.lit(epoch_key))
-        )
-        _publish(hitters, hitters_table)
-
-    writer = (
-        spark.readStream.schema(schema)
-        .parquet(str(feed_dir))
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_hll_distinct_tracking(
-    spark: SparkSession,
-    feed_dir: str,
-    schema: StructType,
-    store: TableStore,
-    registers_table: str,
-    estimates_table: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming cumulative-distinct tracking via HLL register merge
-    (streaming twin of the oracle-gated q_hll_merge_by_day): each
-    micro-batch contributes a per-epoch register DELTA (bucket ->
-    max rho over the batch), the generation's registers so far merge by
-    max() -- a <= HLL_M-row bounded collect -- and the running distinct
-    estimate is appended per epoch.
-
-    max() is idempotent AND commutative, so this is the friendliest
-    possible streaming state: replayed epochs rewrite identical bytes
-    (the start_budget_admission idempotence construction), out-of-order
-    merges cannot change the result, and a 1000-executor ingest reduces
-    to HLL_M rows per epoch. Per-batch cost is O(batch + HLL_M), never
-    O(stream history)."""
-    import hashlib
-
-    from pgsf_spark.analytics.profiling import HLL_ALPHA, HLL_M
-
-    gen = hashlib.md5(str(checkpoint_dir).encode()).hexdigest()[:8]
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        epoch_key = f"{gen}_{int(epoch_id)}"
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        rest = F.floor(h / HLL_M).cast("long")
-        rho = F.when(rest == 0, F.lit(27)).otherwise(
-            F.instr(F.lpad(F.bin(rest), 26, "0"), "1")
-        )
-        delta = (
-            batch_df.select((h % HLL_M).alias("bucket"), rho.alias("rho"))
-            .groupBy("bucket")
-            .agg(F.max("rho").cast("bigint").alias("m"))
-            .withColumn("gen", F.lit(gen))
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .withColumn("epoch_key", F.lit(epoch_key))
-        )
-
-        def _publish(df: DataFrame, table: str) -> None:
-            try:
-                store.write_partial(
-                    df.localCheckpoint(), table, "epoch_key", [epoch_key]
-                )
-            except FileNotFoundError:  # first epoch: no version to carry
-                store.write(df, table, partition_by=["epoch_key"])
-
-        _publish(delta, registers_table)
-        merged = (
-            store.read(registers_table)
-            .filter((F.col("gen") == gen) & (F.col("epoch") <= int(epoch_id)))
-            .groupBy("bucket")
-            .agg(F.max("m").alias("m"))
-        )
-        regs = {r.bucket: r.m for r in merged.collect()}  # <= HLL_M rows
-        s = sum(2.0 ** -m for m in regs.values()) + (HLL_M - len(regs))
-        est = HLL_ALPHA * float(HLL_M * HLL_M) / s
-        est_df = spark.createDataFrame(
-            [(int(epoch_id), len(regs), float(est))],
-            "epoch long, registers_set long, hll_estimate double",
-        ).withColumn("gen", F.lit(gen)).withColumn("epoch_key", F.lit(epoch_key))
-        _publish(est_df, estimates_table)
-
-    writer = (
-        spark.readStream.schema(schema)
-        .parquet(str(feed_dir))
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

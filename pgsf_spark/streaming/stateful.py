@@ -1,10 +1,11 @@
-"""Custom stateful streaming operator: running per-key accumulators.
+"""Custom stateful streaming operator: per-user session-gap aggregation.
 
 The reference's only state is the per-table watermark; a general engine
 needs arbitrary keyed state across micro-batches. This is the
 applyInPandasWithState pattern (Arrow-batched, executor-side state store,
-checkpoint-durable): here a running (count, value-sum) per user -- the
-canonical shape for streaming feature computation / per-entity counters.
+checkpoint-durable, event-time timeout): here one open session per user
+-- the shape the built-in ``session_window`` cannot express once
+per-session logic grows.
 
 Scale notes: state lives in the state store partitioned by the group key
 (one shuffle per batch on user_id); each group's pandas frames stream
@@ -19,52 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [StructField("n", LongType()), StructField("total", DoubleType())]
-)
-
-
-def _update_user_stats(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_value": [total]})
-
-
-def running_user_stats(events: DataFrame) -> DataFrame:
-    """Per-user running totals, updated every micro-batch.
-
-    Works only on streaming DataFrames (state requires a streaming query);
-    the batch equivalent is a plain groupBy aggregate (q_user_activity)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_user_stats,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --- session-gap aggregation with event-time timeout ------------------------
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 SESSION_GAP_SECONDS = 1800.0
 
@@ -178,143 +134,4 @@ def session_gap_stream(events: DataFrame, ts_col: str = "ts", watermark: str = "
         stateStructType=SESSION_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# --- online exponentially-decayed counter ------------------------------------
-
-DECAY_HALF_LIFE_SECONDS = 7 * 86400.0  # matches events.DECAY_HALF_LIFE_DAYS
-
-DECAY_OUTPUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("decayed_score", DoubleType()),
-        StructField("last_ts", DoubleType()),  # epoch seconds of the anchor
-    ]
-)
-
-DECAY_STATE = StructType(
-    [
-        StructField("score", DoubleType()),
-        StructField("last", DoubleType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
-def _update_decay(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    """Fold events into a decayed running score anchored at the newest
-    event seen so far:  score(T) = sum_i value_i * 0.5^((T - t_i)/HL).
-
-    Out-of-order events are exact, not approximated: an event older than
-    the anchor joins with ITS OWN decay factor and leaves the anchor
-    alone, so the final score is independent of arrival order (the
-    property the test asserts against the batch recomputation)."""
-    score, last, n = state.get if state.exists else (0.0, None, 0)
-    for pdf in pdfs:
-        ts = pdf["ts"].astype("datetime64[us]").astype("int64") / 1e6
-        for t, v in zip(ts, pdf["value"].astype(float)):
-            n += 1
-            if last is None:
-                score, last = float(v), float(t)
-            elif t >= last:
-                score = score * 0.5 ** ((t - last) / DECAY_HALF_LIFE_SECONDS) + float(v)
-                last = float(t)
-            else:
-                score += float(v) * 0.5 ** ((last - t) / DECAY_HALF_LIFE_SECONDS)
-    state.update((score, last, n))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "decayed_score": [score], "last_ts": [last]}
-    )
-
-
-def decayed_counter_stream(events: DataFrame) -> DataFrame:
-    """Per-user online decayed engagement counter (update mode).
-
-    The streaming twin of events.q_decayed_user_score: the batch query
-    anchors decay at a fixed release date; the stream anchors at each
-    user's newest event and re-emits the refreshed score every
-    micro-batch. State is one (score, anchor, n) triple per user --
-    constant-size, no event history -- so the state store stays bounded
-    forever; the per-batch shuffle is the groupBy(user_id) that routes
-    events to their state partition."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_decay,
-        outputStructType=DECAY_OUTPUT,
-        stateStructType=DECAY_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-FIR_LAGS = 10  # forecast horizon -- mirrors profiling.ANOM_LAGS
-
-FIR_OUTPUT = StructType(
-    [
-        StructField("series_key", LongType()),
-        StructField("ts", DoubleType()),
-        StructField("value", DoubleType()),
-        StructField("forecast", DoubleType()),
-        StructField("resid", DoubleType()),
-    ]
-)
-
-from pyspark.sql.types import ArrayType  # noqa: E402  (localized extension import)
-
-FIR_STATE = StructType(
-    [
-        StructField("ts_hist", ArrayType(DoubleType())),
-        StructField("val_hist", ArrayType(DoubleType())),
-    ]
-)
-
-_FIR_NORM = sum(1.0 / (1 << k) for k in range(FIR_LAGS))  # 2 - 2^-(L-1), exact
-
-
-def _update_fir(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    """Online FIR forecast: keep only the last FIR_LAGS observations per
-    key (constant-size state); each arriving value is scored against the
-    geometric-weight forecast of its predecessors, then folded in. Weights
-    are powers of two -- the same bit-exact filter as the batch
-    q_revenue_anomaly_days, so in-order replay reproduces the batch
-    forecasts exactly (test-asserted)."""
-    ts_hist, val_hist = ([], []) if not state.exists else (
-        list(state.get[0]),
-        list(state.get[1]),
-    )
-    out_rows = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values("ts")
-        for t, v in zip(pdf["ts"].astype(float), pdf["value"].astype(float)):
-            if len(val_hist) >= FIR_LAGS:
-                fc = sum(val_hist[-1 - k] / (1 << k) for k in range(FIR_LAGS)) / _FIR_NORM
-                out_rows.append((key[0], t, v, fc, v - fc))
-            else:
-                out_rows.append((key[0], t, v, None, None))
-            ts_hist.append(t)
-            val_hist.append(v)
-            ts_hist, val_hist = ts_hist[-FIR_LAGS:], val_hist[-FIR_LAGS:]
-    state.update((ts_hist, val_hist))
-    yield pd.DataFrame(out_rows, columns=["series_key", "ts", "value", "forecast", "resid"])
-
-
-def fir_anomaly_stream(values: DataFrame) -> DataFrame:
-    """Streaming twin of profiling.q_revenue_anomaly_days: an online
-    control-chart scorer. Input columns: series_key (long), ts (double
-    epoch), value (double). State per key is the last FIR_LAGS values --
-    bounded forever; each micro-batch shuffles only on the series key.
-    The anomaly FENCE (global MAD of residuals) stays a batch-side
-    decision -- an online scorer emits residuals and the consumer applies
-    whatever fence policy it likes (fixed, rolling, global)."""
-    return values.groupBy("series_key").applyInPandasWithState(
-        _update_fir,
-        outputStructType=FIR_OUTPUT,
-        stateStructType=FIR_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -7,8 +7,8 @@ Single place that knows the physical quirks of the driver-generated parquet
     matching what DuckDB sees (micros, naive).
   - other timestamp columns (ms precision) arrive as TIMESTAMP_NTZ already.
 
-All engine queries load via ``load_table``/``register_views`` so a future
-format change is one edit.
+All engine queries load via ``load_table`` so a future format change is
+one edit.
 """
 
 from __future__ import annotations
@@ -55,11 +55,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
         )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

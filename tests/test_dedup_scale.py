@@ -388,3 +388,25 @@ class TestMaskFold:
         # the actual regression being pinned: no doc_id-keyed Exchange
         # (the old exploded groupBy(doc_id) mask aggregate)
         assert "hashpartitioning(doc_id" not in chunk_build
+        # scan -> tokenize -> mask fold -> (g, sm) explode is one fused
+        # map-side pipeline, so the (g, sm) blocks groupBy is the build's
+        # only shuffle; a second Exchange means a pass stopped fusing
+        assert chunk_build.count("Exchange") == 1
+
+    def test_vocab_probe_miss_raises(self, spark, monkeypatch):
+        # the take(63) vocab probe and the mask fold are separate lazy
+        # passes; a token the probe lost must fail the query, not null the
+        # doc's mask and drop it from verification
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        from pgsf_spark.analytics.dedup import q_prefix_filter_pairs
+
+        orig = DataFrame.take
+
+        def lossy_take(self, num):
+            rows = orig(self, num)
+            return rows[1:] if num == 63 else rows
+
+        monkeypatch.setattr(DataFrame, "take", lossy_take)
+        with pytest.raises(Exception, match="is not in the vocab probe"):
+            q_prefix_filter_pairs(spark, SF_DIR).collect()

@@ -14,7 +14,6 @@ from pgsf_spark.analytics.multimodal import (
     decode_png,
     encode_png,
     extract_media_meta,
-    frame_sample_plan,
     jpeg_dimensions,
     make_synthetic_jpeg,
     make_synthetic_png,
@@ -216,27 +215,6 @@ class TestWavAudio:
         with pytest.raises(ValueError, match="RIFF"):
             decode_wav(b"nope")
 
-    def test_extract_audio_features(self, spark):
-        from pgsf_spark.analytics.multimodal import (
-            extract_audio_features,
-            make_synthetic_wav,
-        )
-
-        rows = [
-            (1, "audio", make_synthetic_wav(16000), None, None, None, None),
-            (2, "audio", b"\x00" * 100, None, None, None, None),
-            (3, "audio", None, None, None, None, None),
-        ]
-        df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-        out = {r["media_id"]: r for r in extract_audio_features(df).collect()}
-        assert out[1]["audio_format"] == "wav"
-        assert out[1]["sample_rate"] == 16000
-        assert out[1]["duration_sec"] == 1.0
-        assert out[1]["rms"] > 0
-        assert 0 < out[1]["zero_crossing_rate"] < 1
-        assert out[2]["audio_format"] == "unknown"
-        assert out[3]["audio_format"] is None
-
 
 class TestMapInPandas:
     def test_extract_media_meta(self, media_df):
@@ -271,13 +249,6 @@ class TestMapInPandas:
         assert r[3]["meta_width"] == 800
         # null payloads survive
         assert r[5]["content"] is None
-
-    def test_frame_sampling(self, media_df):
-        meta = extract_media_meta(media_df)
-        frames = frame_sample_plan(meta, every_n=2).collect()
-        # video #4: 5000 bytes -> 6 stub frames, sampled every 2 -> 3 rows
-        assert {f["media_id"] for f in frames} == {4}
-        assert [f["frame_idx"] for f in frames] == [0, 2, 4]
 
 
 class TestImageAhash:
@@ -451,62 +422,6 @@ class TestSpectrogramFeatures:
         for k, (lo, hi) in enumerate(zip(edges[:-1], edges[1:])):
             covered.extend(range(lo, hi + 1 if k == len(edges) - 2 else hi))
         assert covered == list(range(1, SPEC_NFFT // 2 + 1))
-
-
-class TestAudioFingerprint:
-    def _corpus(self, spark):
-        from pgsf_spark.analytics.multimodal import make_synthetic_wav
-
-        # freq_step sets the sawtooth fundamental: peak bin ~ NFFT*f/20000,
-        # so 1000 vs 3000 land ~13 vs ~38 -- genuinely distinct spectra
-        # (tiny steps like 37 put every clip's peak in bin 1 and nothing
-        # discriminates)
-        rows = [
-            # 1 and 2: identical waveforms -> near-total landmark overlap
-            (1, make_synthetic_wav(4000, 16000, freq_step=1000)),
-            (2, make_synthetic_wav(4000, 16000, freq_step=1000)),
-            # 3: different tone -> few/no aligned matches with 1
-            (3, make_synthetic_wav(4000, 16000, freq_step=3000)),
-            # 4: same tone as 1, longer take -- still matches aligned
-            (4, make_synthetic_wav(4200, 16000, freq_step=1000)),
-        ]
-        return spark.createDataFrame(rows, "media_id long, content binary")
-
-    def test_identical_clips_match_aligned(self, spark):
-        from pgsf_spark.analytics.multimodal import (
-            audio_fingerprint_match,
-            extract_audio_fingerprints,
-        )
-
-        fp = extract_audio_fingerprints(self._corpus(spark))
-        m = {(r.id_a, r.id_b): r for r in audio_fingerprint_match(fp).collect()}
-        assert (1, 2) in m
-        ident = m[(1, 2)]
-        # identical clips share substantial aligned landmark mass (the
-        # stationary synth tone also matches at off-zero offsets, so
-        # n_matches > n_aligned is expected -- alignment is the signal)
-        assert ident.n_aligned >= 30
-        # the different-tone pair either doesn't match at all or matches
-        # far less aligned mass than the identical pair
-        other = m.get((1, 3))
-        assert other is None or other.n_aligned < ident.n_aligned / 2
-        # the shifted twin still matches 1 (offset-invariance of pairs)
-        shifted = m.get((1, 4))
-        assert shifted is not None and shifted.n_aligned >= 30
-
-    def test_fingerprints_are_deterministic(self, spark):
-        from pgsf_spark.analytics.multimodal import extract_audio_fingerprints
-
-        c = self._corpus(spark)
-        a = sorted(
-            (r.media_id, r.fp_hash, r.frame_idx)
-            for r in extract_audio_fingerprints(c).collect()
-        )
-        b = sorted(
-            (r.media_id, r.fp_hash, r.frame_idx)
-            for r in extract_audio_fingerprints(c).collect()
-        )
-        assert a == b and len(a) > 0
 
 
 class TestVideoContainer:

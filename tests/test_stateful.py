@@ -1,81 +1,5 @@
 """applyInPandasWithState: state must carry across micro-batches."""
 
-import pytest
-
-from pgsf_spark.streaming.stateful import running_user_stats
-
-
-class TestRunningUserStats:
-    def test_state_accumulates_across_batches(self, spark, tmp_path):
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        schema = "user_id long, value double"
-        # two separate files -> maxFilesPerTrigger=1 forces two micro-batches
-        spark.createDataFrame([(1, 10.0), (2, 5.0)], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(feed))
-        spark.createDataFrame([(1, 2.5)], schema).coalesce(1).write.mode("append").parquet(str(feed))
-
-        stream = (
-            spark.readStream.schema(spark.createDataFrame([], schema).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(feed))
-        )
-        q = (
-            running_user_stats(stream)
-            .writeStream.format("memory")
-            .queryName("user_stats")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql("SELECT * FROM user_stats").collect()
-        # update mode appends one row per (user, batch) update; the LAST row
-        # per user carries the accumulated state
-        last = {}
-        for r in rows:
-            last[r["user_id"]] = (r["n_events"], r["total_value"])
-        assert last[1] == (2, 12.5)  # state carried: 10.0 (+2.5) across batches
-        assert last[2] == (1, 5.0)
-        assert len(rows) >= 3  # user 1 emitted twice (two batches)
-
-    def test_state_survives_query_restart(self, spark, tmp_path):
-        # keyed state must restore from the checkpoint when a NEW query
-        # starts over the same checkpoint dir (crash/redeploy recovery)
-        feed = tmp_path / "feed2"
-        feed.mkdir()
-        ckpt = str(tmp_path / "ckpt2")
-        schema = "user_id long, value double"
-
-        out = str(tmp_path / "updates")
-
-        def sink(df, _eid):
-            df.write.mode("append").parquet(out)
-
-        def run_once():
-            # the memory sink can't recover from a checkpoint; foreachBatch can
-            stream = spark.readStream.schema(spark.createDataFrame([], schema).schema).parquet(str(feed))
-            q = (
-                running_user_stats(stream)
-                .writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        spark.createDataFrame([(7, 4.0)], schema).coalesce(1).write.mode("append").parquet(str(feed))
-        run_once()
-        spark.createDataFrame([(7, 6.0)], schema).coalesce(1).write.mode("append").parquet(str(feed))
-        run_once()
-
-        rows = spark.read.parquet(out).collect()
-        last = max(rows, key=lambda r: r["n_events"])
-        # 4.0 from the pre-restart query + 6.0 after: state restored
-        assert (last["n_events"], last["total_value"]) == (2, 10.0)
-
 
 class TestSessionGapStream:
     def test_sessions_close_on_gap_and_timeout(self, spark, tmp_path):
@@ -172,147 +96,3 @@ class TestSessionGapStream:
         assert (r["n_events"], r["total_value"]) == (2, 3.0)
         assert r["session_start"] == t(1, 0).timestamp()
         assert r["session_end"] == t(1, 20).timestamp()
-
-
-class TestDecayedCounterStream:
-    def _run(self, spark, feed, name):
-        from pgsf_spark.streaming.stateful import decayed_counter_stream
-
-        schema = "user_id long, ts timestamp, value double"
-        stream = (
-            spark.readStream.schema(spark.createDataFrame([], schema).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(feed))
-        )
-        q = (
-            decayed_counter_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        # update mode re-emits per batch; the newest row per user wins
-        return {
-            r["user_id"]: r
-            for r in spark.sql(
-                f"SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id "
-                f"ORDER BY n_events DESC) rn FROM {name}) WHERE rn = 1"
-            ).collect()
-        }
-
-    def test_matches_batch_recomputation(self, spark, tmp_path):
-        import math
-        from datetime import datetime
-
-        from pgsf_spark.streaming.stateful import DECAY_HALF_LIFE_SECONDS
-
-        feed = tmp_path / "dfeed"
-        feed.mkdir()
-        schema = "user_id long, ts timestamp, value double"
-
-        def t(d, h=0):
-            return datetime(2024, 1, d, h)
-
-        b1 = [(1, t(1), 8.0), (1, t(8), 4.0), (2, t(1), 1.0)]
-        b2 = [(1, t(15), 2.0), (2, t(2, 12), 3.0)]
-        spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(str(feed))
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(str(feed))
-
-        got = self._run(spark, feed, "decay1")
-        events = b1 + b2
-        for uid in (1, 2):
-            evs = [(ts.timestamp(), v) for u, ts, v in events if u == uid]
-            anchor = max(ts for ts, _ in evs)
-            expect = sum(v * 0.5 ** ((anchor - ts) / DECAY_HALF_LIFE_SECONDS) for ts, v in evs)
-            assert math.isclose(got[uid]["decayed_score"], expect, rel_tol=1e-9)
-            assert got[uid]["last_ts"] == anchor
-            assert got[uid]["n_events"] == len(evs)
-        # user 1: 8 halved after 7d, halved again, plus intermediate -> sanity
-        assert got[1]["decayed_score"] < 8.0 + 4.0 + 2.0
-
-    def test_out_of_order_event_is_exact(self, spark, tmp_path):
-        import math
-        from datetime import datetime
-
-        from pgsf_spark.streaming.stateful import DECAY_HALF_LIFE_SECONDS
-
-        feed = tmp_path / "ofeed"
-        feed.mkdir()
-        schema = "user_id long, ts timestamp, value double"
-        late = datetime(2024, 1, 3)
-        head = datetime(2024, 1, 10)
-        # batch 1 carries the NEWER event; batch 2 delivers an older one
-        spark.createDataFrame([(5, head, 6.0)], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(feed))
-        spark.createDataFrame([(5, late, 2.0)], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(feed))
-
-        got = self._run(spark, feed, "decay2")
-        expect = 6.0 + 2.0 * 0.5 ** ((head.timestamp() - late.timestamp()) / DECAY_HALF_LIFE_SECONDS)
-        assert math.isclose(got[5]["decayed_score"], expect, rel_tol=1e-12)
-        assert got[5]["last_ts"] == head.timestamp()  # late event left the anchor alone
-
-
-class TestFirAnomalyStream:
-    def _feed(self, spark, tmp_path, series):
-        feed = tmp_path / "fir_feed"
-        rows = [(k, float(t), float(v)) for k, seq in series.items() for t, v in seq]
-        spark.createDataFrame(rows, "series_key long, ts double, value double").orderBy(
-            "ts"
-        ).coalesce(1).write.mode("overwrite").parquet(str(feed))
-        return feed
-
-    def _run(self, spark, feed, name):
-        from pgsf_spark.streaming.stateful import fir_anomaly_stream
-
-        schema = "series_key long, ts double, value double"
-        stream = (
-            spark.readStream.schema(spark.createDataFrame([], schema).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(feed))
-        )
-        q = (
-            fir_anomaly_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        return spark.sql(f"SELECT * FROM {name} ORDER BY series_key, ts").collect()
-
-    def test_forecasts_match_batch_fir(self, spark, tmp_path):
-        from pgsf_spark.streaming.stateful import FIR_LAGS, _FIR_NORM
-
-        vals = [float(10 + (i * 7) % 13) for i in range(25)]
-        series = {1: [(i, v) for i, v in enumerate(vals)]}
-        rows = self._run(spark, self._feed(spark, tmp_path, series), "fir1")
-        assert len(rows) == 25
-        for r in rows:
-            i = int(r["ts"])
-            if i < FIR_LAGS:
-                assert r["forecast"] is None
-            else:
-                expect = sum(vals[i - 1 - k] / (1 << k) for k in range(FIR_LAGS)) / _FIR_NORM
-                assert r["forecast"] == expect  # bit-exact, no tolerance
-                assert r["resid"] == vals[i] - expect
-
-    def test_state_is_bounded_and_keys_isolated(self, spark, tmp_path):
-        from pgsf_spark.streaming.stateful import FIR_LAGS
-
-        series = {
-            1: [(i, 5.0) for i in range(40)],
-            2: [(i, 100.0) for i in range(FIR_LAGS + 1)],
-        }
-        rows = self._run(spark, self._feed(spark, tmp_path, series), "fir2")
-        by_key = {}
-        for r in rows:
-            by_key.setdefault(r["series_key"], []).append(r)
-        # constant series forecasts itself exactly once history fills
-        assert all(r["resid"] == 0.0 for r in by_key[1] if r["forecast"] is not None)
-        assert by_key[2][-1]["forecast"] == 100.0  # key-2 state untouched by key 1

@@ -3,11 +3,9 @@
 
 from datetime import datetime
 
-import pytest
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -149,41 +147,6 @@ class TestStreamingDedup:
 
 
 class TestStreamStaticEnrich:
-    def test_enriched_window_counts(self, spark, tmp_path):
-        from pgsf_spark.streaming.enrich import enriched_window_counts
-
-        feed = tmp_path / "efeed"
-        feed.mkdir()
-        eschema = "user_id long, ts timestamp, value double"
-        spark.createDataFrame(
-            [(1, T0, 1.0), (2, T0, 2.0), (1, T1, 3.0)], eschema
-        ).coalesce(1).write.mode("append").parquet(str(feed))
-
-        dim = spark.createDataFrame(
-            [(1, "GOLD"), (2, "SILVER")], "user_id long, segment string"
-        )
-        stream = spark.readStream.schema(
-            spark.createDataFrame([], eschema).schema
-        ).parquet(str(feed))
-        q = (
-            enriched_window_counts(stream, dim, on="user_id", attr="segment")
-            .writeStream.format("memory")
-            .queryName("enriched")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r["window_start"], r["segment"]): r["n"]
-            for r in spark.sql("SELECT * FROM enriched").collect()
-        }
-        assert got == {
-            ("2024-01-01 00:00:00", "GOLD"): 1,
-            ("2024-01-01 00:00:00", "SILVER"): 1,
-            ("2024-01-01 01:00:00", "GOLD"): 1,
-        }
-
     def test_batch_parity(self, spark):
         from pgsf_spark.streaming.enrich import stream_static_enrich
 
@@ -194,49 +157,6 @@ class TestStreamStaticEnrich:
             for r in stream_static_enrich(ev, dim, "user_id", ["segment"]).collect()
         }
         assert rows == {(1, "GOLD"), (3, None)}
-
-
-class TestStreamDedup:
-    def test_duplicates_dropped_across_batches(self, spark, tmp_path):
-        from pgsf_spark.streaming.incremental import stream_dedup
-
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        eschema = "event_id long, ts timestamp, value double"
-        # same event_id delivered twice (at-least-once feed), in two files
-        spark.createDataFrame(
-            [(1, T0, 1.0), (2, T0, 2.0)], eschema
-        ).coalesce(1).write.mode("append").parquet(str(feed))
-        spark.createDataFrame(
-            [(2, T0, 2.0), (3, T1, 3.0)], eschema
-        ).coalesce(1).write.mode("append").parquet(str(feed))
-
-        stream = spark.readStream.schema(
-            spark.createDataFrame([], eschema).schema
-        ).parquet(str(feed))
-        q = (
-            stream_dedup(stream, keys=("event_id",))
-            .writeStream.format("memory")
-            .queryName("deduped")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = sorted(
-            r["event_id"] for r in spark.sql("SELECT * FROM deduped").collect()
-        )
-        assert got == [1, 2, 3]
-
-    def test_batch_parity(self, spark):
-        from pgsf_spark.streaming.incremental import stream_dedup
-
-        ev = spark.createDataFrame(
-            [(1, T0, 1.0), (1, T1, 9.0), (2, T0, 2.0)],
-            "event_id long, ts timestamp, value double",
-        )
-        rows = {(r["event_id"], r["value"]) for r in stream_dedup(ev).collect()}
-        assert rows == {(1, 1.0), (2, 2.0)}
 
 
 class TestStreamStreamIntervalJoin:
@@ -297,316 +217,3 @@ class TestStreamStreamIntervalJoin:
             for r in click_purchase_interval_join(clicks, purchases).collect()
         }
         assert got == {(9, 1), (9, 2)}  # :00 click exactly at the window edge
-
-
-class TestNeardupAdmission:
-    DSCHEMA = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-        ]
-    )
-
-    def _run(self, spark, feed, store, checkpoint):
-        from pgsf_spark.streaming.incremental import start_neardup_admission
-
-        q = start_neardup_admission(
-            spark,
-            str(feed),
-            self.DSCHEMA,
-            store,
-            "admitted_docs",
-            "neardup_index",
-            str(checkpoint),
-        )
-        q.awaitTermination(120)
-
-    def test_cross_batch_and_in_batch_near_dups_rejected(self, spark, tmp_path):
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        store = TableStore(spark, str(tmp_path / "store"))
-        ck = tmp_path / "ck"
-        base = "the quick brown fox jumps over the lazy dog near the river bank today"
-        other = "completely different words about spark shuffles partitions and joins at scale"
-        third = "yet another unrelated document mentioning parquet footers statistics and pruning"
-        spark.createDataFrame(
-            [(1, base, "s1"), (2, other, "s1")], self.DSCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(feed))
-        self._run(spark, feed, store, ck)
-        assert {r.doc_id for r in store.read("admitted_docs").collect()} == {1, 2}
-
-        # batch 2: 3 = near-dup of 1 (cross-batch), 4 = new, 5 = dup of 4
-        # (in-batch; higher id loses)
-        spark.createDataFrame(
-            [(3, base, "s2"), (4, third, "s2"), (5, third, "s2")], self.DSCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(feed))
-        self._run(spark, feed, store, ck)
-        admitted = {r.doc_id for r in store.read("admitted_docs").collect()}
-        assert admitted == {1, 2, 4}
-        # index holds one band set per admitted doc, none for rejected docs
-        idx_ids = {r.doc_id for r in store.read("neardup_index").collect()}
-        assert idx_ids == {1, 2, 4}
-
-    def test_replay_is_idempotent(self, spark, tmp_path):
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        store = TableStore(spark, str(tmp_path / "store"))
-        text = "one deterministic document with enough words to produce stable shingles here"
-        spark.createDataFrame([(7, text, "s")], self.DSCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(feed))
-        self._run(spark, feed, store, tmp_path / "ck1")
-        v1 = store.read("admitted_docs").collect()
-        # a fresh checkpoint replays the same feed (crash-replay stand-in):
-        # same admitted set, no duplicate rows
-        self._run(spark, feed, store, tmp_path / "ck2")
-        v2 = store.read("admitted_docs").collect()
-        assert sorted(map(tuple, v1)) == sorted(map(tuple, v2))
-
-
-class TestBudgetAdmission:
-    BSCHEMA = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-
-    def _run(self, spark, feed, store, checkpoint, budget=100):
-        from pgsf_spark.streaming.incremental import start_budget_admission
-
-        q = start_budget_admission(
-            spark,
-            str(feed),
-            self.BSCHEMA,
-            store,
-            "budget_admitted",
-            "budget_ledger",
-            str(checkpoint),
-            budget_chars=budget,
-        )
-        q.awaitTermination(120)
-
-    def test_budget_enforced_across_batches(self, spark, tmp_path):
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        store = TableStore(spark, str(tmp_path / "store"))
-        ck = tmp_path / "ck"
-        # batch 1: source s1 gets 60 of its 100-char budget
-        spark.createDataFrame(
-            [(1, "a", "s1", 60), (2, "b", "s2", 30)], self.BSCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(feed))
-        self._run(spark, feed, store, ck)
-        assert {r.doc_id for r in store.read("budget_admitted").collect()} == {1, 2}
-        # batch 2: s1 has 40 left -- a 50-char doc must be REJECTED even
-        # though it fits a fresh budget; a 35-char doc fits; s2 unaffected
-        spark.createDataFrame(
-            [(3, "c", "s1", 50), (4, "d", "s1", 35), (5, "e", "s2", 30)], self.BSCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(feed))
-        self._run(spark, feed, store, ck)
-        admitted = {r.doc_id for r in store.read("budget_admitted").collect()}
-        # doc 3 vs 4: admission order within (s1, batch2) is the seeded
-        # hash order, so which of them is considered first is fixed by the
-        # hash -- but 50 + 35 > 40 means AT MOST one fits, and 35 <= 40
-        # means at least the 35-char doc fits if it comes first
-        assert 5 in admitted and 1 in admitted and 2 in admitted
-        s1_new = admitted - {1, 2, 5}
-        total_s1 = 60 + sum({3: 50, 4: 35}[d] for d in s1_new)
-        assert total_s1 <= 100
-        # the ledger's cumulative matches the admitted rows exactly
-        led = store.read("budget_ledger").groupBy("source").sum("chars_added").collect()
-        by_src = {r.source: r["sum(chars_added)"] for r in led}
-        assert by_src["s1"] == total_s1
-        assert by_src["s2"] == 60
-
-    def test_same_checkpoint_rerun_is_noop(self, spark, tmp_path):
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        store = TableStore(spark, str(tmp_path / "store"))
-        spark.createDataFrame(
-            [(1, "a", "s1", 70), (2, "b", "s1", 70)], self.BSCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(feed))
-        self._run(spark, feed, store, tmp_path / "ck1")
-        v1 = sorted(r.doc_id for r in store.read("budget_admitted").collect())
-        assert len(v1) == 1  # only one 70-char doc fits the 100 budget
-        # the SAME checkpoint sees no new files: rerun must change nothing
-        self._run(spark, feed, store, tmp_path / "ck1")
-        v2 = sorted(r.doc_id for r in store.read("budget_admitted").collect())
-        assert v1 == v2
-
-    def test_fresh_checkpoint_is_an_isolated_generation(self, spark, tmp_path):
-        # epoch_ids restart at 0 under a fresh checkpoint; without the gen
-        # tag a stale generation's higher epochs would satisfy
-        # 'epoch < current' for later batches and corrupt admission
-        # baselines. With it, each checkpoint is a separate budget lineage.
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        store = TableStore(spark, str(tmp_path / "store"))
-        spark.createDataFrame(
-            [(1, "a", "s1", 70), (2, "b", "s1", 70)], self.BSCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(feed))
-        self._run(spark, feed, store, tmp_path / "ck1")
-        self._run(spark, feed, store, tmp_path / "ck2")  # full reprocess
-        rows = store.read("budget_admitted").collect()
-        gens = {r.gen for r in rows}
-        assert len(gens) == 2
-        # each generation independently admits exactly one 70-char doc,
-        # and the generations' ledgers never mix
-        by_gen = {g: sorted(r.doc_id for r in rows if r.gen == g) for g in gens}
-        assert all(len(v) == 1 for v in by_gen.values())
-        led = store.read("budget_ledger").collect()
-        assert {r.gen for r in led} == gens
-        assert all(r.chars_added == 70 for r in led)
-
-
-class TestHeavyHitterTracking:
-    HSCHEMA = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-
-    def _run(self, spark, feed, store, checkpoint, phi):
-        from pgsf_spark.streaming.incremental import start_heavy_hitter_tracking
-
-        q = start_heavy_hitter_tracking(
-            spark,
-            str(feed),
-            self.HSCHEMA,
-            store,
-            "hh_sketch",
-            "hh_hitters",
-            str(checkpoint),
-            phi=phi,
-        )
-        q.awaitTermination(120)
-
-    def test_hitters_surface_as_threshold_moves(self, spark, tmp_path):
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        store = TableStore(spark, str(tmp_path / "store"))
-        ck = tmp_path / "ck"
-        # batch 1: stream = x x x y (n=4, thr=ceil(2)=2): x is heavy, y not
-        spark.createDataFrame([(1, "x x x y")], self.HSCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(feed))
-        self._run(spark, feed, store, ck, phi=0.5)
-        h1 = {r.token: r.cms_estimate for r in store.read("hh_hitters").collect()}
-        assert "x" in h1 and h1["x"] >= 3
-        assert "y" not in h1
-        # batch 2: y y y -> merged n=7, thr=ceil(3.5)=4, y total 4: y
-        # surfaces at its next occurrence; x (absent from the batch) is
-        # not re-emitted -- the documented streaming semantic
-        spark.createDataFrame([(2, "y y y")], self.HSCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(feed))
-        self._run(spark, feed, store, ck, phi=0.5)
-        rows = store.read("hh_hitters").collect()
-        ep2 = {r.token: r for r in rows if r.epoch > min(r2.epoch for r2 in rows)}
-        assert "y" in ep2 and ep2["y"].cms_estimate >= 4
-        assert "x" not in ep2
-        # merged sketch never underestimates the exact stream counts
-        merged = (
-            store.read("hh_sketch").groupBy("row", "col").sum("cnt").collect()
-        )
-        cells = {(r.row, r.col): r["sum(cnt)"] for r in merged}
-        n_stream = sum(v for (r, _c), v in cells.items() if r == 0)
-        assert n_stream == 7
-
-    def test_replay_same_checkpoint_is_idempotent(self, spark, tmp_path):
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        store = TableStore(spark, str(tmp_path / "store"))
-        ck = tmp_path / "ck"
-        spark.createDataFrame([(1, "a a b")], self.HSCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(feed))
-        self._run(spark, feed, store, ck, phi=0.5)
-        before = sorted(
-            (r.row, r.col, r.cnt) for r in store.read("hh_sketch").collect()
-        )
-        # re-run with the SAME checkpoint: no new data -> no state change
-        self._run(spark, feed, store, ck, phi=0.5)
-        after = sorted(
-            (r.row, r.col, r.cnt) for r in store.read("hh_sketch").collect()
-        )
-        assert before == after
-
-
-class TestStreamingHllDistinct:
-    def test_batch_parity_and_monotone(self, spark, tmp_path):
-        from pyspark.sql.types import LongType, StructField as SF_, StructType as ST_
-
-        from pgsf_spark.analytics.profiling import HLL_ALPHA, HLL_M
-        from pgsf_spark.streaming.incremental import start_hll_distinct_tracking
-
-        schema = ST_([SF_("user_id", LongType())])
-        store = TableStore(spark, str(tmp_path / "store"))
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        b1 = spark.createDataFrame([(i,) for i in range(40)], schema)
-        b1.coalesce(1).write.mode("append").parquet(str(feed))
-        q = start_hll_distinct_tracking(
-            spark, str(feed), schema, store, "hll_regs", "hll_est",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(120)
-        # second slice: overlapping + new users
-        b2 = spark.createDataFrame([(i,) for i in range(20, 90)], schema)
-        b2.coalesce(1).write.mode("append").parquet(str(feed))
-        q = start_hll_distinct_tracking(
-            spark, str(feed), schema, store, "hll_regs", "hll_est",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(120)
-        ests = sorted(store.read("hll_est").collect(), key=lambda r: r.epoch)
-        assert len(ests) >= 2
-        vals = [r.hll_estimate for r in ests]
-        assert all(b >= a - 1e-9 for a, b in zip(vals, vals[1:]))
-        # parity: the final merged estimate equals the one-shot batch HLL
-        # over the union of all users seen
-        import math
-
-        from pyspark.sql import functions as F
-
-        all_users = spark.createDataFrame([(i,) for i in range(90)], schema)
-        h = F.conv(
-            F.substring(F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        rest = F.floor(h / HLL_M).cast("long")
-        rho = F.when(rest == 0, F.lit(27)).otherwise(
-            F.instr(F.lpad(F.bin(rest), 26, "0"), "1")
-        )
-        regs = {
-            r.bucket: r.m
-            for r in all_users.select((h % HLL_M).alias("bucket"), rho.alias("rho"))
-            .groupBy("bucket")
-            .agg(F.max("rho").alias("m"))
-            .collect()
-        }
-        s = sum(2.0 ** -m for m in regs.values()) + (HLL_M - len(regs))
-        expected = HLL_ALPHA * float(HLL_M * HLL_M) / s
-        assert abs(vals[-1] - expected) < 1e-9
-
-    def test_replay_is_idempotent(self, spark, tmp_path):
-        from pyspark.sql.types import LongType, StructField as SF_, StructType as ST_
-
-        from pgsf_spark.streaming.incremental import start_hll_distinct_tracking
-
-        schema = ST_([SF_("user_id", LongType())])
-        store = TableStore(spark, str(tmp_path / "store"))
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        spark.createDataFrame([(i,) for i in range(50)], schema).coalesce(
-            1
-        ).write.mode("append").parquet(str(feed))
-        for _ in range(2):  # second run: checkpoint consumed, no new data
-            q = start_hll_distinct_tracking(
-                spark, str(feed), schema, store, "r", "e",
-                checkpoint_dir=str(tmp_path / "ckpt"),
-            )
-            q.awaitTermination(120)
-        assert store.read("e").count() == 1

@@ -6,9 +6,10 @@ tests/test_plans.py can be audited by eye.
 Usage: python3 tools/scan_global_windows.py [sf_dir]
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pgsf_spark.planlint import partitionless_windows  # noqa: E402
 
