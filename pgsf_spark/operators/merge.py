@@ -15,8 +15,12 @@ desc, ties broken by file order desc when available.
 This is the no-Delta join-rewrite (SURVEY §7.4):
   merged = target ANTI-JOIN change_keys  UNION  latest_changes(not deleted)
 
+``change_keys`` is the batch's pk column as is, duplicates included: a
+left-anti join drops a target row when ANY right-side row has its key, so
+deduplicating the keys first would only add an aggregate stage.
+
 Scale notes:
-  - One shuffle on pk for the anti-join; the union adds none.
+  - One shuffle on pk for the dedup window; the union adds none.
   - At 100 TB the target should be bucketed/partitioned by pk so the
     anti-join co-locates; with AQE a small change batch broadcasts.
   - Deletes ride the same anti-join: keys with IsDeleted simply aren't
@@ -141,10 +145,11 @@ def merge_upsert(
         # NOT latest.select(pk), though it is the same key set: DataFrame
         # plans get no subtree reuse, so deriving the keys from `latest`
         # plans the whole window pipeline TWICE (measured r15: Window nodes
-        # 6 -> 12, Sort 4 -> 8, plan 205 -> 234 lines), while this distinct
-        # is a column-pruned scan of pk only + one partial-agg exchange --
-        # strictly cheaper than a second full-width sort of the batch.
-        change_keys = changes.select(pk).distinct()
+        # 6 -> 12, Sort 4 -> 8, plan 205 -> 234 lines), while this is a
+        # column-pruned scan of pk only. No distinct(): the left-anti join
+        # is indifferent to duplicate keys on its right side, and the
+        # dedup would cost a partial-aggregate exchange (one more stage).
+        change_keys = changes.select(pk)
     else:
         latest = latest_per_key(changes, pk, ts_field, order_col=order_col)
         incoming = latest.select(*target_cols)

@@ -139,6 +139,21 @@ def _list_parquet_files(path: str) -> list[str]:
     return out
 
 
+def _read_footers(root: str, files: list[str]) -> dict:
+    """``_footer_stats`` of ``files`` read on the driver, concurrently
+    (footer reads are syscall-latency bound, like _carry_dirs), keyed by
+    path relative to ``root``. For a handful of files only: this costs
+    about a millisecond per file, where a Python-worker Spark job has a
+    fixed cost of a few hundred."""
+    if not files:
+        return {}
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(_META_THREADS, len(files))) as ex:
+        stats = ex.map(_footer_stats, files)
+        return {os.path.relpath(fp, root): s for fp, s in zip(files, stats)}
+
+
 _STATS_NAME = "_STATS.json"
 # Delta collects stats on the first 32 columns by default; same cap here.
 _STATS_MAX_COLS = 32
@@ -149,8 +164,9 @@ STATS_ROWS = ".num_rows"
 
 def _footer_stats(fp: str) -> dict:
     """Column min/max and the row count (``STATS_ROWS``) of one parquet
-    file, from its footer only (a few KB of IO). Runs EXECUTOR-side (see
-    _write_file_stats): module-level so it pickles cleanly into Spark tasks.
+    file, from its footer only (a few KB of IO). Runs executor-side in
+    _write_file_stats' job (module-level so it pickles cleanly into Spark
+    tasks), and on the driver for the files write_partial writes.
     Nested paths, columns past the cap, and types with no order-preserving
     JSON form are skipped -- a missing stat means "never prune this file on
     that column"."""
@@ -227,10 +243,21 @@ def _stat_jsonable(v):
 
 
 class TableStore:
-    """``collect_stats``: per-file column min/max gathered from parquet
-    footers at publish time (Delta-style data skipping). Driver-side
-    O(files) footer reads -- metadata work, no data IO; at 100 TB this is
-    the same economics as Delta's add-file stats."""
+    """``collect_stats``: per-file column min/max and row count gathered
+    from parquet footers at publish time (Delta-style data skipping) into
+    the version's _STATS.json -- metadata work, no data IO. Where the
+    footers are read depends on the publish:
+
+      - ``write`` (snapshot, compact, drift-widen): a file count that grows
+        with the table, so one Spark job reads the footers on executors;
+      - ``write_partial`` (a sync tick): the at most one file per changed
+        bucket it wrote are read on the driver; carried buckets keep their
+        entries;
+      - ``rollback``: every file is a hardlink of the restored version, whose
+        entries are copied.
+
+    Only ``write`` starts a Spark job for stats; elsewhere one runs only
+    for a file whose entry lacks a row count."""
 
     def __init__(self, spark: SparkSession, root: str, collect_stats: bool = True):
         self.spark = spark
@@ -317,29 +344,31 @@ class TableStore:
         )
         return path
 
-    def _write_file_stats(self, path: str, carried: dict | None = None) -> None:
+    def _write_file_stats(self, path: str, known: dict | None = None) -> None:
         """Per-file column min/max and row count from parquet footers ->
         _STATS.json.
 
-        The footer reads run as a Spark job over the file list (RDD map --
-        the legitimate per-partition-imperative case: O(files) metadata IO,
-        no row data), so publish-time stats cost is parallel across the
-        cluster, not a sequential driver walk. At 100 TB (~800k files at
-        128 MB) the driver only lists names and writes the JSON; Delta
-        collects stats executor-side at write for the same reason.
+        Footers without a ``known`` entry are read by a Spark job over the
+        file list (RDD map -- the legitimate per-partition-imperative case:
+        O(files) metadata IO, no row data), so a publish whose file count
+        grows with the table (``write``: snapshot, compact, drift-widen)
+        reads them in parallel across the cluster, not in a sequential
+        driver walk. At 100 TB (~800k files at 128 MB) the driver only lists
+        names and writes the JSON.
 
-        ``carried``: entries of files hardlinked from the previous version
-        (write_partial), keyed by the same relative path. They are the same
-        inodes, so an entry that already holds a row count is copied and
-        its footer is not read again; the job reads only the new files, and
-        none runs when there are none."""
-        carried = carried or {}
+        ``known``: entries keyed by relative path that the caller already
+        holds -- the hardlinked files of write_partial and rollback (same
+        inodes as in their source version) and the few files write_partial
+        itself wrote, read on the driver. An entry that holds a row count is
+        copied and its footer is not read again; the job reads only the
+        rest, and none runs when there is none."""
+        known = known or {}
         stats: dict[str, dict] = {}
         todo = []
         for fp in _list_parquet_files(path):
             rel = os.path.relpath(fp, path)
-            if STATS_ROWS in carried.get(rel, ()):
-                stats[rel] = carried[rel]
+            if STATS_ROWS in known.get(rel, ()):
+                stats[rel] = known[rel]
             else:
                 todo.append(fp)
         if todo:
@@ -611,13 +640,13 @@ class TableStore:
         schema_json,
         manifest: dict,
         expect_version=_UNCHECKED,
-        carried_stats: dict | None = None,
+        known_stats: dict | None = None,
     ) -> None:
         # K5 job-artifact persistence (status.json/batches.json analogue,
         # download.py:86-92): a manifest per published version for
         # lineage/debugging; then the atomic pointer flip.
         if self.collect_stats:
-            self._write_file_stats(path, carried_stats)
+            self._write_file_stats(path, known_stats)
         with open(os.path.join(path, "_MANIFEST.json"), "w") as f:
             json.dump(
                 {
@@ -771,19 +800,22 @@ class TableStore:
                 f"write_partial: rows landed in partitions {sorted(written_dirs - declared_dirs)} "
                 f"not listed in changed_values -- refusing to publish (would duplicate keys)"
             )
+        # The files just written: at most one per changed bucket (the
+        # repartition above), so their footers are read here on the driver
+        # before the carry adds files -- no Spark job.
+        known_stats = _read_footers(path, _list_parquet_files(path)) if self.collect_stats else {}
         skip = written_dirs | declared_dirs
         carry = [
             d for d in os.listdir(prev) if d.startswith(f"{partition_col}=") and d not in skip
         ]
         _carry_dirs(prev, path, carry)
-        # the carried dirs' stats entries ride along with their hardlinks,
-        # so the footer job reads only the rewritten buckets' files
+        # the carried dirs' stats entries ride along with their hardlinks
         carry_set = set(carry)
-        carried_stats = {
-            rel: s
+        known_stats.update(
+            (rel, s)
             for rel, s in (self.file_stats(table, os.path.basename(prev)) or {}).items()
             if rel.split(os.sep, 1)[0] in carry_set
-        }
+        )
         meta = dict(manifest or {})
         meta.setdefault("partition_by", prev_manifest.get("partition_by") or [partition_col])
         if prev_manifest.get("partition_buckets") is not None:
@@ -796,7 +828,7 @@ class TableStore:
             df_changed.schema.jsonValue(),
             meta,
             expect_version=expect_version,
-            carried_stats=carried_stats,
+            known_stats=known_stats,
         )
         return path
 
@@ -933,9 +965,11 @@ class TableStore:
 
         Defaults to the version immediately before the current one. Data
         files carry by hardlink (O(1) per file, byte-identical inodes);
-        version-level metadata (_MANIFEST.json, _STATS.json) is rebuilt
+        version-level metadata (_MANIFEST.json, _STATS.json) is written
         fresh -- hardlinking it would alias inodes with the source version
-        and truncate ITS metadata at publish time."""
+        and truncate ITS metadata at publish time. The new _STATS.json
+        copies the source's entries (same files at the same relative
+        paths), so no footer is read again."""
         versions = self.versions(table)
         cur_path = self.current_version_path(table)
         cur = os.path.basename(cur_path) if cur_path else ""
@@ -969,7 +1003,14 @@ class TableStore:
             if k not in ("table", "version", "written_at", "schema", "op")
         }
         carried.update({"op": "rollback", "restored_from": version, "rolled_back_from": cur})
-        self._publish(table, new_version, path, prev_manifest.get("schema"), carried)
+        self._publish(
+            table,
+            new_version,
+            path,
+            prev_manifest.get("schema"),
+            carried,
+            known_stats=self.file_stats(table, version),
+        )
         return path
 
     def compact(

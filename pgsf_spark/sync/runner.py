@@ -257,7 +257,17 @@ class SyncRunner:
         return out
 
     def sync_table(self, table: str, pk: str = "Id", ts_field: str = "SystemModstamp") -> dict:
-        """One incremental sync cycle for one table (query_poll_table.py:155-204)."""
+        """One incremental sync cycle for one table (query_poll_table.py:155-204).
+
+        The result's ``jobs`` is the number of Spark jobs the tick ran: the
+        new ids of its job group in ``statusTracker``, which starts none."""
+        tracker = self.source.spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(sync_job_group(table)))
+        out = self._sync_tick(table, pk, ts_field)
+        out["jobs"] = len(set(tracker.getJobIdsForGroup(sync_job_group(table))) - before)
+        return out
+
+    def _sync_tick(self, table: str, pk: str, ts_field: str) -> dict:
         row = self.state.claim(table)  # guarded ready->running
         # Tag every Spark job of this sync so Engine.abort can cancel the
         # actual running work, not just flip the status row. Thread-local:

@@ -77,6 +77,29 @@ class TestMergeUpsert:
         out = merge_upsert(target, changes, "Id", "SystemModstamp", isdeleted_col="IsDeleted")
         assert out.count() == 3
 
+    def test_repeated_keys_with_delete(self, spark):
+        # the anti-join's key side keeps the batch's duplicate keys: a
+        # target row goes when any change row has its key
+        target = mk_target(spark)
+        changes = spark.createDataFrame(
+            [
+                ("a", "a-old", 5.0, TS, False),
+                ("a", "a-new", 6.0, TS2, False),
+                ("b", "bob", 2.0, TS, True),
+                ("b", "bob", 2.0, TS2, True),
+                ("c", "carol2", 7.0, TS, False),
+                ("c", "carol", 3.0, TS2, True),
+                ("d", "dave", 4.0, TS, False),
+                ("d", "dave2", 8.0, TS2, False),
+            ],
+            target.schema,
+        )
+        merged = merge_upsert(target, changes, "Id", "SystemModstamp")
+        assert merged.count() == 2
+        assert collect_map(merged) == {"a": ("a-new", 6.0), "d": ("dave2", 8.0)}
+        plan = merged._jdf.queryExecution().executedPlan().toString()
+        assert "LeftAnti" in plan and "HashAggregate" not in plan, plan
+
     def test_delete_then_reinsert_key(self, spark):
         target = mk_target(spark)
         batch1 = spark.createDataFrame([("b", "bob", 2.0, TS2, True)], target.schema)

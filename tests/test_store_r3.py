@@ -297,6 +297,20 @@ class TestRollback:
         # partition metadata carried through the restore
         assert tmp_store.partition_info("t")["partition_by"] == ["part"]
 
+    def test_rollback_copies_stats_without_a_job(self, spark, tmp_store):
+        df1 = spark.range(40).select("id", (F.col("id") % 4).alias("part"))
+        tmp_store.write(df1, "t", partition_by=["part"])
+        tmp_store.write(spark.range(3).select("id", F.lit(9).alias("part")), "t", partition_by=["part"])
+        v0 = tmp_store.versions("t")[0]
+        sc = spark.sparkContext
+        sc.setJobGroup("rollback-stats", "rollback")
+        try:
+            tmp_store.rollback("t", version=v0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("rollback-stats")) == []
+        assert tmp_store.file_stats("t") == tmp_store.file_stats("t", v0)
+
     def test_rollback_without_history_raises(self, spark, tmp_store):
         import pytest as _pytest
 

@@ -1,7 +1,7 @@
 """Sync tick accounting from per-file footer stats: the stats summary helper
-(fast lane), and on Spark the tick's job budget, watermark/row parity with
-the scan it replaces, the scan fallback, and the stats carried by
-write_partial."""
+(fast lane), and on Spark the tick's job budget and reported job count,
+watermark/row parity with the scan it replaces, the scan fallback, and the
+stats write_partial publishes without a Spark job."""
 
 import json
 import os
@@ -12,6 +12,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from pgsf_spark.operators import table_store
 from pgsf_spark.operators.table_store import (
     _STATS_NAME,
     PGSF_BUCKET,
@@ -113,7 +114,7 @@ def off_utc(spark, monkeypatch):
 
 
 class TestTickJobs:
-    def test_partitioned_tick_runs_at_most_8_jobs(self, spark, synced):
+    def test_partitioned_tick_runs_at_most_6_jobs(self, spark, synced):
         runner, store, state, src_dir, rows = synced()
         t1 = T0 + timedelta(hours=1)
         _write_source(
@@ -125,7 +126,8 @@ class TestTickJobs:
         before = set(tracker.getJobIdsForGroup(sync_job_group("customer")))
         res = runner.sync_table("customer")
         jobs = set(tracker.getJobIdsForGroup(sync_job_group("customer"))) - before
-        assert len(jobs) <= 8, sorted(jobs)
+        assert len(jobs) <= 6, sorted(jobs)
+        assert res["jobs"] == len(jobs)
         assert res["rows"] == 40  # +c99, -c5
         m = store.manifest("customer")
         assert (m["batch_rows"], m["batch_deletes"]) == (3, 1)
@@ -238,3 +240,40 @@ class TestTickEdges:
         store._write_file_stats(path)  # no carry: every footer re-read
         with open(os.path.join(path, _STATS_NAME)) as f:
             assert json.load(f) == carried
+
+
+class TestWritePartialStats:
+    def test_new_files_read_on_driver_without_a_job(self, spark, tmp_path, monkeypatch):
+        store = TableStore(spark, str(tmp_path / "store"))
+        df = spark.range(64).select("id", (F.col("id") % 16).cast("int").alias(PGSF_BUCKET))
+        store.write(df, "t", partition_by=[PGSF_BUCKET], manifest={"partition_buckets": 16})
+        changed = [2, 5, 11]
+        df_changed = (
+            spark.range(1000, 1048)
+            .select("id", (F.col("id") % 16).cast("int").alias(PGSF_BUCKET))
+            .filter(F.col(PGSF_BUCKET).isin(changed))
+        )
+        read = []
+        footer_stats = table_store._footer_stats
+
+        def counted(fp):
+            read.append(fp)
+            return footer_stats(fp)
+
+        def no_job(*a, **k):
+            raise AssertionError("write_partial started a footer job")
+
+        monkeypatch.setattr(table_store, "_footer_stats", counted)
+        monkeypatch.setattr(store.spark.sparkContext, "parallelize", no_job)
+        path = store.write_partial(df_changed, "t", PGSF_BUCKET, changed)
+        monkeypatch.undo()
+        assert 0 < len(read) <= len(changed)
+        assert {os.path.relpath(fp, path).split(os.sep, 1)[0] for fp in read} <= {
+            f"{PGSF_BUCKET}={b}" for b in changed
+        }
+        published = store.file_stats("t")
+        assert len(published) == 16 and all(STATS_ROWS in s for s in published.values())
+        store._write_file_stats(path)  # every footer re-read by the job
+        with open(os.path.join(path, _STATS_NAME)) as f:
+            assert json.load(f) == published
+        assert store.read("t").count() == 64 - 3 * 4 + 3 * 3  # 3 buckets: 4 rows -> 3
