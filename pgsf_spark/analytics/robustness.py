@@ -48,10 +48,10 @@ def q_schema_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Snapshot documents (doc_id, source, n_chars) into a bucket-partitioned
     replica, then sync an incremental batch that ADDS a ``lang`` column
     (synthetic ``L<doc_id % 7>``) for the doc_id % 5 == 0 rows. The
-    runner's drift gate classifies the addition, pays the full
-    republish (a widened schema cannot ride the hardlink-carried
-    write_partial), ledgers it in the manifest, and the replica reads
-    back with pre-drift rows NULL. The oracle restates the expected end
+    runner's drift gate classifies the addition and ledgers it in the
+    manifest; the tick rewrites only the changed buckets, and the
+    replica reads back with pre-drift rows NULL (carried buckets keep
+    their old-schema files, null-filled from the manifest schema). The oracle restates the expected end
     state from ``documents`` directly."""
     from pgsf_spark.operators.table_store import TableStore
     from pgsf_spark.sources.entity import EntitySource

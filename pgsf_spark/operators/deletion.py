@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pgsf_spark.operators.table_store import PGSF_BUCKET, TableStore
-from pgsf_spark.sync.runner import pk_bucket
 
 
 def delete_rows(store: TableStore, table: str, pk: str, keys: DataFrame) -> dict:

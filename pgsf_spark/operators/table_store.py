@@ -248,7 +248,7 @@ class TableStore:
     the version's _STATS.json -- metadata work, no data IO. Where the
     footers are read depends on the publish:
 
-      - ``write`` (snapshot, compact, drift-widen): a file count that grows
+      - ``write`` (snapshot, compact): a file count that grows
         with the table, so one Spark job reads the footers on executors;
       - ``write_partial`` (a sync tick): the at most one file per changed
         bucket it wrote are read on the driver; carried buckets keep their
@@ -285,6 +285,10 @@ class TableStore:
         p = self.current_version_path(table)
         return os.path.basename(p) if p else None
 
+    def _version_path(self, table: str, version: str | None) -> str | None:
+        """Directory of ``version``, or of the current version when None."""
+        return os.path.join(self._tdir(table), version) if version else self.current_version_path(table)
+
     def exists(self, table: str) -> bool:
         return self.current_version_path(table) is not None
 
@@ -292,18 +296,12 @@ class TableStore:
         self,
         df: DataFrame,
         table: str,
-        buckets: int | None = None,
-        bucket_col: str | None = None,
         partition_by: list[str] | None = None,
         manifest: dict | None = None,
         layout_ready: bool = False,
         expect_version=_UNCHECKED,
     ) -> str:
         """Write a new version and atomically flip the pointer.
-
-        ``buckets``/``bucket_col``: repartition by the merge key before
-        writing so the stored layout is key-clustered -- the next merge's
-        anti-join then shuffles the (small) change batch, not the table.
 
         ``layout_ready``: the caller already arranged the physical layout
         (e.g. compact()'s z-ordering) -- skip the default repartition, which
@@ -319,11 +317,7 @@ class TableStore:
         os.makedirs(tdir, exist_ok=True)
         version = _new_version_name()
         path = os.path.join(tdir, version)
-        if layout_ready:
-            pass
-        elif buckets and bucket_col:
-            df = df.repartition(buckets, bucket_col)
-        elif partition_by:
+        if partition_by and not layout_ready:
             # co-locate each hive partition's rows in one task: without this,
             # every task writes a file into every partition dir (tasks x
             # partitions small files -- measured 3x slower snapshot at 2M
@@ -351,7 +345,7 @@ class TableStore:
         Footers without a ``known`` entry are read by a Spark job over the
         file list (RDD map -- the legitimate per-partition-imperative case:
         O(files) metadata IO, no row data), so a publish whose file count
-        grows with the table (``write``: snapshot, compact, drift-widen)
+        grows with the table (``write``: snapshot, compact)
         reads them in parallel across the cluster, not in a sequential
         driver walk. At 100 TB (~800k files at 128 MB) the driver only lists
         names and writes the JSON.
@@ -384,9 +378,7 @@ class TableStore:
             json.dump(stats, f)
 
     def file_stats(self, table: str, version: str | None = None) -> dict | None:
-        path = (
-            os.path.join(self._tdir(table), version) if version else self.current_version_path(table)
-        )
+        path = self._version_path(table, version)
         if path is None:
             return None
         try:
@@ -455,9 +447,6 @@ class TableStore:
         stats = self.file_stats(table, version)
         if stats is None:
             return _range_filter(self.read(table, version, keep_internal))
-        path = (
-            os.path.join(self._tdir(table), version) if version else self.current_version_path(table)
-        )
         cmp_lo = self._bound_for_stats(lo) if lo is not None else None
         cmp_hi = self._bound_for_stats(hi) if hi is not None else None
 
@@ -478,19 +467,28 @@ class TableStore:
         kept = [f for f, s in stats.items() if _keep(s)]
         if len(kept) == len(stats):
             return _range_filter(self.read(table, version, keep_internal))
+        return _range_filter(self._read_files(table, version, kept, keep_internal))
+
+    def _read_files(
+        self, table: str, version: str | None, files: list[str], keep_internal: bool = False
+    ) -> DataFrame:
+        """The data-skipping reads' scan: only ``files`` (relative to the
+        version directory), under the manifest schema like ``read``, so a
+        file written before an added column null-fills it."""
+        path = self._version_path(table, version)
         schema = self._manifest_schema(path)
-        if not kept:
+        if not files:
             if schema is None:
-                return _range_filter(self.read(table, version, keep_internal)).limit(0)
+                return self.read(table, version, keep_internal).limit(0)
             df = self.spark.createDataFrame([], schema)
         else:
             reader = self.spark.read.option("basePath", path)
             if schema is not None:
                 reader = reader.schema(schema)
-            df = reader.parquet(*[os.path.join(path, f) for f in kept])
+            df = reader.parquet(*[os.path.join(path, f) for f in files])
         if not keep_internal and PGSF_BUCKET in df.columns:
             df = df.drop(PGSF_BUCKET)
-        return _range_filter(df)
+        return df
 
     def build_bloom_index(self, table: str, col: str, version: str | None = None) -> int:
         """Per-FILE bloom index over a secondary column -> _BLOOM_<col>.json.
@@ -508,12 +506,12 @@ class TableStore:
         per version. Returns the number of files indexed."""
         from pgsf_spark.operators.bloomjoin import BJ_WORD, _positions
 
-        path = (
-            os.path.join(self._tdir(table), version) if version else self.current_version_path(table)
-        )
+        path = self._version_path(table, version)
         if path is None:
             raise FileNotFoundError(f"table {table!r} has no published version")
-        df = self.spark.read.parquet(path)
+        # through the manifest schema: after an added column, carried files
+        # lack it and must read as NULL, not fail to resolve
+        df = self.read(table, version)
         # NULLs never match an equality probe (col == value is never true for
         # NULL), so they carry no membership information -- and _positions(NULL)
         # yields NULL positions whose all-NULL bit_or group would crash the
@@ -561,9 +559,7 @@ class TableStore:
         to the plain filtered read when no index exists."""
         from pgsf_spark.operators.bloomjoin import BJ_WORD, _positions
 
-        path = (
-            os.path.join(self._tdir(table), version) if version else self.current_version_path(table)
-        )
+        path = self._version_path(table, version)
         if path is None:
             raise FileNotFoundError(f"table {table!r} has no published version")
         try:
@@ -600,19 +596,7 @@ class TableStore:
         kept = [f for f, w in index.items() if admits(w)]
         if len(kept) == len(index):
             return exact
-        schema = self._manifest_schema(path)
-        if not kept:
-            if schema is None:
-                return exact.limit(0)
-            df = self.spark.createDataFrame([], schema)
-        else:
-            reader = self.spark.read.option("basePath", path)
-            if schema is not None:
-                reader = reader.schema(schema)
-            df = reader.parquet(*[os.path.join(path, f) for f in kept])
-        if PGSF_BUCKET in df.columns:
-            df = df.drop(PGSF_BUCKET)
-        return df.filter(F.col(col) == F.lit(value))
+        return self._read_files(table, version, kept).filter(F.col(col) == F.lit(value))
 
     def _bound_for_stats(self, v):
         """Pruning bound -> the JSON-comparable form matching _STATS.json.
@@ -691,11 +675,7 @@ class TableStore:
                 fcntl.flock(lk, fcntl.LOCK_UN)
 
     def manifest(self, table: str, version: str | None = None) -> dict:
-        path = (
-            os.path.join(self._tdir(table), version)
-            if version
-            else self.current_version_path(table)
-        )
+        path = self._version_path(table, version)
         if path is None:
             raise FileNotFoundError(f"table {table!r} has no published version")
         with open(os.path.join(path, "_MANIFEST.json")) as f:
@@ -974,7 +954,7 @@ class TableStore:
         cur_path = self.current_version_path(table)
         cur = os.path.basename(cur_path) if cur_path else ""
         if version is None:
-            prior = [v for v in versions if v < cur]  # v{ms}_{pid}: lexicographic == temporal
+            prior = versions[: versions.index(cur)] if cur in versions else []
             if not prior:
                 raise ValueError(f"table {table!r} has no version before {cur!r} to roll back to")
             version = prior[-1]
@@ -1099,10 +1079,7 @@ class TableStore:
         tdir = self._tdir(table)
         cur = self.current_version_path(table)
         pinned = keep_versions or set()
-        versions = sorted(
-            (d for d in os.listdir(tdir) if d.startswith("v") and os.path.isdir(os.path.join(tdir, d))),
-            key=_version_sort_key,
-        )
+        versions = self.versions(table)
         candidates = versions[:-keep] if keep else versions
         victims = [
             v

@@ -8,9 +8,12 @@ Reference flow parity:
     incremental scan (P4) -> pin the batch (one localCheckpoint job that
     also observes its max(ts), row/delete counts and changed pk buckets) ->
     latest-per-key dedup -> merge upsert (K3) of the changed buckets ->
-    atomic publish -> advance watermark to max(ts) of the merged table (A1),
-    read with the row count from the version's per-file footer stats
-    instead of a scan (PostgreSQL answers it from an index) -> release.
+    atomic publish of those buckets (every replica is pk-bucketed; the rest
+    are hardlink-carried, and an added source column rides the same
+    publish) -> advance watermark to max(ts) of the merged table (A1), read
+    with the row count from the version's per-file footer stats instead of
+    a scan (PostgreSQL answers it from an index) -> release. A JDBC target
+    runs the reference's staged merge instead and shares the same tail.
     Exactly-once effect (C3) comes from atomic publish + the
     idempotent-by-key merge.
   - scheduler (C2): the `sync` cron script's due-table fan-out; here a
@@ -182,8 +185,7 @@ class SyncRunner:
         pk: str = "Id",
         ts_field: str = "SystemModstamp",
         refresh_minutes: int = 10,
-        buckets: int | None = None,
-        partition_buckets: int | None = DEFAULT_PARTITION_BUCKETS,
+        partition_buckets: int = DEFAULT_PARTITION_BUCKETS,
     ) -> int:
         """Full refresh: extract snapshot -> overwrite target -> seed watermark.
 
@@ -192,13 +194,15 @@ class SyncRunner:
         faithful to the reference (csv_to_postgres.py:94 uses the job's
         systemModstamp, i.e. job creation time).
 
-        The replica is hive-partitioned by a pk-hash bucket (default): each
-        incremental merge then rewrites only the partitions containing
-        changed keys (sync_table + TableStore.write_partial) instead of the
-        whole table -- the reference's touch-only-changed-rows economics
-        (query_poll_table.py:107-152). ``partition_buckets=None`` keeps the
-        flat layout.
+        The replica is hive-partitioned into ``partition_buckets`` pk-hash
+        buckets (a positive int): each incremental merge then rewrites only
+        the partitions containing changed keys (sync_table +
+        TableStore.write_partial) instead of the whole table -- the
+        reference's touch-only-changed-rows economics
+        (query_poll_table.py:107-152).
         """
+        if type(partition_buckets) is not int or partition_buckets < 1:
+            raise ValueError(f"partition_buckets must be a positive int, got {partition_buckets!r}")
         started = _utcnow()
         sc = self.source.spark.sparkContext
         sc.setJobGroup(sync_job_group(table), f"pgsf snapshot load: {table}", interruptOnCancel=True)
@@ -211,47 +215,29 @@ class SyncRunner:
             n = df.count()
             self.state.insert(table, syncuntil=started, refresh_minutes=refresh_minutes)
             return n
-        manifest: dict = {"op": "snapshot", "extract_started": started.isoformat()}
-        partition_by = None
-        if partition_buckets:
-            df = df.withColumn(PGSF_BUCKET, pk_bucket(pk, partition_buckets))
-            partition_by = [PGSF_BUCKET]
-            manifest["partition_buckets"] = partition_buckets
         self.store.write(
-            df,
+            df.withColumn(PGSF_BUCKET, pk_bucket(pk, partition_buckets)),
             table,
-            buckets=buckets,
-            bucket_col=pk if buckets else None,
-            partition_by=partition_by,
-            manifest=manifest,
+            partition_by=[PGSF_BUCKET],
+            manifest={
+                "op": "snapshot",
+                "extract_started": started.isoformat(),
+                "partition_buckets": partition_buckets,
+            },
         )
         summary = self.store.stats_summary(table)
         n = summary[0] if summary else self.store.read(table).count()
         self.state.insert(table, syncuntil=started, refresh_minutes=refresh_minutes)
         return n
 
-    def _finish_sync(self, table: str, ts_field: str, wm) -> dict:
-        """Post-publish tail of a sync cycle: advance the watermark to
-        max(ts) of the *target* after merge (synctable.py:45-54), run
-        piggybacked maintenance, release the claim.
-
-        The max and the row count come from the new version's per-file
-        footer stats (TableStore.stats_summary) -- no Spark job, O(files)
-        JSON. One scan computes both only where stats cannot answer
-        (collect_stats=False, a file with no stat for ``ts_field``, a
-        non-timestamp ``ts_field``). The watermark advance is monotonic
-        (``_advance``)."""
-        summary = self.store.stats_summary(table, ts_field)
-        if summary is None:
-            r = self.store.read(table).agg(
-                F.count(F.lit(1)).alias("n"), F.max(ts_field).alias("m")
-            ).first()
-            summary = (r["n"], r["m"])
-        n, max_ts = summary
+    def _finish_sync(self, table: str, wm, rows: int, max_ts) -> dict:
+        """Post-publish tail of a sync cycle, shared by both legs: advance
+        the watermark to ``max_ts`` (monotonic, ``_advance``), run
+        piggybacked maintenance, release the claim."""
         maintained = self._maybe_maintain(table)
         new_wm = _advance(max_ts, wm)
         self.state.release(table, READY, syncuntil=new_wm)
-        out = {"table": table, "rows": n, "watermark": new_wm.isoformat()}
+        out = {"table": table, "rows": rows, "watermark": new_wm.isoformat()}
         if maintained:
             out["maintenance"] = True
         return out
@@ -268,6 +254,13 @@ class SyncRunner:
         return out
 
     def _sync_tick(self, table: str, pk: str, ts_field: str) -> dict:
+        """Two legs: a JDBC target runs the reference's staged merge; every
+        other replica is pk-bucketed and publishes only the changed buckets
+        through write_partial. An added source column rides that publish:
+        carried buckets keep their old-schema files, and reads null-fill
+        the column from the manifest schema (Delta's metadata-only column
+        add). A replica without pk buckets fails the tick and must be
+        bulk-loaded again."""
         row = self.state.claim(table)  # guarded ready->running
         # Tag every Spark job of this sync so Engine.abort can cancel the
         # actual running work, not just flip the status row. Thread-local:
@@ -289,20 +282,40 @@ class SyncRunner:
                 # were applied; unchanged wm otherwise).
                 changes, batch = _pin(changes, ts_field)
                 self.store.staged_merge(changes, table, pk=pk, ts_field=ts_field)
-                new_wm = _advance(batch["max_ts"], wm)
-                maintained = self._maybe_maintain(table)
-                self.state.release(table, READY, syncuntil=new_wm)
-                out = {"table": table, "rows": batch["rows"], "watermark": new_wm.isoformat()}
-                if maintained:
-                    out["maintenance"] = True
-                return out
+                return self._finish_sync(table, wm, batch["rows"], batch["max_ts"])
+            info = self.store.partition_info(table) or {}
+            nb = info.get("partition_buckets")
+            if not nb or info["partition_by"] != [PGSF_BUCKET]:
+                raise ValueError(
+                    f"{table}: replica is not pk-bucketed -- bulk-load it again (snapshot_load)"
+                )
             # Classify schema drift against the replica BEFORE the merge:
             # a hard-drift cycle fails here, releases the claim in the
             # except path below, and advances nothing -- vs the
             # reference's opaque crash-and-retry-forever (its TODO).
             # The JDBC leg is excluded above (PG owns its schema there).
             drift_audit = self._classify_drift(table, changes)
-
+            # Pin the batch before deriving buckets: the bucket list, the
+            # written rows and the manifest's watermark_after must come from
+            # the same evaluation -- a source whose re-evaluation can yield
+            # new rows (any live CDC source) would otherwise write rows into
+            # bucket dirs absent from the changed buckets (write_partial
+            # would hardlink the old files into those same dirs: duplicate
+            # keys), or let the recovered ledger claim rows the published
+            # version never received (permanent skip under strict >).
+            changes, batch = _pin(
+                changes.withColumn(PGSF_BUCKET, pk_bucket(pk, nb)), ts_field, buckets=True
+            )
+            # Partition-pruned merge: only buckets containing changed keys
+            # are read (directory pruning on the partition filter) and
+            # rewritten; everything else is hardlink-carried by
+            # write_partial. Cost per tick: O(changes + changed buckets).
+            # An empty batch publishes a hardlink-only version (every tick
+            # publishes, like the reference's per-tick transaction).
+            target = self.store.read(table, keep_internal=True).filter(
+                F.col(PGSF_BUCKET).isin(batch["buckets"])
+            )
+            merged = merge_upsert(target, changes, pk=pk, ts_field=ts_field, order_col="_file_order")
             # Tick record for the version manifest, from the pinned batch's
             # observed metrics (no extra Spark job). watermark_after is the
             # post-tick sync position: max(ts of the change batch), clamped
@@ -311,81 +324,32 @@ class SyncRunner:
             # recovered from the manifest (sync/recovery.py) continues
             # incrementally without re-reading the applied window. The
             # plain "watermark" field stays the window START for lineage.
-            def _tick_record(batch: dict) -> dict:
-                return {
+            self.store.write_partial(
+                merged,
+                table,
+                PGSF_BUCKET,
+                batch["buckets"],
+                manifest={
                     "op": "merge",
                     "watermark": wm.isoformat(),
                     "watermark_after": _advance(batch["max_ts"], wm).isoformat(),
                     "batch_rows": batch["rows"],
                     "batch_deletes": batch["deletes"],
                     **drift_audit,
-                }
-
-            info = self.store.partition_info(table)
-            if info and info.get("partition_buckets") and info["partition_by"] == [PGSF_BUCKET]:
-                # Partition-pruned merge: only buckets containing changed
-                # keys are read (directory pruning on the partition filter)
-                # and rewritten; everything else is hardlink-carried by
-                # write_partial. Cost per tick: O(changes + changed buckets).
-                nb = info["partition_buckets"]
-                # Pin the batch before deriving buckets: the bucket list and
-                # the written rows must come from the same evaluation -- a
-                # source whose re-evaluation can yield new rows (any live CDC
-                # source) would otherwise write rows into bucket dirs absent
-                # from changed_buckets, and write_partial would hardlink the
-                # old files into those same dirs (duplicate keys).
-                changes, batch = _pin(
-                    changes.withColumn(PGSF_BUCKET, pk_bucket(pk, nb)), ts_field, buckets=True
-                )
-                if drift_audit:
-                    # A widened schema cannot ride write_partial: untouched
-                    # buckets are carried by HARDLINK, so the published
-                    # version would mix old-schema and new-schema parquet
-                    # under one manifest. Widening is rare; pay ONE full
-                    # rewrite that republishes every bucket under the new
-                    # schema, preserving the bucket layout.
-                    target = self.store.read(table, keep_internal=True)
-                    merged = merge_upsert(
-                        target, changes, pk=pk, ts_field=ts_field, order_col="_file_order"
-                    )
-                    self.store.write(
-                        merged,
-                        table,
-                        partition_by=[PGSF_BUCKET],
-                        manifest={**_tick_record(batch), "partition_buckets": nb},
-                    )
-                    return self._finish_sync(table, ts_field, wm)
-                changed_buckets = batch["buckets"]
-                if changed_buckets:
-                    target = self.store.read(table, keep_internal=True).filter(
-                        F.col(PGSF_BUCKET).isin(changed_buckets)
-                    )
-                    merged = merge_upsert(
-                        target, changes, pk=pk, ts_field=ts_field, order_col="_file_order"
-                    )
-                else:
-                    # empty batch: publish a hardlink-only version (every
-                    # tick publishes, like the reference's per-tick
-                    # transaction; zero partitions rewritten)
-                    merged = self.store.read(table, keep_internal=True).limit(0)
-                self.store.write_partial(
-                    merged,
-                    table,
-                    PGSF_BUCKET,
-                    changed_buckets,
-                    manifest=_tick_record(batch),
-                )
-            else:
-                # Pin the batch for the same reason the partitioned path
-                # does: the manifest's watermark_after and the merge write
-                # must see the SAME evaluation of a live source, or the
-                # recovered ledger could claim rows the published version
-                # never received (permanent skip under strict >).
-                changes, batch = _pin(changes, ts_field)
-                target = self.store.read(table)
-                merged = merge_upsert(target, changes, pk=pk, ts_field=ts_field, order_col="_file_order")
-                self.store.write(merged, table, manifest=_tick_record(batch))
-            return self._finish_sync(table, ts_field, wm)
+                },
+            )
+            # The merged table's row count and max(ts) come from the new
+            # version's per-file footer stats -- no Spark job, O(files)
+            # JSON. One scan computes both only where stats cannot answer
+            # (collect_stats=False, a file with no stat for ``ts_field``, a
+            # non-timestamp ``ts_field``).
+            summary = self.store.stats_summary(table, ts_field)
+            if summary is None:
+                r = self.store.read(table).agg(
+                    F.count(F.lit(1)).alias("n"), F.max(ts_field).alias("m")
+                ).first()
+                summary = (r["n"], r["m"])
+            return self._finish_sync(table, wm, *summary)
         except ClaimError:
             raise
         except Exception:

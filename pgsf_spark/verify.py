@@ -51,7 +51,8 @@ def verify_queries(
     name -> passed; rows-only entries (no oracle) map to True if the Spark
     side ran. ``queries`` overrides the live registry dict -- used to gate
     a query set outside the registry (e.g. the benchmark's headline subset)
-    with the same comparison."""
+    with the same comparison. An ``only`` name that is not a registered
+    query raises ValueError before any query runs."""
     import duckdb
 
     if queries is None:
@@ -60,6 +61,9 @@ def verify_queries(
         QUERIES = queries
 
     only = set(only)
+    unknown = sorted(only - set(QUERIES))
+    if unknown:
+        raise ValueError(f"unknown queries: {', '.join(unknown)}")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -129,19 +129,19 @@ class TestPartitionedMergePublish:
             assert file_inodes(v1, d) == file_inodes(v2, d)
         assert store.read("customer").count() == 40
 
-    def test_flat_layout_still_supported(self, env):
+    def test_unbucketed_replica_tick_raises_and_advances_nothing(self, env):
         spark, source, store, state, src_dir = env
-        runner = SyncRunner(source, store, state)
-        runner.snapshot_load("customer", partition_buckets=None)
-        assert store.partition_info("customer") is None
-        state.release("customer", syncuntil=T0, touch_refresh=False)
+        store.write(source.load("customer", include_deleted=True), "customer")
+        state.insert("customer", syncuntil=T0)
         t1 = T0 + timedelta(hours=1)
         spark.createDataFrame([("c1", "CHANGED", 99.0, t1, False)], SCHEMA).write.mode(
             "overwrite"
         ).parquet(str(src_dir / "customer.parquet"))
-        runner.sync_table("customer")
-        got = {r["Id"]: r["name"] for r in store.read("customer").collect()}
-        assert got["c1"] == "CHANGED" and len(got) == 40
+        with pytest.raises(ValueError, match="bulk-load it again"):
+            SyncRunner(source, store, state).sync_table("customer")
+        row = state.get("customer")
+        assert row.status == "ready" and row.syncuntil_dt() == T0
+        assert len(store.versions("customer")) == 1
 
     def test_compact_preserves_partitioning(self, env):
         spark, source, store, state, _ = env
@@ -224,3 +224,10 @@ class TestSchemaEvolution:
         assert got["c1"] == "gold"
         assert got["c2"] is None  # hardlinked partition, null-filled
         assert len(got) == 40
+
+
+@pytest.mark.parametrize("bad", [None, 0, -4, 2.0, True, "16"])
+def test_snapshot_load_rejects_non_positive_int_buckets(bad):
+    # checked before the source or store is touched
+    with pytest.raises(ValueError, match="partition_buckets"):
+        SyncRunner(None, None, None).snapshot_load("customer", partition_buckets=bad)

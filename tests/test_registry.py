@@ -49,6 +49,13 @@ def test_every_spec_has_callable_fn_and_oracle():
     assert bad == []
 
 
+def test_unknown_only_name_raises_before_any_query():
+    from pgsf_spark.verify import verify_queries
+
+    with pytest.raises(ValueError, match="unknown queries: no_such_query$"):
+        verify_queries(None, SF_DIR, only={"no_such_query", _DRIVER_FRONT[0]})
+
+
 @pytest.mark.parametrize("name", list(QUERIES))
 def test_oracle_parity_sf0001(spark, name):
     from pgsf_spark.verify import verify_queries

@@ -9,12 +9,14 @@ BEFORE the merge touches data (schema/drift.py), routes it by policy
 published version's manifest.
 """
 
+import os
 from datetime import datetime, timedelta
 
 import pytest
+from pyspark.sql import functions as F
 
 from pgsf_spark.operators.merge import SchemaDriftError, merge_upsert
-from pgsf_spark.operators.table_store import TableStore
+from pgsf_spark.operators.table_store import PGSF_BUCKET, TableStore
 from pgsf_spark.schema.drift import classify_drift
 from pgsf_spark.sources.entity import EntitySource
 from pgsf_spark.sync.runner import SyncRunner
@@ -209,12 +211,23 @@ class TestSyncDriftRouting:
 
 
 class TestPartitionedDriftRewrite:
-    """Widening under the bucket-partitioned layout: write_partial would
-    hardlink old-schema buckets into the new version (a mixed-schema
-    publish), so a widened cycle pays one FULL rewrite that keeps the
-    bucket layout."""
+    """Widening under the bucket-partitioned layout rides the pruned
+    publish: only the changed buckets are rewritten, under the widened
+    schema; the others are hardlink-carried with their old-schema files,
+    and reads null-fill the added column from the manifest schema."""
 
-    def test_widened_partitioned_table_republishes_all_buckets(self, spark, tmp_path):
+    WIDE = "Id string, name string, bal double, tier string, SystemModstamp timestamp, IsDeleted boolean"
+
+    @staticmethod
+    def _inodes(version_path):
+        out = {}
+        for d in os.listdir(version_path):
+            if d.startswith(f"{PGSF_BUCKET}="):
+                bucket = os.path.join(version_path, d)
+                out[d] = {f: os.stat(os.path.join(bucket, f)).st_ino for f in os.listdir(bucket)}
+        return out
+
+    def test_widening_tick_rewrites_only_changed_buckets(self, spark, tmp_path):
         src_dir = tmp_path / "src"
         src_dir.mkdir()
         rows = [(f"c{i}", f"n{i}", float(i), T0, False) for i in range(20)]
@@ -228,35 +241,42 @@ class TestPartitionedDriftRewrite:
         runner.snapshot_load("customer", partition_buckets=4)
         state.release("customer", syncuntil=T0, touch_refresh=False)
         assert store.partition_info("customer")["partition_buckets"] == 4
-        _drift_source(
-            spark,
-            src_dir,
-            "Id string, name string, bal double, tier string, SystemModstamp timestamp, IsDeleted boolean",
-            [("c1", "n1b", 1.5, "gold", T1, False)],
-        )
+        before = store.current_version_path("customer")
+        _drift_source(spark, src_dir, self.WIDE, [("c1", "n1b", 1.5, "gold", T1, False)])
         out = runner.sync_table("customer")
         assert out["rows"] == 20
-        # layout preserved across the widening rewrite
-        info = store.partition_info("customer")
-        assert info["partition_buckets"] == 4
-        df = store.read("customer")
-        assert "tier" in df.columns
-        # EVERY row readable with the new column (no mixed-schema buckets:
-        # rows from unchanged buckets read as NULL, not as a read error)
-        vals = {r["Id"]: r["tier"] for r in df.collect()}
+        assert out["jobs"] <= 6
+        m = store.manifest("customer")
+        assert m["partition_buckets"] == 4
+        assert m["schema_drift"] == {"added": [{"column": "tier", "type": "string"}]}
+        # one bucket rewritten; the rest carried as the same inodes
+        assert len(m["rewritten_partitions"]) == 1
+        changed = f"{PGSF_BUCKET}={m['rewritten_partitions'][0]}"
+        old, new = self._inodes(before), self._inodes(store.current_version_path("customer"))
+        assert len(old) == 4 and set(new) == set(old)
+        assert all(new[d] == old[d] for d in old if d != changed)
+        # EVERY row readable with the new column: rows of carried
+        # old-schema buckets read as NULL, not as a read error
+        vals = {r["Id"]: r["tier"] for r in store.read("customer").collect()}
         assert vals["c1"] == "gold"
         assert sum(1 for v in vals.values() if v is None) == 19
-        drift = store.manifest("customer").get("schema_drift")
-        assert drift == {"added": [{"column": "tier", "type": "string"}]}
-        # the next NON-drift cycle goes back to the pruned write_partial path
+        # the next non-drift cycle, on a key in another bucket
+        buckets = {
+            r["Id"]: r["b"]
+            for r in store.read("customer", keep_internal=True)
+            .select("Id", F.col(PGSF_BUCKET).alias("b"))
+            .collect()
+        }
+        other = next(k for k, b in sorted(buckets.items()) if b != buckets["c1"])
         _drift_source(
-            spark,
-            src_dir,
-            "Id string, name string, bal double, tier string, SystemModstamp timestamp, IsDeleted boolean",
-            [("c2", "n2b", 2.5, "silver", T1 + timedelta(hours=1), False)],
+            spark, src_dir, self.WIDE, [(other, "x", 2.5, "silver", T1 + timedelta(hours=1), False)]
         )
         runner.sync_table("customer")
-        assert "rewritten_partitions" in store.manifest("customer")
+        assert "schema_drift" not in store.manifest("customer")
+        # a bloom index over the added column spans old-schema files too
+        store.build_bloom_index("customer", "tier")
+        assert [r["Id"] for r in store.read_bloom_pruned("customer", "tier", "gold").collect()] == ["c1"]
+        assert [r["Id"] for r in store.read_bloom_pruned("customer", "tier", "silver").collect()] == [other]
 
 
 class TestIsDeletedDrift:

@@ -311,6 +311,19 @@ class TestRollback:
         assert list(sc.statusTracker().getJobIdsForGroup("rollback-stats")) == []
         assert tmp_store.file_stats("t") == tmp_store.file_stats("t", v0)
 
+    def test_default_target_is_the_prior_version_in_publish_order(self, tmp_path):
+        # pid 100 published after pid 99 in the same millisecond, though
+        # "_100_" sorts before "_99_" as a string
+        store = TableStore(None, str(tmp_path / "store"), collect_stats=False)
+        older, newer = "v1700000000000_99_000000", "v1700000000000_100_000000"
+        for v in (older, newer):
+            path = os.path.join(store.root, "t", v)
+            os.makedirs(path)
+            store._publish("t", v, path, None, {"op": "snapshot"})
+        store.rollback("t")
+        m = store.manifest("t")
+        assert (m["restored_from"], m["rolled_back_from"]) == (older, newer)
+
     def test_rollback_without_history_raises(self, spark, tmp_store):
         import pytest as _pytest
 
