@@ -9,8 +9,9 @@ syncs in its own process/transaction, sync:13-20). The CatalogStore
 closes that gap the way Iceberg/Delta-style metastores do at fleet
 scale: a catalog VERSION is one immutable JSON mapping
 ``{table: store_version}``, published with the same
-flock-serialized atomic pointer flip (and the same optimistic
-``expect_version`` CAS) as the table pointers themselves. Readers that
+``file_lock``-serialized atomic pointer flip, the same optimistic
+``expect_version`` CAS and the same version names (prefixed ``cat_v``)
+as the table pointers themselves. Readers that
 resolve every table through one catalog version get a consistent
 multi-table snapshot regardless of what writers publish meanwhile;
 flipping the catalog pointer is the one atomic "commit" of a
@@ -23,30 +24,22 @@ bytes of data and zero shuffle.
 
 from __future__ import annotations
 
-import fcntl
-import itertools
 import json
 import os
 import time
 
 from pyspark.sql import DataFrame
 
-from pgsf_spark.operators.table_store import TableStore, _UNCHECKED, ConcurrentWriteError
+from pgsf_spark.operators.table_store import (
+    _UNCHECKED,
+    ConcurrentWriteError,
+    TableStore,
+    _new_version_name,
+    _version_sort_key,
+    file_lock,
+)
 
-# Per-process publish sequence: two publishes can land in the same
-# millisecond (a failed CAS runs in microseconds), and a colliding
-# version NAME would make the loser's cleanup unlink the winner's body.
-_PUBLISH_SEQ = itertools.count()
-
-
-def _version_sort_key(name: str) -> tuple:
-    """(ms, pid, seq) ints from 'cat_v{ms}_{pid}_{seq}' -- same
-    (0,)+ints / (1, name) convention as table_store._version_sort_key."""
-    try:
-        parts = name[len("cat_v") :].split("_")
-        return (0,) + tuple(int(p) for p in parts)
-    except ValueError:  # unknown shape: sort after parseable names, by string
-        return (1, name)
+_PREFIX = "cat_v"
 
 
 class CatalogStore:
@@ -75,7 +68,7 @@ class CatalogStore:
         names = [
             f[: -len(".json")]
             for f in os.listdir(self.root)
-            if f.startswith("cat_v") and f.endswith(".json")
+            if f.startswith(_PREFIX) and f.endswith(".json")
         ]
         return sorted(names, key=_version_sort_key)
 
@@ -91,12 +84,11 @@ class CatalogStore:
         """Publish one immutable mapping; atomic flip, optional CAS.
 
         Same concurrency contract as TableStore._publish: every flip goes
-        through the kernel flock so an unchecked publish can never land
-        inside a CAS publisher's check-then-replace window (lost update).
+        through ``file_lock`` on ``_PUBLISH_LOCK`` so an unchecked publish
+        can never land inside a CAS publisher's check-then-replace window
+        (lost update).
         """
-        version = (
-            f"cat_v{int(time.time() * 1000)}_{os.getpid()}_{next(_PUBLISH_SEQ):06d}"
-        )
+        version = _new_version_name(_PREFIX)
         # Stage both files under .tmp names OUTSIDE the lock: versions()
         # only lists *.json, so a crash anywhere before the in-lock
         # renames leaves no half-published catalog version behind (a
@@ -111,26 +103,22 @@ class CatalogStore:
         tmp_ptr = self._pointer() + f".{version}.tmp"
         with open(tmp_ptr, "w") as f:
             json.dump({"version": version, "written_at": time.time()}, f)
-        with open(os.path.join(self.root, "_PUBLISH_LOCK"), "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                if expect_version is not _UNCHECKED:
-                    cur = self.current_version()
-                    if cur != expect_version:
-                        os.unlink(tmp_ptr)
-                        os.unlink(tmp_body)
-                        raise ConcurrentWriteError(
-                            f"catalog: expected current version {expect_version!r} "
-                            f"but found {cur!r} -- another publisher won; re-read "
-                            "and retry"
-                        )
-                # Commit the body first, then flip the pointer: a crash
-                # between the two leaves an unreferenced (but complete)
-                # version body, never a pointer to a missing body.
-                os.replace(tmp_body, body)
-                os.replace(tmp_ptr, self._pointer())
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
+        with file_lock(os.path.join(self.root, "_PUBLISH_LOCK")):
+            if expect_version is not _UNCHECKED:
+                cur = self.current_version()
+                if cur != expect_version:
+                    os.unlink(tmp_ptr)
+                    os.unlink(tmp_body)
+                    raise ConcurrentWriteError(
+                        f"catalog: expected current version {expect_version!r} "
+                        f"but found {cur!r} -- another publisher won; re-read "
+                        "and retry"
+                    )
+            # Commit the body first, then flip the pointer: a crash
+            # between the two leaves an unreferenced (but complete)
+            # version body, never a pointer to a missing body.
+            os.replace(tmp_body, body)
+            os.replace(tmp_ptr, self._pointer())
         return version
 
     def snapshot_current(

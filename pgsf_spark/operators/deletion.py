@@ -32,12 +32,16 @@ def delete_rows(store: TableStore, table: str, pk: str, keys: DataFrame) -> dict
     DataFrame). Returns stats: rows deleted, buckets rewritten (None for a
     full rewrite), and the prior versions still holding the bytes."""
     keys = keys.select(pk).distinct()
-    info = store.manifest(table)
+    # every read below and the publish's compare-and-swap use this one
+    # version: a publish landing in between raises ConcurrentWriteError
+    # instead of being reverted by buckets rewritten from the older read
+    base = store.current_version(table)
+    info = store.manifest(table, base)
     bucketed = (
         info.get("partition_by") == [PGSF_BUCKET] and info.get("partition_buckets")
     )
     if bucketed:
-        cur = store.read(table, keep_internal=True)
+        cur = store.read(table, base, keep_internal=True)
         # buckets of keys actually PRESENT (bucket-column-only scan): a
         # sweep of mostly-absent keys must not rewrite their buckets --
         # and a fully-absent key set publishes nothing at all
@@ -64,10 +68,11 @@ def delete_rows(store: TableStore, table: str, pk: str, keys: DataFrame) -> dict
             PGSF_BUCKET,
             changed,
             manifest={"hard_deleted_rows": n_deleted},
+            expect_version=base,
         )
         buckets_rewritten = changed
     else:
-        cur = store.read(table)
+        cur = store.read(table, base)
         n_deleted = cur.join(keys, pk, "left_semi").count()
         # preserve the hive partition layout (a GDPR delete must not
         # silently flatten a split- or date-partitioned table)
@@ -76,6 +81,7 @@ def delete_rows(store: TableStore, table: str, pk: str, keys: DataFrame) -> dict
             table,
             partition_by=info.get("partition_by"),
             manifest={"hard_deleted_rows": n_deleted},
+            expect_version=base,
         )
         buckets_rewritten = None
     # compliance is complete only when prior versions are vacuumed

@@ -34,9 +34,10 @@ from pyspark.sql import functions as F
 
 
 class SchemaDriftError(ValueError):
-    """Raised in strict mode when the change batch's columns differ from the
-    target's (the reference's unhandled 'a column disappeared' TODO,
-    query_poll_table.py sync_table error path)."""
+    """Raised when the change batch's columns cannot be merged into the
+    target's: a missing pk/ts column, a retyped column, or drift the sync
+    runner's ``drift_policy`` refuses (the reference's unhandled 'a column
+    disappeared' TODO, query_poll_table.py sync_table error path)."""
 
 
 def latest_per_key(changes: DataFrame, pk: str, ts_field: str, order_col: str | None = None) -> DataFrame:
@@ -63,7 +64,6 @@ def merge_upsert(
     ts_field: str,
     order_col: str | None = None,
     isdeleted_col: str | None = "IsDeleted",
-    schema_evolution: str = "add",
 ) -> DataFrame:
     """Apply a change batch to a target: upsert + soft-delete propagation.
 
@@ -79,14 +79,12 @@ def merge_upsert(
     query_poll_table.py:139-152) -- so a delete wins over a same-batch
     update regardless of row order.
 
-    ``schema_evolution`` handles source schema drift (the reference's open
-    TODO -- it just crashes):
-      - 'add' (default): new source columns are appended to the target
-        (existing rows null); columns the source dropped stay in the target
-        and updated rows carry null there.
-      - 'ignore': new source columns are dropped; dropped columns null out
-        on updated rows.
-      - 'strict': raise SchemaDriftError on any difference.
+    Source schema drift (the reference's open TODO -- it just crashes):
+    new source columns are appended to the target (existing rows null);
+    columns the source dropped stay in the target and updated rows carry
+    null there; a retyped column raises SchemaDriftError. Whether a drift
+    is accepted at all is the caller's policy (SyncRunner's
+    ``drift_policy``).
     """
     for req in (pk, ts_field):
         if req not in changes.columns:
@@ -112,11 +110,7 @@ def merge_upsert(
         )
     new_cols = [c for c in changes.columns if c not in target.columns and c not in helper_cols]
     dropped_cols = [c for c in target.columns if c not in changes.columns]
-    if schema_evolution == "strict" and (new_cols or dropped_cols):
-        raise SchemaDriftError(
-            f"schema drift: new columns {new_cols}, dropped columns {dropped_cols}"
-        )
-    if new_cols and schema_evolution == "add":
+    if new_cols:
         ctypes = dict(changes.dtypes)
         for c in new_cols:
             target = target.withColumn(c, F.lit(None).cast(ctypes[c]))

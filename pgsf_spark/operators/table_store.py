@@ -14,7 +14,9 @@ ready->running claim guarantees one writer, synctable.py:63-73).
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
+import fcntl
 import itertools
 import json
 import os
@@ -33,35 +35,69 @@ PGSF_BUCKET = "pgsf_bucket"
 # table to have no published version yet")
 _UNCHECKED = object()
 
-# Per-process publish sequence in version names: two same-table publishes
-# can land in the same millisecond (an empty hardlink-only tick right
-# after another publish), and a colliding name would let the second
-# write's overwrite clobber the first version's directory and manifest --
-# corrupting the time-travel index and the manifest trail recovery walks.
+# Per-process publish sequence in version names (table and catalog): two
+# publishes can land in the same millisecond (an empty hardlink-only tick
+# right after another publish, a failed catalog CAS), and a colliding name
+# would let the second write's overwrite clobber the first version's
+# directory and manifest -- corrupting the time-travel index and the
+# manifest trail recovery walks -- or a catalog loser's cleanup unlink the
+# winner's body.
 _VERSION_SEQ = itertools.count()
 
 
-def _new_version_name() -> str:
-    return f"v{int(time.time() * 1000)}_{os.getpid()}_{next(_VERSION_SEQ):06d}"
+def _new_version_name(prefix: str = "v") -> str:
+    return f"{prefix}{int(time.time() * 1000)}_{os.getpid()}_{next(_VERSION_SEQ):06d}"
 
 
 def _version_sort_key(name: str) -> tuple:
-    """(ms, pid, seq) ints from 'v{ms}_{pid}[_{seq}]' -- lexical sort would
-    mis-order same-millisecond publishes from different processes because
-    the pid segment is unpadded."""
+    """(ms, pid, seq) ints from '{prefix}{ms}_{pid}[_{seq}]', the prefix
+    being everything up to the first 'v' ('v' for table versions, 'cat_v'
+    for catalog versions) -- lexical sort would mis-order same-millisecond
+    publishes from different processes because the pid segment is
+    unpadded."""
     try:
-        parts = name[1:].split("_")
+        parts = name.partition("v")[2].split("_")
         return (0,) + tuple(int(p) for p in parts)
     except ValueError:  # unknown shape: after parseable names, by string
         return (1, name)
 
 
+@contextlib.contextmanager
+def file_lock(path: str):
+    """Exclusive cross-process lock held for the ``with`` body: a kernel
+    flock on ``path``, so it dies with its holder and a crash never leaves
+    a lock that someone has to break. The holder unlinks the file on
+    release; a waiter whose flock lands on a file that is no longer the
+    one at ``path`` (unlinked by the holder it waited on) retries on the
+    current one, so two processes never hold locks on different inodes of
+    one path. A file left behind by a killed holder is locked and removed
+    like any other. flock is per open file description, so threads of one
+    process exclude each other too."""
+    while True:
+        fd = os.open(path, os.O_CREAT | os.O_RDWR, 0o644)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            if os.path.samestat(os.fstat(fd), os.stat(path)):
+                break
+        except FileNotFoundError:
+            pass  # unlinked after our open: retry on a fresh file
+        except BaseException:
+            os.close(fd)
+            raise
+        os.close(fd)
+    try:
+        yield
+    finally:
+        os.unlink(path)
+        os.close(fd)
+
+
 class ConcurrentWriteError(RuntimeError):
     """Another writer published between this writer's read and its publish.
 
-    The single-writer-per-table model (the reference's guarded __sync
-    claim) makes this unreachable in the engine's own sync path; the check
-    exists for AD-HOC writers sharing a table. Delta-style optimistic
+    The guarded __sync claim keeps two sync ticks of one table apart; the
+    check catches every other writer sharing the table (a CLI hard delete
+    racing a tick fails whichever publishes second). Delta-style optimistic
     concurrency in miniature: the loser retries from a fresh read."""
 
 
@@ -649,30 +685,23 @@ class TableStore:
         with open(tmp_ptr, "w") as f:
             json.dump({"version_dir": version, "written_at": time.time()}, f)
         # EVERY pointer flip -- checked or not -- goes through the same
-        # kernel flock (released on process death -- no stale-lock recovery
-        # needed). An unchecked flip outside the lock could land between a
+        # file_lock. An unchecked flip outside the lock could land between a
         # CAS writer's current_version check and its os.replace and be
         # silently overwritten with no ConcurrentWriteError raised anywhere
         # (lost update); the critical section is two tiny metadata ops so
         # serializing the unchecked path too costs nothing. Loser's version
         # dir stays behind as garbage for vacuum, same as a crashed writer's.
-        import fcntl
-
-        with open(os.path.join(self._tdir(table), "_PUBLISH_LOCK"), "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                if expect_version is not _UNCHECKED:
-                    cur = self.current_version(table)
-                    if cur != expect_version:
-                        os.unlink(tmp_ptr)
-                        raise ConcurrentWriteError(
-                            f"table {table!r}: expected current version "
-                            f"{expect_version!r} but found {cur!r} -- another "
-                            "writer published first; re-read and retry"
-                        )
-                os.replace(tmp_ptr, self._pointer(table))  # atomic on POSIX
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
+        with file_lock(os.path.join(self._tdir(table), "_PUBLISH_LOCK")):
+            if expect_version is not _UNCHECKED:
+                cur = self.current_version(table)
+                if cur != expect_version:
+                    os.unlink(tmp_ptr)
+                    raise ConcurrentWriteError(
+                        f"table {table!r}: expected current version "
+                        f"{expect_version!r} but found {cur!r} -- another "
+                        "writer published first; re-read and retry"
+                    )
+            os.replace(tmp_ptr, self._pointer(table))  # atomic on POSIX
 
     def manifest(self, table: str, version: str | None = None) -> dict:
         path = self._version_path(table, version)
@@ -711,12 +740,13 @@ class TableStore:
             (good.append(f) if reason is None else bad.append((f, reason)))
         return IntegrityReport(good=tuple(good), bad=tuple(bad))
 
-    def partition_info(self, table: str) -> dict | None:
-        """Partitioning of the current version: {'partition_by': [...],
-        'partition_buckets': n} or None for flat tables."""
-        if not self.exists(table):
+    def partition_info(self, table: str, version: str | None = None) -> dict | None:
+        """Partitioning of ``version`` (default: the current one):
+        {'partition_by': [...], 'partition_buckets': n}, or None for flat
+        or unpublished tables."""
+        if self._version_path(table, version) is None:
             return None
-        m = self.manifest(table)
+        m = self.manifest(table, version)
         if not m.get("partition_by"):
             return None
         return {

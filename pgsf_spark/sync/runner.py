@@ -116,7 +116,7 @@ class SyncRunner:
         self.drift_policy = drift_policy
         self._merges_since_maintenance: dict[str, int] = {}
 
-    def _classify_drift(self, table: str, changes):
+    def _classify_drift(self, table: str, version: str, changes):
         """Schema-drift routing (the reference's open TODO,
         query_poll_table.py:202): classify the batch schema against the
         replica's BEFORE the merge touches data, and route per
@@ -129,8 +129,9 @@ class SyncRunner:
           - added columns: loud failure under strict, widened and
             LEDGERED otherwise.
 
-        Returns the manifest audit entry ({} when no drift), so every
-        absorbed drift is visible in the published version's ledger."""
+        ``version`` is the replica version the tick merges into. Returns
+        the manifest audit entry ({} when no drift), so every absorbed
+        drift is visible in the published version's ledger."""
         from pgsf_spark.operators.merge import SchemaDriftError
         from pgsf_spark.schema.drift import classify_drift
 
@@ -138,7 +139,7 @@ class SyncRunner:
         # the merge to upsert-only (deletes silently stop propagating) --
         # that is drift of the worst kind, and surfaces here as a removal
         drift = classify_drift(
-            self.store.read(table).schema,
+            self.store.read(table, version).schema,
             changes.schema,
             ignore={PGSF_BUCKET, "_file_order"},
         )
@@ -283,7 +284,14 @@ class SyncRunner:
                 changes, batch = _pin(changes, ts_field)
                 self.store.staged_merge(changes, table, pk=pk, ts_field=ts_field)
                 return self._finish_sync(table, wm, batch["rows"], batch["max_ts"])
-            info = self.store.partition_info(table) or {}
+            # The version this tick reads is the one its publish must
+            # replace: the drift check, the read and write_partial's
+            # compare-and-swap all use ``base``, so a publish landing
+            # between them (a CLI delete, another writer) fails this tick
+            # with ConcurrentWriteError instead of being overwritten by
+            # buckets merged from the older read.
+            base = self.store.current_version(table)
+            info = self.store.partition_info(table, base) or {}
             nb = info.get("partition_buckets")
             if not nb or info["partition_by"] != [PGSF_BUCKET]:
                 raise ValueError(
@@ -294,7 +302,7 @@ class SyncRunner:
             # except path below, and advances nothing -- vs the
             # reference's opaque crash-and-retry-forever (its TODO).
             # The JDBC leg is excluded above (PG owns its schema there).
-            drift_audit = self._classify_drift(table, changes)
+            drift_audit = self._classify_drift(table, base, changes)
             # Pin the batch before deriving buckets: the bucket list, the
             # written rows and the manifest's watermark_after must come from
             # the same evaluation -- a source whose re-evaluation can yield
@@ -312,7 +320,7 @@ class SyncRunner:
             # write_partial. Cost per tick: O(changes + changed buckets).
             # An empty batch publishes a hardlink-only version (every tick
             # publishes, like the reference's per-tick transaction).
-            target = self.store.read(table, keep_internal=True).filter(
+            target = self.store.read(table, base, keep_internal=True).filter(
                 F.col(PGSF_BUCKET).isin(batch["buckets"])
             )
             merged = merge_upsert(target, changes, pk=pk, ts_field=ts_field, order_col="_file_order")
@@ -337,6 +345,7 @@ class SyncRunner:
                     "batch_deletes": batch["deletes"],
                     **drift_audit,
                 },
+                expect_version=base,
             )
             # The merged table's row count and max(ts) come from the new
             # version's per-file footer stats -- no Spark job, O(files)

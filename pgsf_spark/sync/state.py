@@ -11,12 +11,15 @@ State transitions (synctable.py:32-80, onreboot:13-24, abort_refresh.py:49-68):
   * -> error         manual pause / abort
   running -> ready   reboot recovery for stuck rows
 
-Implementation: a tiny driver-side JSON document with atomic replace +
-an O_EXCL lock file for the claim -- the state is per-table scheduler
-metadata (a few hundred rows at most), not data; keeping it off the cluster
-matches the reference (a 5-row PG table) and avoids a Spark job per
-transition. The watermark scalar is the only agg result that ever lands on
-the driver (SURVEY §7.6 rule).
+Implementation: a tiny driver-side JSON document with atomic replace,
+read-modify-written under ``table_store.file_lock`` on ``sync.json.lock``
+-- a kernel flock, so like the reference's row lock it dies with its
+holder: a killed process blocks no later claim and leaves nothing to
+break, and only the 'running' status needs reboot recovery. The state is
+per-table scheduler metadata (a few hundred rows at most), not data;
+keeping it off the cluster matches the reference (a 5-row PG table) and
+avoids a Spark job per transition. The watermark scalar is the only agg
+result that ever lands on the driver (SURVEY §7.6 rule).
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from dataclasses import asdict, dataclass
 from datetime import datetime, timezone
 
 from pgsf_spark.functions import WATERMARK_FMT
+from pgsf_spark.operators.table_store import file_lock
 
 READY, RUNNING, ERROR = "ready", "running", "error"
 
@@ -72,64 +76,15 @@ class SyncState:
     def _lock_path(self) -> str:
         return self.path + ".lock"
 
-    def _try_break_stale_lock(self) -> None:
-        """Break the lock iff its recorded holder PID is provably dead --
-        a crashed Engine must not deadlock every other process forever
-        (the reference gets this for free from PG row locks dying with the
-        session). A live holder, an unreadable lock (mid-write), or a PID
-        we cannot signal is left alone; the unlink race between two
-        breakers is benign (one wins the next O_EXCL)."""
-        try:
-            with open(self._lock_path()) as f:
-                meta = json.load(f)
-            pid = int(meta.get("pid", -1))
-        except (OSError, ValueError):
-            return
-        if pid > 0:
-            try:
-                os.kill(pid, 0)
-                return  # holder alive
-            except ProcessLookupError:
-                pass  # dead: break below
-            except PermissionError:
-                return  # alive under another uid
-        try:
-            os.unlink(self._lock_path())
-        except FileNotFoundError:
-            pass
-
     def _mutate(self, fn) -> None:
-        # CROSS-PROCESS mutual exclusion for read-modify-write: O_CREAT |
-        # O_EXCL is an atomic create-if-absent on a local filesystem, so two
-        # Engine PROCESSES (not just threads) cannot hold the lock at once;
-        # claims are additionally guarded by required_status (the
-        # reference's UPDATE ... WHERE status='ready', synctable.py:63-73).
-        # The lock file records the holder PID so a crashed holder's lock
-        # can be broken instead of deadlocking the host.
-        fd = None
-        for attempt in range(2000):
-            try:
-                fd = os.open(self._lock_path(), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                import time
-
-                if attempt % 40 == 39:  # every ~200ms of contention
-                    self._try_break_stale_lock()
-                time.sleep(0.005)
-        if fd is None:
-            raise TimeoutError(f"could not lock {self._lock_path()}")
-        try:
-            os.write(fd, json.dumps({"pid": os.getpid()}).encode())
+        # Cross-process mutual exclusion for read-modify-write: two Engine
+        # PROCESSES (not just threads) cannot hold the lock at once; claims
+        # are additionally guarded by required_status (the reference's
+        # UPDATE ... WHERE status='ready', synctable.py:63-73).
+        with file_lock(self._lock_path()):
             rows = self._load()
             fn(rows)
             self._save(rows)
-        finally:
-            os.close(fd)
-            try:
-                os.unlink(self._lock_path())
-            except FileNotFoundError:
-                pass  # broken by a (wrongly aggressive) peer; state stays valid
 
     # -- API ----------------------------------------------------------------
     def get(self, table: str) -> SyncRow | None:

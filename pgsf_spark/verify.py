@@ -39,6 +39,17 @@ def table_sig(cols, rows):
     return scols, srows
 
 
+def check_query_names(names: Iterable[str], queries=None) -> None:
+    """Raise ValueError naming every entry of ``names`` that is not a key
+    of ``queries`` (default: the registry). Needs no SparkSession, so a
+    caller can check before paying for one."""
+    if queries is None:
+        from pgsf_spark.analytics.registry import QUERIES as queries
+    unknown = sorted(set(names) - set(queries))
+    if unknown:
+        raise ValueError(f"unknown queries: {', '.join(unknown)}")
+
+
 def verify_queries(
     spark: SparkSession,
     sf_dir: str,
@@ -61,9 +72,7 @@ def verify_queries(
         QUERIES = queries
 
     only = set(only)
-    unknown = sorted(only - set(QUERIES))
-    if unknown:
-        raise ValueError(f"unknown queries: {', '.join(unknown)}")
+    check_query_names(only, QUERIES)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

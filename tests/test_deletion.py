@@ -8,7 +8,7 @@ from datetime import datetime
 import pytest
 
 from pgsf_spark.operators.deletion import delete_rows
-from pgsf_spark.operators.table_store import PGSF_BUCKET, TableStore
+from pgsf_spark.operators.table_store import PGSF_BUCKET, ConcurrentWriteError, TableStore
 from pgsf_spark.sources.entity import EntitySource
 from pgsf_spark.sync.runner import SyncRunner, pk_bucket
 from pgsf_spark.sync.state import SyncState
@@ -77,6 +77,23 @@ class TestDeleteRows:
         assert "c5" in {r.Id for r in store.read("customer", version=old).collect()}
         store.vacuum("customer", keep=1)
         assert store.versions("customer") == [store.versions("customer")[-1]]
+
+    def test_publish_after_the_read_raises(self, bucketed_store, monkeypatch):
+        # a publish landing between delete_rows' reads and its write_partial
+        # (a sync tick, say) must not be reverted by the rewritten buckets
+        spark, store = bucketed_store
+        write_partial, injected = store.write_partial, []
+
+        def racing_write_partial(*a, **k):
+            store.rollback("customer", store.current_version("customer"))
+            injected.append(store.current_version("customer"))
+            return write_partial(*a, **k)
+
+        monkeypatch.setattr(store, "write_partial", racing_write_partial)
+        with pytest.raises(ConcurrentWriteError):
+            delete_rows(store, "customer", "Id", spark.createDataFrame([("c3",)], "Id string"))
+        assert store.current_version("customer") == injected[0]
+        assert "c3" in {r.Id for r in store.read("customer").collect()}
 
     def test_missing_keys_are_noop_semantics(self, bucketed_store):
         spark, store = bucketed_store

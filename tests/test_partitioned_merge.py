@@ -185,17 +185,6 @@ class TestSchemaEvolution:
         got = {r["Id"]: (r["name"], r["bal"]) for r in merged.collect()}
         assert got == {"c1": ("a", 1.0), "c2": ("b2", None)}
 
-    def test_strict_mode_raises(self, spark):
-        from pgsf_spark.operators.merge import SchemaDriftError, merge_upsert
-
-        target = spark.createDataFrame([("c1", 1.0, T0)], "Id string, bal double, SystemModstamp timestamp")
-        changes = spark.createDataFrame(
-            [("c1", 1.0, "x", datetime(2024, 1, 2))],
-            "Id string, bal double, extra string, SystemModstamp timestamp",
-        )
-        with pytest.raises(SchemaDriftError):
-            merge_upsert(target, changes, pk="Id", ts_field="SystemModstamp", schema_evolution="strict")
-
     def test_missing_pk_always_raises(self, spark):
         from pgsf_spark.operators.merge import SchemaDriftError, merge_upsert
 

@@ -7,7 +7,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
-from pgsf_spark.operators.table_store import TableStore
+from pgsf_spark.operators.table_store import ConcurrentWriteError, TableStore
 from pgsf_spark.sources.entity import EntitySource
 from pgsf_spark.sync.runner import SyncRunner
 from pgsf_spark.sync.state import SyncState
@@ -122,6 +122,30 @@ class TestIncrementalSync:
         with pytest.raises(RuntimeError):
             runner.sync_table("customer")
         assert state.get("customer").status == "ready"  # back to ready, wm unchanged
+
+    def test_publish_after_the_read_fails_the_tick(self, env, monkeypatch):
+        # another writer (a CLI hard delete, say) publishes after the tick
+        # read the replica: the tick's compare-and-swap is against the
+        # version it read, so it fails instead of reverting that publish
+        # with buckets merged from the older read
+        spark, source, store, state, src_dir = env
+        runner = SyncRunner(source, store, state)
+        runner.snapshot_load("customer")
+        state.release("customer", syncuntil=T0, touch_refresh=False)
+        write_source(spark, src_dir, [("c2", "bob2", 25.0, T0 + timedelta(hours=1), False)])
+        write_partial, injected = store.write_partial, []
+
+        def racing_write_partial(*a, **k):
+            store.rollback("customer", store.current_version("customer"))
+            injected.append(store.current_version("customer"))
+            return write_partial(*a, **k)
+
+        monkeypatch.setattr(store, "write_partial", racing_write_partial)
+        with pytest.raises(ConcurrentWriteError):
+            runner.sync_table("customer")
+        row = state.get("customer")
+        assert row.status == "ready" and row.syncuntil_dt() == T0
+        assert store.current_version("customer") == injected[0]
 
     def test_store_versions_gc(self, env):
         spark, source, store, state, src_dir = env

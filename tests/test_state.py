@@ -4,6 +4,8 @@ synctable.py:32-106, onreboot, abort_refresh)."""
 import json
 import multiprocessing
 import os
+import signal
+import time
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -26,6 +28,14 @@ def _claim_worker(path: str, start_evt, q) -> None:
         q.put("won")
     except ClaimError:
         q.put("lost")
+
+
+def _die_inside_mutate(path: str, inside) -> None:
+    def fn(rows):
+        inside.set()
+        time.sleep(60)  # SIGKILLed here, lock held, nothing saved
+
+    SyncState(path)._mutate(fn)
 
 
 class TestClaim:
@@ -99,6 +109,37 @@ class TestCrossProcessClaim:
         with open(path + ".lock", "w") as f:
             json.dump({"pid": ghost.pid}, f)
         assert st.claim("customer").tablename == "customer"
+        assert not os.path.exists(path + ".lock")
+
+    def test_lock_file_naming_a_live_pid_does_not_block(self, tmp_path):
+        # a leftover lock file whose recorded PID is alive (a reused PID,
+        # here the caller's own) is not a held lock: only a live flock is
+        path = str(tmp_path / "sync.json")
+        st = SyncState(path)
+        st.insert("customer", WM)
+        with open(path + ".lock", "w") as f:
+            json.dump({"pid": os.getpid()}, f)
+        t0 = time.monotonic()
+        assert st.claim("customer").tablename == "customer"
+        assert time.monotonic() - t0 < 1.0
+        assert not os.path.exists(path + ".lock")
+
+    def test_holder_killed_inside_mutate_does_not_block(self, tmp_path):
+        path = str(tmp_path / "sync.json")
+        SyncState(path).insert("customer", WM)
+        ctx = multiprocessing.get_context("fork")
+        inside = ctx.Event()
+        child = ctx.Process(target=_die_inside_mutate, args=(path, inside))
+        child.start()
+        assert inside.wait(30), "child never entered _mutate"
+        assert os.path.exists(path + ".lock")
+        os.kill(child.pid, signal.SIGKILL)
+        child.join(timeout=30)
+        assert child.exitcode == -signal.SIGKILL
+        t0 = time.monotonic()
+        row = SyncState(path).claim("customer")
+        assert time.monotonic() - t0 < 1.0
+        assert row.status == RUNNING and row.syncuntil_dt() == WM
         assert not os.path.exists(path + ".lock")
 
 

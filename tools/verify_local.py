@@ -37,24 +37,31 @@ def _vanilla_spark():
 
 
 def main():
-    from pgsf_spark.verify import verify_queries
+    from pgsf_spark.verify import check_query_names, verify_queries
 
     args = sys.argv[1:]
     vanilla = "--vanilla" in args
     args = [a for a in args if a != "--vanilla"]
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])
+    try:
+        check_query_names(only)  # before the JVM starts
+    except ValueError as e:
+        print(e, file=sys.stderr)
+        return 2
     if vanilla:
         spark = _vanilla_spark()
     else:
         from pgsf_spark.session import get_spark
 
         spark = get_spark("verify_local")
-    results = verify_queries(spark, sf_dir, only=only)
+    try:
+        results = verify_queries(spark, sf_dir, only=only)
+    finally:
+        spark.stop()
     n_pass = sum(1 for v in results.values() if v)
     n_fail = len(results) - n_pass
     print(f"\n{n_pass} pass, {n_fail} fail" + (" (vanilla session)" if vanilla else ""))
-    spark.stop()
     return 1 if n_fail else 0
 
 
