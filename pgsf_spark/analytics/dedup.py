@@ -33,6 +33,12 @@ def _norm_text(col):
     return F.lower(F.regexp_replace(F.trim(col), r"\s+", " "))
 
 
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes, the parser's
+    default)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via content fingerprint: keep min(doc_id) per group.
 
@@ -638,13 +644,13 @@ def q_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # arithmetic exactly: mask = sum of 1<<tid over the doc's tokens,
         # sz = token count (cast to the agg's bigint). filter(size > 0)
         # reproduces explode's row semantics (null/empty token arrays
-        # produced no exploded rows, hence no masked row).
-        mask_map = F.create_map(
-            *[
-                x
-                for i, r in enumerate(vocab_rows)
-                for x in (F.lit(r.token), F.lit(1 << i).cast("bigint"))
-            ]
+        # produced no exploded rows, hence no masked row). The map, the
+        # group structs and the guard below are one SQL expression each: a
+        # Column object per token or group costs py4j round trips at build.
+        mask_map = F.expr(
+            "map("
+            + ", ".join(f"{_sql_string(r.token)}, {1 << i}L" for i, r in enumerate(vocab_rows))
+            + ")"
         )
         # The vocab probe above and this fold are two lazy passes over
         # `documents`; a token the probe missed nulls the doc's whole mask
@@ -714,19 +720,20 @@ def q_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ln = n_vocab // groups + (1 if j < n_vocab % groups else 0)
             bounds.append((lo, ln))
             lo += ln
-        grp_structs = [
-            F.struct(
-                F.lit(j).alias("g"),
-                F.expr(f"shiftright(mask, {lo}) & {(1 << ln) - 1}").alias("sm"),
+        grp_structs = F.expr(
+            "array("
+            + ", ".join(
+                f"struct({j} AS g, shiftright(mask, {lo}) & {(1 << ln) - 1} AS sm)"
+                for j, (lo, ln) in enumerate(bounds)
             )
-            for j, (lo, ln) in enumerate(bounds)
-        ]
+            + ")"
+        )
         # doc_id leads the struct and is unique, so the sort order (and the
         # triangle/cross pair partition it guarantees) is identical to the
         # previous (doc_id, mask, sz) struct's
         memb = F.struct("doc_id", "mask", "source")
         blocks = (
-            masked.select(memb.alias("m"), F.explode(F.array(*grp_structs)).alias("b"))
+            masked.select(memb.alias("m"), F.explode(grp_structs).alias("b"))
             .groupBy("b.g", "b.sm")
             .agg(F.sort_array(F.collect_list("m")).alias("ms"))
             .filter(F.size("ms") > 1)
@@ -772,18 +779,19 @@ def q_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
         )
         sub_eq = [
-            (
-                F.expr(f"shiftright(a.mask, {lo}) & {(1 << ln) - 1}")
-                == F.expr(f"shiftright(b.mask, {lo}) & {(1 << ln) - 1}")
-            )
+            f"((shiftright(a.mask, {lo}) & {(1 << ln) - 1})"
+            f" = (shiftright(b.mask, {lo}) & {(1 << ln) - 1}))"
             for lo, ln in bounds
         ]
         # minimal-agreeing-group guard: no group below g also agrees
-        lower_agrees = F.lit(False)
-        guard = F.lit(True)
-        for j in range(groups):
-            guard = F.when(F.col("g") == j, ~lower_agrees).otherwise(guard)
-            lower_agrees = lower_agrees | sub_eq[j]
+        guard = F.expr(
+            "CASE g "
+            + " ".join(
+                f"WHEN {j} THEN NOT ({' OR '.join(sub_eq[:j]) or 'false'})"
+                for j in range(groups)
+            )
+            + " ELSE true END"
+        )
         # set sizes recomputed from the masks (sz == bit_count(mask), see
         # `masked`): int arithmetic on values <= 62, identical quotient
         inter = F.bit_count(F.col("a.mask").bitwiseAND(F.col("b.mask")))

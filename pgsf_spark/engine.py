@@ -132,13 +132,13 @@ class Engine:
     def abort(self, table: str) -> None:
         """Abort a running sync: mark error AND cancel the table's running
         Spark jobs (abort_refresh.py:49-68 kills the OS process; the Spark
-        analogue is cancelling the tagged job group -- tasks are interrupted,
-        no partial version is ever published because the pointer flip only
-        happens after a successful write)."""
-        from pgsf_spark.sync.runner import sync_job_group
+        analogue is cancelling the table's tagged jobs -- tasks are
+        interrupted, no partial version is ever published because the
+        pointer flip only happens after a successful write)."""
+        from pgsf_spark.sync.runner import sync_job_tag
 
         self.state.abort(table)
-        self.spark.sparkContext.cancelJobGroup(sync_job_group(table))
+        self.spark.sparkContext.cancelJobsWithTag(sync_job_tag(table))
 
     def recover(self) -> list[str]:
         return self.state.recover_stuck()

@@ -882,6 +882,14 @@ class TableStore:
             df = df.drop(PGSF_BUCKET)
         return df
 
+    def schema(self, table: str, version: str | None = None):
+        """Schema of ``version`` (default: the current one) from its
+        manifest, with no file listing; a version whose manifest holds no
+        schema is read for it instead."""
+        path = self._version_path(table, version)
+        schema = self._manifest_schema(path) if path else None
+        return schema if schema is not None else self.read(table, version).schema
+
     def _manifest_schema(self, version_path: str):
         from pyspark.sql.types import StructType
 

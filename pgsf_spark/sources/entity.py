@@ -110,7 +110,13 @@ class EntitySource:
                     f"{table}: corrupt landing file(s) -- {report.describe()}; "
                     f"quarantine_corrupt() moves them aside with a ledger"
                 )
-        df = self.spark.read.format(self.fmt).load(self.path(table))
+        reader = self.spark.read.format(self.fmt)
+        if self.fmt == "parquet":
+            # Spark's default inference reads the footer of the first file
+            # only, which would silently drop a column that first lands in a
+            # later file; merging every footer is still one inference job.
+            reader = reader.option("mergeSchema", "true")
+        df = reader.load(self.path(table))
         if not include_deleted and "IsDeleted" in df.columns:
             # REST `query` hides soft-deleted rows; `queryAll` keeps them
             # (simple_salesforce api.py:353).

@@ -23,7 +23,9 @@ Reference flow parity:
 
 from __future__ import annotations
 
+import uuid
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 from pyspark.sql import Observation
@@ -42,11 +44,29 @@ def _utcnow() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
-def sync_job_group(table: str) -> str:
-    """Job-group id tagging all Spark jobs of one table's sync; abort cancels
-    the group (parity with abort_refresh.py:49-68, which kills the refresh
+def sync_job_tag(table: str) -> str:
+    """Job tag on all Spark jobs of one table's sync; abort cancels the
+    tagged jobs (parity with abort_refresh.py:49-68, which kills the refresh
     process -- here the running Spark jobs are the process)."""
     return f"pgsf-sync-{table}"
+
+
+@contextmanager
+def _sync_jobs(sc, table: str, what: str):
+    """Tag every Spark job this thread submits in the block with the
+    table's ``sync_job_tag`` and put them in a job group of their own, whose
+    id it yields. Tag and group are thread-local, so run_due's pool threads
+    tag their own table's jobs. The fresh group holds only this block's
+    jobs: counting them costs the same however many jobs the table ran
+    before (Spark retains up to 1,000 ids per group, and the tracker copies
+    them over py4j one id per round trip)."""
+    group = f"{sync_job_tag(table)}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"pgsf {what}: {table}", interruptOnCancel=True)
+    sc.addJobTag(sync_job_tag(table))
+    try:
+        yield group
+    finally:
+        sc.removeJobTag(sync_job_tag(table))
 
 
 def _advance(mx, wm):
@@ -139,7 +159,7 @@ class SyncRunner:
         # the merge to upsert-only (deletes silently stop propagating) --
         # that is drift of the worst kind, and surfaces here as a removal
         drift = classify_drift(
-            self.store.read(table, version).schema,
+            self.store.schema(table, version),
             changes.schema,
             ignore={PGSF_BUCKET, "_file_order"},
         )
@@ -204,32 +224,31 @@ class SyncRunner:
         """
         if type(partition_buckets) is not int or partition_buckets < 1:
             raise ValueError(f"partition_buckets must be a positive int, got {partition_buckets!r}")
-        started = _utcnow()
-        sc = self.source.spark.sparkContext
-        sc.setJobGroup(sync_job_group(table), f"pgsf snapshot load: {table}", interruptOnCancel=True)
-        df = self.source.load(table, fields=fields, include_deleted=True)
-        if isinstance(self.store, JdbcPostgresSink):
-            # Live-PG target: CREATE (createtable.py flow) happens via
-            # full_load(create=True) explicitly, not implicitly here --
-            # snapshot semantics are TRUNCATE + parallel append.
-            self.store.full_load(df, table, pk=pk)
-            n = df.count()
+        with _sync_jobs(self.source.spark.sparkContext, table, "snapshot load"):
+            started = _utcnow()
+            df = self.source.load(table, fields=fields, include_deleted=True)
+            if isinstance(self.store, JdbcPostgresSink):
+                # Live-PG target: CREATE (createtable.py flow) happens via
+                # full_load(create=True) explicitly, not implicitly here --
+                # snapshot semantics are TRUNCATE + parallel append.
+                self.store.full_load(df, table, pk=pk)
+                n = df.count()
+                self.state.insert(table, syncuntil=started, refresh_minutes=refresh_minutes)
+                return n
+            self.store.write(
+                df.withColumn(PGSF_BUCKET, pk_bucket(pk, partition_buckets)),
+                table,
+                partition_by=[PGSF_BUCKET],
+                manifest={
+                    "op": "snapshot",
+                    "extract_started": started.isoformat(),
+                    "partition_buckets": partition_buckets,
+                },
+            )
+            summary = self.store.stats_summary(table)
+            n = summary[0] if summary else self.store.read(table).count()
             self.state.insert(table, syncuntil=started, refresh_minutes=refresh_minutes)
             return n
-        self.store.write(
-            df.withColumn(PGSF_BUCKET, pk_bucket(pk, partition_buckets)),
-            table,
-            partition_by=[PGSF_BUCKET],
-            manifest={
-                "op": "snapshot",
-                "extract_started": started.isoformat(),
-                "partition_buckets": partition_buckets,
-            },
-        )
-        summary = self.store.stats_summary(table)
-        n = summary[0] if summary else self.store.read(table).count()
-        self.state.insert(table, syncuntil=started, refresh_minutes=refresh_minutes)
-        return n
 
     def _finish_sync(self, table: str, wm, rows: int, max_ts) -> dict:
         """Post-publish tail of a sync cycle, shared by both legs: advance
@@ -247,11 +266,11 @@ class SyncRunner:
         """One incremental sync cycle for one table (query_poll_table.py:155-204).
 
         The result's ``jobs`` is the number of Spark jobs the tick ran: the
-        new ids of its job group in ``statusTracker``, which starts none."""
-        tracker = self.source.spark.sparkContext.statusTracker()
-        before = set(tracker.getJobIdsForGroup(sync_job_group(table)))
-        out = self._sync_tick(table, pk, ts_field)
-        out["jobs"] = len(set(tracker.getJobIdsForGroup(sync_job_group(table))) - before)
+        ids of its own job group in ``statusTracker``, which starts none."""
+        sc = self.source.spark.sparkContext
+        with _sync_jobs(sc, table, "incremental sync") as group:
+            out = self._sync_tick(table, pk, ts_field)
+            out["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
         return out
 
     def _sync_tick(self, table: str, pk: str, ts_field: str) -> dict:
@@ -263,12 +282,6 @@ class SyncRunner:
         add). A replica without pk buckets fails the tick and must be
         bulk-loaded again."""
         row = self.state.claim(table)  # guarded ready->running
-        # Tag every Spark job of this sync so Engine.abort can cancel the
-        # actual running work, not just flip the status row. Thread-local:
-        # run_due's pool threads tag their own table's jobs independently.
-        self.source.spark.sparkContext.setJobGroup(
-            sync_job_group(table), f"pgsf incremental sync: {table}", interruptOnCancel=True
-        )
         try:
             wm = row.syncuntil_dt()
             if wm is None:

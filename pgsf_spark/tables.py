@@ -8,15 +8,20 @@ Single place that knows the physical quirks of the driver-generated parquet
   - other timestamp columns (ms precision) arrive as TIMESTAMP_NTZ already.
 
 All engine queries load via ``load_table`` so a future format change is
-one edit.
+one edit. ``load_table`` reads with the schema ``parquet_schema`` resolved
+once per file version, so building a query runs no schema-inference job.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -46,9 +51,68 @@ def _ensure_session_conf(spark: SparkSession) -> None:
             pass
 
 
+# Session confs that change what parquet inference returns for the same
+# files; a memoized schema is only reused under the values it was inferred with.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+# Schemas kept per session, least recently used evicted first: a few
+# versions of each of the ten tables.
+_SCHEMA_MEMO_SIZE = 64
+_schema_memos: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_schema_memo_lock = threading.Lock()
+
+
+def _file_identity(path: str) -> tuple:
+    """(size, mtime_ns, inode) of a file; for a directory, the sorted
+    (relative name, size, mtime_ns) of every file under it -- a superset of
+    the data files Spark lists, so a rewritten, added or removed file
+    always changes it."""
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    files = []
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            fp = os.path.join(root, n)
+            fst = os.stat(fp)
+            files.append((os.path.relpath(fp, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet file or directory at
+    ``path``, inferred once per file version and session.
+
+    Inference is a Spark job (it reads a footer); the result is memoized
+    per SparkSession, keyed by the absolute path, the files' identity
+    (``_file_identity``) and the ``_INFERENCE_CONFS`` values, so a
+    rewritten file or a changed conf infers again. The stored value is
+    Spark's own inference, so reading with it plans and returns exactly
+    what a read without it does."""
+    path = os.path.abspath(path)
+    key = (path, _file_identity(path), tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    with _schema_memo_lock:
+        memo = _schema_memos.setdefault(spark, OrderedDict())
+        if key in memo:
+            memo.move_to_end(key)
+            return memo[key]
+    schema = spark.read.parquet(path).schema
+    with _schema_memo_lock:
+        memo[key] = schema
+        while len(memo) > _SCHEMA_MEMO_SIZE:
+            memo.popitem(last=False)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_session_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos since epoch -> naive microsecond timestamp (what DuckDB sees)
         df = df.withColumn(

@@ -313,6 +313,43 @@ class TestPigeonholeSubmaskBanding:
         assert got == want and sum(want.values()) > 0
 
 
+def _prefix_pairs_match_bruteforce(spark, tmp_path, vocab):
+    """q_prefix_filter_pairs over 30 docs drawn from a 10-token ``vocab``,
+    plus NULL, one-word and whitespace-heavy texts, equals brute force."""
+    import itertools
+
+    from pgsf_spark.analytics.dedup import PREFIX_T, q_prefix_filter_pairs
+
+    rng_docs = []
+    for i in range(30):
+        drop = {i % 10} if i % 2 else {i % 10, (i * 3 + 1) % 10}
+        toks = [w for j, w in enumerate(vocab) if j not in drop]
+        rng_docs.append((i, " ".join(toks), "en", f"s{i % 3}", len(toks)))
+    # degenerate rows: NULL text, one-word text, whitespace-heavy text
+    rng_docs.append((100, None, "en", "s0", 0))
+    rng_docs.append((101, "w0", "en", "s1", 2))
+    rng_docs.append((102, "  w0   w1  ", "en", "s2", 8))
+    spark.createDataFrame(
+        rng_docs, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+
+    sets = {
+        i: frozenset(t.split()) for i, t, *_ in rng_docs if t and t.split()
+    }
+    srcs = {i: s for i, _, _, s, _ in rng_docs}
+    want = {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        if round(j, 4) >= PREFIX_T:
+            src = srcs[a]
+            want[src] = want.get(src, 0) + 1
+    got = {
+        r["source"]: r["n_pairs"]
+        for r in q_prefix_filter_pairs(spark, str(tmp_path)).collect()
+    }
+    assert got == want and sum(want.values()) > 0
+
+
 class TestMaskFold:
     """r14 optimization pins for the bitmask branch of
     q_prefix_filter_pairs: the per-doc mask is a per-row array fold over
@@ -325,39 +362,50 @@ class TestMaskFold:
         # no mask row); the fold's size(toks) > 0 filter must reproduce
         # that -- a NULL-text doc never pairs, and single/empty-ish texts
         # still mask correctly.
-        import itertools
+        _prefix_pairs_match_bruteforce(spark, tmp_path, [f"w{i}" for i in range(10)])
 
-        from pgsf_spark.analytics.dedup import PREFIX_T, q_prefix_filter_pairs
+    def test_quoted_tokens_match_bruteforce(self, spark, tmp_path):
+        # the token -> bit map is built as SQL text: quotes and backslashes
+        # in a token must reach it escaped
+        vocab = ["it's", "a\\b", "''", "\\'", "x'y\\z"] + [f"w{i}" for i in range(5)]
+        _prefix_pairs_match_bruteforce(spark, tmp_path, vocab)
 
-        vocab = [f"w{i}" for i in range(10)]
-        rng_docs = []
-        for i in range(30):
-            drop = {i % 10} if i % 2 else {i % 10, (i * 3 + 1) % 10}
-            toks = [w for j, w in enumerate(vocab) if j not in drop]
-            rng_docs.append((i, " ".join(toks), "en", f"s{i % 3}", len(toks)))
-        # degenerate rows: NULL text, one-word text, whitespace-heavy text
-        rng_docs.append((100, None, "en", "s0", 0))
-        rng_docs.append((101, "w0", "en", "s1", 2))
-        rng_docs.append((102, "  w0   w1  ", "en", "s2", 8))
-        spark.createDataFrame(
-            rng_docs, "doc_id long, text string, lang string, source string, n_chars long"
-        ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    def test_build_py4j_calls_do_not_grow_with_vocab(self, spark, tmp_path, monkeypatch):
+        # the mask map, the group structs and the lowest-agreeing-group
+        # guard are one SQL expression each: building the query makes the
+        # same py4j calls for a 10- and a 60-token vocabulary (memory
+        # commands, sent when Python collects Java handles, not counted)
+        from py4j.java_gateway import GatewayClient
 
-        sets = {
-            i: frozenset(t.split()) for i, t, *_ in rng_docs if t and t.split()
-        }
-        srcs = {i: s for i, _, _, s, _ in rng_docs}
-        want = {}
-        for a, b in itertools.combinations(sorted(sets), 2):
-            j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
-            if round(j, 4) >= PREFIX_T:
-                src = srcs[a]
-                want[src] = want.get(src, 0) + 1
-        got = {
-            r["source"]: r["n_pairs"]
-            for r in q_prefix_filter_pairs(spark, str(tmp_path)).collect()
-        }
-        assert got == want and sum(want.values()) > 0
+        from pgsf_spark.analytics.dedup import q_prefix_filter_pairs
+
+        calls = [0]
+        send = GatewayClient.send_command
+
+        def counted(self, command, *a, **k):
+            if not command.startswith("m\n"):
+                calls[0] += 1
+            return send(self, command, *a, **k)
+
+        def build_calls(n_vocab):
+            d = tmp_path / f"v{n_vocab}"
+            vocab = [f"w{i}" for i in range(n_vocab)]
+            docs = [
+                (i, " ".join(w for j, w in enumerate(vocab) if j != i % n_vocab), f"s{i % 3}")
+                for i in range(40)
+            ]
+            spark.createDataFrame(docs, "doc_id long, text string, source string").write.parquet(
+                str(d / "documents.parquet")
+            )
+            q_prefix_filter_pairs(spark, str(d))  # schema memo and JIT warm
+            calls[0] = 0
+            monkeypatch.setattr(GatewayClient, "send_command", counted)
+            q_prefix_filter_pairs(spark, str(d))
+            monkeypatch.setattr(GatewayClient, "send_command", send)
+            return calls[0]
+
+        small, large = build_calls(10), build_calls(60)
+        assert abs(large - small) < 25, (small, large)
 
     def test_chunk_build_folds_masks_without_doc_shuffle(self, spark, monkeypatch):
         # plan pin for the committed evidence pair

@@ -64,25 +64,26 @@ class TestWorkflow:
         results = eng.sync_due()
         assert [r["table"] for r in results] == ["customer"]
 
-    def test_abort_cancels_job_group(self, engine, monkeypatch):
-        # abort must cancel the table's tagged Spark job group, not just flip
-        # the status row (abort_refresh.py:49-68 kills the running process)
-        from pgsf_spark.sync.runner import sync_job_group
+    def test_abort_cancels_tagged_jobs(self, engine, monkeypatch):
+        # abort must cancel the table's tagged Spark jobs, not just flip the
+        # status row (abort_refresh.py:49-68 kills the running process)
+        from pgsf_spark.sync.runner import sync_job_tag
 
         eng, spark, src = engine
         eng.bulk_load("customer")
         cancelled = []
         monkeypatch.setattr(
-            spark.sparkContext, "cancelJobGroup", lambda g: cancelled.append(g)
+            spark.sparkContext, "cancelJobsWithTag", lambda t: cancelled.append(t)
         )
         eng.abort("customer")
-        assert cancelled == [sync_job_group("customer")]
+        assert cancelled == [sync_job_tag("customer")]
         assert eng.state.get("customer").status == "error"
 
-    def test_sync_runs_inside_job_group(self, engine):
-        # every Spark job of a sync carries the group id (thread-local), so a
-        # concurrent abort can target exactly this table's work
-        from pgsf_spark.sync.runner import sync_job_group
+    def test_sync_runs_under_table_tag(self, engine):
+        # every Spark job of a sync carries the table's tag (thread-local),
+        # so a concurrent abort can target exactly this table's work; the
+        # tag is removed when the sync returns
+        from pgsf_spark.sync.runner import sync_job_tag
 
         eng, spark, src = engine
         eng.bulk_load("customer")
@@ -90,13 +91,14 @@ class TestWorkflow:
         orig_write = eng.store.write_partial
 
         def spy(*a, **k):
-            seen.append(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
+            seen.append(set(spark.sparkContext.getJobTags()))
             return orig_write(*a, **k)
 
         eng.store.write_partial = spy
         eng.state.release("customer", syncuntil=T0 - timedelta(hours=1), touch_refresh=False)
         eng.sync("customer")
-        assert seen == [sync_job_group("customer")]
+        assert seen == [{sync_job_tag("customer")}]
+        assert sync_job_tag("customer") not in spark.sparkContext.getJobTags()
 
     def test_describe_fixture_roundtrip(self, spark, tmp_path):
         import json

@@ -9,9 +9,12 @@ BEFORE the merge touches data (schema/drift.py), routes it by policy
 published version's manifest.
 """
 
+import json
 import os
 from datetime import datetime, timedelta
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -202,11 +205,109 @@ class TestSyncDriftRouting:
         with pytest.raises(ValueError, match="drift_policy"):
             SyncRunner(source, store, state, drift_policy="yolo")
 
+    def test_drift_check_reads_the_manifest_schema(self, env, monkeypatch):
+        # the replica's schema comes from the version manifest (no listing
+        # of the bucket directories); a manifest without one is read
+        spark, source, store, state, src_dir, runner = self._boot(env)
+        version = store.current_version("customer")
+        batch = spark.createDataFrame(
+            [], "Id string, name string, bal double, tier string, SystemModstamp timestamp, IsDeleted boolean"
+        )
+        want = {"schema_drift": {"added": [{"column": "tier", "type": "string"}]}}
+        reads = []
+        read = store.read
+        monkeypatch.setattr(store, "read", lambda *a, **k: reads.append(a) or read(*a, **k))
+        assert runner._classify_drift("customer", version, batch) == want
+        assert reads == []
+        mpath = os.path.join(store.current_version_path("customer"), "_MANIFEST.json")
+        with open(mpath) as f:
+            manifest = json.load(f)
+        del manifest["schema"]
+        with open(mpath, "w") as f:
+            json.dump(manifest, f)
+        assert runner._classify_drift("customer", version, batch) == want
+        assert reads == [("customer", version)]
+
     def test_no_drift_cycle_has_no_ledger_entry(self, env):
         spark, source, store, state, src_dir, runner = self._boot(env)
         _drift_source(spark, src_dir, BASE_SCHEMA, [("c1", "alice2", 11.0, T1, False)])
         runner.sync_table("customer")
         assert "schema_drift" not in store.manifest("customer")
+
+
+class TestLaterFileDrift:
+    """A landing directory of one file per extract (``snapshot.parquet``,
+    then ``tick-00001.parquet``, ...): a column that first appears in a
+    later file must reach the drift gate, although Spark's default
+    inference reads only the first file's footer."""
+
+    @staticmethod
+    def _land(land, name, rows, **extra):
+        """One landing file of (Id, name, bal, SystemModstamp, IsDeleted)
+        rows; ``extra`` adds or replaces columns, as (pyarrow type, values)."""
+        cols = {
+            "Id": pa.array([r[0] for r in rows], pa.string()),
+            "name": pa.array([r[1] for r in rows], pa.string()),
+            "bal": pa.array([r[2] for r in rows], pa.float64()),
+            "SystemModstamp": pa.array([r[3] for r in rows], pa.timestamp("us", tz="UTC")),
+            "IsDeleted": pa.array([r[4] for r in rows], pa.bool_()),
+        }
+        for col, (typ, values) in extra.items():
+            cols[col] = pa.array(values, typ)
+        pq.write_table(pa.table(cols), str(land / name))
+
+    def _boot(self, spark, tmp_path, **runner_kw):
+        land = tmp_path / "src" / "customer"
+        land.mkdir(parents=True)
+        self._land(land, "snapshot.parquet", [("c1", "alice", 10.0, T0, False), ("c2", "bob", 20.0, T0, False)])
+        store = TableStore(spark, str(tmp_path / "store"))
+        state = SyncState(str(tmp_path / "sync.json"))
+        runner = SyncRunner(EntitySource(spark, str(tmp_path / "src")), store, state, **runner_kw)
+        runner.snapshot_load("customer")
+        state.release("customer", syncuntil=T0, touch_refresh=False)
+        return land, store, state, runner
+
+    def test_added_column_widens_and_ledgers(self, spark, tmp_path):
+        land, store, state, runner = self._boot(spark, tmp_path)
+        self._land(
+            land,
+            "tick-00001.parquet",
+            [("c1", "alice", 11.0, T1, False)],
+            newcol=(pa.string(), ["gold"]),
+        )
+        assert runner.sync_table("customer")["rows"] == 2
+        got = {r["Id"]: r for r in store.read("customer").collect()}
+        assert (got["c1"]["newcol"], got["c1"]["bal"]) == ("gold", 11.0)
+        assert got["c2"]["newcol"] is None
+        drift = store.manifest("customer").get("schema_drift")
+        assert drift == {"added": [{"column": "newcol", "type": "string"}]}
+
+    def test_added_column_raises_under_strict(self, spark, tmp_path):
+        land, store, state, runner = self._boot(spark, tmp_path, drift_policy="strict")
+        self._land(
+            land,
+            "tick-00001.parquet",
+            [("c1", "alice", 11.0, T1, False)],
+            newcol=(pa.string(), ["gold"]),
+        )
+        with pytest.raises(SchemaDriftError, match="added.*newcol"):
+            runner.sync_table("customer")
+        assert state.get("customer").syncuntil_dt() == T0
+
+    def test_retyped_column_fails_loudly(self, spark, tmp_path):
+        land, store, state, runner = self._boot(spark, tmp_path)
+        version = store.current_version("customer")
+        self._land(
+            land,
+            "tick-00001.parquet",
+            [("c1", "alice", 11.0, T1, False)],
+            bal=(pa.string(), ["11.0"]),
+        )
+        with pytest.raises(Exception, match="(?s)CANNOT_MERGE.*DOUBLE.*STRING"):
+            runner.sync_table("customer")
+        row = state.get("customer")
+        assert (row.status, row.syncuntil_dt()) == ("ready", T0)
+        assert store.current_version("customer") == version
 
 
 class TestPartitionedDriftRewrite:

@@ -21,7 +21,7 @@ from pgsf_spark.operators.table_store import (
     summarize_file_stats,
 )
 from pgsf_spark.sources.entity import EntitySource
-from pgsf_spark.sync.runner import SyncRunner, pk_bucket, sync_job_group
+from pgsf_spark.sync.runner import SyncRunner, pk_bucket, sync_job_tag
 from pgsf_spark.sync.state import SyncState
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
@@ -113,8 +113,22 @@ def off_utc(spark, monkeypatch):
     time.tzset()
 
 
+def _tick_group(runner, spark, monkeypatch):
+    """Record the job group the runner's tick runs in (a list, filled when
+    the tick starts)."""
+    groups = []
+    tick = runner._sync_tick
+
+    def spy(*a, **k):
+        groups.append(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
+        return tick(*a, **k)
+
+    monkeypatch.setattr(runner, "_sync_tick", spy)
+    return groups
+
+
 class TestTickJobs:
-    def test_partitioned_tick_runs_at_most_6_jobs(self, spark, synced):
+    def test_partitioned_tick_runs_at_most_6_jobs(self, spark, synced, monkeypatch):
         runner, store, state, src_dir, rows = synced()
         t1 = T0 + timedelta(hours=1)
         _write_source(
@@ -122,17 +136,65 @@ class TestTickJobs:
             src_dir,
             rows + [("c3", "x", 1.0, t1, False), ("c5", "y", 2.0, t1, True), ("c99", "z", 3.0, t1, False)],
         )
-        tracker = spark.sparkContext.statusTracker()
-        before = set(tracker.getJobIdsForGroup(sync_job_group("customer")))
+        groups = _tick_group(runner, spark, monkeypatch)
         res = runner.sync_table("customer")
-        jobs = set(tracker.getJobIdsForGroup(sync_job_group("customer"))) - before
-        assert len(jobs) <= 6, sorted(jobs)
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(groups[0])
+        assert len(jobs) <= 6, jobs
         assert res["jobs"] == len(jobs)
         assert res["rows"] == 40  # +c99, -c5
         m = store.manifest("customer")
         assert (m["batch_rows"], m["batch_deletes"]) == (3, 1)
         assert m["watermark_after"] == t1.isoformat()
         assert m["rewritten_partitions"]
+
+    def test_job_count_ignores_earlier_jobs(self, spark, synced, monkeypatch):
+        """The tick's job count reads only this tick's job ids: after 200
+        earlier jobs under the table's name it still reports the tick's 6,
+        with the same number of py4j calls as a tick before them."""
+        from py4j.java_gateway import GatewayClient
+        from pyspark.status import StatusTracker
+
+        runner, store, state, src_dir, rows = synced()
+        sc = spark.sparkContext
+        calls = []  # py4j calls per job-id lookup
+        counting = [False]
+        send = GatewayClient.send_command
+        lookup = StatusTracker.getJobIdsForGroup
+
+        def counted_send(self, *a, **k):
+            if counting[0]:
+                calls[-1] += 1
+            return send(self, *a, **k)
+
+        def counted_lookup(self, group=None):
+            calls.append(0)
+            counting[0] = True
+            try:
+                return lookup(self, group)
+            finally:
+                counting[0] = False
+
+        def tick(hours):
+            t = T0 + timedelta(hours=hours)
+            _write_source(spark, src_dir, rows + [("c3", "x", 1.0, t, False), ("c99", "z", 3.0, t, False)])
+            calls.clear()
+            res = runner.sync_table("customer")
+            return res["jobs"], list(calls)
+
+        monkeypatch.setattr(GatewayClient, "send_command", counted_send)
+        monkeypatch.setattr(StatusTracker, "getJobIdsForGroup", counted_lookup)
+        jobs_first, calls_first = tick(1)
+        # 200 earlier jobs under the table's job group and tag
+        sc.setJobGroup(sync_job_tag("customer"), "earlier work")
+        sc.addJobTag(sync_job_tag("customer"))
+        try:
+            for _ in range(200):
+                sc.parallelize([1], 1).count()
+        finally:
+            sc.removeJobTag(sync_job_tag("customer"))
+        jobs_later, calls_later = tick(2)
+        assert jobs_first == jobs_later == 6
+        assert calls_later == calls_first and sum(calls_later) < 20, calls_later
 
 
 class TestStatsParity:

@@ -11,12 +11,24 @@ A/B ratio then attribute differences to CODE, not host state.
 Usage:
   python tools/ab_bench.py --baseline /tmp/r14_baseline [--rounds 4]
           [--out /tmp/ab_bench.json]
+  python tools/ab_bench.py --baseline <parent tree> --workload headline_queries
+          [--rounds 10] [--seed 101] [--out /tmp/ab_perfbench.json]
 
 The baseline dir is a plain git worktree of the pre-optimization commit.
 Each child is `python bench.py` with SPARK_GRAFT_BENCH_CHILD=1 run with
 that tree's bench.py, so each tree imports its own engine code. Steal% and
 load are recorded per sample; no gating (interleaving replaces it) but the
 per-sample steal stays in the artifact for adjudication.
+
+With ``--workload`` the harness runs perfbench instead: ``--rounds`` pairs
+of ``perfbench/run.py --trace 0`` runs of that workload, one per tree, in
+alternating order, pair i with seed ``--seed`` + i and the run length from
+``BENCHMARK.json``. For every end-to-end metric it reports each pair's
+values, the change's wins (ties count for neither), both medians, the
+parent's quartiles and IQR, the gain rule (wins in at least 9/10 of the
+pairs and a median gap larger than the parent's IQR) and whether the
+change's median stays within the metric's regression bound, plus each
+run's CPU steal, in one JSON artifact.
 """
 
 from __future__ import annotations
@@ -75,6 +87,91 @@ def run_child(tree: str) -> dict:
     return payload
 
 
+def run_perfbench(tree: str, workload: str, seed: int, seconds: float) -> dict:
+    """One untraced perfbench run in ``tree``: correctness, metric values and
+    the CPU steal its artifact recorded."""
+    proc = subprocess.run(
+        [sys.executable, os.path.join("perfbench", "run.py"), "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+        capture_output=True, text=True, timeout=900, cwd=tree,
+    )
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode not in (0, 1) or not lines:
+        print(proc.stderr[-4000:], file=sys.stderr)
+        raise RuntimeError(f"perfbench in {tree} failed rc={proc.returncode}")
+    result = json.loads(lines[-1])
+    with open(os.path.join(tree, ".perfbench", "out", f"{workload}-s{seed}-t0.json")) as f:
+        steal = json.load(f).get("env", {}).get("steal_pct")
+    return {
+        "seed": seed,
+        "correct": result["correct"],
+        "attempted": result["attempted"],
+        "failed": result["failed"],
+        "metrics": {n: m["value"] for n, m in result["metrics"].items()},
+        "steal_pct": steal,
+    }
+
+
+def compare_pairs(parent: list[float], change: list[float], better: str, bound: float | None) -> dict:
+    """The gain and regression rules over paired runs of one metric."""
+    sign = 1 if better == "lower" else -1
+    wins = sum(sign * (p - c) > 0 for p, c in zip(parent, change))
+    q1, _, q3 = statistics.quantiles(parent, n=4)
+    pm, cm = statistics.median(parent), statistics.median(change)
+    gap = sign * (pm - cm)  # > 0: the change is better
+    return {
+        "parent": parent,
+        "change": change,
+        "wins": wins,
+        "pairs": len(parent),
+        "parent_median": pm,
+        "change_median": cm,
+        "parent_q1": q1,
+        "parent_q3": q3,
+        "parent_iqr": q3 - q1,
+        "gain": wins >= 0.9 * len(parent) and gap > q3 - q1,
+        "within_bound": None if bound is None else -gap <= bound * pm,
+    }
+
+
+def perfbench_ab(args) -> None:
+    with open(os.path.join(args.optimized, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    runs: dict[str, list[dict]] = {"parent": [], "change": []}
+    for i in range(args.rounds):
+        seed = args.seed + i
+        order = [("parent", args.baseline), ("change", args.optimized)]
+        if i % 2:
+            order.reverse()
+        for side, tree in order:
+            r = run_perfbench(tree, args.workload, seed, spec["run_seconds"])
+            runs[side].append(r)
+            print(f"pair {i} seed {seed} {side}: correct={r['correct']} "
+                  f"{r['metrics']} steal={r['steal_pct']}%", file=sys.stderr, flush=True)
+    metrics = {}
+    for m in spec["end_to_end"]:
+        pairs = [(p["metrics"].get(m["name"]), c["metrics"].get(m["name"]))
+                 for p, c in zip(runs["parent"], runs["change"])]
+        pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
+        if len(pairs) >= 2:
+            metrics[m["name"]] = compare_pairs(
+                [p for p, _ in pairs], [c for _, c in pairs], m["better"], m.get("bound"))
+    out = {
+        "workload": args.workload,
+        "pairs": args.rounds,
+        "seeds": [args.seed + i for i in range(args.rounds)],
+        "run_seconds": spec["run_seconds"],
+        "trees": {"parent": os.path.abspath(args.baseline), "change": os.path.abspath(args.optimized)},
+        "metrics": metrics,
+        "correct": {side: sum(r["correct"] for r in rs) for side, rs in runs.items()},
+        "steal_pct": {side: [r["steal_pct"] for r in rs] for side, rs in runs.items()},
+        "runs": runs,
+    }
+    with open(args.out, "w") as fh:
+        json.dump(out, fh, indent=1)
+    print(json.dumps({k: v for k, v in out.items() if k != "runs"}, indent=1))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--baseline", required=True, help="worktree of the before commit")
@@ -89,7 +186,12 @@ def main() -> None:
         help="wait for pre-launch 1-min load <= %s before each child"
         % LOAD_GATE,
     )
+    ap.add_argument("--workload", help="run this perfbench workload instead of bench.py")
+    ap.add_argument("--seed", type=int, default=101, help="perfbench seed of the first pair")
     args = ap.parse_args()
+    if args.workload:
+        perfbench_ab(args)
+        return
 
     samples: dict[str, list[dict]] = {"A": [], "B": []}
     for r in range(args.rounds):
