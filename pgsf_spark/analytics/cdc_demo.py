@@ -58,7 +58,7 @@ def q_continuous_agg_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance, end-to-end, as an oracle gate: build
     the hourly rollup from the FIRST HALF of events (bootstrap), then
     refresh() with the full feed -- only buckets touched by the second half
-    recompute; untouched rows carry over through the TableStore flip. The
+    recompute; untouched rows carry over through the TableStore commit. The
     oracle is a plain full aggregation of all events, so the hash proves
     incremental-refresh == full-recompute (the invariant that makes
     O(new data) refreshes trustworthy at 100 TB).

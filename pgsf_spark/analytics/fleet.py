@@ -330,17 +330,17 @@ def q_cas_publish_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     replica and compute a partial merge against it (writer A: ``pk % 10
     -> 7*pk``; writer B: ``pk % 7 -> 5*pk``). A publishes first. B's
     stale publish -- CASed on the v1 token it based its carry on --
-    must raise ConcurrentWriteError and flip NOTHING: without the CAS,
+    must raise ConcurrentWriteError and commit NOTHING: without the CAS,
     B's version would hardlink-carry v1's copy of A's buckets, silently
     erasing A's update (a lost update, the write_partial docstring's
     exact hazard). B then re-reads the current version and retries; the
     final state carries BOTH updates (B's wave wins the ``pk % 70``
-    overlap -- it merged after A). The loser's orphan version dir stays
-    behind as documented vacuum garbage, so the dir count is pinned too.
+    overlap -- it merged after A). The loser removes its staging
+    directory, so the table lists only committed versions.
 
     Output: row count, the state after A alone and after B's retry, and
-    the version-dir count (snapshot + A + B-orphan + B-retry = 4) --
-    restated by the oracle from ``customer`` arithmetic."""
+    the committed-version count (snapshot + A + B-retry = 3) -- restated
+    by the oracle from ``customer`` arithmetic."""
     from pgsf_spark.operators.merge import merge_upsert
     from pgsf_spark.operators.table_store import ConcurrentWriteError, TableStore
     from pgsf_spark.sync.runner import PGSF_BUCKET, pk_bucket
@@ -393,6 +393,9 @@ def q_cas_publish_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise ValueError("cas gate: stale publish did not raise")
         except ConcurrentWriteError:
             pass  # the lost update was refused -- the contract under test
+        staged = [d for d in os.listdir(os.path.join(store.root, "cust")) if d.startswith("_stage_")]
+        if staged:
+            raise ValueError(f"cas gate: refused publish left staging dirs {staged}")
         mid = (
             store.read("cust")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))

@@ -103,7 +103,7 @@ def q_catalog_snapshot_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         except ConcurrentWriteError:
             pass
         if catalog.current_version() != cat1:
-            raise ValueError("failed CAS publish must leave the pointer untouched")
+            raise ValueError("failed CAS publish must leave the current version untouched")
 
         # the wave commits: ords publishes, then ONE atomic catalog flip
         store.write(_epoch_df("orders", "o_orderkey", E2), "ords")

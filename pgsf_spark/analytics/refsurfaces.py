@@ -30,7 +30,7 @@ Scale notes: SOSL/paging/CDC faces are single filtered scans (predicates
 JVM-side, no UDFs); query_pages intentionally exercises the BOUNDED
 driver path (one partition in flight -- the operator exists precisely
 so callers never collect()); compaction is the small-files answer at
-100 TB (publish-through-pointer, readers never see a partial rewrite).
+100 TB (publish by atomic commit, readers never see a partial rewrite).
 """
 
 from __future__ import annotations

@@ -8636,9 +8636,8 @@ SELECT tbl, n_rows, sum_v, n_versions, tick1_failed FROM t ORDER BY tbl""",
   CAST(1 AS INT) AS n_versions_end
 FROM customer""",
     ),
-    # B merged after A, so B's wave wins the pk % 70 overlap; the dir
-    # count pins the loser's documented orphan (snapshot + A + orphan +
-    # retry = 4)
+    # B merged after A, so B's wave wins the pk % 70 overlap; the
+    # refused publish commits nothing (snapshot + A + retry = 3)
     "cas_publish_gate": QuerySpec(
         fleet.q_cas_publish_gate,
         f"""SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -8650,7 +8649,7 @@ FROM customer""",
            WHEN c_custkey % {fleet.UPDATE_MOD} = 0
            THEN {fleet.V_WAVE1} * c_custkey
            ELSE {fleet.V_SNAP} * c_custkey END) AS BIGINT) AS sum_final,
-  CAST(4 AS INT) AS n_version_dirs
+  CAST(3 AS INT) AS n_version_dirs
 FROM customer""",
     ),
     "snapshot_consistency_gate": QuerySpec(

@@ -217,8 +217,8 @@ def q_snapshot_asof_read_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish v2 (all orders), then read v1 BY NAME while v2 is current --
     the audit/reproducibility read every training-data pipeline needs
     ("rebuild the dataset exactly as shipped"). The store's versioned
-    manifest makes this free: versions are immutable directories and the
-    pointer flip never rewrites them (operators/table_store.py; reference
+    manifest makes this free: versions are immutable directories and a
+    commit never rewrites them (operators/table_store.py; reference
     parity: the reference keeps only the latest PG state -- versioning is
     beyond-reference surface).
 

@@ -134,7 +134,7 @@ class Engine:
         Spark jobs (abort_refresh.py:49-68 kills the OS process; the Spark
         analogue is cancelling the table's tagged jobs -- tasks are
         interrupted, no partial version is ever published because the
-        pointer flip only happens after a successful write)."""
+        commit only happens after a successful write)."""
         from pgsf_spark.sync.runner import sync_job_tag
 
         self.state.abort(table)

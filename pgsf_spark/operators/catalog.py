@@ -1,21 +1,20 @@
 """Cross-table consistent snapshots: a versioned catalog over TableStore.
 
-TableStore gives SINGLE-table snapshot isolation (versioned dirs + an
-atomic pointer flip). A pipeline reading two tables mid-sync can still
-observe a MIXED state -- table A already on its new version, table B
+TableStore gives SINGLE-table snapshot isolation (versioned dirs, each
+committed by one atomic rename). A pipeline reading two tables mid-sync
+can still observe a MIXED state -- table A already on its new version, table B
 not yet -- which is exactly the torn read the reference's per-table
 psycopg2 transactions cannot prevent across tables either (each table
 syncs in its own process/transaction, sync:13-20). The CatalogStore
 closes that gap the way Iceberg/Delta-style metastores do at fleet
 scale: a catalog VERSION is one immutable JSON mapping
-``{table: store_version}``, published with the same
-``file_lock``-serialized atomic pointer flip, the same optimistic
-``expect_version`` CAS and the same version names (prefixed ``cat_v``)
-as the table pointers themselves. Readers that
-resolve every table through one catalog version get a consistent
-multi-table snapshot regardless of what writers publish meanwhile;
-flipping the catalog pointer is the one atomic "commit" of a
-multi-table sync wave.
+``{table: store_version}``, committed like a table version: a staged
+body renamed to the next sequence number (``cat_v`` prefixed) under the
+same ``file_lock`` and the same optimistic ``expect_version`` CAS
+(``table_store._commit``). Readers that resolve every table through one
+catalog version get a consistent multi-table snapshot regardless of what
+writers publish meanwhile; committing the catalog version is the one
+atomic "commit" of a multi-table sync wave.
 
 Read path cost: one tiny JSON read per query plan -- data files are
 the store's own (hardlinked) version dirs, so a catalog adds zero
@@ -26,17 +25,16 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 import time
 
 from pyspark.sql import DataFrame
 
 from pgsf_spark.operators.table_store import (
     _UNCHECKED,
-    ConcurrentWriteError,
     TableStore,
-    _new_version_name,
-    _version_sort_key,
-    file_lock,
+    _commit,
+    _committed,
 )
 
 _PREFIX = "cat_v"
@@ -49,28 +47,13 @@ class CatalogStore:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    def _pointer(self) -> str:
-        return os.path.join(self.root, "_CURRENT.json")
-
     def current_version(self) -> str | None:
-        try:
-            with open(self._pointer()) as f:
-                return json.load(f)["version"]
-        except FileNotFoundError:
-            return None
+        versions = self.versions()
+        return versions[-1] if versions else None
 
     def versions(self) -> list[str]:
-        """Published catalog versions, oldest first.
-
-        Sorted on the parsed (ms, pid, seq) triple, not lexically: an
-        unpadded pid segment would order same-millisecond publishes from
-        different processes by string ('_99' after '_100')."""
-        names = [
-            f[: -len(".json")]
-            for f in os.listdir(self.root)
-            if f.startswith(_PREFIX) and f.endswith(".json")
-        ]
-        return sorted(names, key=_version_sort_key)
+        """Committed catalog versions, oldest first; the last is current."""
+        return _committed(self.root, _PREFIX, ".json")
 
     def mapping(self, version: str | None = None) -> dict[str, str]:
         version = version or self.current_version()
@@ -81,45 +64,14 @@ class CatalogStore:
             return json.load(f)["tables"]
 
     def publish(self, tables: dict[str, str], expect_version=_UNCHECKED) -> str:
-        """Publish one immutable mapping; atomic flip, optional CAS.
-
-        Same concurrency contract as TableStore._publish: every flip goes
-        through ``file_lock`` on ``_PUBLISH_LOCK`` so an unchecked publish
-        can never land inside a CAS publisher's check-then-replace window
-        (lost update).
-        """
-        version = _new_version_name(_PREFIX)
-        # Stage both files under .tmp names OUTSIDE the lock: versions()
-        # only lists *.json, so a crash anywhere before the in-lock
-        # renames leaves no half-published catalog version behind (a
-        # body committed before the CAS check would read as published
-        # even though the pointer never flipped to it).
-        body = os.path.join(self.root, f"{version}.json")
-        tmp_body = body + ".tmp"
-        with open(tmp_body, "w") as f:
-            json.dump(
-                {"version": version, "written_at": time.time(), "tables": tables}, f
-            )
-        tmp_ptr = self._pointer() + f".{version}.tmp"
-        with open(tmp_ptr, "w") as f:
-            json.dump({"version": version, "written_at": time.time()}, f)
-        with file_lock(os.path.join(self.root, "_PUBLISH_LOCK")):
-            if expect_version is not _UNCHECKED:
-                cur = self.current_version()
-                if cur != expect_version:
-                    os.unlink(tmp_ptr)
-                    os.unlink(tmp_body)
-                    raise ConcurrentWriteError(
-                        f"catalog: expected current version {expect_version!r} "
-                        f"but found {cur!r} -- another publisher won; re-read "
-                        "and retry"
-                    )
-            # Commit the body first, then flip the pointer: a crash
-            # between the two leaves an unreferenced (but complete)
-            # version body, never a pointer to a missing body.
-            os.replace(tmp_body, body)
-            os.replace(tmp_ptr, self._pointer())
-        return version
+        """Publish one immutable mapping: the body is staged under a hidden
+        name, then committed as the next version by ``_commit`` (the table
+        store's lock, CAS and rename), so a failed or killed publish leaves
+        no listed version."""
+        fd, staged = tempfile.mkstemp(prefix="_stage_", dir=self.root)
+        with os.fdopen(fd, "w") as f:
+            json.dump({"written_at": time.time(), "tables": tables}, f)
+        return _commit(self.root, staged, _PREFIX, ".json", expect_version)
 
     def snapshot_current(
         self, store: TableStore, tables: list[str], expect_version=_UNCHECKED
@@ -139,9 +91,9 @@ class CatalogStore:
 
         Multi-table consistency requires every table of one logical read
         to resolve through the SAME catalog version -- re-resolving the
-        pointer per table would reintroduce the torn read this class
-        exists to prevent (a publisher can flip the catalog between two
-        read() calls). Pin first, then pass the pin to every read()."""
+        current version per table would reintroduce the torn read this
+        class exists to prevent (a publisher can commit between two read()
+        calls). Pin first, then pass the pin to every read()."""
         v = self.current_version()
         if v is None:
             raise FileNotFoundError(f"catalog at {self.root} has no published version")
@@ -150,19 +102,15 @@ class CatalogStore:
     def vacuum(self, keep: int = 2) -> list[str]:
         """Drop old catalog versions (the catalog's own GC).
 
-        Retains the newest ``keep`` versions plus whatever the current
-        pointer names (a pointer must never dangle). Returns the deleted
-        version names. Run ``TableStore.vacuum(...,
+        Retains the newest ``keep`` versions, and always the newest one,
+        which is the current version. Returns the deleted version names.
+        Run ``TableStore.vacuum(...,
         keep_versions=referenced_versions(table))`` AFTER this, so store
         versions only the dropped epochs referenced become collectable --
         the retention pipeline is catalog-GC first, store-GC second.
         O(versions) unlinks of tiny JSON bodies; no data moves (data dirs
         belong to the store and its own vacuum)."""
-        versions = self.versions()
-        cur = self.current_version()
-        victims = [
-            v for v in (versions[:-keep] if keep else versions) if v != cur
-        ]
+        victims = self.versions()[: -max(keep, 1)]
         for v in victims:
             try:
                 os.unlink(os.path.join(self.root, f"{v}.json"))
@@ -174,8 +122,7 @@ class CatalogStore:
         """Store versions of ``table`` referenced by ANY published catalog
         version -- the catalog-aware retention set for ``TableStore.vacuum``.
 
-        ``vacuum`` alone keeps the newest N versions plus the current
-        pointer, but knows nothing of catalog mappings: a published
+        ``vacuum`` alone keeps the newest N versions, but knows nothing of catalog mappings: a published
         catalog epoch can pin a store version older than that window, and
         deleting it would make ``catalog.read(store, table, pinned)`` fail
         on a missing dir -- a torn time-travel read at fleet scale. Pass

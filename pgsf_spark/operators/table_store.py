@@ -2,14 +2,16 @@
 
 The reference's target is PostgreSQL with transactional COPY/MERGE
 (csv_to_postgres.py:48-97, query_poll_table.py:175-198). Without Delta in
-this environment, atomic publish is done the classic way: write the new
-version to a fresh versioned directory, then flip a pointer file -- readers
-always see a complete version, writer crashes leave only garbage dirs
-(GC'd like the reference's 7-day job cleanup, delete_old_jobs_data.sh).
+this environment, atomic publish is done the classic way: build the new
+version in a hidden staging directory, then rename it to the next version
+number. The rename is the commit, so readers always see a complete version
+and the version listing holds only committed versions; writer crashes leave
+only ``_stage_*`` garbage (vacuumed like the reference's 7-day job
+cleanup, delete_old_jobs_data.sh).
 
-This mirrors what Delta's transaction log does in miniature, scoped to the
-single-writer-per-table model the reference also uses (the __sync
-ready->running claim guarantees one writer, synctable.py:63-73).
+This mirrors Delta's put-if-absent commit of version N+1 in miniature,
+scoped to the single-writer-per-table model the reference also uses (the
+__sync ready->running claim guarantees one writer, synctable.py:63-73).
 """
 
 from __future__ import annotations
@@ -17,10 +19,10 @@ from __future__ import annotations
 import contextlib
 import datetime as _dt
 import fcntl
-import itertools
 import json
 import os
 import shutil
+import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,32 +36,6 @@ PGSF_BUCKET = "pgsf_bucket"
 # sentinel: "publish unconditionally" (distinct from None = "expect the
 # table to have no published version yet")
 _UNCHECKED = object()
-
-# Per-process publish sequence in version names (table and catalog): two
-# publishes can land in the same millisecond (an empty hardlink-only tick
-# right after another publish, a failed catalog CAS), and a colliding name
-# would let the second write's overwrite clobber the first version's
-# directory and manifest -- corrupting the time-travel index and the
-# manifest trail recovery walks -- or a catalog loser's cleanup unlink the
-# winner's body.
-_VERSION_SEQ = itertools.count()
-
-
-def _new_version_name(prefix: str = "v") -> str:
-    return f"{prefix}{int(time.time() * 1000)}_{os.getpid()}_{next(_VERSION_SEQ):06d}"
-
-
-def _version_sort_key(name: str) -> tuple:
-    """(ms, pid, seq) ints from '{prefix}{ms}_{pid}[_{seq}]', the prefix
-    being everything up to the first 'v' ('v' for table versions, 'cat_v'
-    for catalog versions) -- lexical sort would mis-order same-millisecond
-    publishes from different processes because the pid segment is
-    unpadded."""
-    try:
-        parts = name.partition("v")[2].split("_")
-        return (0,) + tuple(int(p) for p in parts)
-    except ValueError:  # unknown shape: after parseable names, by string
-        return (1, name)
 
 
 @contextlib.contextmanager
@@ -99,6 +75,46 @@ class ConcurrentWriteError(RuntimeError):
     check catches every other writer sharing the table (a CLI hard delete
     racing a tick fails whichever publishes second). Delta-style optimistic
     concurrency in miniature: the loser retries from a fresh read."""
+
+
+def _committed(parent: str, prefix: str, suffix: str = "") -> list[str]:
+    """Committed version names under ``parent``, oldest first. Only a
+    commit gives a name ``prefix``, and its zero-padded sequence number
+    sorts lexically in commit order."""
+    try:
+        names = os.listdir(parent)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        n[: len(n) - len(suffix)] for n in names if n.startswith(prefix) and n.endswith(suffix)
+    )
+
+
+def _commit(parent: str, staged: str, prefix: str, suffix: str = "", expect_version=_UNCHECKED) -> str:
+    """Commit ``staged`` (a directory or a file under ``parent``) as the
+    next version and return its name: under the publish lock, check
+    ``expect_version`` against the newest committed name, then rename the
+    staged object to the next sequence number. Every commit, checked or
+    not, takes the lock, so an unchecked one cannot land between a CAS
+    writer's check and its rename (a silent lost update). The lock also
+    keeps the CAS exact where a lock-free exclusive create would not: a
+    stale writer could create a sequence number that vacuum freed, below
+    the current version. A loser of the check removes its staged object."""
+    try:
+        with file_lock(os.path.join(parent, "_PUBLISH_LOCK")):
+            names = _committed(parent, prefix, suffix)
+            cur = names[-1] if names else None
+            if expect_version is not _UNCHECKED and cur != expect_version:
+                raise ConcurrentWriteError(
+                    f"{parent}: expected current version {expect_version!r} but found "
+                    f"{cur!r} -- another writer published first; re-read and retry"
+                )
+            name = f"{prefix}{int(cur[len(prefix):]) + 1 if cur else 0:020d}"
+            os.rename(staged, os.path.join(parent, name + suffix))
+    except ConcurrentWriteError:
+        (shutil.rmtree if os.path.isdir(staged) else os.unlink)(staged)
+        raise
+    return name
 
 
 def _link_tree(src: str, dst: str) -> None:
@@ -279,10 +295,10 @@ def _stat_jsonable(v):
 
 
 class TableStore:
-    """``collect_stats``: per-file column min/max and row count gathered
-    from parquet footers at publish time (Delta-style data skipping) into
-    the version's _STATS.json -- metadata work, no data IO. Where the
-    footers are read depends on the publish:
+    """Every publish gathers per-file column min/max and row count from
+    parquet footers (Delta-style data skipping) into the version's
+    _STATS.json -- metadata work, no data IO. Where the footers are read
+    depends on the publish:
 
       - ``write`` (snapshot, compact): a file count that grows
         with the table, so one Spark job reads the footers on executors;
@@ -295,31 +311,31 @@ class TableStore:
     Only ``write`` starts a Spark job for stats; elsewhere one runs only
     for a file whose entry lacks a row count."""
 
-    def __init__(self, spark: SparkSession, root: str, collect_stats: bool = True):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.collect_stats = collect_stats
         os.makedirs(root, exist_ok=True)
 
     def _tdir(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _pointer(self, table: str) -> str:
-        return os.path.join(self._tdir(table), "_CURRENT")
+    def _stage(self, table: str) -> str:
+        """A fresh directory to build a version in. Its ``_`` prefix keeps
+        it out of ``versions()`` and of Spark's file listing until
+        ``_publish`` renames it."""
+        os.makedirs(self._tdir(table), exist_ok=True)
+        return tempfile.mkdtemp(prefix="_stage_", dir=self._tdir(table))
 
     def current_version_path(self, table: str) -> str | None:
-        ptr = self._pointer(table)
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            v = json.load(f)["version_dir"]
-        return os.path.join(self._tdir(table), v)
+        v = self.current_version(table)
+        return os.path.join(self._tdir(table), v) if v else None
 
     def current_version(self, table: str) -> str | None:
-        """Current version NAME (the optimistic-concurrency token: read it
-        before a read-modify-write, pass it back as ``expect_version``)."""
-        p = self.current_version_path(table)
-        return os.path.basename(p) if p else None
+        """Current version NAME, the newest committed one (the
+        optimistic-concurrency token: read it before a read-modify-write,
+        pass it back as ``expect_version``)."""
+        versions = self.versions(table)
+        return versions[-1] if versions else None
 
     def _version_path(self, table: str, version: str | None) -> str | None:
         """Directory of ``version``, or of the current version when None."""
@@ -337,7 +353,7 @@ class TableStore:
         layout_ready: bool = False,
         expect_version=_UNCHECKED,
     ) -> str:
-        """Write a new version and atomically flip the pointer.
+        """Write a new version and commit it atomically.
 
         ``layout_ready``: the caller already arranged the physical layout
         (e.g. compact()'s z-ordering) -- skip the default repartition, which
@@ -346,13 +362,10 @@ class TableStore:
         ``expect_version``: optimistic concurrency. Pass the
         ``current_version(table)`` this write derived from (None for "table
         must not exist yet"); the publish raises ConcurrentWriteError if
-        another writer flipped the pointer in between. Omit for
-        last-writer-wins (single-writer pipelines, the engine default).
+        another writer committed in between. Omit for last-writer-wins
+        (single-writer pipelines, the engine default).
         """
-        tdir = self._tdir(table)
-        os.makedirs(tdir, exist_ok=True)
-        version = _new_version_name()
-        path = os.path.join(tdir, version)
+        path = self._stage(table)
         if partition_by and not layout_ready:
             # co-locate each hive partition's rows in one task: without this,
             # every task writes a file into every partition dir (tasks x
@@ -369,10 +382,9 @@ class TableStore:
         meta = dict(manifest or {})
         if partition_by:
             meta.setdefault("partition_by", partition_by)
-        self._publish(
-            table, version, path, df.schema.jsonValue(), meta, expect_version=expect_version
+        return self._publish(
+            table, path, df.schema.jsonValue(), meta, expect_version=expect_version
         )
-        return path
 
     def _write_file_stats(self, path: str, known: dict | None = None) -> None:
         """Per-file column min/max and row count from parquet footers ->
@@ -655,53 +667,25 @@ class TableStore:
     def _publish(
         self,
         table: str,
-        version: str,
         path: str,
         schema_json,
         manifest: dict,
         expect_version=_UNCHECKED,
         known_stats: dict | None = None,
-    ) -> None:
+    ) -> str:
+        """Commit the staged directory ``path`` as the table's next
+        version; returns the committed directory."""
         # K5 job-artifact persistence (status.json/batches.json analogue,
-        # download.py:86-92): a manifest per published version for
-        # lineage/debugging; then the atomic pointer flip.
-        if self.collect_stats:
-            self._write_file_stats(path, known_stats)
+        # download.py:86-92): stats and a manifest per version for
+        # lineage/debugging; then the commit renames the staged directory.
+        self._write_file_stats(path, known_stats)
         with open(os.path.join(path, "_MANIFEST.json"), "w") as f:
             json.dump(
-                {
-                    "table": table,
-                    "version": version,
-                    "written_at": time.time(),
-                    "schema": schema_json,
-                    **manifest,
-                },
+                {"table": table, "written_at": time.time(), "schema": schema_json, **manifest},
                 f,
             )
-        # tmp name is per-writer (version is unique per writer): a SHARED
-        # .tmp would let two concurrent writers interleave writes into one
-        # file and publish a torn pointer
-        tmp_ptr = self._pointer(table) + f".{version}.tmp"
-        with open(tmp_ptr, "w") as f:
-            json.dump({"version_dir": version, "written_at": time.time()}, f)
-        # EVERY pointer flip -- checked or not -- goes through the same
-        # file_lock. An unchecked flip outside the lock could land between a
-        # CAS writer's current_version check and its os.replace and be
-        # silently overwritten with no ConcurrentWriteError raised anywhere
-        # (lost update); the critical section is two tiny metadata ops so
-        # serializing the unchecked path too costs nothing. Loser's version
-        # dir stays behind as garbage for vacuum, same as a crashed writer's.
-        with file_lock(os.path.join(self._tdir(table), "_PUBLISH_LOCK")):
-            if expect_version is not _UNCHECKED:
-                cur = self.current_version(table)
-                if cur != expect_version:
-                    os.unlink(tmp_ptr)
-                    raise ConcurrentWriteError(
-                        f"table {table!r}: expected current version "
-                        f"{expect_version!r} but found {cur!r} -- another "
-                        "writer published first; re-read and retry"
-                    )
-            os.replace(tmp_ptr, self._pointer(table))  # atomic on POSIX
+        tdir = self._tdir(table)
+        return os.path.join(tdir, _commit(tdir, path, "v", expect_version=expect_version))
 
     def manifest(self, table: str, version: str | None = None) -> dict:
         path = self._version_path(table, version)
@@ -774,12 +758,12 @@ class TableStore:
         O(table). A changed bucket whose rows were all deleted simply writes
         no directory -- the bucket becomes empty, which is correct.
 
-        Publishes with compare-and-swap against the version the carry is
+        Commits with compare-and-swap against the version the carry is
         based on BY DEFAULT (unlike ``write``): the carried partitions are a
-        copy of ``prev``, so a concurrent publish in between would be
-        silently overwritten by stale bytes -- a lost update, not just a
-        races-resolve-somehow. Pass ``expect_version`` explicitly only to
-        base the CAS on a different token.
+        copy of ``prev``, so committing over a newer version would revert it
+        to stale bytes -- a lost update, not just a races-resolve-somehow.
+        Pass ``expect_version`` explicitly only to base the CAS on a
+        different token.
         """
         prev = self.current_version_path(table)
         if prev is None:
@@ -787,9 +771,7 @@ class TableStore:
         if expect_version is _UNCHECKED:
             expect_version = os.path.basename(prev)
         prev_manifest = self.manifest(table)
-        tdir = self._tdir(table)
-        version = _new_version_name()
-        path = os.path.join(tdir, version)
+        path = self._stage(table)
         df_changed.repartition(partition_col).write.mode("overwrite").partitionBy(
             partition_col
         ).parquet(path)
@@ -813,7 +795,7 @@ class TableStore:
         # The files just written: at most one per changed bucket (the
         # repartition above), so their footers are read here on the driver
         # before the carry adds files -- no Spark job.
-        known_stats = _read_footers(path, _list_parquet_files(path)) if self.collect_stats else {}
+        known_stats = _read_footers(path, _list_parquet_files(path))
         skip = written_dirs | declared_dirs
         carry = [
             d for d in os.listdir(prev) if d.startswith(f"{partition_col}=") and d not in skip
@@ -831,26 +813,20 @@ class TableStore:
         if prev_manifest.get("partition_buckets") is not None:
             meta.setdefault("partition_buckets", prev_manifest["partition_buckets"])
         meta["rewritten_partitions"] = sorted(str(v) for v in changed_values)
-        self._publish(
+        return self._publish(
             table,
-            version,
             path,
             df_changed.schema.jsonValue(),
             meta,
             expect_version=expect_version,
             known_stats=known_stats,
         )
-        return path
 
     def versions(self, table: str) -> list[str]:
-        """Published version directories, oldest first (time travel index)."""
-        tdir = self._tdir(table)
-        if not os.path.isdir(tdir):
-            return []
-        return sorted(
-            (d for d in os.listdir(tdir) if d.startswith("v") and os.path.isdir(os.path.join(tdir, d))),
-            key=_version_sort_key,
-        )
+        """Committed versions, oldest first (time travel index); the last
+        is the current version. A CAS loser or a writer killed before its
+        commit never gets a ``v`` name, so it is not listed."""
+        return _committed(self._tdir(table), "v")
 
     def read(self, table: str, version: str | None = None, keep_internal: bool = False) -> DataFrame:
         """Read the current version, or any retained one (time travel --
@@ -974,14 +950,14 @@ class TableStore:
         return out
 
     def rollback(self, table: str, version: str | None = None) -> str:
-        """Delta RESTORE semantics: repoint the table at an earlier
-        version's data by publishing a NEW version that hardlink-carries
+        """Delta RESTORE semantics: return the table to an earlier
+        version's data by committing a NEW version that hardlink-carries
         it -- the rollback is itself an auditable history event (the
         restored-to version stays retained, the bad version stays
         inspectable, vacuum TTLs apply uniformly), exactly how Delta's
         RESTORE writes a new commit instead of rewinding the log.
 
-        Defaults to the version immediately before the current one. Data
+        Defaults to the commit immediately before the current one. Data
         files carry by hardlink (O(1) per file, byte-identical inodes);
         version-level metadata (_MANIFEST.json, _STATS.json) is written
         fresh -- hardlinking it would alias inodes with the source version
@@ -989,20 +965,16 @@ class TableStore:
         copies the source's entries (same files at the same relative
         paths), so no footer is read again."""
         versions = self.versions(table)
-        cur_path = self.current_version_path(table)
-        cur = os.path.basename(cur_path) if cur_path else ""
+        cur = versions[-1] if versions else None
         if version is None:
-            prior = versions[: versions.index(cur)] if cur in versions else []
-            if not prior:
+            if len(versions) < 2:
                 raise ValueError(f"table {table!r} has no version before {cur!r} to roll back to")
-            version = prior[-1]
+            version = versions[-2]
         src = os.path.join(self._tdir(table), version)
         if not os.path.isdir(src):
             raise FileNotFoundError(f"{table}@{version} not found (vacuumed?)")
         prev_manifest = self.manifest(table, version)
-        new_version = _new_version_name()
-        path = os.path.join(self._tdir(table), new_version)
-        os.makedirs(path)
+        path = self._stage(table)
         meta_files = {"_MANIFEST.json", _STATS_NAME}
         for name in os.listdir(src):
             if name in meta_files:
@@ -1018,18 +990,16 @@ class TableStore:
         carried = {
             k: v
             for k, v in prev_manifest.items()
-            if k not in ("table", "version", "written_at", "schema", "op")
+            if k not in ("table", "written_at", "schema", "op")
         }
         carried.update({"op": "rollback", "restored_from": version, "rolled_back_from": cur})
-        self._publish(
+        return self._publish(
             table,
-            new_version,
             path,
             prev_manifest.get("schema"),
             carried,
             known_stats=self.file_stats(table, version),
         )
-        return path
 
     def compact(
         self,
@@ -1041,7 +1011,7 @@ class TableStore:
 
         Frequent small merges accumulate small part-files (the classic
         100 TB operational problem); compaction is just publishing a new
-        coalesced version through the same atomic pointer flip -- readers
+        coalesced version through the same atomic commit -- readers
         never see a partial state. Returns the new version path.
 
         ``zorder_by``: cluster the rewrite along the Z-curve of these
@@ -1113,28 +1083,37 @@ class TableStore:
         reference a store version older than the newest ``keep``; deleting
         it would tear every pinned ``catalog.read`` at that epoch. Pass
         ``CatalogStore.referenced_versions(table)`` here so time-travel
-        reads through any retained catalog version keep resolving."""
+        reads through any retained catalog version keep resolving.
+
+        A ``_stage_*`` directory is removed once it is older than the TTL,
+        or, with no TTL, older than the current version's ``written_at``:
+        it belongs to a writer that crashed or lost its commit. A writer
+        whose staging directory was removed fails at its commit and
+        publishes nothing."""
         tdir = self._tdir(table)
-        cur = self.current_version_path(table)
         pinned = keep_versions or set()
         versions = self.versions(table)
-        candidates = versions[:-keep] if keep else versions
-        victims = [
-            v
-            for v in candidates
-            if os.path.join(tdir, v) != cur and v not in pinned
-        ]
+        # the newest version is the current one: never a victim
+        victims = [v for v in versions[: -max(keep, 1)] if v not in pinned]
+        t_now = time.time() if now is None else now
+
+        def _written_at(v: str) -> float:
+            try:
+                with open(os.path.join(tdir, v, "_MANIFEST.json")) as f:
+                    return float(json.load(f)["written_at"])
+            except Exception:
+                return os.path.getmtime(os.path.join(tdir, v))
+
         if ttl_seconds is not None:
-            t_now = time.time() if now is None else now
-
-            def _written_at(v: str) -> float:
-                try:
-                    with open(os.path.join(tdir, v, "_MANIFEST.json")) as f:
-                        return float(json.load(f)["written_at"])
-                except Exception:
-                    return os.path.getmtime(os.path.join(tdir, v))
-
             victims = [v for v in victims if t_now - _written_at(v) > ttl_seconds]
-        for v in victims:
+        stale = []
+        if versions:
+            cutoff = t_now - ttl_seconds if ttl_seconds is not None else _written_at(versions[-1])
+            stale = [
+                d
+                for d in os.listdir(tdir)
+                if d.startswith("_stage_") and os.path.getmtime(os.path.join(tdir, d)) < cutoff
+            ]
+        for v in victims + stale:
             shutil.rmtree(os.path.join(tdir, v), ignore_errors=True)
         return victims

@@ -363,7 +363,7 @@ class SyncRunner:
             # The merged table's row count and max(ts) come from the new
             # version's per-file footer stats -- no Spark job, O(files)
             # JSON. One scan computes both only where stats cannot answer
-            # (collect_stats=False, a file with no stat for ``ts_field``, a
+            # (no stats file, a file with no stat for ``ts_field``, a
             # non-timestamp ``ts_field``).
             summary = self.store.stats_summary(table, ts_field)
             if summary is None:

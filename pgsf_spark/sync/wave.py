@@ -4,9 +4,9 @@
 never blocks another's tick -- the reference's one-process-per-table
 model, sync:13-20). ``CatalogStore`` gives cross-table consistent READS.
 This module ties them together into the operational story a fleet
-actually needs: each scheduler tick is a WAVE, and the catalog pointer
-flips only when every due table in the wave succeeded. A partially
-failed wave leaves individual table pointers wherever their own ticks
+actually needs: each scheduler tick is a WAVE, and the catalog commits
+a version only when every due table in the wave succeeded. A partially
+failed wave leaves individual tables wherever their own ticks
 landed (their versions are retained and consistent per-table), but
 catalog readers keep the last fully-consistent multi-table snapshot --
 nobody downstream ever joins a half-advanced pair. The flip itself is

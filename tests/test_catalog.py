@@ -67,27 +67,23 @@ class TestCatalogSemantics:
         v1 = catalog.snapshot_current(store, ["a"])
         assert catalog.pin() == v1
 
-    def test_version_names_are_collision_free_and_order_parsed(self, tmp_path):
-        """Round-13 review findings: same-millisecond publishes must get
-        DISTINCT version names (store and catalog), and version ordering
-        must parse the name, not compare strings (an unpadded pid
-        segment string-sorts '_99' after '_100')."""
-        from pgsf_spark.operators import catalog as catmod
-        from pgsf_spark.operators import table_store as tsmod
+    def test_publishes_commit_consecutive_names(self, tmp_path):
+        """Each publish commits the next sequence number; the padding keeps
+        the listing in commit order past ten versions, and a refused
+        publish leaves neither a version nor its staged body."""
+        import os
 
-        # same-ms uniqueness: the per-process sequence disambiguates
-        names = {tsmod._new_version_name() for _ in range(100)}
-        assert len(names) == 100
+        from pgsf_spark.operators.catalog import CatalogStore
+        from pgsf_spark.operators.table_store import ConcurrentWriteError
 
-        # parse-based ordering across pids within one millisecond
-        key = tsmod._version_sort_key
-        assert key("v1723800000123_99_000001") < key("v1723800000123_100_000000")
-        # legacy two-segment names still parse and sort by (ms, pid)
-        assert key("v1723800000122_50") < key("v1723800000123_7_000000")
-        ckey = catmod._version_sort_key
-        assert ckey("cat_v1723800000123_99_000001") < ckey(
-            "cat_v1723800000123_100_000000"
-        )
+        catalog = CatalogStore(str(tmp_path / "catalog"))
+        names = [catalog.publish({"t": f"v{i}"}) for i in range(11)]
+        assert catalog.versions() == names == [f"cat_v{i:020d}" for i in range(11)]
+        assert catalog.mapping() == {"t": "v10"}
+        with pytest.raises(ConcurrentWriteError):
+            catalog.publish({"t": "vX"}, expect_version=names[0])
+        assert catalog.versions() == names
+        assert not [f for f in os.listdir(catalog.root) if f.startswith("_stage_")]
 
     def test_read_through_missing_table_is_loud(self, spark, tmp_path):
         from pyspark.sql import functions as F
@@ -236,15 +232,14 @@ class TestCdfSemantics:
 
 
 class TestPublishCrashSafety:
-    def test_non_cas_exception_leaves_no_orphan_body(self, spark, tmp_path):
-        """ADVICE r13 #1: the version body used to be committed BEFORE the
-        publish lock, so any non-CAS exception between body write and
-        pointer flip left an orphan cat_v*.json that versions()/mapping()
-        treated as published. The body now stages under a .tmp name and
-        commits inside the flock, after the CAS check -- a failed publish
-        must leave versions() and the pointer exactly as they were."""
+    def test_non_cas_exception_leaves_no_orphan_body(self, spark, tmp_path, monkeypatch):
+        """The body stages under a hidden name and becomes a version only
+        by the rename inside the flock, after the CAS check -- a publish
+        that fails before that rename must leave versions() and the
+        current version exactly as they were."""
         from pyspark.sql import functions as F
 
+        from pgsf_spark.operators import table_store
         from pgsf_spark.operators.catalog import CatalogStore
         from pgsf_spark.operators.table_store import TableStore
 
@@ -253,16 +248,14 @@ class TestPublishCrashSafety:
         catalog = CatalogStore(str(tmp_path / "catalog"))
         v1 = catalog.snapshot_current(store, ["a"])
 
-        # inject a non-CAS failure inside the lock, before the renames
-        orig = CatalogStore.current_version
-        try:
-            CatalogStore.current_version = lambda self: (_ for _ in ()).throw(
-                RuntimeError("simulated crash inside publish")
-            )
+        # inject a non-CAS failure inside the lock, before the rename
+        def crash(*a, **k):
+            raise RuntimeError("simulated crash inside publish")
+
+        with monkeypatch.context() as m:
+            m.setattr(table_store, "_committed", crash)
             with pytest.raises(RuntimeError, match="simulated crash"):
                 catalog.publish({"a": "vX"}, expect_version=v1)
-        finally:
-            CatalogStore.current_version = orig
 
         assert catalog.versions() == [v1]
         assert catalog.current_version() == v1

@@ -2,6 +2,7 @@
 read_pruned): the Delta-style stats path that makes range lookups on a huge
 replica O(overlapping files) instead of O(table)."""
 
+import os
 from datetime import datetime, timedelta
 
 import pytest
@@ -34,11 +35,6 @@ class TestStatsCollection:
         assert set(some) >= {"id", "val"}
         assert some["id"][0] <= some["id"][1]
 
-    def test_stats_disabled(self, spark, tmp_path):
-        s = TableStore(spark, str(tmp_path / "s2"), collect_stats=False)
-        s.write(spark.range(10), "t")
-        assert s.file_stats("t") is None
-
 
 class TestReadPruned:
     def test_prunes_files_and_matches_full_filter(self, spark, store):
@@ -68,10 +64,10 @@ class TestReadPruned:
         assert store.read_pruned("t", "id", lo=900).count() == 100
         assert store.read_pruned("t", "id", hi=99).count() == 100
 
-    def test_stats_file_absent_falls_back(self, spark, store, tmp_path):
-        s2 = TableStore(spark, str(tmp_path / "nostats"), collect_stats=False)
-        s2.write(spark.range(100), "t")
-        got = s2.read_pruned("t", "id", lo=10, hi=20)  # no _STATS.json on disk
+    def test_stats_file_absent_falls_back(self, spark, store):
+        store.write(spark.range(100), "t")
+        os.remove(os.path.join(store.current_version_path("t"), _STATS_NAME))
+        got = store.read_pruned("t", "id", lo=10, hi=20)  # no _STATS.json on disk
         assert got.count() == 11
 
     def test_pruned_read_after_partitioned_write(self, spark, store):

@@ -123,8 +123,8 @@ class TestCasPublishSemantics:
         """The stale writer's publish was refused (asserted in-gate via
         ConcurrentWriteError) and left the state untouched; the retry
         merged on top of A, so the final state carries BOTH updates with
-        B winning the pk % 70 overlap; the loser's orphan dir is the
-        documented vacuum garbage (4 dirs)."""
+        B winning the pk % 70 overlap; the refused publish committed
+        nothing (3 versions: snapshot, A, B's retry)."""
         from pyspark.sql import functions as F
 
         from pgsf_spark.analytics import fleet
@@ -151,4 +151,4 @@ class TestCasPublishSemantics:
         assert row["sum_after_a"] == expect["a"]
         assert row["sum_final"] == expect["f"]
         assert row["sum_after_a"] != row["sum_final"]  # B's update landed
-        assert row["n_version_dirs"] == 4
+        assert row["n_version_dirs"] == 3

@@ -1,5 +1,5 @@
 """Retention pipeline gates (analytics/retention.py): catalog GC never drops
-the current pointer's version, and watermark recovery survives compact,
+the current version, and watermark recovery survives compact,
 vacuum and ledger loss."""
 
 from pgsf_spark.analytics.registry import QUERIES
@@ -27,9 +27,9 @@ class TestCatalogGcSemantics:
         assert catalog.current_version() == vs[3]
 
     def test_vacuum_never_drops_the_pointer_version(self, spark, tmp_path):
-        """keep=0 is the degenerate ask; the current pointer's version
-        must survive anyway -- a dangling pointer would break every
-        pin() until the next publish."""
+        """keep=0 is the degenerate ask; the current version must survive
+        anyway -- deleting it would break every pin() until the next
+        publish."""
         from pyspark.sql import functions as F
 
         from pgsf_spark.operators.catalog import CatalogStore

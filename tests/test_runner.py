@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from pgsf_spark.operators.table_store import ConcurrentWriteError, TableStore
 from pgsf_spark.sources.entity import EntitySource
+from pgsf_spark.sync.recovery import recover_watermark
 from pgsf_spark.sync.runner import SyncRunner
 from pgsf_spark.sync.state import SyncState
 
@@ -146,6 +147,12 @@ class TestIncrementalSync:
         row = state.get("customer")
         assert row.status == "ready" and row.syncuntil_dt() == T0
         assert store.current_version("customer") == injected[0]
+        # the refused tick is not in the history: recovery resumes from
+        # the injected version's position, not the tick's watermark_after
+        m = store.manifest("customer", injected[0])
+        assert recover_watermark(store, "customer") == datetime.fromisoformat(
+            m.get("watermark_after") or m["extract_started"]
+        )
 
     def test_store_versions_gc(self, env):
         spark, source, store, state, src_dir = env

@@ -312,14 +312,13 @@ class TestRollback:
         assert tmp_store.file_stats("t") == tmp_store.file_stats("t", v0)
 
     def test_default_target_is_the_prior_version_in_publish_order(self, tmp_path):
-        # pid 100 published after pid 99 in the same millisecond, though
-        # "_100_" sorts before "_99_" as a string
-        store = TableStore(None, str(tmp_path / "store"), collect_stats=False)
-        older, newer = "v1700000000000_99_000000", "v1700000000000_100_000000"
-        for v in (older, newer):
-            path = os.path.join(store.root, "t", v)
-            os.makedirs(path)
-            store._publish("t", v, path, None, {"op": "snapshot"})
+        # eleven commits: the sequence number's padding keeps v..10 after
+        # v..09 in the listing, so the default target is the previous commit
+        store = TableStore(None, str(tmp_path / "store"))
+        for _ in range(11):
+            store._publish("t", store._stage("t"), None, {"op": "snapshot"})
+        *_, older, newer = store.versions("t")
+        assert (older, newer) == (f"v{9:020d}", f"v{10:020d}")
         store.rollback("t")
         m = store.manifest("t")
         assert (m["restored_from"], m["rolled_back_from"]) == (older, newer)
