@@ -109,11 +109,26 @@ class CatalogStore:
         versions only the dropped epochs referenced become collectable --
         the retention pipeline is catalog-GC first, store-GC second.
         O(versions) unlinks of tiny JSON bodies; no data moves (data dirs
-        belong to the store and its own vacuum)."""
-        victims = self.versions()[: -max(keep, 1)]
-        for v in victims:
+        belong to the store and its own vacuum).
+
+        A ``_stage_*`` body older than the current version's
+        ``written_at`` is removed too, by ``TableStore.vacuum``'s rule: it
+        belongs to a publisher that crashed or lost its commit, and a
+        publisher whose body was removed fails at its commit."""
+        versions = self.versions()
+        victims = versions[: -max(keep, 1)]
+        stale = []
+        if versions:
+            with open(os.path.join(self.root, f"{versions[-1]}.json")) as f:
+                cutoff = json.load(f)["written_at"]
+            stale = [
+                n
+                for n in os.listdir(self.root)
+                if n.startswith("_stage_") and os.path.getmtime(os.path.join(self.root, n)) < cutoff
+            ]
+        for name in [f"{v}.json" for v in victims] + stale:
             try:
-                os.unlink(os.path.join(self.root, f"{v}.json"))
+                os.unlink(os.path.join(self.root, name))
             except FileNotFoundError:
                 pass
         return victims

@@ -194,9 +194,9 @@ def _list_parquet_files(path: str) -> list[str]:
 def _read_footers(root: str, files: list[str]) -> dict:
     """``_footer_stats`` of ``files`` read on the driver, concurrently
     (footer reads are syscall-latency bound, like _carry_dirs), keyed by
-    path relative to ``root``. For a handful of files only: this costs
-    about a millisecond per file, where a Python-worker Spark job has a
-    fixed cost of a few hundred."""
+    path relative to ``root``. About a millisecond per file, where a
+    Python-worker Spark job has a fixed cost of a few hundred; see
+    ``_DRIVER_FOOTER_LIMIT``."""
     if not files:
         return {}
     from concurrent.futures import ThreadPoolExecutor
@@ -206,32 +206,49 @@ def _read_footers(root: str, files: list[str]) -> dict:
         return {os.path.relpath(fp, root): s for fp, s in zip(files, stats)}
 
 
+# Footers to read below which _write_file_stats reads them on the driver
+# (_read_footers) instead of in a Spark job. Measured on 4 cores, local[4],
+# 8-column files (CHANGES.md): the driver read took 0.017 s for 16 files,
+# 0.33 s for 512 and 0.56 s for 1,024; the warm job 0.40-0.48 s at every
+# one of those counts, and 2.8 s cold (it starts the Python workers, which
+# then stay resident). The driver is faster up to several hundred files.
+_DRIVER_FOOTER_LIMIT = 512
+
+
 _STATS_NAME = "_STATS.json"
 # Delta collects stats on the first 32 columns by default; same cap here.
 _STATS_MAX_COLS = 32
 # Per-file footer row count in a _STATS.json entry. Column keys never hold a
-# ".": _footer_stats skips every column path containing one.
+# ".": _metadata_stats skips every column path containing one.
 STATS_ROWS = ".num_rows"
 
 
 def _footer_stats(fp: str) -> dict:
     """Column min/max and the row count (``STATS_ROWS``) of one parquet
-    file, from its footer only (a few KB of IO). Runs executor-side in
-    _write_file_stats' job (module-level so it pickles cleanly into Spark
-    tasks), and on the driver for the files write_partial writes.
-    Nested paths, columns past the cap, and types with no order-preserving
-    JSON form are skipped -- a missing stat means "never prune this file on
-    that column"."""
+    file, from its footer only (a few KB of IO): ``_metadata_stats`` of it,
+    or {} when the footer cannot be read. Runs on the driver
+    (``_read_footers``) or executor-side in _write_file_stats' job
+    (module-level so it pickles cleanly into Spark tasks)."""
     import pyarrow.parquet as pq
 
     try:
         md = pq.ParquetFile(fp).metadata
     except Exception:
         return {}
+    return _metadata_stats(md)
+
+
+def _metadata_stats(md, max_cols: int | None = _STATS_MAX_COLS) -> dict:
+    """Column min/max over every row group of a pyarrow ``FileMetaData``,
+    and its row count under ``STATS_ROWS``; ``max_cols=None`` keeps every
+    column. Nested paths, columns past the cap, and types with no
+    order-preserving JSON form are skipped -- a missing stat means "never
+    prune this file on that column"."""
     per_col: dict[str, list] = {}
     for rg in range(md.num_row_groups):
         row_group = md.row_group(rg)
-        for ci in range(min(row_group.num_columns, _STATS_MAX_COLS)):
+        n_cols = row_group.num_columns if max_cols is None else min(row_group.num_columns, max_cols)
+        for ci in range(n_cols):
             col = row_group.column(ci)
             name = col.path_in_schema
             if "." in name:
@@ -297,19 +314,15 @@ def _stat_jsonable(v):
 class TableStore:
     """Every publish gathers per-file column min/max and row count from
     parquet footers (Delta-style data skipping) into the version's
-    _STATS.json -- metadata work, no data IO. Where the footers are read
-    depends on the publish:
-
-      - ``write`` (snapshot, compact): a file count that grows
-        with the table, so one Spark job reads the footers on executors;
-      - ``write_partial`` (a sync tick): the at most one file per changed
-        bucket it wrote are read on the driver; carried buckets keep their
-        entries;
-      - ``rollback``: every file is a hardlink of the restored version, whose
-        entries are copied.
-
-    Only ``write`` starts a Spark job for stats; elsewhere one runs only
-    for a file whose entry lacks a row count."""
+    _STATS.json -- metadata work, no data IO. A publish reads only the
+    footers it does not already hold: ``write_partial`` carries the entries
+    of the buckets it hardlinks and reads the at most one file per changed
+    bucket it wrote; ``rollback`` copies the restored version's entries;
+    ``write`` (snapshot, compact) reads every file it wrote. Where the
+    footers are read depends on their count alone (``_write_file_stats``):
+    below ``_DRIVER_FOOTER_LIMIT`` on the driver, so a publish of a table
+    that size starts no Spark job and no Python worker for stats, and
+    above it in one Spark job on executors."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -390,20 +403,19 @@ class TableStore:
         """Per-file column min/max and row count from parquet footers ->
         _STATS.json.
 
-        Footers without a ``known`` entry are read by a Spark job over the
-        file list (RDD map -- the legitimate per-partition-imperative case:
-        O(files) metadata IO, no row data), so a publish whose file count
-        grows with the table (``write``: snapshot, compact)
-        reads them in parallel across the cluster, not in a sequential
-        driver walk. At 100 TB (~800k files at 128 MB) the driver only lists
-        names and writes the JSON.
-
         ``known``: entries keyed by relative path that the caller already
         holds -- the hardlinked files of write_partial and rollback (same
-        inodes as in their source version) and the few files write_partial
-        itself wrote, read on the driver. An entry that holds a row count is
-        copied and its footer is not read again; the job reads only the
-        rest, and none runs when there is none."""
+        inodes as in their source version). An entry that holds a row count
+        is copied and its footer is not read again.
+
+        The rest are read where their count says, whoever publishes: fewer
+        than ``_DRIVER_FOOTER_LIMIT`` on the driver (``_read_footers``, no
+        Spark job); more in one Spark job over the file list (RDD map -- the
+        legitimate per-partition-imperative case: O(files) metadata IO, no
+        row data), so a publish whose file count grows with the table reads
+        them in parallel across the cluster, not in a driver walk. At
+        100 TB (~800k files at 128 MB) the driver only lists names and
+        writes the JSON."""
         known = known or {}
         stats: dict[str, dict] = {}
         todo = []
@@ -413,7 +425,9 @@ class TableStore:
                 stats[rel] = known[rel]
             else:
                 todo.append(fp)
-        if todo:
+        if len(todo) < _DRIVER_FOOTER_LIMIT:
+            stats.update(_read_footers(path, todo))
+        else:
             sc = self.spark.sparkContext
             slices = max(1, min(len(todo), sc.defaultParallelism))
             pairs = (
@@ -435,22 +449,22 @@ class TableStore:
         except OSError:
             return None
 
-    def stats_summary(self, table: str, col: str | None = None):
-        """``(rows, max of col)`` of the current version from _STATS.json,
-        with no Spark job: ``summarize_file_stats`` over the published
-        entries, the max converted through the column's Spark type
-        (``TimestampType``/``TimestampNTZType`` ``fromInternal``) so it
-        equals what ``agg(F.max(col)).first()`` returns. None when stats
-        cannot answer -- no stats file, an incomplete entry, or a ``col``
-        that is not a timestamp -- and the caller must scan."""
+    def stats_summary(self, table: str, col: str | None = None, version: str | None = None):
+        """``(rows, max of col)`` of ``version`` (default: the current one)
+        from _STATS.json, with no Spark job: ``summarize_file_stats`` over
+        the published entries, the max converted through the column's
+        Spark type (``TimestampType``/``TimestampNTZType`` ``fromInternal``)
+        so it equals what ``agg(F.max(col)).first()`` returns. None when
+        stats cannot answer -- no stats file, an incomplete entry, or a
+        ``col`` that is not a timestamp -- and the caller must scan."""
         from pyspark.sql.types import TimestampNTZType, TimestampType
 
-        stats = self.file_stats(table)
+        path = self._version_path(table, version)
+        stats = self.file_stats(table, os.path.basename(path)) if path else None
         summary = None if stats is None else summarize_file_stats(stats, col)
         if summary is None or col is None or summary[1] is None:
             return summary
-        path = self.current_version_path(table)
-        schema = self._manifest_schema(path) if path else None
+        schema = self._manifest_schema(path)
         if schema is None or col not in schema.fieldNames():
             return None
         dtype = schema[col].dataType
@@ -758,19 +772,20 @@ class TableStore:
         O(table). A changed bucket whose rows were all deleted simply writes
         no directory -- the bucket becomes empty, which is correct.
 
-        Commits with compare-and-swap against the version the carry is
-        based on BY DEFAULT (unlike ``write``): the carried partitions are a
-        copy of ``prev``, so committing over a newer version would revert it
-        to stale bytes -- a lost update, not just a races-resolve-somehow.
-        Pass ``expect_version`` explicitly only to base the CAS on a
-        different token.
+        The carry is based on ``expect_version`` (default: the current
+        version), and the commit is a compare-and-swap against it ALWAYS
+        (unlike ``write``): the carried partitions are a copy of that
+        version, so committing over a newer one would revert it to stale
+        bytes -- a lost update, not just a races-resolve-somehow. A caller
+        that read a version passes it, and no listing of the table runs
+        before the commit.
         """
-        prev = self.current_version_path(table)
-        if prev is None:
-            raise FileNotFoundError(f"write_partial: {table!r} has no published version")
         if expect_version is _UNCHECKED:
-            expect_version = os.path.basename(prev)
-        prev_manifest = self.manifest(table)
+            expect_version = self.current_version(table)
+        if expect_version is None:
+            raise FileNotFoundError(f"write_partial: {table!r} has no published version")
+        prev = os.path.join(self._tdir(table), expect_version)
+        prev_manifest = self.manifest(table, expect_version)
         path = self._stage(table)
         df_changed.repartition(partition_col).write.mode("overwrite").partitionBy(
             partition_col
@@ -792,22 +807,20 @@ class TableStore:
                 f"write_partial: rows landed in partitions {sorted(written_dirs - declared_dirs)} "
                 f"not listed in changed_values -- refusing to publish (would duplicate keys)"
             )
-        # The files just written: at most one per changed bucket (the
-        # repartition above), so their footers are read here on the driver
-        # before the carry adds files -- no Spark job.
-        known_stats = _read_footers(path, _list_parquet_files(path))
         skip = written_dirs | declared_dirs
         carry = [
             d for d in os.listdir(prev) if d.startswith(f"{partition_col}=") and d not in skip
         ]
         _carry_dirs(prev, path, carry)
-        # the carried dirs' stats entries ride along with their hardlinks
+        # the carried dirs' stats entries ride along with their hardlinks;
+        # _publish reads only the files written above (at most one per
+        # changed bucket, the repartition)
         carry_set = set(carry)
-        known_stats.update(
-            (rel, s)
-            for rel, s in (self.file_stats(table, os.path.basename(prev)) or {}).items()
+        known_stats = {
+            rel: s
+            for rel, s in (self.file_stats(table, expect_version) or {}).items()
             if rel.split(os.sep, 1)[0] in carry_set
-        )
+        }
         meta = dict(manifest or {})
         meta.setdefault("partition_by", prev_manifest.get("partition_by") or [partition_col])
         if prev_manifest.get("partition_buckets") is not None:

@@ -4,6 +4,7 @@ Plays the role of the reference's Salesforce extract paths:
   - paged REST query        (S3, /root/reference/query.py:37-51)
   - count-only query        (S4, /root/reference/query.py:53-65)
   - bulk PK-chunked scan    (S7, /root/reference/query_bulk.py:14-46)
+  - CDC poll                (P4, query_poll_table.py:76-83)
 
 Spark-first design: the "source" is a parquet (or csv) directory per table;
 projection (P1), predicate (P3/P4), and limit (P6) are expressed on the
@@ -13,6 +14,19 @@ only parallelism -- is Spark input partitions, which we get for free from the
 file format; ``pk_buckets`` optionally repartitions by key for co-located
 downstream merges.
 
+Landing ledger (parquet): the reference polls with an indexed
+``SystemModstamp > syncuntil`` query that touches only new rows. Here each
+landing file's footer is read once per file version, on the driver, into a
+ledger keyed by the file's identity (size, mtime_ns, inode): its row count,
+its column min/max, its integrity verdict and what Spark infers its schema
+from. Every read then takes an explicit schema merged from the ledger, so no
+entity read runs an inference job, and ``poll`` hands Spark only the files
+whose footer max of the ts column is past the watermark: a poll costs
+O(new files), not O(landing history), and reports each batch file's schema
+so schema drift is judged per file (a later file that drops a column is a
+removal, not a silent NULL). CSV landing has no footer and keeps Spark's own
+inference over the directory.
+
 include_deleted=False reproduces the REST ``query`` endpoint (soft-deleted
 rows hidden); True is ``queryAll`` (api.py:353) -- rows flagged IsDeleted
 flow through, which the CDC merge relies on (P5).
@@ -20,10 +34,197 @@ flow through, which the CDC merge relies on (P5).
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
+import sys
+import threading
+import time
+import weakref
+from collections import OrderedDict
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    MapType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
+
+from pgsf_spark.operators.merge import SchemaDriftError
+from pgsf_spark.operators.table_store import _META_THREADS, _metadata_stats, _stat_jsonable
+from pgsf_spark.sources.integrity import IntegrityReport, _list_part_files, read_footer
+from pgsf_spark.tables import _INFERENCE_CONFS
+
+# footer key-value entry holding the schema Spark wrote; inference prefers it
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+class LandedFile(NamedTuple):
+    """One landing file as the ledger holds it, from one footer read."""
+
+    path: str
+    rows: int | None  # footer row count; None when the footer is unreadable
+    stats: dict  # table_store._metadata_stats: column -> [min, max] JSON forms
+    footer: tuple | None  # (parquet schema text, Spark row metadata): inference's input
+    reason: str | None  # integrity verdict (integrity.check_file); None = readable
+
+
+class Poll(NamedTuple):
+    """A CDC poll: the change rows, the (schema, rows) of each file the read
+    scans, and how many landing files the watermark pruned."""
+
+    df: DataFrame
+    files: list[tuple[StructType, int | None]]
+    skipped: int
+
+
+def _landed_file(path: str) -> LandedFile:
+    md, reason = read_footer(path)
+    if md is None:
+        return LandedFile(path, None, {}, None, reason)
+    try:
+        stats = _metadata_stats(md, max_cols=None)
+    except Exception:  # a stat pyarrow cannot convert: the file is never pruned
+        stats = {}
+    # line 1 of the schema's text is the object's repr; interned, files of
+    # one schema share their key's strings, so comparing keys is cheap
+    text = sys.intern(str(md.schema).split("\n", 1)[1])
+    spark_md = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    footer = (text, spark_md and sys.intern(spark_md.decode("utf-8", "replace")))
+    return LandedFile(path, md.num_rows, stats, footer, None)
+
+
+# Spark schema per (footer, inference confs) and session: files whose footers
+# hold the same parquet schema and Spark row metadata infer the same schema,
+# so Spark's converter runs once per distinct footer, not once per file.
+_FOOTER_SCHEMA_MEMO_SIZE = 256
+_footer_schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_footer_schema_lock = threading.Lock()
+
+
+def _footer_schema(spark: SparkSession, f: LandedFile, confs: tuple) -> StructType:
+    """What ``spark.read.parquet(f.path).schema`` infers, with no Spark job:
+    Spark's own footer-to-schema step (``ParquetFileFormat.readSchemaFromFooter``
+    with a ``ParquetToSparkSchemaConverter`` over the session's conf) run on
+    the driver JVM, made nullable as a file read makes it."""
+    key = (f.footer, confs)
+    with _footer_schema_lock:
+        memo = _footer_schemas.setdefault(spark, OrderedDict())
+        if key in memo:
+            memo.move_to_end(key)
+            return memo[key]
+    import json
+
+    jvm = spark._jvm
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    hpath = jvm.org.apache.hadoop.fs.Path(f.path)
+    md = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark._jsc.hadoopConfiguration(),
+        hpath,
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
+    )
+    converter = parquet.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
+    jschema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(hpath, md), converter
+    )
+    schema = StructType.fromJson(json.loads(jschema.asNullable().json()))
+    with _footer_schema_lock:
+        memo[key] = schema
+        while len(memo) > _FOOTER_SCHEMA_MEMO_SIZE:
+            memo.popitem(last=False)
+    return schema
+
+
+def _merge_type(a, b, where: str):
+    """``StructType.merge``'s rule for one column: identical types, or
+    structs/arrays/maps whose parts merge; anything else conflicts."""
+    if a == b:
+        return a
+    if isinstance(a, StructType) and isinstance(b, StructType):
+        return _merge_schemas(a, b, where)
+    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
+        return ArrayType(_merge_type(a.elementType, b.elementType, where), a.containsNull or b.containsNull)
+    if isinstance(a, MapType) and isinstance(b, MapType):
+        return MapType(
+            _merge_type(a.keyType, b.keyType, where),
+            _merge_type(a.valueType, b.valueType, where),
+            a.valueContainsNull or b.valueContainsNull,
+        )
+    raise SchemaDriftError(f"{where}: {a.simpleString()} vs {b.simpleString()}")
+
+
+def _merge_schemas(left: StructType, right: StructType, where: str) -> StructType:
+    """``mergeSchema``'s fold step: left's fields in order, merged with
+    right's of the same name, then right's new fields."""
+    by_name = {f.name: f for f in right.fields}
+    fields = [
+        f
+        if f.name not in by_name
+        else StructField(
+            f.name,
+            _merge_type(f.dataType, by_name[f.name].dataType, f"{where}, column {f.name!r}"),
+            f.nullable or by_name[f.name].nullable,
+            f.metadata,
+        )
+        for f in left.fields
+    ]
+    names = set(left.fieldNames())
+    return StructType(fields + [f for f in right.fields if f.name not in names])
+
+
+def _literal_frame(wm: _dt.datetime):
+    """(Spark type, naive value) of ``F.lit(wm)`` as Spark compares it:
+    TimestampType values are UTC-naive instants, TimestampNTZType values
+    wall time. Follows PySpark's literal conversion: an aware datetime is
+    its instant, a naive one is TIMESTAMP_NTZ when the session prefers it
+    and otherwise the instant of that local time in this process
+    (``time.mktime``, as PySpark's converter does)."""
+    from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+    utc = _dt.timezone.utc
+    if wm.tzinfo is not None:
+        return TimestampType, wm.astimezone(utc).replace(tzinfo=None)
+    if is_timestamp_ntz_preferred():
+        return TimestampNTZType, wm
+    secs = int(time.mktime(wm.timetuple()))
+    return TimestampType, _dt.datetime.fromtimestamp(secs, utc).replace(tzinfo=None, microsecond=wm.microsecond)
+
+
+# A column and a literal of different timestamp types compare through the
+# session time zone (offsets within +-18 h, DST shifts smaller): a file is
+# only pruned when its max is this far below the literal.
+_MIXED_TIMESTAMP_SLACK = _dt.timedelta(days=2)
+
+
+def _may_pass(f: LandedFile, ts_field: str, bound) -> bool:
+    """False only when the footer proves no row of ``f`` has
+    ``ts_field > F.lit(wm)``: ``bound`` is the literal in the frame of the
+    file's column type, as the footer stat's ISO form (``_stat_bounds``),
+    None when the column is not a timestamp. A file without a max of the
+    column is always read."""
+    if f.rows == 0:
+        return False
+    rng = f.stats.get(ts_field)
+    return rng is None or bound is None or rng[1] > bound
+
+
+def _stat_bounds(wm) -> dict:
+    """``_may_pass``'s bound for ``F.lit(wm)`` per Spark timestamp type, as
+    ``_stat_jsonable`` forms (UTC-naive for an instant, wall time for NTZ;
+    ISO order is time order): exact for a column of the literal's type,
+    ``_MIXED_TIMESTAMP_SLACK`` lower for the other one."""
+    if not isinstance(wm, _dt.datetime):
+        return {}
+    lit_type, lit = _literal_frame(wm)
+    other = TimestampNTZType if lit_type is TimestampType else TimestampType
+    return {
+        lit_type: _stat_jsonable(lit),
+        other: _stat_jsonable(lit - _MIXED_TIMESTAMP_SLACK),
+    }
 
 
 class EntitySource:
@@ -45,10 +246,13 @@ class EntitySource:
         # pre-flight footer validation of every scanned entity
         # (sources/integrity.py): a truncated landing file fails the
         # SCAN BUILDER with its filename and reason instead of an
-        # executor stack trace mid-job. Off by default (footer reads per
-        # scan are cheap but not free); the sync loop turns it on for
-        # landing zones it does not own end to end.
+        # executor stack trace mid-job. The verdict comes from the
+        # ledger's one footer read per file; off by default, the sync
+        # loop turns it on for landing zones it does not own end to end.
         self.integrity_check = integrity_check
+        # landing path -> {file path: ((size, mtime_ns, inode), LandedFile)}
+        self._ledger: dict[str, dict] = {}
+        self._ledger_lock = threading.Lock()
 
     def _record(self, table: str, op: str) -> None:
         if self.usage is not None:
@@ -59,6 +263,63 @@ class EntitySource:
         if os.path.exists(p):
             return p
         return os.path.join(self.base_dir, table)
+
+    def _landed(self, table: str) -> list[LandedFile]:
+        """The ledger of ``table``'s landing files, in path order (the order
+        ``mergeSchema`` folds them in). Lists the directory and stats each
+        file; reads only the footers of files it has not seen at their
+        current identity. Enforces ``integrity_check``."""
+        root = self.path(table)
+        with self._ledger_lock:
+            known = self._ledger.get(root, {})
+        current, new = {}, []
+        for fp in _list_part_files(root):
+            st = os.stat(fp)
+            ident = (st.st_size, st.st_mtime_ns, st.st_ino)
+            hit = known.get(fp)
+            if hit is not None and hit[0] == ident:
+                current[fp] = hit
+            else:
+                current[fp] = (ident, None)
+                new.append(fp)
+        if new:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=min(_META_THREADS, len(new))) as ex:
+                for fp, f in zip(new, ex.map(_landed_file, new)):
+                    current[fp] = (current[fp][0], f)
+        with self._ledger_lock:
+            self._ledger[root] = current
+        landed = [f for _, f in current.values()]
+        if self.integrity_check:
+            bad = tuple((f.path, f.reason) for f in landed if f.reason)
+            if bad:
+                report = IntegrityReport(good=tuple(f.path for f in landed if not f.reason), bad=bad)
+                raise ValueError(
+                    f"{table}: corrupt landing file(s) -- {report.describe()}; "
+                    f"quarantine_corrupt() moves them aside with a ledger"
+                )
+        return landed
+
+    def _schemas(self, landed: list[LandedFile]) -> dict[tuple, StructType]:
+        """Spark schema of each distinct readable footer among ``landed``,
+        in first-appearance order, under the session's inference confs."""
+        confs = tuple(self.spark.conf.get(k) for k in _INFERENCE_CONFS)
+        out: dict[tuple, StructType] = {}
+        for f in landed:
+            if f.footer is not None and f.footer not in out:
+                out[f.footer] = _footer_schema(self.spark, f, confs)
+        return out
+
+    @staticmethod
+    def _merged(table: str, schemas) -> StructType | None:
+        """``schemas`` folded the way ``mergeSchema`` does; a column typed
+        differently in two landing files raises SchemaDriftError naming the
+        table. None for no schema."""
+        merged = None
+        for s in schemas:
+            merged = s if merged is None else _merge_schemas(merged, s, f"{table}: landing files disagree")
+        return merged
 
     def load(
         self,
@@ -88,6 +349,17 @@ class EntitySource:
             pk=pk,
         )
 
+    def _read(self, table: str) -> DataFrame:
+        """Every landing file of ``table``. Parquet reads with the ledger's
+        merged schema of all files (no inference job); a directory with no
+        readable footer, and CSV, go to Spark as they are."""
+        root = self.path(table)
+        if self.fmt == "parquet" and os.path.exists(root):
+            schema = self._merged(table, self._schemas(self._landed(table)).values())
+            if schema is not None:
+                return self.spark.read.schema(schema).parquet(root)
+        return self.spark.read.format(self.fmt).load(root)
+
     def _load(
         self,
         table: str,
@@ -101,22 +373,7 @@ class EntitySource:
         # un-recorded scan builder: the public ops above/below each record
         # their OWN logical request (count is one API call in the
         # reference, not a query plus a count)
-        if self.integrity_check and self.fmt == "parquet":
-            from pgsf_spark.sources.integrity import scan_parquet_dir
-
-            report = scan_parquet_dir(self.path(table))
-            if report.bad:
-                raise ValueError(
-                    f"{table}: corrupt landing file(s) -- {report.describe()}; "
-                    f"quarantine_corrupt() moves them aside with a ledger"
-                )
-        reader = self.spark.read.format(self.fmt)
-        if self.fmt == "parquet":
-            # Spark's default inference reads the footer of the first file
-            # only, which would silently drop a column that first lands in a
-            # later file; merging every footer is still one inference job.
-            reader = reader.option("mergeSchema", "true")
-        df = reader.load(self.path(table))
+        df = self._read(table)
         if not include_deleted and "IsDeleted" in df.columns:
             # REST `query` hides soft-deleted rows; `queryAll` keeps them
             # (simple_salesforce api.py:353).
@@ -167,20 +424,66 @@ class EntitySource:
         watermark,
         fields: list[str] | None = None,
     ) -> DataFrame:
-        """CDC extract: rows with ts strictly greater than the watermark.
+        """CDC extract: rows with ts strictly greater than the watermark
+        (``poll``'s DataFrame)."""
+        return self.poll(table, ts_field, watermark, fields).df
+
+    def poll(
+        self,
+        table: str,
+        ts_field: str,
+        watermark,
+        fields: list[str] | None = None,
+    ) -> Poll:
+        """CDC extract: rows with ts strictly greater than the watermark,
+        with the schema and row count of each landing file it reads.
 
         Reproduces P4 exactly (query_poll_table.py:76-83): the stored
         watermark is truncated to whole seconds before comparison and the
         predicate is strictly ``>``. Overlap re-reads are absorbed by the
         idempotent PK merge. Always include_deleted=True -- deletes only
         arrive as IsDeleted rows via queryAll (query_poll_table.py:85).
-        """
+
+        Parquet: only the files whose footer max of ``ts_field`` is past
+        the watermark are scanned, under their merged ledger schema; the
+        predicate still filters their rows. With none, the DataFrame is
+        empty under the merged schema of every landing file. CSV: the
+        directory counts as one file."""
         from pgsf_spark.functions import truncate_to_second
 
         wm = truncate_to_second(watermark)
         self._record(table, "incremental")
-        df = self._load(table, include_deleted=True)
+        root = self.path(table)
+        if self.fmt != "parquet" or not os.path.exists(root):
+            df = self._read(table)
+            files, skipped = [(df.schema, None)], 0
+        else:
+            landed = self._landed(table)
+            schemas = self._schemas(landed)
+            bounds = _stat_bounds(wm)
+            # the bound in each footer's frame, from its type of ts_field
+            footer_bound = {
+                k: bounds.get(type(s[ts_field].dataType)) if ts_field in s.names else None
+                for k, s in schemas.items()
+            }
+            chosen = [f for f in landed if _may_pass(f, ts_field, footer_bound.get(f.footer))]
+            skipped = len(landed) - len(chosen)
+            files = [(schemas[f.footer], f.rows) for f in chosen if f.footer is not None]
+            # with no readable file chosen, the schema of every landing file
+            schema = self._merged(table, (s for s, _ in files)) or self._merged(table, schemas.values())
+            if not chosen and schema is not None:
+                df = self.spark.createDataFrame([], schema)
+            elif schema is None:
+                df = self.spark.read.parquet(root)  # no readable footer: Spark's own error
+            else:
+                reader = self.spark.read.schema(schema)
+                if os.path.isdir(root):
+                    reader = reader.option("basePath", root)
+                df = reader.parquet(*[f.path for f in chosen])
+                parts = [c for c in df.schema.fields if c.name not in schema.fieldNames()]
+                if parts:  # hive partition columns come from the paths
+                    files = [(StructType(s.fields + parts), n) for s, n in files]
         df = df.filter(F.col(ts_field) > F.lit(wm))
         if fields:
             df = df.select(*fields)
-        return df
+        return Poll(df, files, skipped)

@@ -73,16 +73,24 @@ def check_file(path: str) -> str | None:
     reason or None. Catches the three real-world corruption shapes:
     truncation (missing/partial footer), zero-byte placeholders from a
     killed writer, and non-parquet bytes landed under a .parquet name."""
+    return read_footer(path)[1]
+
+
+def read_footer(path: str):
+    """``(FileMetaData, None)`` for a readable parquet file, or ``(None,
+    reason)`` with ``check_file``'s failure reason: one footer parse and
+    schema decode, so a caller that needs the footer anyway (the entity
+    source's landing ledger) validates the file in the same read."""
     import pyarrow.parquet as pq
 
     try:
         size = os.path.getsize(path)
         if size == 0:
-            return "zero-byte file"
+            return None, "zero-byte file"
         pf = pq.ParquetFile(path)
-        _ = pf.metadata.num_rows  # forces the footer parse
+        md = pf.metadata  # forces the footer parse
         _ = pf.schema_arrow  # and the schema decode
-        return None
+        return md, None
     except OSError as e:
         # could not REACH the file (missing, permission, I/O error) --
         # an environment failure, tagged so quarantine never treats it
@@ -95,27 +103,31 @@ def check_file(path: str) -> str | None:
         if e.errno is not None or isinstance(
             e, (FileNotFoundError, PermissionError, IsADirectoryError)
         ):
-            return f"{ENV_REASON_PREFIX}{type(e).__name__}: {e}"[:200]
-        return f"{type(e).__name__}: {e}"[:200]
+            return None, f"{ENV_REASON_PREFIX}{type(e).__name__}: {e}"[:200]
+        return None, f"{type(e).__name__}: {e}"[:200]
     except Exception as e:  # noqa: BLE001 -- the reason IS the product
-        return f"{type(e).__name__}: {e}"[:200]
+        return None, f"{type(e).__name__}: {e}"[:200]
 
 
 def _list_part_files(path: str) -> list[str]:
     """Recursive part-file listing with Spark's metadata-skip conventions
     (names starting with ``_`` or ``.``, including ``_quarantine/``) --
-    the shared front half of both scanners."""
+    the shared front half of both scanners and of the entity source's
+    landing ledger. Sorted by path, the order ``mergeSchema`` reads."""
     if not os.path.isdir(path):
         return [path]
-    files: list[str] = []
-    for dirpath, dirs, names in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        files.extend(
-            os.path.join(dirpath, n)
-            for n in sorted(names)
-            if n.endswith(".parquet") and not n.startswith(("_", "."))
-        )
-    return files
+    return sorted(_walk_part_files(path))
+
+
+def _walk_part_files(path: str):
+    with os.scandir(path) as it:
+        for e in it:
+            if e.name.startswith(("_", ".")):
+                continue
+            if e.is_dir(follow_symlinks=False):  # like os.walk: links are not walked
+                yield from _walk_part_files(e.path)
+            elif e.name.endswith(".parquet"):
+                yield e.path
 
 
 def scan_parquet_dir(path: str) -> IntegrityReport:

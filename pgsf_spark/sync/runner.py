@@ -5,7 +5,9 @@ Reference flow parity:
     csv_to_postgres -> seed __sync  ==> one Spark job: scan -> overwrite
     write -> seed watermark from extract-start time (C6).
   - incremental sync (§3.2): query_poll_table.sync_table ==> claim ->
-    incremental scan (P4) -> pin the batch (one localCheckpoint job that
+    incremental scan (P4) of only the landing files whose footer max is
+    past the watermark (the source's landing ledger; schema drift judged
+    per file) -> pin the batch (one localCheckpoint job that
     also observes its max(ts), row/delete counts and changed pk buckets) ->
     latest-per-key dedup -> merge upsert (K3) of the changed buckets ->
     atomic publish of those buckets (every replica is pk-bucketed; the rest
@@ -23,6 +25,7 @@ Reference flow parity:
 
 from __future__ import annotations
 
+import os
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
@@ -136,10 +139,10 @@ class SyncRunner:
         self.drift_policy = drift_policy
         self._merges_since_maintenance: dict[str, int] = {}
 
-    def _classify_drift(self, table: str, version: str, changes):
+    def _classify_drift(self, table: str, version: str, files):
         """Schema-drift routing (the reference's open TODO,
-        query_poll_table.py:202): classify the batch schema against the
-        replica's BEFORE the merge touches data, and route per
+        query_poll_table.py:202): classify each batch file's schema
+        against the replica's BEFORE the merge touches data, and route per
         ``drift_policy``:
 
           - retyped columns: ALWAYS a loud failure (never auto-merged);
@@ -149,20 +152,31 @@ class SyncRunner:
           - added columns: loud failure under strict, widened and
             LEDGERED otherwise.
 
-        ``version`` is the replica version the tick merges into. Returns
-        the manifest audit entry ({} when no drift), so every absorbed
-        drift is visible in the published version's ledger."""
+        ``version`` is the replica version the tick merges into; ``files``
+        are the (schema, rows) of the batch's landing files (``Poll.files``).
+        Per file, not over their merged schema: a file that holds rows and
+        lacks a replica column is a removal even when an older file in the
+        same read still has it. Returns the manifest audit entry ({} when
+        no drift), so every absorbed drift is visible in the published
+        version's ledger."""
         from pgsf_spark.operators.merge import SchemaDriftError
-        from pgsf_spark.schema.drift import classify_drift
+        from pgsf_spark.schema.drift import DriftReport, classify_drift
 
-        # IsDeleted is NOT ignored: a source that stops sending it flips
-        # the merge to upsert-only (deletes silently stop propagating) --
-        # that is drift of the worst kind, and surfaces here as a removal
-        drift = classify_drift(
-            self.store.schema(table, version),
-            changes.schema,
-            ignore={PGSF_BUCKET, "_file_order"},
-        )
+        target = self.store.schema(table, version)
+        added, removed, retyped = {}, {}, {}
+        for schema, rows in files:
+            # IsDeleted is NOT ignored: a source that stops sending it flips
+            # the merge to upsert-only (deletes silently stop propagating) --
+            # that is drift of the worst kind, and surfaces here as a removal
+            d = classify_drift(target, schema, ignore={PGSF_BUCKET, "_file_order"})
+            for n, t in d.added:
+                added.setdefault(n, t)
+            if rows != 0:  # a file without rows nulls nothing
+                for n, t in d.removed:
+                    removed.setdefault(n, t)
+            for n, a, b in d.retyped:
+                retyped.setdefault((n, b), (n, a, b))
+        drift = DriftReport(tuple(added.items()), tuple(removed.items()), tuple(retyped.values()))
         if not drift:
             return {}
         hard = bool(drift.retyped)
@@ -235,7 +249,7 @@ class SyncRunner:
                 n = df.count()
                 self.state.insert(table, syncuntil=started, refresh_minutes=refresh_minutes)
                 return n
-            self.store.write(
+            path = self.store.write(
                 df.withColumn(PGSF_BUCKET, pk_bucket(pk, partition_buckets)),
                 table,
                 partition_by=[PGSF_BUCKET],
@@ -245,19 +259,21 @@ class SyncRunner:
                     "partition_buckets": partition_buckets,
                 },
             )
-            summary = self.store.stats_summary(table)
-            n = summary[0] if summary else self.store.read(table).count()
+            version = os.path.basename(path)
+            summary = self.store.stats_summary(table, version=version)
+            n = summary[0] if summary else self.store.read(table, version).count()
             self.state.insert(table, syncuntil=started, refresh_minutes=refresh_minutes)
             return n
 
-    def _finish_sync(self, table: str, wm, rows: int, max_ts) -> dict:
+    def _finish_sync(self, table: str, wm, rows: int, max_ts, landing: dict) -> dict:
         """Post-publish tail of a sync cycle, shared by both legs: advance
         the watermark to ``max_ts`` (monotonic, ``_advance``), run
-        piggybacked maintenance, release the claim."""
+        piggybacked maintenance, release the claim. ``landing`` holds the
+        poll's landing-file counts for the result."""
         maintained = self._maybe_maintain(table)
         new_wm = _advance(max_ts, wm)
         self.state.release(table, READY, syncuntil=new_wm)
-        out = {"table": table, "rows": rows, "watermark": new_wm.isoformat()}
+        out = {"table": table, "rows": rows, "watermark": new_wm.isoformat(), **landing}
         if maintained:
             out["maintenance"] = True
         return out
@@ -286,7 +302,13 @@ class SyncRunner:
             wm = row.syncuntil_dt()
             if wm is None:
                 raise ClaimError(f"{table}: no watermark -- bulk-load first (query_poll_table.py:69-73)")
-            changes = self.source.incremental(table, ts_field, wm)
+            poll = self.source.poll(table, ts_field, wm)
+            changes = poll.df
+            # driver counts from the landing ledger, no Spark job
+            landing = {
+                "landing_files_read": len(poll.files),
+                "landing_files_skipped": poll.skipped,
+            }
             if isinstance(self.store, JdbcPostgresSink):
                 # Route through the reference's staged-merge transaction
                 # (query_poll_table.py:107-152): dedup Spark-side, COPY into
@@ -296,7 +318,7 @@ class SyncRunner:
                 # were applied; unchanged wm otherwise).
                 changes, batch = _pin(changes, ts_field)
                 self.store.staged_merge(changes, table, pk=pk, ts_field=ts_field)
-                return self._finish_sync(table, wm, batch["rows"], batch["max_ts"])
+                return self._finish_sync(table, wm, batch["rows"], batch["max_ts"], landing)
             # The version this tick reads is the one its publish must
             # replace: the drift check, the read and write_partial's
             # compare-and-swap all use ``base``, so a publish landing
@@ -315,7 +337,7 @@ class SyncRunner:
             # except path below, and advances nothing -- vs the
             # reference's opaque crash-and-retry-forever (its TODO).
             # The JDBC leg is excluded above (PG owns its schema there).
-            drift_audit = self._classify_drift(table, base, changes)
+            drift_audit = self._classify_drift(table, base, poll.files)
             # Pin the batch before deriving buckets: the bucket list, the
             # written rows and the manifest's watermark_after must come from
             # the same evaluation -- a source whose re-evaluation can yield
@@ -345,7 +367,7 @@ class SyncRunner:
             # recovered from the manifest (sync/recovery.py) continues
             # incrementally without re-reading the applied window. The
             # plain "watermark" field stays the window START for lineage.
-            self.store.write_partial(
+            path = self.store.write_partial(
                 merged,
                 table,
                 PGSF_BUCKET,
@@ -356,6 +378,7 @@ class SyncRunner:
                     "watermark_after": _advance(batch["max_ts"], wm).isoformat(),
                     "batch_rows": batch["rows"],
                     "batch_deletes": batch["deletes"],
+                    **landing,
                     **drift_audit,
                 },
                 expect_version=base,
@@ -365,13 +388,16 @@ class SyncRunner:
             # JSON. One scan computes both only where stats cannot answer
             # (no stats file, a file with no stat for ``ts_field``, a
             # non-timestamp ``ts_field``).
-            summary = self.store.stats_summary(table, ts_field)
+            # The version is the one write_partial committed, so no listing
+            # of the table directory runs after the publish.
+            version = os.path.basename(path)
+            summary = self.store.stats_summary(table, ts_field, version)
             if summary is None:
-                r = self.store.read(table).agg(
+                r = self.store.read(table, version).agg(
                     F.count(F.lit(1)).alias("n"), F.max(ts_field).alias("m")
                 ).first()
                 summary = (r["n"], r["m"])
-            return self._finish_sync(table, wm, *summary)
+            return self._finish_sync(table, wm, *summary, landing)
         except ClaimError:
             raise
         except Exception:

@@ -119,7 +119,7 @@ class TestIncrementalSync:
         def boom(*a, **k):
             raise RuntimeError("extract failed")
 
-        monkeypatch.setattr(source, "incremental", boom)
+        monkeypatch.setattr(source, "poll", boom)
         with pytest.raises(RuntimeError):
             runner.sync_table("customer")
         assert state.get("customer").status == "ready"  # back to ready, wm unchanged

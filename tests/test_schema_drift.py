@@ -210,9 +210,14 @@ class TestSyncDriftRouting:
         # of the bucket directories); a manifest without one is read
         spark, source, store, state, src_dir, runner = self._boot(env)
         version = store.current_version("customer")
-        batch = spark.createDataFrame(
-            [], "Id string, name string, bal double, tier string, SystemModstamp timestamp, IsDeleted boolean"
-        )
+        batch = [
+            (
+                spark.createDataFrame(
+                    [], "Id string, name string, bal double, tier string, SystemModstamp timestamp, IsDeleted boolean"
+                ).schema,
+                0,
+            )
+        ]
         want = {"schema_drift": {"added": [{"column": "tier", "type": "string"}]}}
         reads = []
         read = store.read
@@ -303,11 +308,47 @@ class TestLaterFileDrift:
             [("c1", "alice", 11.0, T1, False)],
             bal=(pa.string(), ["11.0"]),
         )
-        with pytest.raises(Exception, match="(?s)CANNOT_MERGE.*DOUBLE.*STRING"):
+        with pytest.raises(SchemaDriftError, match="customer: schema drift.*retyped: bal"):
             runner.sync_table("customer")
         row = state.get("customer")
         assert (row.status, row.syncuntil_dt()) == ("ready", T0)
         assert store.current_version("customer") == version
+
+    def _land_without_bal(self, land):
+        # the schema builder without ``bal``: a file that dropped the column
+        pq.write_table(
+            pa.table(
+                {
+                    "Id": pa.array(["c1"], pa.string()),
+                    "name": pa.array(["alice"], pa.string()),
+                    "SystemModstamp": pa.array([T1], pa.timestamp("us", tz="UTC")),
+                    "IsDeleted": pa.array([False], pa.bool_()),
+                }
+            ),
+            str(land / "tick-00001.parquet"),
+        )
+
+    def test_removed_column_in_later_file_fails_under_widen(self, spark, tmp_path):
+        # the snapshot file still has ``bal``, so a schema merged over the
+        # whole landing directory hides the removal; the file is judged alone
+        land, store, state, runner = self._boot(spark, tmp_path)
+        version = store.current_version("customer")
+        self._land_without_bal(land)
+        with pytest.raises(SchemaDriftError, match="customer: schema drift.*removed: bal"):
+            runner.sync_table("customer")
+        row = state.get("customer")
+        assert (row.status, row.syncuntil_dt()) == ("ready", T0)
+        assert store.current_version("customer") == version
+        assert {r["Id"]: r["bal"] for r in store.read("customer").collect()} == {"c1": 10.0, "c2": 20.0}
+
+    def test_removed_column_in_later_file_ledgered_under_allow_removed(self, spark, tmp_path):
+        land, store, state, runner = self._boot(spark, tmp_path, drift_policy="allow-removed")
+        self._land_without_bal(land)
+        assert runner.sync_table("customer")["rows"] == 2
+        got = {r["Id"]: r["bal"] for r in store.read("customer").collect()}
+        assert got == {"c1": None, "c2": 20.0}
+        drift = store.manifest("customer").get("schema_drift")
+        assert drift == {"removed": [{"column": "bal", "type": "double"}]}
 
 
 class TestPartitionedDriftRewrite:

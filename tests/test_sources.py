@@ -1,6 +1,8 @@
 """Entity source + pgsf CSV dialect tests (S3/S4/S9, P1/P3/P6, F1/F2/F5)."""
 
+import os
 from datetime import datetime
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -191,3 +193,212 @@ class TestFixedWidth:
         p = str(tmp_path / "fws")
         write_fixed_width(df, fields, p)
         assert [r["name"] for r in read_fixed_width(spark, p, fields).collect()] == ["  ind"]
+
+
+def _jobs_in(spark, fn):
+    """(fn(), number of Spark jobs fn started), from a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestLandingLedger:
+    """The ledger's schema is Spark's own inference, read from footers on the
+    driver with no job; the poll reads only the files past the watermark."""
+
+    CASES = {
+        "timestamp_utc": lambda pa: pa.array([datetime(2024, 1, 1, 5)], pa.timestamp("us", tz="UTC")),
+        "timestamp_ntz": lambda pa: pa.array([datetime(2024, 1, 1, 5)], pa.timestamp("us")),
+        "nanos_as_long": lambda pa: pa.array([datetime(2024, 1, 1, 5)], pa.timestamp("ns")),
+        "decimal": lambda pa: pa.array([Decimal("12.345")], pa.decimal128(12, 3)),
+        "int32": lambda pa: pa.array([7], pa.int32()),
+        "binary": lambda pa: pa.array([b"\x00\x01"], pa.binary()),
+    }
+
+    @pytest.mark.parametrize("case", sorted(CASES))
+    def test_schema_equals_spark_inference(self, spark, tmp_path, case):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        land = tmp_path / "t"
+        land.mkdir()
+        pq.write_table(pa.table({"Id": ["a"], "v": self.CASES[case](pa)}), str(land / "part-0.parquet"))
+        assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+        df, jobs = _jobs_in(spark, lambda: EntitySource(spark, str(tmp_path)).load("t"))
+        assert df.schema == spark.read.parquet(str(land)).schema
+        assert jobs == 0
+        assert df.collect() == spark.read.parquet(str(land)).collect()
+
+    def test_spark_written_file_uses_its_row_metadata(self, spark, tmp_path):
+        spark.createDataFrame(
+            [("a", T0, Decimal("1.50"))], "Id string, SystemModstamp timestamp_ntz, bal decimal(10,2)"
+        ).write.parquet(str(tmp_path / "t"))
+        df, jobs = _jobs_in(spark, lambda: EntitySource(spark, str(tmp_path)).load("t"))
+        assert df.schema == spark.read.parquet(str(tmp_path / "t")).schema
+        assert jobs == 0
+
+    def test_added_column_merges_like_merge_schema(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        land = tmp_path / "t"
+        land.mkdir()
+        ts = pa.timestamp("us", tz="UTC")
+        pq.write_table(
+            pa.table({"Id": ["a"], "SystemModstamp": pa.array([T0], ts)}), str(land / "a.parquet")
+        )
+        pq.write_table(
+            pa.table({"Id": ["b"], "extra": pa.array([1], pa.int32()), "SystemModstamp": pa.array([T0], ts)}),
+            str(land / "b.parquet"),
+        )
+        pq.write_table(
+            pa.table({"late": ["x"], "Id": ["c"], "SystemModstamp": pa.array([T0], ts)}), str(land / "c.parquet")
+        )
+        src = EntitySource(spark, str(tmp_path))
+        want = spark.read.option("mergeSchema", "true").parquet(str(land)).schema
+        assert src.load("t").schema == want
+        assert [f.name for f in want] == ["Id", "SystemModstamp", "extra", "late"]
+        assert sorted(map(tuple, src.load("t").collect())) == sorted(
+            map(tuple, spark.read.option("mergeSchema", "true").parquet(str(land)).collect())
+        )
+
+    @pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+    @pytest.mark.parametrize(
+        "zones", [("UTC", "UTC"), ("America/Los_Angeles", "Asia/Kolkata"), ("Asia/Tokyo", "America/New_York")]
+    )
+    def test_poll_prunes_only_files_the_predicate_rejects(self, spark, tmp_path, monkeypatch, ts_type, zones):
+        """Off-UTC session zones and process zones, both timestamp types:
+        the poll returns what the predicate returns over every file, and
+        prunes files when column and watermark literal share a type."""
+        import time
+        from datetime import timedelta
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        land = tmp_path / "t"
+        land.mkdir()
+        arrow_ts = pa.timestamp("us", tz="UTC") if ts_type == "timestamp" else pa.timestamp("us")
+        for k in range(24):  # one file per 40 minutes, two rows each
+            stamps = [T0 + timedelta(minutes=40 * k), T0 + timedelta(minutes=40 * k + 17, microseconds=3)]
+            pq.write_table(
+                pa.table({"Id": [f"{k}a", f"{k}b"], "SystemModstamp": pa.array(stamps, arrow_ts)}),
+                str(land / f"f{k:03d}.parquet"),
+            )
+        prev = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", zones[0])
+        monkeypatch.setenv("TZ", zones[1])
+        time.tzset()
+        try:
+            src = EntitySource(spark, str(tmp_path))
+            for wm in (T0 - timedelta(days=1), T0 + timedelta(hours=6, seconds=59), T0 + timedelta(days=2)):
+                poll = src.poll("t", "SystemModstamp", wm)
+                want = spark.read.parquet(str(land)).filter(F.col("SystemModstamp") > F.lit(wm.replace(microsecond=0)))
+                assert sorted(r["Id"] for r in poll.df.collect()) == sorted(r["Id"] for r in want.collect())
+                assert len(poll.files) + poll.skipped == 24
+                if ts_type == "timestamp" and wm > T0:
+                    assert poll.skipped > 0
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", prev)
+            monkeypatch.undo()
+            time.tzset()
+
+    def test_poll_of_a_partitioned_landing_zone_keeps_partition_columns(self, spark, tmp_path):
+        from datetime import timedelta
+
+        rows = [(f"r{i}", T0 + timedelta(hours=i), i % 2) for i in range(6)]
+        spark.createDataFrame(rows, "Id string, SystemModstamp timestamp, p int").write.partitionBy(
+            "p"
+        ).parquet(str(tmp_path / "t"))
+        poll = EntitySource(spark, str(tmp_path)).poll("t", "SystemModstamp", T0 + timedelta(hours=2))
+        assert sorted((r["Id"], r["p"]) for r in poll.df.collect()) == [("r3", 1), ("r4", 0), ("r5", 1)]
+        assert poll.files and all(schema.names == ["Id", "SystemModstamp", "p"] for schema, _ in poll.files)
+
+    def test_retyped_file_named_by_table(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from pgsf_spark.operators.merge import SchemaDriftError
+
+        land = tmp_path / "t"
+        land.mkdir()
+        pq.write_table(pa.table({"Id": ["a"], "bal": [1.0]}), str(land / "a.parquet"))
+        pq.write_table(pa.table({"Id": ["b"], "bal": ["1.0"]}), str(land / "b.parquet"))
+        with pytest.raises(SchemaDriftError, match="t: landing files disagree, column 'bal': double vs string"):
+            EntitySource(spark, str(tmp_path)).load("t")
+
+    def test_integrity_verdict_read_once_per_file_version(self, spark, tmp_path, monkeypatch):
+        from pgsf_spark.sources import entity
+
+        land = tmp_path / "t"
+        spark.range(30).repartition(3).write.parquet(str(land))
+        reads = []
+        landed_file = entity._landed_file
+        monkeypatch.setattr(entity, "_landed_file", lambda fp: reads.append(fp) or landed_file(fp))
+        src = EntitySource(spark, str(tmp_path), integrity_check=True)
+        assert src.count("t") == 30
+        n = len(reads)
+        assert n >= 3
+        assert src.count("t") == 30
+        assert len(reads) == n  # nothing re-read
+        victim = sorted(reads)[0]
+        with open(victim, "r+b") as fh:
+            fh.truncate(30)
+        with pytest.raises(ValueError, match=os.path.basename(victim)):
+            src.load("t")
+        assert reads[n:] == [victim]  # only the rewritten file
+
+    def test_empty_poll_cost_does_not_grow_with_landing_history(self, spark, tmp_path):
+        """An empty poll and its pin over 4,001 landing files cost within 20%
+        of the same over 11: every file's footer is read once, and a poll
+        past all of them scans none."""
+        import statistics
+        import time
+        from datetime import timedelta
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from pgsf_spark.sync.runner import _pin
+
+        def land(root, n):
+            d = root / "t"
+            d.mkdir(parents=True)
+            for k in range(n):
+                pq.write_table(
+                    pa.table(
+                        {
+                            "Id": [f"r{k}"],
+                            "SystemModstamp": pa.array([T0 + timedelta(seconds=k)], pa.timestamp("us", tz="UTC")),
+                            "IsDeleted": [False],
+                        }
+                    ),
+                    str(d / f"f{k:05d}.parquet"),
+                )
+            return EntitySource(spark, str(root))
+
+        small, big = land(tmp_path / "small", 11), land(tmp_path / "big", 4001)
+        wm = T0 + timedelta(days=1)
+
+        def empty_poll(src):
+            t = time.perf_counter()
+            poll = src.poll("t", "SystemModstamp", wm)
+            _pin(poll.df, "SystemModstamp")
+            return time.perf_counter() - t, poll
+
+        for src in (small, big, small, big):  # ledger read, then warm-up
+            _, poll = empty_poll(src)
+            assert poll.files == [] and poll.skipped in (11, 4001)
+        times = {id(small): [], id(big): []}
+        for _ in range(7):
+            for src in (small, big):
+                times[id(src)].append(empty_poll(src)[0])
+        t_small, t_big = statistics.median(times[id(small)]), statistics.median(times[id(big)])
+        assert t_big <= 1.2 * t_small, (t_small, t_big)

@@ -5,6 +5,7 @@ silently overwriting (write) or resurrecting stale carried bytes
 (write_partial, where a lost update would corrupt data, not just lineage).
 """
 
+import json
 import multiprocessing
 import os
 from datetime import datetime
@@ -167,6 +168,23 @@ class TestCommittedHistory:
         v1 = catalog.publish({"t": "v1"}, expect_version=v0)
         assert catalog.versions() == [v0, v1]
         assert catalog.mapping() == {"t": "v1"}
+        # the killed publisher's body is older than v1: vacuum removes it
+        catalog.vacuum()
+        assert not [f for f in os.listdir(catalog.root) if f.startswith("_stage_")]
+        assert catalog.versions() == [v0, v1]
+
+    def test_catalog_vacuum_keeps_fresh_staging(self, tmp_path):
+        catalog = CatalogStore(str(tmp_path / "catalog"))
+        catalog.publish({"t": "v0"})
+        with open(os.path.join(catalog.root, catalog.versions()[-1] + ".json")) as f:
+            written_at = json.load(f)["written_at"]
+        stale = os.path.join(catalog.root, "_stage_stale")
+        fresh = os.path.join(catalog.root, "_stage_fresh")
+        for path, age in ((stale, -60), (fresh, 60)):
+            open(path, "w").close()
+            os.utime(path, (written_at + age, written_at + age))
+        catalog.vacuum()
+        assert sorted(f for f in os.listdir(catalog.root) if f.startswith("_stage_")) == ["_stage_fresh"]
 
     def test_vacuum_removes_stale_staging_only(self, tmp_path):
         store = TableStore(None, str(tmp_path / "store"))

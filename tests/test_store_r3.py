@@ -25,16 +25,19 @@ def store(spark, tmp_path):
 
 class TestDistributedStats:
     def test_stats_computed_off_driver(self, spark, store, monkeypatch):
-        """Publishing must not open parquet footers in the DRIVER process:
-        the footer reads run inside Spark tasks (separate pyspark worker
-        processes), so poisoning pyarrow.parquet.ParquetFile here must not
-        break stats collection -- and would have broken the old sequential
-        driver walk."""
+        """Above the driver-read bound, publishing must not open parquet
+        footers in the DRIVER process: the footer reads run inside Spark
+        tasks (separate pyspark worker processes), so poisoning
+        pyarrow.parquet.ParquetFile here must not break stats collection.
+        The bound is lowered below the publish's 8 files."""
         import pyarrow.parquet as pq
+
+        from pgsf_spark.operators import table_store
 
         def _boom(*a, **k):
             raise AssertionError("driver-side footer read during publish")
 
+        monkeypatch.setattr(table_store, "_DRIVER_FOOTER_LIMIT", 4)
         monkeypatch.setattr(pq, "ParquetFile", _boom)
         df = spark.range(400).select(F.col("id"), (F.col("id") % 7).alias("k"))
         store.write(df.repartitionByRange(8, "id"), "t")

@@ -128,7 +128,7 @@ def _tick_group(runner, spark, monkeypatch):
 
 
 class TestTickJobs:
-    def test_partitioned_tick_runs_at_most_6_jobs(self, spark, synced, monkeypatch):
+    def test_partitioned_tick_runs_at_most_5_jobs(self, spark, synced, monkeypatch):
         runner, store, state, src_dir, rows = synced()
         t1 = T0 + timedelta(hours=1)
         _write_source(
@@ -139,7 +139,7 @@ class TestTickJobs:
         groups = _tick_group(runner, spark, monkeypatch)
         res = runner.sync_table("customer")
         jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(groups[0])
-        assert len(jobs) <= 6, jobs
+        assert len(jobs) <= 5, jobs
         assert res["jobs"] == len(jobs)
         assert res["rows"] == 40  # +c99, -c5
         m = store.manifest("customer")
@@ -149,7 +149,7 @@ class TestTickJobs:
 
     def test_job_count_ignores_earlier_jobs(self, spark, synced, monkeypatch):
         """The tick's job count reads only this tick's job ids: after 200
-        earlier jobs under the table's name it still reports the tick's 6,
+        earlier jobs under the table's name it still reports the tick's 5,
         with the same number of py4j calls as a tick before them."""
         from py4j.java_gateway import GatewayClient
         from pyspark.status import StatusTracker
@@ -193,8 +193,117 @@ class TestTickJobs:
         finally:
             sc.removeJobTag(sync_job_tag("customer"))
         jobs_later, calls_later = tick(2)
-        assert jobs_first == jobs_later == 6
+        assert jobs_first == jobs_later == 5
         assert calls_later == calls_first and sum(calls_later) < 20, calls_later
+
+
+    def test_tick_lists_the_table_directory_twice(self, spark, synced, monkeypatch):
+        """A tick resolves the version it reads once, before the pin, and the
+        commit reads the newest name once more under the publish lock; every
+        other step names the version it was handed."""
+        from pgsf_spark.sync import runner as runner_mod
+
+        runner, store, state, src_dir, rows = synced()
+        _write_source(spark, src_dir, rows + [("c3", "x", 1.0, T0 + timedelta(hours=1), False)])
+        events = []
+        committed, pin = table_store._committed, runner_mod._pin
+        lock = os.path.join(store.root, "customer", "_PUBLISH_LOCK")
+
+        def counted_committed(*a, **k):
+            events.append("locked" if os.path.exists(lock) else "unlocked")
+            return committed(*a, **k)
+
+        def counted_pin(*a, **k):
+            events.append("pin")
+            return pin(*a, **k)
+
+        monkeypatch.setattr(table_store, "_committed", counted_committed)
+        monkeypatch.setattr(runner_mod, "_pin", counted_pin)
+        res = runner.sync_table("customer")
+        assert events == ["unlocked", "pin", "locked"]
+        assert res["rows"] == 40
+
+    def test_landing_counts_in_manifest_and_result(self, spark, tmp_path):
+        """The tick record names how many landing files the poll read and
+        how many the watermark pruned, from the ledger (no job)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        land = tmp_path / "src" / "customer"
+        land.mkdir(parents=True)
+
+        def put(name, ids, ts):
+            pq.write_table(
+                pa.table(
+                    {
+                        "Id": pa.array(ids, pa.string()),
+                        "name": pa.array(["n"] * len(ids), pa.string()),
+                        "bal": pa.array([1.0] * len(ids), pa.float64()),
+                        "SystemModstamp": pa.array([ts] * len(ids), pa.timestamp("us", tz="UTC")),
+                        "IsDeleted": pa.array([False] * len(ids), pa.bool_()),
+                    }
+                ),
+                str(land / name),
+            )
+
+        put("snapshot.parquet", [f"c{i}" for i in range(20)], T0)
+        store = TableStore(spark, str(tmp_path / "store"))
+        state = SyncState(str(tmp_path / "sync.json"))
+        runner = SyncRunner(EntitySource(spark, str(tmp_path / "src")), store, state)
+        runner.snapshot_load("customer")
+        state.release("customer", syncuntil=T0, touch_refresh=False)
+        for k in (1, 2):
+            put(f"tick-{k:05d}.parquet", [f"c{k}", f"new{k}"], T0 + timedelta(hours=k))
+            res = runner.sync_table("customer")
+            m = store.manifest("customer")
+            assert (res["landing_files_read"], res["landing_files_skipped"]) == (1, k)
+            assert (m["landing_files_read"], m["landing_files_skipped"]) == (1, k)
+            assert res["rows"] == 20 + k
+
+
+class TestNoPythonWorkers:
+    def test_snapshot_tick_and_compact_start_no_footer_job(self, spark, tmp_path, monkeypatch):
+        """Below the footer bound no publish of a 16-bucket table runs the
+        Python footer job: the snapshot, a tick and a compact read every
+        footer on the driver."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        def put(path, rows):
+            pq.write_table(
+                pa.table(
+                    {
+                        "Id": pa.array([r[0] for r in rows], pa.string()),
+                        "bal": pa.array([r[1] for r in rows], pa.float64()),
+                        "SystemModstamp": pa.array([r[2] for r in rows], pa.timestamp("us", tz="UTC")),
+                        "IsDeleted": pa.array([r[3] for r in rows], pa.bool_()),
+                    }
+                ),
+                path,
+            )
+
+        land = tmp_path / "src" / "customer"
+        land.mkdir(parents=True)
+        put(str(land / "snapshot.parquet"), [(f"c{i}", float(i), T0, False) for i in range(200)])
+
+        def no_job(*a, **k):
+            raise AssertionError("a publish started the Python footer job")
+
+        monkeypatch.setattr(spark.sparkContext, "parallelize", no_job)
+        store = TableStore(spark, str(tmp_path / "store"))
+        state = SyncState(str(tmp_path / "sync.json"))
+        runner = SyncRunner(EntitySource(spark, str(tmp_path / "src")), store, state)
+        assert runner.snapshot_load("customer") == 200
+        assert store.manifest("customer")["partition_buckets"] == 16
+        state.release("customer", syncuntil=T0, touch_refresh=False)
+        t1 = T0 + timedelta(hours=1)
+        put(str(land / "tick-00001.parquet"), [("c1", -1.0, t1, False), ("c2", 0.0, t1, True), ("c999", 9.0, t1, False)])
+        assert runner.sync_table("customer")["rows"] == 200
+        store.compact("customer")
+        monkeypatch.undo()
+        assert len(store.file_stats("customer")) >= 16
+        got = {r["Id"]: r["bal"] for r in store.read("customer").collect()}
+        assert len(got) == 200 and got["c1"] == -1.0 and "c2" not in got and got["c999"] == 9.0
 
 
 class TestStatsParity:
@@ -336,7 +445,7 @@ class TestWritePartialStats:
         }
         published = store.file_stats("t")
         assert len(published) == 16 and all(STATS_ROWS in s for s in published.values())
-        store._write_file_stats(path)  # every footer re-read by the job
+        store._write_file_stats(path)  # every footer re-read
         with open(os.path.join(path, _STATS_NAME)) as f:
             assert json.load(f) == published
         assert store.read("t").count() == 64 - 3 * 4 + 3 * 3  # 3 buckets: 4 rows -> 3
