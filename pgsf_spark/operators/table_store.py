@@ -219,36 +219,28 @@ _STATS_NAME = "_STATS.json"
 # Delta collects stats on the first 32 columns by default; same cap here.
 _STATS_MAX_COLS = 32
 # Per-file footer row count in a _STATS.json entry. Column keys never hold a
-# ".": _metadata_stats skips every column path containing one.
+# ".": _footer_stats skips every column path containing one.
 STATS_ROWS = ".num_rows"
 
 
 def _footer_stats(fp: str) -> dict:
     """Column min/max and the row count (``STATS_ROWS``) of one parquet
-    file, from its footer only (a few KB of IO): ``_metadata_stats`` of it,
-    or {} when the footer cannot be read. Runs on the driver
-    (``_read_footers``) or executor-side in _write_file_stats' job
-    (module-level so it pickles cleanly into Spark tasks)."""
+    file, from its footer only (a few KB of IO); {} when the footer cannot
+    be read. Runs on the driver (``_read_footers``) or executor-side in
+    _write_file_stats' job (module-level so it pickles cleanly into Spark
+    tasks). Nested paths, columns past the cap, and types with no
+    order-preserving JSON form are skipped -- a missing stat means "never
+    prune this file on that column"."""
     import pyarrow.parquet as pq
 
     try:
         md = pq.ParquetFile(fp).metadata
     except Exception:
         return {}
-    return _metadata_stats(md)
-
-
-def _metadata_stats(md, max_cols: int | None = _STATS_MAX_COLS) -> dict:
-    """Column min/max over every row group of a pyarrow ``FileMetaData``,
-    and its row count under ``STATS_ROWS``; ``max_cols=None`` keeps every
-    column. Nested paths, columns past the cap, and types with no
-    order-preserving JSON form are skipped -- a missing stat means "never
-    prune this file on that column"."""
     per_col: dict[str, list] = {}
     for rg in range(md.num_row_groups):
         row_group = md.row_group(rg)
-        n_cols = row_group.num_columns if max_cols is None else min(row_group.num_columns, max_cols)
-        for ci in range(n_cols):
+        for ci in range(min(row_group.num_columns, _STATS_MAX_COLS)):
             col = row_group.column(ci)
             name = col.path_in_schema
             if "." in name:

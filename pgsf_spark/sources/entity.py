@@ -18,13 +18,17 @@ Landing ledger (parquet): the reference polls with an indexed
 ``SystemModstamp > syncuntil`` query that touches only new rows. Here each
 landing file's footer is read once per file version, on the driver, into a
 ledger keyed by the file's identity (size, mtime_ns, inode): its row count,
-its column min/max, its integrity verdict and what Spark infers its schema
-from. Every read then takes an explicit schema merged from the ledger, so no
-entity read runs an inference job, and ``poll`` hands Spark only the files
-whose footer max of the ts column is past the watermark: a poll costs
-O(new files), not O(landing history), and reports each batch file's schema
-so schema drift is judged per file (a later file that drops a column is a
-removal, not a silent NULL). CSV landing has no footer and keeps Spark's own
+the max of each timestamp column, its integrity verdict and what Spark
+infers its schema from. The ledger is kept in the landing directory
+(``_LEDGER_NAME``, a name Spark and the part-file listing skip), so a
+process that starts cold -- one ``sync-due`` per cron tick -- reads only the
+footers of files landed since the last run. Every read takes an explicit
+schema merged from the ledger, so no entity read runs an inference job, and
+``poll`` hands Spark only the files whose footer max of the ts column is
+past the watermark: after the directory listing, a poll costs O(new files),
+not O(landing history), and reports each batch file's schema so schema
+drift is judged per file (a later file that drops a column is a removal,
+not a silent NULL). CSV landing has no footer and keeps Spark's own
 inference over the directory.
 
 include_deleted=False reproduces the REST ``query`` endpoint (soft-deleted
@@ -34,33 +38,30 @@ flow through, which the CDC merge relies on (P5).
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
+import json
 import os
 import sys
 import threading
 import time
-import weakref
-from collections import OrderedDict
 from typing import NamedTuple
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    MapType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-    TimestampType,
-)
+from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
 
 from pgsf_spark.operators.merge import SchemaDriftError
-from pgsf_spark.operators.table_store import _META_THREADS, _metadata_stats, _stat_jsonable
-from pgsf_spark.sources.integrity import IntegrityReport, _list_part_files, read_footer
+from pgsf_spark.operators.table_store import _META_THREADS, _stat_jsonable
+from pgsf_spark.sources.integrity import IntegrityReport, _list_part_files, is_env_reason, read_footer
 from pgsf_spark.tables import _INFERENCE_CONFS
 
 # footer key-value entry holding the schema Spark wrote; inference prefers it
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+# the ledger file in a landing directory: a leading "_" keeps it out of
+# Spark's reads and of _list_part_files
+_LEDGER_NAME = "_FOOTERS.json"
 
 
 class LandedFile(NamedTuple):
@@ -68,7 +69,7 @@ class LandedFile(NamedTuple):
 
     path: str
     rows: int | None  # footer row count; None when the footer is unreadable
-    stats: dict  # table_store._metadata_stats: column -> [min, max] JSON forms
+    ts_max: dict  # top-level timestamp column -> footer max, _stat_jsonable form
     footer: tuple | None  # (parquet schema text, Spark row metadata): inference's input
     reason: str | None  # integrity verdict (integrity.check_file); None = readable
 
@@ -82,98 +83,77 @@ class Poll(NamedTuple):
     skipped: int
 
 
+def _timestamp_maxes(md) -> dict:
+    """Max of each top-level TIMESTAMP column over every row group of a
+    pyarrow ``FileMetaData``. A column with a row group that has no max is
+    left out: its file is never pruned on it."""
+    out = {}
+    for ci in range(md.num_columns):
+        col = md.schema.column(ci)
+        if col.logical_type.type != "TIMESTAMP" or "." in col.path:
+            continue
+        maxes = []
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(ci).statistics
+            maxes.append(_stat_jsonable(st.max) if st is not None and st.has_min_max else None)
+        if maxes and None not in maxes:
+            out[col.path] = max(maxes)
+    return out
+
+
 def _landed_file(path: str) -> LandedFile:
     md, reason = read_footer(path)
     if md is None:
         return LandedFile(path, None, {}, None, reason)
     try:
-        stats = _metadata_stats(md, max_cols=None)
+        ts_max = _timestamp_maxes(md)
     except Exception:  # a stat pyarrow cannot convert: the file is never pruned
-        stats = {}
+        ts_max = {}
     # line 1 of the schema's text is the object's repr; interned, files of
     # one schema share their key's strings, so comparing keys is cheap
     text = sys.intern(str(md.schema).split("\n", 1)[1])
     spark_md = (md.metadata or {}).get(_SPARK_ROW_METADATA)
-    footer = (text, spark_md and sys.intern(spark_md.decode("utf-8", "replace")))
-    return LandedFile(path, md.num_rows, stats, footer, None)
+    footer = (text, sys.intern(spark_md.decode("utf-8", "replace")) if spark_md else None)
+    return LandedFile(path, md.num_rows, ts_max, footer, None)
 
 
-# Spark schema per (footer, inference confs) and session: files whose footers
-# hold the same parquet schema and Spark row metadata infer the same schema,
-# so Spark's converter runs once per distinct footer, not once per file.
-_FOOTER_SCHEMA_MEMO_SIZE = 256
-_footer_schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-_footer_schema_lock = threading.Lock()
+def _load_ledger(root: str) -> dict:
+    """The ledger ``_save_ledger`` kept in ``root``, as ``EntitySource._landed``
+    holds it; {} when there is none or it cannot be read."""
+    try:
+        with open(os.path.join(root, _LEDGER_NAME)) as fh:
+            doc = json.load(fh)
+        footers = [tuple(sys.intern(x) if x else None for x in ft) for ft in doc["footers"]]
+        out = {}
+        for rel, (size, mtime_ns, ino, rows, ts_max, fi, reason) in doc["files"].items():
+            fp = os.path.join(root, rel)
+            footer = None if fi is None else footers[fi]
+            out[fp] = ((size, mtime_ns, ino), LandedFile(fp, rows, ts_max, footer, reason))
+        return out
+    except (OSError, ValueError, TypeError, KeyError, IndexError):
+        return {}
 
 
-def _footer_schema(spark: SparkSession, f: LandedFile, confs: tuple) -> StructType:
-    """What ``spark.read.parquet(f.path).schema`` infers, with no Spark job:
-    Spark's own footer-to-schema step (``ParquetFileFormat.readSchemaFromFooter``
-    with a ``ParquetToSparkSchemaConverter`` over the session's conf) run on
-    the driver JVM, made nullable as a file read makes it."""
-    key = (f.footer, confs)
-    with _footer_schema_lock:
-        memo = _footer_schemas.setdefault(spark, OrderedDict())
-        if key in memo:
-            memo.move_to_end(key)
-            return memo[key]
-    import json
-
-    jvm = spark._jvm
-    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
-    hpath = jvm.org.apache.hadoop.fs.Path(f.path)
-    md = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        spark._jsc.hadoopConfiguration(),
-        hpath,
-        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
-    )
-    converter = parquet.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
-    jschema = parquet.ParquetFileFormat.readSchemaFromFooter(
-        jvm.org.apache.parquet.hadoop.Footer(hpath, md), converter
-    )
-    schema = StructType.fromJson(json.loads(jschema.asNullable().json()))
-    with _footer_schema_lock:
-        memo[key] = schema
-        while len(memo) > _FOOTER_SCHEMA_MEMO_SIZE:
-            memo.popitem(last=False)
-    return schema
-
-
-def _merge_type(a, b, where: str):
-    """``StructType.merge``'s rule for one column: identical types, or
-    structs/arrays/maps whose parts merge; anything else conflicts."""
-    if a == b:
-        return a
-    if isinstance(a, StructType) and isinstance(b, StructType):
-        return _merge_schemas(a, b, where)
-    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
-        return ArrayType(_merge_type(a.elementType, b.elementType, where), a.containsNull or b.containsNull)
-    if isinstance(a, MapType) and isinstance(b, MapType):
-        return MapType(
-            _merge_type(a.keyType, b.keyType, where),
-            _merge_type(a.valueType, b.valueType, where),
-            a.valueContainsNull or b.valueContainsNull,
-        )
-    raise SchemaDriftError(f"{where}: {a.simpleString()} vs {b.simpleString()}")
-
-
-def _merge_schemas(left: StructType, right: StructType, where: str) -> StructType:
-    """``mergeSchema``'s fold step: left's fields in order, merged with
-    right's of the same name, then right's new fields."""
-    by_name = {f.name: f for f in right.fields}
-    fields = [
-        f
-        if f.name not in by_name
-        else StructField(
-            f.name,
-            _merge_type(f.dataType, by_name[f.name].dataType, f"{where}, column {f.name!r}"),
-            f.nullable or by_name[f.name].nullable,
-            f.metadata,
-        )
-        for f in left.fields
-    ]
-    names = set(left.fieldNames())
-    return StructType(fields + [f for f in right.fields if f.name not in names])
+def _save_ledger(root: str, current: dict) -> None:
+    """Keep ``current``'s entries in ``root``, each footer key stored once;
+    written aside and renamed, so a reader sees a whole ledger. A landing
+    directory that cannot be written keeps none."""
+    footers: dict = {}
+    files = {}
+    cut = len(os.path.join(root, ""))  # _list_part_files joins onto root
+    for fp, (ident, f) in current.items():
+        if ident is not None:
+            fi = None if f.footer is None else footers.setdefault(f.footer, len(footers))
+            files[fp[cut:]] = [*ident, f.rows, f.ts_max, fi, f.reason]
+    doc = json.dumps({"footers": list(footers), "files": files}, separators=(",", ":"))
+    tmp = os.path.join(root, f"{_LEDGER_NAME}.{os.getpid()}.{threading.get_ident()}")
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(doc)
+        os.replace(tmp, os.path.join(root, _LEDGER_NAME))
+    except OSError:
+        with contextlib.suppress(OSError):
+            os.unlink(tmp)
 
 
 def _literal_frame(wm: _dt.datetime):
@@ -208,8 +188,8 @@ def _may_pass(f: LandedFile, ts_field: str, bound) -> bool:
     column is always read."""
     if f.rows == 0:
         return False
-    rng = f.stats.get(ts_field)
-    return rng is None or bound is None or rng[1] > bound
+    mx = f.ts_max.get(ts_field)
+    return mx is None or bound is None or mx > bound
 
 
 def _stat_bounds(wm) -> dict:
@@ -250,9 +230,12 @@ class EntitySource:
         # ledger's one footer read per file; off by default, the sync
         # loop turns it on for landing zones it does not own end to end.
         self.integrity_check = integrity_check
-        # landing path -> {file path: ((size, mtime_ns, inode), LandedFile)}
+        # landing path -> {file path: ((size, mtime_ns, inode), LandedFile)};
+        # the identity is None for a file to read again on the next poll
         self._ledger: dict[str, dict] = {}
         self._ledger_lock = threading.Lock()
+        # (footer key, inference confs) -> (StructType, JVM StructType)
+        self._footer_schemas: dict[tuple, tuple] = {}
 
     def _record(self, table: str, op: str) -> None:
         if self.usage is not None:
@@ -268,10 +251,15 @@ class EntitySource:
         """The ledger of ``table``'s landing files, in path order (the order
         ``mergeSchema`` folds them in). Lists the directory and stats each
         file; reads only the footers of files it has not seen at their
-        current identity. Enforces ``integrity_check``."""
+        current identity, in this process or in the ledger kept in the
+        directory, and keeps the ledger there when it changed. Enforces
+        ``integrity_check``."""
         root = self.path(table)
+        is_dir = os.path.isdir(root)
         with self._ledger_lock:
-            known = self._ledger.get(root, {})
+            known = self._ledger.get(root)
+        if known is None:
+            known = _load_ledger(root) if is_dir else {}
         current, new = {}, []
         for fp in _list_part_files(root):
             st = os.stat(fp)
@@ -287,9 +275,12 @@ class EntitySource:
 
             with ThreadPoolExecutor(max_workers=min(_META_THREADS, len(new))) as ex:
                 for fp, f in zip(new, ex.map(_landed_file, new)):
-                    current[fp] = (current[fp][0], f)
+                    # a file the read could not reach is read again next time
+                    current[fp] = (None if f.reason and is_env_reason(f.reason) else current[fp][0], f)
         with self._ledger_lock:
             self._ledger[root] = current
+        if is_dir and (new or current.keys() != known.keys()):
+            _save_ledger(root, current)
         landed = [f for _, f in current.values()]
         if self.integrity_check:
             bad = tuple((f.path, f.reason) for f in landed if f.reason)
@@ -301,25 +292,67 @@ class EntitySource:
                 )
         return landed
 
-    def _schemas(self, landed: list[LandedFile]) -> dict[tuple, StructType]:
-        """Spark schema of each distinct readable footer among ``landed``,
-        in first-appearance order, under the session's inference confs."""
+    def _footer_schema(self, f: LandedFile, confs: tuple) -> tuple:
+        """(StructType, JVM StructType) of what ``spark.read.parquet(f.path)
+        .schema`` infers, with no Spark job: Spark's own footer-to-schema
+        step (``ParquetFileFormat.readSchemaFromFooter`` with a
+        ``ParquetToSparkSchemaConverter`` over the session's conf) run on the
+        driver JVM, made nullable as a file read makes it. Once per distinct
+        footer key and inference confs: files with the same parquet schema
+        and Spark row metadata infer the same schema."""
+        key = (f.footer, confs)
+        hit = self._footer_schemas.get(key)
+        if hit is None:
+            jvm = self.spark._jvm
+            parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+            hpath = jvm.org.apache.hadoop.fs.Path(f.path)
+            md = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+                self.spark._jsc.hadoopConfiguration(),
+                hpath,
+                jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
+            )
+            converter = parquet.ParquetToSparkSchemaConverter(self.spark._jsparkSession.sessionState().conf())
+            jschema = parquet.ParquetFileFormat.readSchemaFromFooter(
+                jvm.org.apache.parquet.hadoop.Footer(hpath, md), converter
+            ).asNullable()
+            hit = self._footer_schemas[key] = (StructType.fromJson(json.loads(jschema.json())), jschema)
+        return hit
+
+    def _schemas(self, landed: list[LandedFile]) -> dict[tuple, tuple]:
+        """``_footer_schema`` of each distinct readable footer among
+        ``landed``, in first-appearance order, under the session's
+        inference confs."""
         confs = tuple(self.spark.conf.get(k) for k in _INFERENCE_CONFS)
-        out: dict[tuple, StructType] = {}
+        out: dict[tuple, tuple] = {}
         for f in landed:
             if f.footer is not None and f.footer not in out:
-                out[f.footer] = _footer_schema(self.spark, f, confs)
+                out[f.footer] = self._footer_schema(f, confs)
         return out
 
-    @staticmethod
-    def _merged(table: str, schemas) -> StructType | None:
-        """``schemas`` folded the way ``mergeSchema`` does; a column typed
-        differently in two landing files raises SchemaDriftError naming the
-        table. None for no schema."""
-        merged = None
-        for s in schemas:
-            merged = s if merged is None else _merge_schemas(merged, s, f"{table}: landing files disagree")
-        return merged
+    def _merged(self, table: str, schemas) -> StructType | None:
+        """``_footer_schema`` pairs folded with Spark's ``StructType.merge``,
+        as ``mergeSchema`` folds them; a column typed differently in two
+        landing files raises SchemaDriftError naming the table. None for no
+        schema."""
+        schemas = list(schemas)
+        if len(schemas) < 2:
+            return schemas[0][0] if schemas else None
+        case_sensitive = self.spark.conf.get("spark.sql.caseSensitive") == "true"
+        merged = schemas[0][1]
+        for schema, jschema in schemas[1:]:
+            try:
+                merged = merged.merge(jschema, case_sensitive)
+            except Py4JJavaError as e:
+                left = StructType.fromJson(json.loads(merged.json()))
+                clash = "; ".join(
+                    f"column {c.name!r}: {left[c.name].dataType.simpleString()} vs {c.dataType.simpleString()}"
+                    for c in schema.fields
+                    if c.name in left.names and left[c.name].dataType != c.dataType
+                )
+                raise SchemaDriftError(
+                    f"{table}: landing files disagree, {clash or e.java_exception.getMessage()}"
+                ) from None
+        return StructType.fromJson(json.loads(merged.json()))
 
     def load(
         self,
@@ -464,13 +497,14 @@ class EntitySource:
             # the bound in each footer's frame, from its type of ts_field
             footer_bound = {
                 k: bounds.get(type(s[ts_field].dataType)) if ts_field in s.names else None
-                for k, s in schemas.items()
+                for k, (s, _) in schemas.items()
             }
             chosen = [f for f in landed if _may_pass(f, ts_field, footer_bound.get(f.footer))]
             skipped = len(landed) - len(chosen)
-            files = [(schemas[f.footer], f.rows) for f in chosen if f.footer is not None]
+            files = [(schemas[f.footer][0], f.rows) for f in chosen if f.footer is not None]
+            read = {f.footer: schemas[f.footer] for f in chosen if f.footer is not None}
             # with no readable file chosen, the schema of every landing file
-            schema = self._merged(table, (s for s, _ in files)) or self._merged(table, schemas.values())
+            schema = self._merged(table, read.values()) or self._merged(table, schemas.values())
             if not chosen and schema is not None:
                 df = self.spark.createDataFrame([], schema)
             elif schema is None:

@@ -355,18 +355,41 @@ class TestLandingLedger:
             src.load("t")
         assert reads[n:] == [victim]  # only the rewritten file
 
-    def test_empty_poll_cost_does_not_grow_with_landing_history(self, spark, tmp_path):
-        """An empty poll and its pin over 4,001 landing files cost within 20%
-        of the same over 11: every file's footer is read once, and a poll
-        past all of them scans none."""
-        import statistics
-        import time
+    def test_unreachable_file_is_read_again(self, spark, tmp_path, monkeypatch):
+        """A footer read that fails to reach the file (an I/O or access
+        error, not bad bytes) is not kept: the next poll reads it again."""
+        from pgsf_spark.sources import entity
+        from pgsf_spark.sources.integrity import ENV_REASON_PREFIX
+
+        spark.range(4).write.parquet(str(tmp_path / "t"))
+        real = entity.read_footer
+        calls = []
+
+        def flaky(fp):
+            calls.append(fp)
+            return (None, f"{ENV_REASON_PREFIX}PermissionError: denied") if len(calls) == 1 else real(fp)
+
+        monkeypatch.setattr(entity, "read_footer", flaky)
+        src = EntitySource(spark, str(tmp_path), integrity_check=True)
+        with pytest.raises(ValueError, match="PermissionError"):
+            src.count("t")
+        n = len(calls)
+        assert src.count("t") == 4
+        assert len(calls) == n + 1  # only the unreached file is read again
+        assert EntitySource(spark, str(tmp_path), integrity_check=True).count("t") == 4
+        assert len(calls) == n + 1  # the kept ledger holds its good verdict
+
+    def test_empty_poll_cost_does_not_grow_with_landing_history(self, spark, tmp_path, monkeypatch):
+        """A warm empty poll over 4,001 landing files does the same work as
+        one over 11 -- no footer read, no Spark job, no file handed to
+        Spark -- and so does the first poll of a new source (a new process)
+        over the 4,001, which finds the ledger kept in the directory."""
         from datetime import timedelta
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from pgsf_spark.sync.runner import _pin
+        from pgsf_spark.sources import entity
 
         def land(root, n):
             d = root / "t"
@@ -386,19 +409,50 @@ class TestLandingLedger:
 
         small, big = land(tmp_path / "small", 11), land(tmp_path / "big", 4001)
         wm = T0 + timedelta(days=1)
+        for src in (small, big):  # fills the ledger
+            src.poll("t", "SystemModstamp", wm)
+        reads = []
+        landed_file = entity._landed_file
+        monkeypatch.setattr(entity, "_landed_file", lambda fp: reads.append(fp) or landed_file(fp))
+        work = {}
+        for name, src in (("11", small), ("4001", big), ("4001, new source", EntitySource(spark, str(tmp_path / "big")))):
+            del reads[:]
+            poll, jobs = _jobs_in(spark, lambda src=src: src.poll("t", "SystemModstamp", wm))
+            assert poll.skipped == int(name.split(",")[0])
+            work[name] = (len(reads), jobs, poll.df.inputFiles(), poll.files)
+        assert all(w == (0, 0, [], []) for w in work.values()), work
 
-        def empty_poll(src):
-            t = time.perf_counter()
-            poll = src.poll("t", "SystemModstamp", wm)
-            _pin(poll.df, "SystemModstamp")
-            return time.perf_counter() - t, poll
+    def test_new_source_reads_only_footers_it_has_not_seen(self, spark, tmp_path, monkeypatch):
+        """The ledger kept in the landing directory carries across sources
+        (processes): a new source reads the footers of added and rewritten
+        files only; an unreadable ledger costs one read of every footer."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        for src in (small, big, small, big):  # ledger read, then warm-up
-            _, poll = empty_poll(src)
-            assert poll.files == [] and poll.skipped in (11, 4001)
-        times = {id(small): [], id(big): []}
-        for _ in range(7):
-            for src in (small, big):
-                times[id(src)].append(empty_poll(src)[0])
-        t_small, t_big = statistics.median(times[id(small)]), statistics.median(times[id(big)])
-        assert t_big <= 1.2 * t_small, (t_small, t_big)
+        from pgsf_spark.sources import entity
+
+        land = tmp_path / "t"
+        land.mkdir()
+
+        def write(name, ids):
+            ts = pa.array([T0] * len(ids), pa.timestamp("us", tz="UTC"))
+            pq.write_table(pa.table({"Id": ids, "SystemModstamp": ts}), str(land / name))
+
+        for k in range(3):
+            write(f"f{k}.parquet", [f"r{k}"])
+        assert EntitySource(spark, str(tmp_path)).count("t") == 3
+        assert (land / entity._LEDGER_NAME).exists()
+        reads = []
+        landed_file = entity._landed_file
+        monkeypatch.setattr(entity, "_landed_file", lambda fp: reads.append(os.path.basename(fp)) or landed_file(fp))
+        assert EntitySource(spark, str(tmp_path)).count("t") == 3
+        assert reads == []
+        write("f3.parquet", ["r3"])
+        write("f0.parquet", ["r0", "r0b"])  # rewritten in place
+        assert EntitySource(spark, str(tmp_path)).count("t") == 5
+        assert sorted(reads) == ["f0.parquet", "f3.parquet"]
+        (land / entity._LEDGER_NAME).write_text("{not json")
+        del reads[:]
+        assert EntitySource(spark, str(tmp_path)).count("t") == 5
+        assert sorted(reads) == [f"f{k}.parquet" for k in range(4)]
+        assert spark.read.parquet(str(land)).count() == 5  # Spark skips the ledger file
